@@ -493,27 +493,6 @@ def _h31_md5(col):
 _H31 = {"xxhash": _h31_xxhash, "md5": _h31_md5}
 
 
-def minhash_signature(shingles_col):
-    """32-wide MinHash signature: h_i = min over shingles of
-    (a_i * h31(s) + b_i) mod (2^31-1), h31 = pmod(xxhash64(s), 2^31-1) —
-    all higher-order Catalyst exprs, no Python. (Kept for per-row use;
-    minhash_signatures below is the faster explode+groupBy form.)"""
-    base = F.transform(
-        shingles_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))
-    )
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    base,
-                    lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MH_PRIME)),
-                )
-            )
-            for a, b in _PERMS
-        ]
-    )
-
-
 def minhash_signatures(
     docs: DataFrame, k: int = 3, hashing: str = "xxhash"
 ) -> DataFrame:

@@ -1,13 +1,25 @@
-"""Per-document extraction dispatch: engine factory + preprocessor chain +
+"""Per-document extraction dispatch: engine factory + format table +
 error-as-value, as one pure function the Arrow batch kernel maps over.
 
 Reference parity:
 - Engine factory/dispatch (/root/reference/ocr_engine.go:22-30, default-mock
-  on unknown at :58-60) → resolve_engine + the engine branch below.
+  on unknown at :58-60) → resolve_engine + the engine checks below.
+- Format routing: where the reference hands every payload to tesseract,
+  the tesseract engine here picks one extractor per document from
+  ``FORMATS``, one ordered table of (name, sniff, extract) rows. The first
+  row whose sniff matches extracts; a ValueError from it becomes
+  ``error:<name>-unsupported``; a payload no row claims is HTML (main
+  text, or markdown under output_format=md). gzip is unwrapped ahead of
+  the table: it is a transparent encoding, not a format. Adding a format
+  means adding one row.
 - Chain router (/root/reference/ocr_request.go:21-31): stages execute in
   REVERSE list order (pop-from-end); the terminal hop is always the engine
-  ("decode-ocr", rabbit_config.go:25).
-- Identity preprocessor (/root/reference/preprocessor.go:11-16): no-op.
+  ("decode-ocr", rabbit_config.go:25). Every stage folds into the engine:
+  identity is a no-op (preprocessor.go:11-16), convert-pdf is the pdf row
+  (which routes PDFs with or without it), stroke-width-transform is the
+  HTML branch's ``aggressive`` flag. The chain is still validated: an
+  unknown stage is ``error:preprocessor`` naming the first unknown stage
+  in execution order.
 - Error-as-value (/root/reference/ocr_rpc_worker.go:163-190): a failing
   document NEVER fails the job; the reference embeds "Error ..." in the
   text and still replies — we do better per SURVEY §2.A17: clean
@@ -25,17 +37,46 @@ plain text.
 from __future__ import annotations
 
 import json
+import re
+from functools import partial
+from typing import Callable, NamedTuple
 
+from open_ocr_spark.kernels.archive import (
+    gunzip_payload,
+    is_tar,
+    split_tar,
+    split_zip,
+)
+from open_ocr_spark.kernels.doc_text import extract_cfb_text, is_cfb
+from open_ocr_spark.kernels.docx_text import (
+    extract_docx_text,
+    extract_epub_text,
+    extract_odt_text,
+    extract_pptx_text,
+    extract_xlsx_text,
+    is_docx,
+    is_epub,
+    is_odt,
+    is_pptx,
+    is_xlsx,
+)
+from open_ocr_spark.kernels.eml_text import (
+    extract_eml_text,
+    extract_mbox_text,
+    is_eml,
+    is_mbox,
+)
+from open_ocr_spark.kernels.glyph_ocr import ocr_image
 from open_ocr_spark.kernels.html_extract import extract_main_text
+from open_ocr_spark.kernels.html_markdown import html_to_markdown
+from open_ocr_spark.kernels.ipynb_text import extract_ipynb_text, is_ipynb
+from open_ocr_spark.kernels.latex_text import extract_latex_text, is_latex
 from open_ocr_spark.kernels.mock import MOCK_ENGINE_RESPONSE
 from open_ocr_spark.kernels.options import (
     ENGINE_GO_TESSERACT,
     ENGINE_MOCK,
     ENGINE_TESSERACT,
     KNOWN_PREPROCESSORS,
-    PREPROCESSOR_CONVERT_PDF,
-    PREPROCESSOR_IDENTITY,
-    PREPROCESSOR_STROKE_WIDTH,
     SUPPORTED_LANGS,
     execution_order,
     parse_engine_args,
@@ -43,6 +84,14 @@ from open_ocr_spark.kernels.options import (
     swt_aggressive,
 )
 from open_ocr_spark.kernels.pdf_text import extract_pdf_text, is_pdf
+from open_ocr_spark.kernels.ps_text import extract_ps_text, is_ps
+from open_ocr_spark.kernels.rtf_text import extract_rtf_text, is_rtf
+from open_ocr_spark.kernels.subtitle_text import (
+    extract_srt_text,
+    extract_webvtt_text,
+    is_srt,
+    is_webvtt,
+)
 
 STATUS_OK = "ok"
 
@@ -52,10 +101,33 @@ STATUS_OK = "ok"
 # of real crawl pages.
 MAX_DOC_BYTES = 20 * 1024 * 1024
 
-# Default chain when none is given: PDF payloads are still handled, because
-# the engine itself routes by magic bytes (the reference's tesseract would
-# fail on a PDF; our flagship pipeline always detects).
-_DEFAULT_CHAIN = (PREPROCESSOR_CONVERT_PDF, PREPROCESSOR_STROKE_WIDTH)
+_GZIP_MAGIC = b"\x1f\x8b"
+_PPM_HEADER = re.compile(rb"P6\s+\d+\s+\d+\s+255\s")
+
+
+class _Hop(NamedTuple):
+    """What a container row needs to route its contents back through
+    extract_document: the document's nesting depth and its options
+    (lang, engine, engine_args, preprocessors, preprocessor_args)."""
+
+    depth: int
+    options: tuple
+
+
+class _MemberFailed(Exception):
+    """An archive member extracted to an error value; the archive fails
+    as ``error:<name>-member`` (deliberately not a ValueError)."""
+
+
+class Format(NamedTuple):
+    name: str  # status class: error:<name>-unsupported
+    sniff: Callable[[bytes], bool]
+    extract: Callable[[bytes, _Hop], str]
+    magic: bool  # sniffed by leading magic bytes rather than by structure
+
+
+def _plain(extract: Callable[[bytes], str]) -> Callable[[bytes, _Hop], str]:
+    return lambda payload, hop: extract(payload)
 
 
 def _is_image_payload(payload: bytes) -> bool:
@@ -63,31 +135,60 @@ def _is_image_payload(payload: bytes) -> bool:
     occur in text; BMP and P6 get stricter checks (reserved NULs /
     header shape) so a PAGE whose text merely starts with "BM" or "P6"
     still routes to the HTML branch."""
-    import re as _re
-
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return True
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        return True
-    if payload[:2] == b"\xff\xd8":
-        return True
-    if (
-        payload[:2] == b"BM"
-        and len(payload) >= 54
-        and payload[6:10] == b"\x00\x00\x00\x00"
-    ):
-        return True
-    return bool(_re.match(rb"P6\s+\d+\s+\d+\s+255\s", payload[:40]))
+    return (
+        payload[:8] == b"\x89PNG\r\n\x1a\n"
+        or payload[:6] in (b"GIF87a", b"GIF89a")
+        or payload[:2] == b"\xff\xd8"
+        or (payload[:2] == b"BM" and len(payload) >= 54
+            and payload[6:10] == b"\x00\x00\x00\x00")
+        or bool(_PPM_HEADER.match(payload[:40]))
+    )
 
 
-def _members_text(
-    members, lang, engine, engine_args, preprocessors, preprocessor_args,
-    depth, kind,
-):
-    """Shared archive-member loop (tar and generic zip): every member
-    routes back through extract_document; a failing member fails the
-    archive as a value naming the member. Members render plain — the
-    outer structured switch (if any) wraps the joined text once."""
+# Cheap first-byte gates in front of the structural text-format sniffs:
+# ordinary pages start with '<' and never pay for the full sniff.
+
+def _eml_sniff(payload: bytes) -> bool:
+    # an RFC 5322 header-name char opens the payload ('<' never does)
+    return (bool(payload) and 33 <= payload[0] <= 126
+            and payload[0] != ord("<") and is_eml(payload))
+
+
+def _ipynb_sniff(payload: bytes) -> bool:
+    # a JSON object, optionally after whitespace
+    return (payload[:1] in (b"{", b" ", b"\t", b"\r", b"\n")
+            and is_ipynb(payload))
+
+
+def _latex_sniff(payload: bytes) -> bool:
+    # a TeX control or comment char is the first non-blank byte
+    return payload[:64].lstrip()[:1] in (b"\\", b"%") and is_latex(payload)
+
+
+def _vtt_sniff(payload: bytes) -> bool:
+    # the WEBVTT magic's 'W', past the UTF-8 BOM the spec permits
+    head = payload[3:4] if payload[:3] == b"\xef\xbb\xbf" else payload[:1]
+    return head == b"W" and is_webvtt(payload)
+
+
+def _srt_sniff(payload: bytes) -> bool:
+    # a SubRip cue-index digit is the first non-blank byte (past a BOM)
+    head = payload[3:19] if payload[:3] == b"\xef\xbb\xbf" else payload[:16]
+    return head.lstrip()[:1].isdigit() and is_srt(payload)
+
+
+def _archive_text(split, payload: bytes, hop: _Hop) -> str:
+    """Archive rows (zip, tar): every member routes back through
+    extract_document with the row's options, one level down; the text is
+    the member texts in order. One recursion level only — an archive
+    inside an archive is an error value. Members render plain — the outer
+    structured switch (if any) wraps the joined text once."""
+    if hop.depth >= 1:
+        raise ValueError("nested archive (depth > 1)")
+    members = split(payload)
+    if not members:
+        raise ValueError("archive has no file members")
+    lang, engine, engine_args, preprocessors, preprocessor_args = hop.options
     member_args = dict(engine_args or {})
     cv = dict(member_args.get("config_vars") or {})
     cv.pop("tessedit_create_hocr", None)
@@ -99,75 +200,58 @@ def _members_text(
     for name, data in members:
         t, s, e = extract_document(
             data, lang, engine, member_args or None,
-            preprocessors, preprocessor_args,
-            _depth=depth + 1,
+            preprocessors, preprocessor_args, _depth=hop.depth + 1,
         )
         if s != STATUS_OK:
-            return None, f"error:{kind}-member", f"{name}: {e or s}"
+            raise _MemberFailed(f"{name}: {e or s}")
         texts.append(t)
-    return "\n".join(texts), STATUS_OK, ""
+    return "\n".join(texts)
 
 
-def _mbox_sniff(payload: bytes) -> bool:
-    from open_ocr_spark.kernels.eml_text import is_mbox
-
-    return is_mbox(payload)
-
-
-def _eml_sniff(payload: bytes) -> bool:
-    """Lazy wrapper so the eml module only imports when a payload could
-    plausibly be mail (first byte is a printable header-name char)."""
-    if not payload or not (33 <= payload[0] <= 126) or payload[0] == ord("<"):
-        return False
-    from open_ocr_spark.kernels.eml_text import is_eml
-
-    return is_eml(payload)
+def _tar_text(payload: bytes, hop: _Hop) -> str:
+    if not is_tar(payload):
+        raise ValueError("ustar magic with invalid header checksum")
+    return _archive_text(split_tar, payload, hop)
 
 
-def _ipynb_sniff(payload: bytes) -> bool:
-    """Lazy wrapper: only payloads whose first byte can open a JSON
-    object (optionally after whitespace) pay for the notebook sniff's
-    parse; ordinary pages start with '<' and skip it entirely."""
-    if payload[:1] not in (b"{", b" ", b"\t", b"\r", b"\n"):
-        return False
-    from open_ocr_spark.kernels.ipynb_text import is_ipynb
-
-    return is_ipynb(payload)
-
-
-def _latex_sniff(payload: bytes) -> bool:
-    r"""Lazy wrapper: only payloads whose first non-blank byte is a TeX
-    control or comment char (\ or %) pay for the preamble scan."""
-    if payload[:64].lstrip()[:1] not in (b"\\", b"%"):
-        return False
-    from open_ocr_spark.kernels.latex_text import is_latex
-
-    return is_latex(payload)
-
-
-def _vtt_sniff(payload: bytes) -> bool:
-    """Lazy wrapper: only payloads opening with 'W' (the WEBVTT magic's
-    first byte, never HTML's '<') pay for the header check. The spec
-    permits a UTF-8 BOM before the magic (and Windows tools write it),
-    so the byte gate looks past one."""
-    head = payload[3:4] if payload[:3] == b"\xef\xbb\xbf" else payload[:1]
-    if head != b"W":
-        return False
-    from open_ocr_spark.kernels.subtitle_text import is_webvtt
-
-    return is_webvtt(payload)
+# The routing order. Office/EPUB containers sit ahead of the generic zip
+# row (all share the PK magic); mail attachments recurse with default
+# options and one more level of depth (eml_text threads it).
+FORMATS: tuple[Format, ...] = (
+    Format("pdf", is_pdf, _plain(extract_pdf_text), True),
+    Format("rtf", is_rtf, _plain(extract_rtf_text), True),
+    Format("doc", is_cfb, _plain(extract_cfb_text), True),
+    Format("docx", is_docx, _plain(extract_docx_text), True),
+    Format("odt", is_odt, _plain(extract_odt_text), True),
+    Format("pptx", is_pptx, _plain(extract_pptx_text), True),
+    Format("xlsx", is_xlsx, _plain(extract_xlsx_text), True),
+    Format("epub", is_epub, _plain(extract_epub_text), True),
+    Format("zip", lambda p: p[:4] == b"PK\x03\x04",
+           partial(_archive_text, split_zip), True),
+    Format("tar", lambda p: len(p) >= 512 and p[257:262] == b"ustar",
+           _tar_text, True),
+    Format("mbox", lambda p: p[:5] == b"From " and is_mbox(p),
+           lambda p, hop: extract_mbox_text(p, _dispatch_depth=hop.depth),
+           False),
+    Format("eml", _eml_sniff,
+           lambda p, hop: extract_eml_text(p, _dispatch_depth=hop.depth),
+           False),
+    Format("ipynb", _ipynb_sniff, _plain(extract_ipynb_text), False),
+    Format("latex", _latex_sniff, _plain(extract_latex_text), False),
+    Format("ps", is_ps, _plain(extract_ps_text), True),
+    Format("vtt", _vtt_sniff, _plain(extract_webvtt_text), False),
+    Format("srt", _srt_sniff, _plain(extract_srt_text), False),
+    Format("ocr", _is_image_payload, _plain(ocr_image), True),
+)
 
 
-def _srt_sniff(payload: bytes) -> bool:
-    """Lazy wrapper: only payloads whose first non-blank byte (after an
-    optional UTF-8 BOM) is a digit (a SubRip cue index) pay for the
-    index+timestamp pair scan."""
-    head = payload[3:19] if payload[:3] == b"\xef\xbb\xbf" else payload[:16]
-    if not head.lstrip()[:1].isdigit():
-        return False
-    from open_ocr_spark.kernels.subtitle_text import is_srt
-
-    return is_srt(payload)
+def routes_by_magic(data: bytes) -> bool:
+    """True iff the bytes are gzip or match a magic-byte row of FORMATS —
+    the only attachments the mail fallback hands to the dispatch, so
+    arbitrary binary never reaches the HTML branch."""
+    return data[:2] == _GZIP_MAGIC or any(
+        f.sniff(data) for f in FORMATS if f.magic
+    )
 
 
 def _spans_json(text: str) -> str:
@@ -251,24 +335,20 @@ def extract_document(
                 f"payload {len(html)} bytes exceeds {MAX_DOC_BYTES}",
             )
 
-        chain = execution_order(list(preprocessors)) if preprocessors \
-            else list(_DEFAULT_CHAIN)
-
-        unknown = [s for s in chain if s not in KNOWN_PREPROCESSORS]
+        unknown = [s for s in execution_order(preprocessors)
+                   if s not in KNOWN_PREPROCESSORS]
         if unknown:
             return "", "error:preprocessor", f"unknown preprocessor: {unknown[0]}"
 
         aggressive = swt_aggressive(preprocessor_args)
         payload = bytes(html)
 
-        if payload[:2] == b"\x1f\x8b":
+        if payload[:2] == _GZIP_MAGIC:
             # standalone gzip file (page.html.gz, corpus.tar.gz): a
             # transparent encoding, not a format — decompress and route
             # whatever is inside (r5, kernels/archive.py). The cap is
             # MAX_DOC_BYTES, the SAME per-document bound raw payloads
             # get: a .gz must not smuggle a document past the budget.
-            from open_ocr_spark.kernels.archive import gunzip_payload
-
             try:
                 payload = gunzip_payload(payload, cap=MAX_DOC_BYTES)
             except ValueError as exc:
@@ -280,247 +360,21 @@ def extract_document(
                     )
                 return "", "error:gzip-unsupported", str(exc)
 
-        text: str | None = None
-
-        for stage in chain:
-            if stage == PREPROCESSOR_IDENTITY:
-                continue  # preprocessor.go:11-16
-            if stage == PREPROCESSOR_CONVERT_PDF:
-                if is_pdf(payload):
-                    try:
-                        text = extract_pdf_text(payload)
-                    except ValueError as exc:
-                        return "", "error:pdf-unsupported", str(exc)
-            elif stage == PREPROCESSOR_STROKE_WIDTH:
-                pass  # folded into the engine call's `aggressive` flag
-
-        if text is None:
-            if is_pdf(payload):
-                # no convert-pdf stage in the chain but payload is a PDF:
-                # the engine itself routes by magic bytes
+        hop = _Hop(_depth, (lang, engine, engine_args, preprocessors,
+                            preprocessor_args))
+        for fmt in FORMATS:
+            if fmt.sniff(payload):
                 try:
-                    text = extract_pdf_text(payload)
+                    text = fmt.extract(payload, hop)
+                except _MemberFailed as exc:
+                    return "", f"error:{fmt.name}-member", str(exc)
                 except ValueError as exc:
-                    return "", "error:pdf-unsupported", str(exc)
-            elif payload[:5] == b"{\\rtf":
-                # RTF routes by magic like PDF (r4, kernels/rtf_text.py);
-                # without this branch the HTML tokenizer would eat the
-                # control words as text soup
-                from open_ocr_spark.kernels.rtf_text import extract_rtf_text
-
-                try:
-                    text = extract_rtf_text(payload)
-                except ValueError as exc:
-                    return "", "error:rtf-unsupported", str(exc)
-            elif payload[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-                # Legacy Office binaries: CFB magic, then the container
-                # directory picks Word/PowerPoint/Excel (r5,
-                # kernels/doc_text.py extract_cfb_text)
-                from open_ocr_spark.kernels.doc_text import (
-                    extract_cfb_text,
-                )
-
-                try:
-                    text = extract_cfb_text(payload)
-                except ValueError as exc:
-                    return "", "error:doc-unsupported", str(exc)
-            elif payload[:4] == b"PK\x03\x04":
-                # Office containers: same magic-byte routing as PDF
-                # (r4) — OOXML (.docx) and ODF (.odt). ZIPs that are
-                # neither stay error-as-value rather than being fed to
-                # the HTML tokenizer as binary soup.
-                from open_ocr_spark.kernels.docx_text import (
-                    extract_docx_text,
-                    extract_epub_text,
-                    extract_odt_text,
-                    extract_pptx_text,
-                    extract_xlsx_text,
-                    is_docx,
-                    is_epub,
-                    is_odt,
-                    is_pptx,
-                    is_xlsx,
-                )
-
-                if is_docx(payload):
-                    try:
-                        text = extract_docx_text(payload)
-                    except ValueError as exc:
-                        return "", "error:docx-unsupported", str(exc)
-                elif is_odt(payload):
-                    try:
-                        text = extract_odt_text(payload)
-                    except ValueError as exc:
-                        return "", "error:odt-unsupported", str(exc)
-                elif is_pptx(payload):
-                    try:
-                        text = extract_pptx_text(payload)
-                    except ValueError as exc:
-                        return "", "error:pptx-unsupported", str(exc)
-                elif is_xlsx(payload):
-                    try:
-                        text = extract_xlsx_text(payload)
-                    except ValueError as exc:
-                        return "", "error:xlsx-unsupported", str(exc)
-                elif is_epub(payload):
-                    try:
-                        text = extract_epub_text(payload)
-                    except ValueError as exc:
-                        return "", "error:epub-unsupported", str(exc)
-                else:
-                    # not an Office/EPUB container: a generic zip
-                    # archive — members route through the dispatch like
-                    # tar members (r5, kernels/archive.py)
-                    from open_ocr_spark.kernels.archive import split_zip
-
-                    if _depth >= 1:
-                        return ("", "error:zip-unsupported",
-                                "nested archive (depth > 1)")
-                    try:
-                        members = split_zip(payload)
-                    except ValueError as exc:
-                        return "", "error:zip-unsupported", str(exc)
-                    if not members:
-                        return ("", "error:zip-unsupported",
-                                "archive has no file members")
-                    text, s, e = _members_text(
-                        members, lang, engine, engine_args, preprocessors,
-                        preprocessor_args, _depth, "zip",
-                    )
-                    if text is None:
-                        return "", s, e
-            elif len(payload) >= 512 and payload[257:262] == b"ustar":
-                # tar archive (r5, kernels/archive.py): each regular-file
-                # member routes back through this dispatch; the archive
-                # text is the member texts in order. One recursion level
-                # only — an archive inside an archive is an error value.
-                from open_ocr_spark.kernels.archive import is_tar, split_tar
-
-                if not is_tar(payload):
-                    return ("", "error:tar-unsupported",
-                            "ustar magic with invalid header checksum")
-                if _depth >= 1:
-                    return ("", "error:tar-unsupported",
-                            "nested archive (depth > 1)")
-                try:
-                    members = split_tar(payload)
-                except ValueError as exc:
-                    return "", "error:tar-unsupported", str(exc)
-                if not members:
-                    return "", "error:tar-unsupported", "archive has no file members"
-                text, s, e = _members_text(
-                    members, lang, engine, engine_args, preprocessors,
-                    preprocessor_args, _depth, "tar",
-                )
-                if text is None:
-                    return "", s, e
-            elif payload[:5] == b"From " and _mbox_sniff(payload):
-                # Unix mbox mail archive (r5, kernels/eml_text.py): the
-                # envelope line "From <addr> <date>" can't be an RFC
-                # 5322 header (space, not colon) nor HTML
-                from open_ocr_spark.kernels.eml_text import (
-                    extract_mbox_text,
-                )
-
-                try:
-                    text = extract_mbox_text(payload, _dispatch_depth=_depth)
-                except ValueError as exc:
-                    return "", "error:mbox-unsupported", str(exc)
-            elif _eml_sniff(payload):
-                # RFC 5322 / MIME e-mail (r5, kernels/eml_text.py): a
-                # header-block structural sniff that HTML can never
-                # satisfy routes mail payloads away from the HTML
-                # tokenizer
-                from open_ocr_spark.kernels.eml_text import (
-                    extract_eml_text,
-                )
-
-                try:
-                    text = extract_eml_text(payload, _dispatch_depth=_depth)
-                except ValueError as exc:
-                    return "", "error:eml-unsupported", str(exc)
-            elif _ipynb_sniff(payload):
-                # Jupyter notebook (r5, kernels/ipynb_text.py): JSON
-                # payload with the nbformat/cells shape; cell sources +
-                # textual outputs render in document order
-                from open_ocr_spark.kernels.ipynb_text import (
-                    extract_ipynb_text,
-                )
-
-                try:
-                    text = extract_ipynb_text(payload)
-                except ValueError as exc:
-                    return "", "error:ipynb-unsupported", str(exc)
-            elif _latex_sniff(payload):
-                # LaTeX source (r5, kernels/latex_text.py): the
-                # \documentclass preamble routes .tex payloads away from
-                # the HTML tokenizer; markup resolves to prose like the
-                # HTML branch's boilerplate strip
-                from open_ocr_spark.kernels.latex_text import (
-                    extract_latex_text,
-                )
-
-                try:
-                    text = extract_latex_text(payload)
-                except ValueError as exc:
-                    return "", "error:latex-unsupported", str(exc)
-            elif payload[:4] == b"%!PS":
-                # PostScript routes by DSC magic like PDF (r5,
-                # kernels/ps_text.py): scan-based text-show recovery,
-                # the pre-PDF sibling of the convert-pdf branch
-                from open_ocr_spark.kernels.ps_text import extract_ps_text
-
-                try:
-                    text = extract_ps_text(payload)
-                except ValueError as exc:
-                    return "", "error:ps-unsupported", str(exc)
-            elif _vtt_sniff(payload):
-                # WebVTT subtitles (r5, kernels/subtitle_text.py): cue
-                # text in cue order, timing/markup machinery dropped
-                from open_ocr_spark.kernels.subtitle_text import (
-                    extract_webvtt_text,
-                )
-
-                try:
-                    text = extract_webvtt_text(payload)
-                except ValueError as exc:
-                    return "", "error:vtt-unsupported", str(exc)
-            elif _srt_sniff(payload):
-                # SubRip subtitles (r5): index + timestamp pair sniff,
-                # same cue-text contract as WebVTT
-                from open_ocr_spark.kernels.subtitle_text import (
-                    extract_srt_text,
-                )
-
-                try:
-                    text = extract_srt_text(payload)
-                except ValueError as exc:
-                    return "", "error:srt-unsupported", str(exc)
-            elif _is_image_payload(payload):
-                # raster payloads route to the pixel-domain OCR branch —
-                # the reference's literal image->text contract
-                # (kernels/glyph_ocr.py). Unrecognizable pixels are a
-                # declared low-confidence error value, not silence.
-                from open_ocr_spark.kernels.glyph_ocr import ocr_image
-
-                try:
-                    text = ocr_image(payload)
-                except ValueError as exc:
-                    return "", "error:ocr-unsupported", str(exc)
-            elif args.markdown_output:
-                # the "md" output format (options.py markdown_output):
-                # structure-preserving extraction for the HTML branch only
-                from open_ocr_spark.kernels.html_markdown import (
-                    html_to_markdown,
-                )
-
-                text = html_to_markdown(
-                    _apply_charset(payload, args), aggressive=aggressive
-                )
-            else:
-                text = extract_main_text(
-                    _apply_charset(payload, args), aggressive=aggressive
-                )
+                    return "", f"error:{fmt.name}-unsupported", str(exc)
+                break
+        else:
+            render = html_to_markdown if args.markdown_output \
+                else extract_main_text
+            text = render(_apply_charset(payload, args), aggressive=aggressive)
 
         if args.structured_output:
             return _spans_json(text), STATUS_OK, ""

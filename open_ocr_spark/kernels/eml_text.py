@@ -237,23 +237,6 @@ def _best_text(headers: list[tuple[str, str]], body: bytes,
     return None
 
 
-def _known_magic(data: bytes) -> bool:
-    """True iff the bytes open with a magic the dispatch routes as a
-    real document format (so the fallback can never extract binary soup
-    through the HTML branch)."""
-    return (
-        data[:5] == b"%PDF-"
-        or data[:4] == b"PK\x03\x04"
-        or data[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
-        or data[:5] == b"{\\rtf"
-        or data[:8] == b"\x89PNG\r\n\x1a\n"
-        or data[:6] in (b"GIF87a", b"GIF89a")
-        or data[:2] == b"\xff\xd8"
-        or data[:2] == b"\x1f\x8b"
-        or (len(data) >= 512 and data[257:262] == b"ustar")
-    )
-
-
 def _attachments(headers, body, depth: int, out: list) -> None:
     """Collect (media-type, decoded bytes) for every non-text leaf part
     — the attachment fallback when a message has no text part at all
@@ -301,15 +284,17 @@ def extract_eml_text(raw: bytes, _dispatch_depth: int = 0) -> str:
     if got is None:
         atts: list = []
         _attachments(headers, body, 0, atts)
+        # call-time import: dispatch imports this module at import time
+        from open_ocr_spark.kernels.dispatch import (
+            extract_document,
+            routes_by_magic,
+        )
+
         for ctype, data in atts:
-            if not _known_magic(data):
+            if not routes_by_magic(data):
                 # never feed arbitrary binary to the HTML fallback —
                 # only attachments the dispatch recognizes by magic
                 continue
-            # lazy import: dispatch imports this module lazily too, so
-            # the cycle only exists at call time, never at import time
-            from open_ocr_spark.kernels.dispatch import extract_document
-
             text, status, _err = extract_document(
                 data, _depth=_dispatch_depth + 1
             )

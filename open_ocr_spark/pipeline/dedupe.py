@@ -56,8 +56,3 @@ def latest_per_url_agg(pages: DataFrame) -> DataFrame:
         F.max_by(F.struct(*other_cols), ordering).alias("_row")
     )
     return picked.select("url", *[F.col(f"_row.{c}").alias(c) for c in other_cols])
-
-
-# Backwards-compatible alias: the window form IS the former
-# latest_per_url_window; both names now resolve to the scale path.
-latest_per_url_window = latest_per_url

@@ -1,20 +1,16 @@
-"""Explicit partitioning: bucket-by-url-hash + host salting (north_rule).
+"""Explicit partitioning: bucket-by-url-hash + bucketed writes (north_rule).
 
 The reference's shuffle is RabbitMQ competing consumers on a shared queue
 (/root/reference/ocr_rpc_worker.go:97-105, k8s replicas
 open-ocr-worker.yaml:6). Here it is ONE Spark exchange: repartition on
-xxhash64(url) — content-addressed, uniform, deterministic. Skewed hosts
-(a few hosts dominate crawl tables) get a salt column so host-keyed aggs
-never funnel one host into one task; AQE skew handling covers the residue
-(SURVEY.md §4.2.2).
+xxhash64(url) — content-addressed, uniform, deterministic; AQE skew
+handling covers host skew in host-keyed aggs (SURVEY.md §4.2.2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_SALT = 16
 
 
 def host_of(url_col):
@@ -27,15 +23,6 @@ def bucket_by_url_hash(pages: DataFrame, num_partitions: int) -> DataFrame:
     shuffle ahead of the extraction kernel so every task gets an even byte
     budget regardless of host skew in the input files."""
     return pages.repartition(num_partitions, F.xxhash64(F.col("url")))
-
-
-def with_host_salt(df: DataFrame, salt: int = DEFAULT_SALT) -> DataFrame:
-    """Append (host, salt) columns for skew-safe host-keyed work: group by
-    (host, _salt) first, then re-aggregate by host — two small shuffles
-    instead of one skewed one."""
-    return df.withColumn("host", host_of(F.col("url"))).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
-    )
 
 
 def write_bucketed(

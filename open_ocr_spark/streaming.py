@@ -237,28 +237,3 @@ def running_user_counts_stateful(
         .start()
     )
 
-
-def stream_windowed_event_counts(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """The same windowed agg as a streaming query over an events directory
-    (append mode: windows emit once the watermark passes)."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    events = spark.readStream.schema(schema).parquet(events_dir)
-    agg = windowed_event_counts(events, window, watermark)
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -257,6 +257,48 @@ def test_unextractable_attachment_is_error_value():
     assert status == "error:eml-unsupported" and "attachments" in err
 
 
+def _glyph_pixels(text: str):
+    from open_ocr_spark.dataops.multimodal import decode_pixels
+    from open_ocr_spark.kernels.glyph_ocr import render_text_png
+
+    return decode_pixels(render_text_png(text))
+
+
+def _ps_attachment() -> bytes:
+    from open_ocr_spark.kernels.ps_text import build_ps
+
+    return build_ps([["Attached PostScript."]])
+
+
+def _bmp_attachment() -> bytes:
+    from open_ocr_spark.dataops.multimodal import encode_bmp24
+
+    return encode_bmp24(_glyph_pixels("BMP SCAN"))
+
+
+def _ppm_attachment() -> bytes:
+    from open_ocr_spark.dataops.multimodal import encode_ppm
+
+    return encode_ppm(_glyph_pixels("PPM SCAN"))
+
+
+# The attachment gate is the dispatch's own magic-byte rows, so every
+# payload the dispatch routes by magic may extract from a text-less mail:
+# PostScript, BMP and PPM rasters (routed to OCR), and a PDF whose header
+# lacks the version dash (is_pdf checks "%PDF" alone).
+@pytest.mark.parametrize("make, expected", [
+    (_ps_attachment, "Attached PostScript."),
+    (_bmp_attachment, "BMP SCAN"),
+    (_ppm_attachment, "PPM SCAN"),
+    (lambda: b"%PDF1.4\nstream\nBT (Dashless header.) Tj ET\nendstream",
+     "Dashless header."),
+])
+def test_magic_routed_attachment_extracts(make, expected):
+    raw = _attachment_mail(make(), "application/octet-stream")
+    assert extract_document(raw) == (
+        f"With attachment\n\n{expected}\n", "ok", "")
+
+
 # ---------------------------------------------------------------------------
 # differential vs the INDEPENDENT stdlib email package: subject and body
 # decoding must agree on every writer-twin variant

@@ -478,6 +478,13 @@ def test_dispatch_pdf_routing_by_magic_bytes():
 def test_dispatch_unknown_preprocessor_error():
     _, status, error = extract_document(HTML, preprocessors=["nope"])
     assert status == "error:preprocessor" and "nope" in error
+    # stages run in reverse list order, so the LAST unknown name in the
+    # list is the first one executed — and the one the error names
+    _, status, error = extract_document(
+        HTML, preprocessors=["first-bad", "convert-pdf", "last-bad"]
+    )
+    assert (status, error) == ("error:preprocessor",
+                               "unknown preprocessor: last-bad")
 
 
 def test_dispatch_never_raises():
