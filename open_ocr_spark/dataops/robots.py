@@ -234,16 +234,18 @@ def parse_robots_meta(robots: DataFrame, agent: str = "*") -> DataFrame:
 # Attribute order and quoting both vary in the wild: other attributes
 # may sit between name and content, and content may be unquoted — four
 # patterns (name-first/content-first x quoted/unquoted) cover the
-# combinations; \b after "robots" rejects name="robotsx".
+# combinations; \b after "robots" rejects name="robotsx", and the
+# whitespace required before name/content rejects data-name and
+# data-content (\b would match after the hyphen).
 _META_ROBOTS = (
-    r'(?i)<meta\b[^>]*\bname\s*=\s*["\']?robots["\']?[\s/][^>]*'
-    r'\bcontent\s*=\s*["\']([^"\'>]*)["\']',
-    r'(?i)<meta\b[^>]*\bname\s*=\s*["\']?robots["\']?[\s/][^>]*'
-    r'\bcontent\s*=\s*([^\s"\'>]+)',
-    r'(?i)<meta\b[^>]*\bcontent\s*=\s*["\']([^"\'>]*)["\'][^>]*'
-    r'\bname\s*=\s*["\']?robots["\']?(?:[\s/>]|$)',
-    r'(?i)<meta\b[^>]*\bcontent\s*=\s*([^\s"\'>]+)[^>]*'
-    r'\bname\s*=\s*["\']?robots["\']?(?:[\s/>]|$)',
+    r'(?i)<meta\b[^>]*\sname\s*=\s*["\']?robots["\']?(?:[\s/][^>]*)?'
+    r'\scontent\s*=\s*["\']([^"\'>]*)["\']',
+    r'(?i)<meta\b[^>]*\sname\s*=\s*["\']?robots["\']?(?:[\s/][^>]*)?'
+    r'\scontent\s*=\s*([^\s"\'>]+)',
+    r'(?i)<meta\b[^>]*\scontent\s*=\s*["\']([^"\'>]*)["\'][^>]*'
+    r'\sname\s*=\s*["\']?robots["\']?(?:[\s/>]|$)',
+    r'(?i)<meta\b[^>]*\scontent\s*=\s*([^\s"\'>]+)[^>]*'
+    r'\sname\s*=\s*["\']?robots["\']?(?:[\s/>]|$)',
 )
 # Line-anchored so 'My-X-Robots-Tag:' or the literal text inside a
 # header VALUE cannot fabricate directives. Agent-scoped forms
@@ -264,7 +266,7 @@ def index_directives(
     (either attribute order) or any X-Robots-Tag header line; ``none``
     implies noindex AND nofollow."""
     html = F.coalesce(F.col(html_col).cast("string"), F.lit(""))
-    headers = F.coalesce(F.col(headers_col), F.lit(""))
+    headers = F.coalesce(F.col(headers_col).cast("string"), F.lit(""))
     metas = F.concat(
         *[F.regexp_extract_all(html, F.lit(p), F.lit(1))
           for p in _META_ROBOTS]

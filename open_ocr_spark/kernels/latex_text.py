@@ -11,7 +11,8 @@ The TeXbook; Lamport, LaTeX: A Document Preparation System). Scope and
 determinism rules, pinned by the writer twin + unit fixtures:
 
 - comments: an unescaped ``%`` consumes through the newline (TeX eats
-  the line break, so ``foo%\nbar`` renders ``foobar``);
+  the line break, so ``foo%\nbar`` renders ``foobar``), including a
+  commented-out ``\begin{verbatim}``;
 - body = between ``\begin{document}`` and ``\end{document}`` (to EOF if
   the end tag is missing — truncated crawl payloads must parse); a
   payload with no body is a ValueError for the dispatch to wrap;
@@ -27,6 +28,8 @@ determinism rules, pinned by the writer twin + unit fixtures:
   IS the content for a text corpus;
 - ``verbatim`` environments render byte-verbatim as their own
   paragraph;
+- an unescaped ``&`` is an alignment tab: it separates table cells and
+  renders as a space, while ``\&`` renders a literal ampersand;
 - ligatures: ``---`` → em dash, ``--`` → en dash, ``` `` ``` → “,
   ``''`` → ”, ``~`` → space; single quotes are left alone (prose
   apostrophes must survive byte-exactly);
@@ -74,6 +77,8 @@ _ESCAPES = {"%": "%", "&": "&", "_": "_", "$": "$", "#": "#",
 
 _COMMENT_RE = re.compile(r"(?<!\\)((?:\\\\)*)%[^\n]*\n?")
 _CMD_RE = re.compile(r"[A-Za-z]+\*?")
+_VERBATIM_OPEN = "\\begin{verbatim}"
+_VERBATIM_CLOSE = "\\end{verbatim}"
 
 
 def is_latex(payload: bytes) -> bool:
@@ -93,6 +98,32 @@ def _strip_comments(s: str) -> str:
     # an even run of backslashes before % leaves % as comment-opener;
     # the run itself is kept (group 1)
     return _COMMENT_RE.sub(lambda m: m.group(1), s)
+
+
+def _park_verbatim(src: str, raw: list[str]) -> str:
+    r"""Park verbatim bodies in ``raw`` behind \x00 sentinels BEFORE the
+    comment strip: '%' inside verbatim is content, and the byte-verbatim
+    promise must survive the global comment pass (pinned by test). An
+    opener that an unescaped '%' precedes on its line is itself comment
+    text and stays, with the rest of its line, for the strip."""
+    out: list[str] = []
+    pos = 0
+    while (start := src.find(_VERBATIM_OPEN, pos)) >= 0:
+        body = start + len(_VERBATIM_OPEN)
+        line_start = max(pos, src.rfind("\n", pos, start) + 1)
+        if _COMMENT_RE.search(src, line_start, start):
+            eol = src.find("\n", body)
+            eol = len(src) if eol < 0 else eol
+            out.append(src[pos:eol])
+            pos = eol
+            continue
+        end = src.find(_VERBATIM_CLOSE, body)
+        end = len(src) if end < 0 else end
+        raw.append(src[body:end].strip("\n"))
+        out.append(src[pos:start] + f"\n\n\x00{len(raw) - 1}\x00\n\n")
+        pos = min(end + len(_VERBATIM_CLOSE), len(src))
+    out.append(src[pos:])
+    return "".join(out)
 
 
 def _collapse(text: str) -> str:
@@ -214,12 +245,8 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
                 if env in _MATH_ENVS:
                     raw.append(" ".join(body.split()))
                     emit(f"\n\n\x00{len(raw) - 1}\x00\n\n")
-                elif env in ("tabular", "tabular*"):
-                    cells = _render(body, depth + 1, raw)
-                    cells = cells.replace("&", " ")
-                    emit("\n\n" + cells + "\n\n")
                 else:
-                    # list/quote/figure/unknown: contents render,
+                    # tabular/list/quote/figure/unknown: contents render,
                     # paragraph-separated from the surroundings
                     emit("\n\n" + _render(body, depth + 1, raw)
                                + "\n\n")
@@ -267,7 +294,8 @@ def _render(s: str, depth: int, raw: list[str]) -> str:
             emit(_render(arg or "", depth + 1, raw))
         elif c == "}":
             i += 1  # stray close brace: drop
-        elif c == "~":
+        elif c in "~&":
+            # tie, or an alignment tab between table cells
             emit(" ")
             i += 1
         elif c == "-" and s[i:i + 3] == "---":
@@ -297,18 +325,7 @@ def extract_latex_text(payload: bytes) -> str:
     # content (hostile-input hardening, pinned by test)
     src = src.replace("\x00", "")
     raw: list[str] = []
-
-    def _park_verbatim(m: re.Match) -> str:
-        raw.append(m.group(1).strip("\n"))
-        return f"\n\n\x00{len(raw) - 1}\x00\n\n"
-
-    # park verbatim bodies BEFORE the comment strip: '%' inside
-    # verbatim is content, and the byte-verbatim promise must survive
-    # the global comment pass (pinned by test)
-    src = re.sub(
-        r"\\begin\{verbatim\}(.*?)(?:\\end\{verbatim\}|\Z)",
-        _park_verbatim, src, flags=re.S,
-    )
+    src = _park_verbatim(src, raw)
     src = _strip_comments(src)
     m = re.search(r"\\begin\{document\}", src)
     if not m:

@@ -1130,40 +1130,18 @@ def q_extract_doc_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass).  The which-table FIB bit alternates per row (0Table/1Table
     both exercised).  Routed by CFB magic through the standard engine
     dispatch; closed-form oracle."""
-    import pandas as pd
-
-    def _doc_wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_doc
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                doc = build_doc(
-                    [
-                        (f"Doc {i} café intro.\r", True),
-                        (f"Pièce № {i % 7} finale.\r", False),
-                    ],
-                    which_table=i % 2,
-                )
-                out.append((i, bytearray(doc)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_doc(
+            [
+                (f"Doc {i} café intro.\r", True),
+                (f"Pièce № {i % 7} finale.\r", False),
+            ],
+            which_table=i % 2,
+        )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_doc_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/w/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/w/", build)
 
 
 ORACLES["extract_doc_text"] = """
@@ -1183,39 +1161,17 @@ def q_extract_ppt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     nests one cp1252 TextBytesAtom and one UTF-16 TextCharsAtom (holding
     a non-cp1252 character) inside a Document container.  Routed by CFB
     magic + directory through the standard dispatch."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_ppt
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = build_ppt(
-                    [
-                        (f"Slide {i} café title", False),
-                        (f"Body № {i % 9} text", True),
-                    ]
-                )
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_ppt(
+            [
+                (f"Slide {i} café title", False),
+                (f"Body № {i % 9} text", True),
+            ]
+        )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/s/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/s/", build)
 
 
 ORACLES["extract_ppt_text"] = """
@@ -1235,40 +1191,18 @@ def q_extract_xls_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     rich-run-annotated latin string (the skip arithmetic must be exact),
     a UTF-16 string with a non-cp1252 character, and a plain tail.
     Routed by CFB magic + directory through the standard dispatch."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_xls
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = build_xls(
-                    [
-                        (f"Cell {i} café", False),
-                        (f"Wide № {i % 5}", True),
-                        (f"tail {i % 3}", False),
-                    ]
-                )
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_xls(
+            [
+                (f"Cell {i} café", False),
+                (f"Wide № {i % 5}", True),
+                (f"tail {i % 3}", False),
+            ]
+        )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/x/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/x/", build)
 
 
 ORACLES["extract_xls_text"] = """
@@ -1289,40 +1223,18 @@ def q_extract_msg_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-16 (001F) subject/body with a non-cp1252 character, odd ones the
     8-bit 001E form — and the frozen subject/blank/body contract routes
     through the standard CFB dispatch."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.doc_text import build_msg
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                wide = i % 2 == 0
-                mark = "№" if wide else "No"
-                blob = build_msg(
-                    f"Re: item {mark} {i % 11}",
-                    f"Body for doc {i} café.\rSecond line.",
-                    wide=wide,
-                )
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        wide = i % 2 == 0
+        mark = "№" if wide else "No"
+        return build_msg(
+            f"Re: item {mark} {i % 11}",
+            f"Body for doc {i} café.\rSecond line.",
+            wide=wide,
+        )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit("https://docs.example.com/m/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/m/", build)
 
 
 ORACLES["extract_msg_text"] = """

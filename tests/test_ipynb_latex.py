@@ -253,3 +253,24 @@ def test_latex_tabular_star_width_and_spec_are_layout():
     out = extract_latex_text(doc)
     assert "10cm" not in out and "ll" not in out
     assert "a b c d" in out
+
+
+def test_latex_commented_verbatim_opener_in_preamble():
+    doc = (b"\\documentclass{article}\n% \\begin{verbatim}\n"
+           b"\\begin{document}\nBody text.\n\\end{document}")
+    assert extract_latex_text(doc) == "Body text."
+
+
+def test_latex_commented_verbatim_opener_in_body():
+    doc = (b"\\documentclass{article}\n\\begin{document}\n"
+           b"Before % \\begin{verbatim} \\begin{verbatim}\nafter text\n"
+           b"\\begin{verbatim}\n  100% kept\n\\end{verbatim}\n"
+           b"\\end{document}")
+    assert extract_latex_text(doc) == "Before after text\n\n  100% kept"
+
+
+def test_latex_escaped_ampersand_in_tabular_is_content():
+    doc = (b"\\documentclass{article}\n\\begin{document}\n"
+           b"\\begin{tabular}{ll} AT\\&T & Corp \\end{tabular}\n"
+           b"\\end{document}")
+    assert extract_latex_text(doc) == "AT&T Corp"

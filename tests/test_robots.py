@@ -231,7 +231,29 @@ def test_index_directives_name_boundary_and_cross_tag(spark):
         (1, '<meta name="robots"><meta content="noindex" name="other">', ""),
         # name as the final attribute before > (content-first order)
         (2, '<meta content="noindex" name="robots">', ""),
+        # data-name is not the name attribute, in either order
+        (3, '<meta data-name="robots" content="noindex">', ""),
+        (4, '<meta content="noindex" data-name="robots">', ""),
+        # a trailing data-content must not win the greedy attribute scan
+        (5, '<meta name="robots" content="index" data-content="noindex">', ""),
+        (6, '<meta content="index" data-content="noindex" name="robots">', ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, html string, headers string")
     got = {r["doc_id"]: r["noindex"] for r in index_directives(df).collect()}
-    assert got == {0: False, 1: False, 2: True}
+    assert got == {0: False, 1: False, 2: True, 3: False, 4: False,
+                   5: False, 6: False}
+
+
+def test_index_directives_binary_headers(spark):
+    from open_ocr_spark.dataops.robots import index_directives
+
+    rows = [
+        (0, "<p>x</p>", bytearray(b"X-Robots-Tag: noindex\r\n")),
+        (1, "<p>y</p>", None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, html string, headers binary")
+    got = {
+        r["doc_id"]: (r["noindex"], r["from_header"])
+        for r in index_directives(df).collect()
+    }
+    assert got == {0: (True, True), 1: (False, False)}

@@ -1,6 +1,10 @@
-"""Local replica of the driver's correctness gate: run every queries()
-entry on Spark and its oracle_sql() twin on DuckDB over the same parquet
-tables; compare row count + column names + order-insensitive value hash.
+"""Correctness gate: run each queries() entry on Spark and its
+oracle_sql() twin on DuckDB over the same parquet tables; compare row
+count, column names, type families and an order-insensitive value hash.
+A query without an oracle must return at least one row.
+
+``check_query`` is the comparison; tests/test_oracles.py runs it over
+the whole registry at sf0.001, and this CLI runs it on any scale factor.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
 """
@@ -8,12 +12,13 @@ Usage: python tools/check_contract.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -73,231 +78,77 @@ def norm_cell(v):
     return str(v)
 
 
-def value_hash(cols: list[str], rows: list[tuple]) -> str:
+def _cell_lines(cols: list[str], rows: list[tuple]) -> list[str]:
+    """Rows as sorted lines of normalized cells in column-name order."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x1f".join(norm_cell(row[i]) for i in order) for row in rows
-    )
+    return sorted("\x1f".join(norm_cell(row[i]) for i in order) for row in rows)
+
+
+def value_hash(cols: list[str], rows: list[tuple]) -> str:
     h = hashlib.sha256()
-    for line in lines:
+    for line in _cell_lines(cols, rows):
         h.update(line.encode())
         h.update(b"\n")
     return h.hexdigest()[:16]
 
 
-# Explicit, round-stamped overflow allowlist (ADVICE r4): when a round
-# registers more never-checked queries than the driver window has slots,
-# the past-boundary entries must be DECLARED here by the person shipping
-# the round — not derived by the tool being gated, which let any
-# saturated-window reorder pass silently. An entry for round R applies
-# ONLY while CORRECTNESS_r{R+1:02d}.json does not exist yet; the moment
-# the next round's driver results land, the exemption expires and the
-# named queries must have rotated into the window and gained rows.
-OVERFLOW_OK: dict[int, list[str]] = {
-    # r4 shipped 54 new queries against 50 slots; these four diagnostics
-    # were declared past-boundary and rotated into the r5 window.
-    4: [
-        "top_bigrams",
-        "key_skew_gini",
-        "readability_scores",
-        "bloom_prune_stats",
-    ],
-    # r5's window was already saturated by the 50 earlier round-5 queries
-    # when these landed late in the round; declared past-boundary, each
-    # replica-green (rows+schema+hash) via this tool at sf0.001 AND
-    # sf0.01.  host_template_lines is NOT here: it was promoted into
-    # slot 50 (binary_payload_stats vacated — hash-green since r4), so
-    # only these two ride the exemption.
-    5: [
-        "reflow_text",
-        "mojibake_repair",
-        "extract_ipynb_text",
-        "extract_latex_text",
-        "host_hits",
-        "clean_web_corpus",
-        "extract_srt_text",
-        "extract_vtt_text",
-        "noindex_gate",
-        "extract_ps_text",
-        "infer_column_types",
-        "recrawl_schedule",
-    ],
-}
-
-
-def check_window(queries: dict) -> int:
-    """Enforce the registry-order policy: the driver records CORRECTNESS
-    rows for only the first DRIVER_WINDOW registry entries, so a query may
-    sit past the window ONLY if some prior round's CORRECTNESS_r*.json
-    already records a green for it.  Returns the number of violations so
-    the gap is a build error, not an archaeology find (VERDICT r2 item 3).
-    """
-    import glob
-    import json
-    import os
-
-    from open_ocr_spark.queries import DRIVER_WINDOW
-
-    from open_ocr_spark.queries import ORACLES
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    recorded_green: set[str] = set()
-    hash_checked: set[str] = set()
-    latest_round = 0
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = __import__("re").search(r"r(\d+)\.json$", path)
-        latest_round = max(latest_round, int(m.group(1)) if m else 0)
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match") is True:
-                hash_checked.add(name)
-                recorded_green.add(name)
-            elif (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            ):
-                recorded_green.add(name)
-
-    names = list(queries)
-    outside = names[DRIVER_WINDOW:]
-    never_checked = [n for n in outside if n not in recorded_green]
-    # a slot is legitimately OCCUPIED by a query that was never checked
-    # at all, or whose only recorded rows are rows-only while it now
-    # carries an oracle (upgrade-pending: its first hash-check is the
-    # point of holding the slot)
-    in_window_new = [
-        n
-        for n in names[:DRIVER_WINDOW]
-        if n not in recorded_green
-        or (n not in hash_checked and n in ORACLES)
-    ]
-    print(
-        f"registry: {len(names)} queries, driver window {DRIVER_WINDOW} "
-        f"-> {len(outside)} outside the window "
-        f"({len(never_checked)} of those never driver-checked); "
-        f"{len(in_window_new)}/{DRIVER_WINDOW} window slots earn a first "
-        f"(hash-)check this round"
-    )
-    # apply only UNEXPIRED allowlist rounds: an entry for round R is
-    # void once CORRECTNESS_r{R+1}.json exists on disk
-    live_overflow: set[str] = set()
-    for rnd, allowed in OVERFLOW_OK.items():
-        if rnd >= latest_round:
-            live_overflow.update(allowed)
-    overflow_ok = [n for n in never_checked if n in live_overflow]
-    if overflow_ok:
-        never_checked = [n for n in never_checked if n not in live_overflow]
-        print(
-            f"WINDOW OVERFLOW (declared, round-stamped): {overflow_ok} "
-            f"- exemption expires when CORRECTNESS_r{latest_round + 1:02d}"
-            f".json lands"
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    for n in never_checked:
-        print(f"WINDOW VIOLATION: {n!r} is past registry slot "
-              f"{DRIVER_WINDOW} but has no recorded CORRECTNESS green - "
-              f"move it into the first {DRIVER_WINDOW} entries")
-    return len(never_checked) + check_stale(queries, names, in_window_new)
+    return con
 
 
-def check_stale(queries: dict, names: list, in_window_new: list) -> int:
-    """VERDICT r4 item 3: every query's LAST driver-green should postdate
-    the last code change to the plan it builds.  A query's code = the
-    source file its builder is defined in (meaningful once the registry
-    is split per-domain) plus every `open_ocr_spark.*` module the builder
-    imports.  Compares git last-commit times of those files against the
-    commit time of the CORRECTNESS json that recorded the query's newest
-    driver row, prints a rotation-ordered staleness report, and returns a
-    violation count only for WASTED window slots — slots holding a
-    fresh-green query while a staler one sits outside (the window is
-    finite, so staleness alone is a report, mis-prioritisation is the
-    error)."""
-    import glob
-    import inspect
-    import json
-    import os
-    import re
-    import subprocess
-
-    from open_ocr_spark.queries import DRIVER_WINDOW
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    def last_commit_ts(path: str) -> int:
-        out = subprocess.run(
-            ["git", "-C", repo, "log", "-1", "--format=%ct", "--", path],
-            capture_output=True, text=True,
-        ).stdout.strip()
-        return int(out) if out else 0
-
-    newest_green: dict[str, int] = {}
-    round_ts: dict[int, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        round_ts[rnd] = last_commit_ts(os.path.relpath(path, repo))
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            ):
-                newest_green[name] = max(newest_green.get(name, 0), rnd)
-
-    file_ts: dict[str, int] = {}
-
-    def dep_files(fn) -> set[str]:
-        try:
-            src = inspect.getsource(fn)
-            own = os.path.relpath(inspect.getsourcefile(fn), repo)
-        except (OSError, TypeError):
-            return set()
-        deps = {own} if not own.startswith("..") else set()
-        for mod in re.findall(r"from (open_ocr_spark[.\w]*) import", src):
-            rel = mod.replace(".", "/")
-            for cand in (rel + ".py", rel + "/__init__.py"):
-                if os.path.exists(os.path.join(repo, cand)):
-                    deps.add(cand)
-                    break
-        # the registry assembler changes on every window rotation for
-        # reasons unrelated to any single query's plan; builders live in
-        # per-domain modules (their own file IS tracked), so only the
-        # order-keeping __init__ is excluded
-        deps.discard("open_ocr_spark/queries/__init__.py")
-        return deps
-
-    stale: list[tuple[int, str, str]] = []  # (lag_seconds, name, file)
-    for name, fn in queries.items():
-        rnd = newest_green.get(name)
-        if rnd is None:
-            continue  # never checked: handled by check_window
-        green_ts = round_ts.get(rnd, 0)
-        for f in dep_files(fn):
-            if f not in file_ts:
-                file_ts[f] = last_commit_ts(f)
-            if file_ts[f] > green_ts:
-                stale.append((file_ts[f] - green_ts, name, f))
-                break
-    stale.sort(reverse=True)
-    wasted = [
-        n for n in names[:DRIVER_WINDOW]
-        if n not in in_window_new and n not in {s[1] for s in stale}
-    ]
-    stale_outside = [s for s in stale if s[1] in names[DRIVER_WINDOW:]]
-    if stale:
-        print(
-            f"stale greens: {len(stale)} queries' newest driver row "
-            f"predates a code change ({len(stale_outside)} outside the "
-            f"window); rotation order (most stale first): "
-            f"{[s[1] for s in stale_outside][:15]}"
-        )
-    violations = min(len(stale_outside), len(wasted))
-    if violations:
-        print(
-            f"STALE VIOLATION: {violations} window slot(s) hold fresh-"
-            f"green queries ({wasted[:violations]}) while staler ones "
-            f"sit outside ({[s[1] for s in stale_outside[:violations]]})"
-        )
-    return violations
+def check_query(spark, con, fn, oracle_sql: str | None, sf_dir: str) -> list[str]:
+    """Run one registry query ``fn`` on Spark and, if it has one, its
+    oracle on DuckDB; return the problems found (empty: the query
+    passed)."""
+    try:
+        sdf = fn(spark, sf_dir)
+        s_cols = sdf.columns
+        s_types = dict(sdf.dtypes)
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as exc:
+        return [f"spark error: {exc}"]
+    if oracle_sql is None:
+        return [] if s_rows else ["no rows (rows-only query)"]
+    try:
+        rel = con.sql(oracle_sql)
+        d_cols = list(rel.columns)
+        d_types = dict(zip(d_cols, (str(t) for t in rel.types)))
+        d_rows = rel.fetchall()
+    except Exception as exc:
+        return [f"duckdb error: {exc}"]
+    problems = []
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rows {len(s_rows)} vs {len(d_rows)}")
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"cols {sorted(s_cols)} vs {sorted(d_cols)}")
+    else:
+        type_diffs = [
+            f"{c}: spark {s_types[c]} vs duckdb {d_types[c]}"
+            for c in s_cols
+            if type_family(s_types[c]) != type_family(d_types[c])
+        ]
+        if type_diffs:
+            problems.append("type families: " + "; ".join(type_diffs))
+    if not problems:
+        sh, dh = value_hash(s_cols, s_rows), value_hash(d_cols, d_rows)
+        if sh != dh:
+            # name the first differing row pair for debugging
+            diff = next(
+                ((a, b) for a, b in zip(_cell_lines(s_cols, s_rows),
+                                        _cell_lines(d_cols, d_rows))
+                 if a != b),
+                ("", ""),
+            )
+            problems.append(f"value hash {sh} vs {dh}; first differing "
+                            f"row spark {diff[0][:200]!r} duckdb "
+                            f"{diff[1][:200]!r}")
+    return problems
 
 
 def main():
@@ -307,81 +158,26 @@ def main():
     import __spark_entry__ as entry_mod
     from open_ocr_spark.pipeline.session import get_spark
 
-    spark = get_spark(app_name="contract-check", master="local[8]",
-                      shuffle_partitions=8)
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
-    queries = entry_mod.queries()
+    cores = os.cpu_count() or 1
+    spark = get_spark(app_name="contract-check", master=f"local[{cores}]",
+                      shuffle_partitions=2 * cores)
+    con = oracle_connection(sf_dir)
     oracles = entry_mod.oracle_sql()
     failures = []
-    for name, fn in queries.items():
+    for name, fn in entry_mod.queries().items():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_types = dict(sdf.dtypes)
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {exc}")
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(s_rows)} rows (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            continue
-        try:
-            rel = con.sql(oracles[name])
-            d_cols = list(rel.columns)
-            d_types = dict(zip(d_cols, (str(t) for t in rel.types)))
-            d_rows = rel.fetchall()
-        except Exception as exc:
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            continue
-        problems = []
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rows {len(s_rows)} vs {len(d_rows)}")
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"cols {sorted(s_cols)} vs {sorted(d_cols)}")
-        else:
-            type_diffs = [
-                f"{c}: spark {s_types[c]} vs duckdb {d_types[c]}"
-                for c in s_cols
-                if type_family(s_types[c]) != type_family(d_types[c])
-            ]
-            if type_diffs:
-                problems.append("type families: " + "; ".join(type_diffs))
-        if not problems:
-            sh, dh = value_hash(s_cols, s_rows), value_hash(d_cols, d_rows)
-            if sh != dh:
-                problems.append(f"value hash {sh} vs {dh}")
-                # show first differing rows for debugging
-                order_s = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
-                order_d = sorted(range(len(d_cols)), key=lambda i: d_cols[i])
-                ss = sorted("\x1f".join(norm_cell(r[i]) for i in order_s) for r in s_rows)
-                dd = sorted("\x1f".join(norm_cell(r[i]) for i in order_d) for r in d_rows)
-                for a, b in zip(ss, dd):
-                    if a != b:
-                        print(f"      spark : {a[:200]}")
-                        print(f"      duckdb: {b[:200]}")
-                        break
+        problems = check_query(spark, con, fn, oracles.get(name), sf_dir)
         if problems:
             failures.append(name)
-            print(f"FAIL  {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
-        else:
-            print(f"ok    {name}: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
+        status = "FAIL" if problems else "ok" if name in oracles else "rows"
+        print(f"{status:<5} {name}: {'; '.join(problems) or 'passed'} "
+              f"[{time.time() - t0:.1f}s]")
 
-    window_violations = check_window(queries)
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     spark.stop()
-    sys.exit(1 if (failures or window_violations) else 0)
+    sys.exit(1 if failures else 0)
 
 
 if __name__ == "__main__":
