@@ -4,8 +4,12 @@ Cluster:
     zip -r openocrspark.zip open_ocr_spark
     spark-submit --py-files openocrspark.zip \\
         --num-executors 4N --conf spark.sql.adaptive.enabled=true \\
-        -m open_ocr_spark.cli --input s3://.../pages --output s3://.../out
+        -m open_ocr_spark.cli --input s3://.../pages --output /shared/out
     (or: spark-submit --py-files openocrspark.zip path/to/cli.py ...)
+
+--output must be a local path (a shared mount on a cluster): manifests
+and snapshots are committed with os calls on the driver, so a URI
+output (s3://, hdfs://, file://) is rejected.
 
 Local test mode (the reference's inplace_decode analog,
 /root/reference/ocr_http_handler.go:53-68 — same kernel code, no cluster):
@@ -32,7 +36,8 @@ def parse_args(argv=None):
     p.add_argument("--input", required=True,
                    help="pages table path (parquet dir or table)")
     p.add_argument("--output", required=True,
-                   help="output dir (data/ + manifests/ created under it)")
+                   help="local output dir (data/ + manifests/ created "
+                        "under it); URIs are rejected")
     p.add_argument("--master", default=None,
                    help="override master (default: spark-submit / local[*])")
     p.add_argument("--num-buckets", type=int, default=64,

@@ -104,6 +104,7 @@ def write_snapshot(
     run_id: str,
     input_snapshot_id: str,
     buckets_processed: list[int],
+    num_buckets: int | None = None,
 ) -> dict:
     """Append an Iceberg-shaped snapshot to the table's snapshot chain:
     one JSON file per completed run, recording the run's lineage (input
@@ -127,6 +128,7 @@ def write_snapshot(
         "parent_snapshot_id": chain[-1].get("snapshot_id") if chain else None,
         "run_id": run_id,
         "input_snapshot_id": input_snapshot_id,
+        "num_buckets": num_buckets,
         "buckets_processed": sorted(buckets_processed),
         "committed_buckets": sorted(committed_buckets(out_dir)),
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -192,9 +194,12 @@ def commit_bucket(
     docs: int,
     bytes_processed: int,
     failures: int,
+    num_buckets: int | None = None,
 ) -> None:
     """Write the manifest row for a bucket — atomically (tmp + rename) and
-    strictly after its data write."""
+    strictly after its data write. ``num_buckets`` is the B of the
+    bucket id pmod(xxhash64(url), B): bucket k under one B holds other
+    urls than bucket k under another, so a resume checks it."""
     mdir = os.path.join(out_dir, "manifests")
     os.makedirs(mdir, exist_ok=True)
     manifest = {
@@ -202,6 +207,7 @@ def commit_bucket(
         "input_snapshot_id": input_snapshot_id,
         "partition_range": f"bucket {bucket}..{bucket}",
         "bucket": bucket,
+        "num_buckets": num_buckets,
         "docs_processed": docs,
         "bytes_processed": bytes_processed,
         "failure_count": failures,

@@ -19,6 +19,7 @@ the commit granularity fine enough for cheap resume.
 from __future__ import annotations
 
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -97,19 +98,38 @@ def run_extraction_job(
     written against a DIFFERENT snapshot id are surfaced in the summary
     (``snapshot_mismatch_buckets``) and as a warning — their outputs were
     computed from an input that has since changed.
+    ``out_dir`` must be a local path: manifests and snapshots are
+    committed with ``os`` calls on the driver, so a URI (``s3://``,
+    ``hdfs://``, ``file://``) raises ``ValueError``. So does a resume
+    with a ``num_buckets`` other than the committed manifests record —
+    the bucket ids would no longer partition the urls the same way.
     Returns summary counters.
     """
+    if urlparse(out_dir).scheme:
+        raise ValueError(
+            f"out_dir {out_dir!r} is a URI; only local paths are supported "
+            "(manifests are committed on the driver's filesystem)"
+        )
     run_id = run_id or uuid.uuid4().hex[:12]
     if input_snapshot_id is None:
         input_snapshot_id = derive_snapshot_id(pages)
     done = committed_buckets(out_dir)
+    manifests = read_manifests(out_dir)
+    recorded = sorted({m["num_buckets"] for m in manifests
+                       if m.get("num_buckets") not in (None, num_buckets)})
+    if recorded:
+        raise ValueError(
+            f"resume: {out_dir} has buckets committed with num_buckets="
+            f"{recorded}, not {num_buckets}; resume with the same value or "
+            "use a fresh output dir"
+        )
     # manifests from before snapshot-id derivation carry the old default
     # constant (or nothing): treat those as UNKNOWN, not stale — flagging
     # every legacy bucket would teach operators to ignore the warning
     _legacy_ids = (None, "snapshot-0")
     stale = sorted(
         m["bucket"]
-        for m in read_manifests(out_dir)
+        for m in manifests
         if m.get("input_snapshot_id") not in _legacy_ids
         and m.get("input_snapshot_id") != input_snapshot_id
     )
@@ -146,11 +166,9 @@ def run_extraction_job(
         # partition-prune committed buckets BEFORE the dedupe work: the
         # filter sits directly on the scan projection
         subset = base.filter(F.col(BUCKET_COL).isin(group))
-        result = extraction_plan(
-            subset.drop(BUCKET_COL), use_mock=use_mock
-        ).withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(F.col("url")), F.lit(num_buckets)),
+        result = with_bucket(
+            extraction_plan(subset.drop(BUCKET_COL), use_mock=use_mock),
+            num_buckets,
         )
         # ONE action per group: the dynamic-partition-overwrite write (only
         # this group's bucket dirs are replaced; committed buckets are
@@ -195,6 +213,7 @@ def run_extraction_job(
                 docs=docs,
                 bytes_processed=stats.get(f"bytes_{b}") or 0,
                 failures=stats.get(f"failures_{b}") or 0,
+                num_buckets=num_buckets,
             )
             total_docs += docs
             processed += 1
@@ -204,6 +223,7 @@ def run_extraction_job(
         run_id=run_id,
         input_snapshot_id=input_snapshot_id,
         buckets_processed=[b for b in all_buckets],
+        num_buckets=num_buckets,
     )
     return {
         "run_id": run_id,

@@ -1,6 +1,7 @@
-"""Shared fixtures for the query registry: the parquet table loader and the
-boilerplate-wrapped pages table every extraction query derives from
-`documents` (all Catalyst concat/encode, zero Python)."""
+"""Shared fixtures for the query registry: the parquet table loader, the
+writer-twin payload scaffold, and the boilerplate-wrapped pages table
+every extraction query derives from `documents` (all Catalyst
+concat/encode, zero Python)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,24 @@ from pyspark.sql import functions as F
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def twin_payloads(docs: DataFrame, build) -> DataFrame:
+    """Writer-twin scaffold: one payload per row of ``docs``, built by
+    ``build(doc_id, *values) -> bytes`` where ``values`` are the row's
+    remaining columns, as ``doc_id long, payload binary``. The batch
+    loop is this one function; each query owns only its builder."""
+    import pandas as pd
+
+    def _wrap(batches):
+        for pdf in batches:
+            out = [
+                (int(i), bytearray(build(int(i), *vals)))
+                for i, *vals in zip(*(pdf[c] for c in pdf.columns))
+            ]
+            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+
+    return docs.mapInPandas(_wrap, "doc_id long, payload binary")
 
 
 _WRAP_PREFIX = (

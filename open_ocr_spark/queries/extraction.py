@@ -7,9 +7,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from open_ocr_spark.pipeline.stages import extract_stage
-from open_ocr_spark.queries._shared import _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents
+from open_ocr_spark.queries._shared import (
+    _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents, twin_payloads,
+)
 
 ORACLES: dict[str, str] = {}
+
+
+def _extract_tail(raw: DataFrame, url_prefix: str) -> DataFrame:
+    """``doc_id, payload`` plus any option columns (``engine_args_json``)
+    as pages — url from ``url_prefix``, lang eng — run through the REAL
+    extraction stage, one row per doc_id."""
+    pages = raw.select(
+        F.concat(F.lit(url_prefix),
+                 F.col("doc_id").cast("string")).alias("url"),
+        F.col("payload").alias("html"),
+        F.lit("eng").alias("lang"),
+        *(c for c in raw.columns if c != "payload"),
+    )
+    return (
+        extract_stage(pages, passthrough=["doc_id"])
+        .select("doc_id", "extracted_text", "status")
+        .orderBy("doc_id")
+    )
+
+
+def _twin_extract(spark: SparkSession, sf_dir: str, url_prefix: str, build,
+                  *cols) -> DataFrame:
+    """Writer-twin extraction: ``build(doc_id, *cols)`` over the documents
+    table, through the shared tail. Every container-format query uses
+    this one shape, so the thing each query varies is exactly the thing
+    under test — the payload."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", *cols)
+    return _extract_tail(twin_payloads(docs, build), url_prefix)
 
 
 def q_extract_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,7 +85,7 @@ def q_base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         roundtrip.alias("roundtrip_text"),
-        (roundtrip == F.col("text")).alias("matches"),
+        roundtrip.eqNullSafe(F.col("text")).alias("matches"),
     )
 
 
@@ -68,42 +98,16 @@ def q_extract_docx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     magic-byte routing must pick the DOCX branch and return the text
     byte-exactly.  A zip-walk, run-concatenation, w:tab/w:br or
     entity-decode bug changes extracted_text and breaks the hash."""
-    import pandas as pd
-
-    def _docx_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_docx
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                paras = [
-                    text if text is not None else "",
-                    f"Doc {i}\t<tagged & checked>",
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/docx/{i}",
-                     bytearray(build_docx(paras)))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        return build_docx([
+            text if text is not None else "",
+            f"Doc {i}\t<tagged & checked>",
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _docx_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/docx/",
+                         build, "text")
 
 
 def q_extract_xlsx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,43 +119,17 @@ def q_extract_xlsx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     magic-byte routing must distinguish the workbook from the other
     office zips and return tab/newline/blank-line flat text
     byte-exactly."""
-    import pandas as pd
-
-    def _xlsx_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_xlsx
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                t = text if text is not None else ""
-                sheets = [
-                    [["Doc", str(i)], [t], ["<cells & rows>", "", "-3.5"]],
-                    [["Doc", "total"], [str(i), str(i)]],
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/xlsx/{i}",
-                     bytearray(build_xlsx(sheets)))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        t = text if text is not None else ""
+        return build_xlsx([
+            [["Doc", str(i)], [t], ["<cells & rows>", "", "-3.5"]],
+            [["Doc", "total"], [str(i), str(i)]],
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _xlsx_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/xlsx/",
+                         build, "text")
 
 
 def q_extract_glyph_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,20 +141,10 @@ def q_extract_glyph_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching OCR over the decoded pixels must recover the text exactly.
     The oracle is the font-normalization transform (upper, drop
     unsupported glyphs, 96-glyph line, trailing-pad strip)."""
-    import pandas as pd
-
-    def _render(batches):
+    def build(i: int, clean) -> bytes:
         from open_ocr_spark.kernels.glyph_ocr import render_text_png
 
-        for pdf in batches:
-            out = []
-            for i, t in zip(pdf["doc_id"], pdf["clean"]):
-                i = int(i)
-                out.append(
-                    (i, f"https://docs.example.com/scan/{i}",
-                     bytearray(render_text_png(t)))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "url", "html"])
+        return render_text_png(clean)
 
     clean = F.rtrim(
         F.substring(
@@ -189,23 +157,8 @@ def q_extract_glyph_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
             96,
         )
     )
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", clean.alias("clean")
-    )
-    pages = docs.mapInPandas(
-        _render, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/scan/",
+                         build, clean.alias("clean"))
 
 
 def q_extract_epub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,45 +169,20 @@ def q_extract_epub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine-order reader roundtrips; each chapter runs through the
     engine's own HTML boilerplate-strip kernel, so the oracle is the
     same normalization identity extract_main_text uses, per chapter."""
-    import pandas as pd
-
-    def _epub_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_epub
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                t = text if text is not None else ""
-                ch1 = (_WRAP_PREFIX + t + _WRAP_SUFFIX).encode("utf-8")
-                ch2 = (
-                    _WRAP_PREFIX
-                    + f"Chapter {i} of the epub & appendix"
-                    + _WRAP_SUFFIX
-                ).encode("utf-8")
-                out.append(
-                    (i, f"https://docs.example.com/epub/{i}",
-                     bytearray(build_epub([ch1, ch2])))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        t = text if text is not None else ""
+        ch1 = (_WRAP_PREFIX + t + _WRAP_SUFFIX).encode("utf-8")
+        ch2 = (
+            _WRAP_PREFIX
+            + f"Chapter {i} of the epub & appendix"
+            + _WRAP_SUFFIX
+        ).encode("utf-8")
+        return build_epub([ch1, ch2])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _epub_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/epub/",
+                         build, "text")
 
 
 def q_extract_pptx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,42 +192,16 @@ def q_extract_pptx_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     paragraphs with an a:br line break and XML entities; magic-byte
     routing must distinguish the deck from DOCX/ODT zips and return all
     slides' text in numeric slide order, byte-exactly."""
-    import pandas as pd
-
-    def _pptx_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_pptx
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                slides = [
-                    [text if text is not None else ""],
-                    [f"Slide {i}", "<deck & notes>\nend"],
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/pptx/{i}",
-                     bytearray(build_pptx(slides)))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "url", "html"]
-            )
+        return build_pptx([
+            [text if text is not None else ""],
+            [f"Slide {i}", "<deck & notes>\nend"],
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _pptx_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/pptx/",
+                         build, "text")
 
 
 def q_extract_odt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,40 +212,16 @@ def q_extract_odt_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-length-space + entity line; magic-byte routing must
     disambiguate ODT from DOCX inside the shared PK branch and return
     the text byte-exactly."""
-    import pandas as pd
-
-    def _odt_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.docx_text import build_odt
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                paras = [
-                    text if text is not None else "",
-                    f"Odt {i}\t<open & doc>",
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/odt/{i}",
-                     bytearray(build_odt(paras)))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "url", "html"])
+        return build_odt([
+            text if text is not None else "",
+            f"Odt {i}\t<open & doc>",
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _odt_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/odt/",
+                         build, "text")
 
 
 def q_extract_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,40 +234,16 @@ def q_extract_rtf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text byte-exactly.  A tokenizer, destination-skip, \\uc
     fallback, or \\par-convention bug changes extracted_text and breaks
     the hash."""
-    import pandas as pd
-
-    def _rtf_wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.kernels.rtf_text import build_rtf
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                paras = [
-                    text if text is not None else "",
-                    f"Rtf {i}\t«rich & text»",
-                ]
-                out.append(
-                    (i, f"https://docs.example.com/rtf/{i}",
-                     bytearray(build_rtf(paras)))
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "url", "html"])
+        return build_rtf([
+            text if text is not None else "",
+            f"Rtf {i}\t«rich & text»",
+        ])
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pages = docs.mapInPandas(
-        _rtf_wrap, "doc_id long, url string, html binary"
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        "html",
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/rtf/",
+                         build, "text")
 
 
 def q_extract_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -401,11 +255,8 @@ def q_extract_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     esc = F.col("text")
     for find, repl in (("\\", "\\\\"), ("(", "\\("), (")", "\\)")):
         esc = F.replace(esc, F.lit(find), F.lit(repl))
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.com/pdf/"), F.col("doc_id")).alias(
-            "url"
-        ),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
+    raw = docs.select(
+        "doc_id",
         F.encode(
             F.concat(
                 F.lit("%PDF-1.4\nBT\n("),
@@ -413,15 +264,9 @@ def q_extract_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(") Tj\nET\n%%EOF\n"),
             ),
             "utf-8",
-        ).alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
+        ).alias("payload"),
     )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _extract_tail(raw, "https://docs.example.com/pdf/")
 
 
 def q_url_fetch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,58 +366,32 @@ def q_extract_pdf_flate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/convert-pdf.go:51-62) — and every ODD doc_id
     additionally armors the deflated bytes in ASCII85, declaring the
     [/ASCII85Decode /FlateDecode] FILTER CHAIN, so chain decoding is
-    driver-value-checked, not just unit-tested. The wrap uses an
-    Arrow-batched pandas UDF (fixture construction only; the measured
-    kernel is the unwrap); the kernel decodes with stdlib zlib/base64 and
-    must return the text byte-exact."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # annotations set explicitly: `from __future__ import annotations`
-    # stringifies hints, which pandas_udf cannot resolve for local names
-    def _flate_wrap(ids, texts):
+    driver-value-checked, not just unit-tested. The wrap is a writer
+    twin (fixture construction only; the measured kernel is the unwrap);
+    the kernel decodes with stdlib zlib/base64 and must return the text
+    byte-exact."""
+    def build(i: int, t) -> bytes:
         import base64
         import zlib
 
-        out = []
-        for i, t in zip(ids, texts):
-            s = (t or "").replace("\\", "\\\\")
-            s = s.replace("(", "\\(").replace(")", "\\)")
-            body = zlib.compress(("BT\n(" + s + ") Tj\nET\n").encode("utf-8"))
-            if int(i) % 2 == 1:
-                body = base64.a85encode(body) + b"~>"
-                filt = b"[/ASCII85Decode /FlateDecode]"
-            else:
-                filt = b"/FlateDecode"
-            out.append(
-                b"%PDF-1.5\n1 0 obj\n<< /Filter " + filt + b" /Length "
-                + str(len(body)).encode()
-                + b" >>\nstream\n"
-                + body
-                + b"\nendstream\nendobj\n%%EOF\n"
-            )
-        return pd.Series(out)
+        s = (t or "").replace("\\", "\\\\")
+        s = s.replace("(", "\\(").replace(")", "\\)")
+        body = zlib.compress(("BT\n(" + s + ") Tj\nET\n").encode("utf-8"))
+        if i % 2 == 1:
+            body = base64.a85encode(body) + b"~>"
+            filt = b"[/ASCII85Decode /FlateDecode]"
+        else:
+            filt = b"/FlateDecode"
+        return (
+            b"%PDF-1.5\n1 0 obj\n<< /Filter " + filt + b" /Length "
+            + str(len(body)).encode()
+            + b" >>\nstream\n"
+            + body
+            + b"\nendstream\nendobj\n%%EOF\n"
+        )
 
-    _flate_wrap.__annotations__ = {
-        "ids": pd.Series, "texts": pd.Series, "return": pd.Series
-    }
-    _flate_wrap = pandas_udf(_flate_wrap, "binary")
-
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.com/pdfz/"), F.col("doc_id")).alias(
-            "url"
-        ),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        _flate_wrap(F.col("doc_id"), F.col("text")).alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/pdfz/",
+                         build, "text")
 
 
 def q_extract_pdf_cmap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,32 +404,13 @@ def q_extract_pdf_cmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     all on the value path, content stream FlateDecode'd
     (kernels/pdf_text.py render_pdf_cmap, the writer twin). The kernel
     must map codes back to Unicode byte-exactly: text + 'abc<<>>'."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _cmap_wrap(texts):
+    def build(i: int, t) -> bytes:
         from open_ocr_spark.kernels.pdf_text import render_pdf_cmap
 
-        return pd.Series([render_pdf_cmap(t or "") for t in texts])
+        return render_pdf_cmap(t or "")
 
-    _cmap_wrap.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    _cmap_wrap = pandas_udf(_cmap_wrap, "binary")
-
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(
-            F.lit("https://docs.example.com/pdfcmap/"), F.col("doc_id")
-        ).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        _cmap_wrap(F.col("text")).alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _twin_extract(spark, sf_dir, "https://docs.example.com/pdfcmap/",
+                         build, "text")
 
 
 def q_extract_pdf_tj(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -639,11 +439,8 @@ def q_extract_pdf_tj(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("Doc "), F.col("doc_id").cast("string")), "utf-8"
         )
     )
-    pages = docs.select(
-        F.concat(F.lit("https://docs.example.com/pdftj/"), F.col("doc_id")).alias(
-            "url"
-        ),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
+    raw = docs.select(
+        "doc_id",
         F.encode(
             F.concat(
                 F.lit("%PDF-1.4\nBT\n[("),
@@ -655,15 +452,9 @@ def q_extract_pdf_tj(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("> Tj\n2 0.5 (END) \"\nET\n%%EOF\n"),
             ),
             "utf-8",
-        ).alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
+        ).alias("payload"),
     )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _extract_tail(raw, "https://docs.example.com/pdftj/")
 
 
 def q_extract_structured_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,7 +495,6 @@ def q_extract_structured_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("https://docs.example.com/doc/"), F.col("doc_id")).alias(
             "url"
         ),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
         F.encode(
             F.concat(F.lit(_WRAP_PREFIX), body, F.lit(_WRAP_SUFFIX)),
             "utf-8",
@@ -771,7 +561,6 @@ def q_extract_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("https://docs.example.com/doc/"), F.col("doc_id")).alias(
             "url"
         ),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
         F.encode(
             F.concat(
                 F.lit('<html><head><script>q()</script></head><body>'
@@ -1071,41 +860,22 @@ def q_charset_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
     third carry none — both of those fall to the BOM/meta sniff, whose
     utf-8 errors=replace turns each accented byte into U+FFFD.  The
     oracle states all three outcomes closed-form."""
-    import pandas as pd
-
-    def _cp1252_wrap(batches):
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                html = f"<html><body><p>Café {i} façade</p></body></html>"
-                out.append((i, bytearray(html.encode("cp1252"))))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+    def build(i: int) -> bytes:
+        html = f"<html><body><p>Café {i} façade</p></body></html>"
+        return html.encode("cp1252")
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_cp1252_wrap, "doc_id long, payload binary")
     d = F.col("doc_id")
-    pages = raw.select(
-        F.concat(F.lit("https://cs.example.com/p/"), d.cast("string")).alias(
-            "url"
-        ),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
+    raw = twin_payloads(docs, build).withColumn(
+        "engine_args_json",
         F.when(
             d % 3 == 0,
             F.lit('{"config_vars": {"charset": "ISO-8859-1"}}'),
         )
         .when(d % 3 == 1, F.lit('{"config_vars": {"charset": "x-weird"}}'))
-        .otherwise(F.lit("{}"))
-        .alias("engine_args_json"),
+        .otherwise(F.lit("{}")),
     )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
+    return _extract_tail(raw, "https://cs.example.com/p/")
 
 
 ORACLES["charset_transport"] = """
@@ -1248,35 +1018,6 @@ ORACLES["extract_msg_text"] = """
         FROM documents
         ORDER BY doc_id
     """
-
-
-def _twin_extract(spark: SparkSession, sf_dir: str, url_prefix: str, build):
-    """Shared writer-twin scaffold (r5): ``build(doc_id) -> payload
-    bytes``, wrapped as pages and run through the REAL extraction stage.
-    Every container-format query uses this one shape, so the thing each
-    query varies is exactly the thing under test — the payload."""
-    import pandas as pd
-
-    def _wrap(batches):
-        for pdf in batches:
-            out = [(int(i), bytearray(build(int(i)))) for i in pdf["doc_id"]]
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
-    pages = raw.select(
-        F.concat(F.lit(url_prefix),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("payload").alias("html"),
-        F.lit("eng").alias("lang"),
-        "doc_id",
-    )
-    return (
-        extract_stage(pages, passthrough=["doc_id"])
-        .select("doc_id", "extracted_text", "status")
-        .orderBy("doc_id")
-    )
 
 
 def q_extract_eml_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1466,26 +1207,18 @@ def q_csv_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a 2x3 grid written by the stdlib csv writer twin carrying a
     quoted comma, escaped quotes, an embedded newline, and an empty
     field — the closed-form oracle pins every grammar rule."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.csv_text import build_csv
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                blob = build_csv([
-                    [f"v {i}", f"a,b {i % 5}", f'He said "hi" {i % 3}'],
-                    [f"line1\nline2 {i}", "", f"tail {i % 7}"],
-                ])
-                out.append((i, bytearray(blob)))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        return build_csv([
+            [f"v {i}", f"a,b {i % 5}", f'He said "hi" {i % 3}'],
+            [f"line1\nline2 {i}", "", f"tail {i % 7}"],
+        ])
 
     from open_ocr_spark.kernels.csv_text import csv_cells
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
+    raw = twin_payloads(docs, build)
     return (
         csv_cells(raw, payload_col="payload")
         .orderBy("doc_id", "row_idx", "col_idx")

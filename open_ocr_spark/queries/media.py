@@ -6,9 +6,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from open_ocr_spark.queries._shared import _t
+from open_ocr_spark.queries._shared import _t, twin_payloads
 
 ORACLES: dict[str, str] = {}
+
+
+def _twin_media(spark: SparkSession, sf_dir: str, build) -> DataFrame:
+    """``build(doc_id)`` payloads keyed as the media operators expect:
+    ``media_id long, payload binary``."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    return twin_payloads(docs, build).withColumnRenamed("doc_id", "media_id")
 
 
 def q_binary_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -25,9 +32,9 @@ def q_binary_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE_NONE: mapInPandas feature-extraction plumbing with the
+    """ORACLE_NONE: Arrow-batched feature-extraction plumbing with the
     deterministic decode stub. Rows-only check, no sort — a sort above
-    the mapInPandas stage would run it twice (range-sampling pass)."""
+    the Python stage would run it twice (range-sampling pass)."""
     from open_ocr_spark.dataops.multimodal import extract_media_features
 
     docs = _t(spark, sf_dir, "documents")
@@ -53,35 +60,27 @@ def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight from the generation formula in SQL.  Same-pixel PNG/BMP
     agreement and block-mean downsampling exactness are pinned in
     tests/test_phash.py."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     from open_ocr_spark.dataops.phash import image_near_dup_groups
 
-    def _img_wrap(ids):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.multimodal import encode_bmp24
 
         xs, ys = np.arange(8)[None, :], np.arange(8)[:, None]
-        out = []
-        for i in ids:
-            g = int(i) % 17
-            base = (g * 31 + 7 * xs + 13 * ys) % 120
-            noise = (int(i) * (xs + 1) * (ys + 3)) % 2
-            v = (base * 2 + noise).astype(np.uint8)
-            out.append(encode_bmp24(np.stack([v, v, v], axis=2)))
-        return pd.Series(out)
+        g = i % 17
+        base = (g * 31 + 7 * xs + 13 * ys) % 120
+        noise = (i * (xs + 1) * (ys + 3)) % 2
+        v = (base * 2 + noise).astype(np.uint8)
+        return encode_bmp24(np.stack([v, v, v], axis=2))
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.withColumn(
-        "payload", pandas_udf(_img_wrap, "binary")(F.col("doc_id"))
-    )
+    media = twin_payloads(docs, build)
     return image_near_dup_groups(media, strict=True).orderBy("dhash")
 
 
 def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE_NONE: one-to-many frame-sampling plumbing (mapInPandas fans
+    """ORACLE_NONE: one-to-many frame-sampling plumbing (the kernel fans
     each payload out to its deterministic stub frames)."""
     from open_ocr_spark.dataops.multimodal import sample_frames
 
@@ -105,35 +104,23 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-up rows, stride 12). Nearest-neighbor 2x replicates each source
     pixel into a 2x2 block, so corner k must equal source pixel k — the
     oracle recomputes the formulas in SQL."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
     from open_ocr_spark.dataops.multimodal import resize_images
 
-    def _bmp_wrap(ids):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.multimodal import encode_bmp24
 
-        out = []
-        for i in ids:
-            a = int(i) % 251
-            b = (int(i) * 3 + 7) % 251
-            c = (int(i) * 5 + 11) % 251
-            d = (int(i) * 7 + 13) % 251
-            arr = np.array(
-                [[[a] * 3, [b] * 3], [[c] * 3, [d] * 3]], dtype=np.uint8
-            )
-            out.append(encode_bmp24(arr))
-        return pd.Series(out)
+        a = i % 251
+        b = (i * 3 + 7) % 251
+        c = (i * 5 + 11) % 251
+        d = (i * 7 + 13) % 251
+        arr = np.array(
+            [[[a] * 3, [b] * 3], [[c] * 3, [d] * 3]], dtype=np.uint8
+        )
+        return encode_bmp24(arr)
 
-    _bmp_wrap.__annotations__ = {"ids": pd.Series, "return": pd.Series}
-    _bmp_wrap = pandas_udf(_bmp_wrap, "binary")
-
-    docs = _t(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"), _bmp_wrap(F.col("doc_id")).alias("payload")
-    )
+    media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 4, 4, strict=True)
 
     def px(pos_1based: int):
@@ -166,25 +153,19 @@ def q_media_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from open_ocr_spark.dataops.multimodal import resize_images
 
-    def _png_wrap(batches):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.multimodal import encode_png
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                a, b = i % 241, (i * 11 + 3) % 241
-                c, d = (i * 13 + 29) % 241, (i * 17 + 31) % 241
-                arr = np.array(
-                    [[[a] * 3, [b] * 3], [[c] * 3, [d] * 3]], dtype=np.uint8
-                )
-                out.append((i, bytearray(encode_png(arr))))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        a, b = i % 241, (i * 11 + 3) % 241
+        c, d = (i * 13 + 29) % 241, (i * 17 + 31) % 241
+        arr = np.array(
+            [[[a] * 3, [b] * 3], [[c] * 3, [d] * 3]], dtype=np.uint8
+        )
+        return encode_png(arr)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_png_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 4, 4, strict=True)
 
     def _corners(batches):
@@ -224,24 +205,18 @@ def q_media_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from open_ocr_spark.dataops.multimodal import resize_images
 
-    def _jpeg_wrap(batches):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.jpeg import encode_jpeg
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                a, b = (i * 2 + 5) % 250, (i * 9 + 40) % 250
-                arr = np.empty((8, 16, 3), dtype=np.uint8)
-                arr[:, :8] = a
-                arr[:, 8:] = b
-                out.append((i, bytearray(encode_jpeg(arr, grayscale=True))))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        a, b = (i * 2 + 5) % 250, (i * 9 + 40) % 250
+        arr = np.empty((8, 16, 3), dtype=np.uint8)
+        arr[:, :8] = a
+        arr[:, 8:] = b
+        return encode_jpeg(arr, grayscale=True)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_jpeg_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 8, 8, strict=True)
 
     def _pixels(batches):
@@ -289,27 +264,18 @@ def q_media_resize_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFra
 
     from open_ocr_spark.dataops.multimodal import resize_images
 
-    def _jpeg_wrap(batches):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.jpeg import encode_jpeg_progressive
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                a, b = (i * 3 + 11) % 250, (i * 7 + 60) % 250
-                arr = np.empty((8, 16, 3), dtype=np.uint8)
-                arr[:, :8] = a
-                arr[:, 8:] = b
-                out.append(
-                    (i, bytearray(encode_jpeg_progressive(arr,
-                                                          grayscale=True)))
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        a, b = (i * 3 + 11) % 250, (i * 7 + 60) % 250
+        arr = np.empty((8, 16, 3), dtype=np.uint8)
+        arr[:, :8] = a
+        arr[:, 8:] = b
+        return encode_jpeg_progressive(arr, grayscale=True)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_jpeg_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 8, 8, strict=True)
 
     def _pixels(batches):
@@ -374,26 +340,18 @@ def q_media_resize_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from open_ocr_spark.dataops.multimodal import resize_images
 
-    def _jpeg_wrap(batches):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.jpeg_arith import encode_jpeg_arith
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                a, b = (i * 5 + 23) % 250, (i * 11 + 42) % 250
-                arr = np.empty((8, 16, 3), dtype=np.uint8)
-                arr[:, :8] = a
-                arr[:, 8:] = b
-                out.append(
-                    (i, bytearray(encode_jpeg_arith(arr, grayscale=True)))
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        a, b = (i * 5 + 23) % 250, (i * 11 + 42) % 250
+        arr = np.empty((8, 16, 3), dtype=np.uint8)
+        arr[:, :8] = a
+        arr[:, 8:] = b
+        return encode_jpeg_arith(arr, grayscale=True)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_jpeg_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 8, 8, strict=True)
 
     def _pixels(batches):
@@ -443,30 +401,19 @@ def q_media_frame_sample_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample byte-exactly with its true timestamp. A wrong stsz/stco/stsc
     interpretation, a broken tick->sample mapping or a bad mdat offset
     changes first_byte/frame_len/ts_s and breaks the hash."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import sample_frames
 
-    def _mp4_wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.dataops.mp4 import mux_mp4
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 1 + i % 4
-                samples = [
-                    bytes([(i * 7 + k * 3) % 256]) * (1 + (i + k) % 5)
-                    for k in range(n)
-                ]
-                out.append(
-                    (i, bytearray(mux_mp4(samples, 64, 48, timescale=600,
-                                          sample_delta=600)))
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        n = 1 + i % 4
+        samples = [
+            bytes([(i * 7 + k * 3) % 256]) * (1 + (i + k) % 5)
+            for k in range(n)
+        ]
+        return mux_mp4(samples, 64, 48, timescale=600, sample_delta=600)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_mp4_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     frames = sample_frames(media, fps=1.0, strict=True)
     return frames.select(
         F.col("media_id").alias("doc_id"),
@@ -494,45 +441,38 @@ def q_media_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from open_ocr_spark.dataops.multimodal import resize_images
 
-    def _gif_wrap(batches):
+    def build(i: int) -> bytes:
         import struct
 
         from open_ocr_spark.dataops.gif import lzw_encode
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                # palette: 16 pixel grays + transparent slot + bg gray
-                pal = bytearray()
-                for k in range(16):
-                    v = (i * 3 + k * 7 + 10) % 239
-                    pal += bytes((v, v, v))
-                pal += b"\x00\x00\x00"  # 16: transparent (color unused)
-                bg = (i * 29 + 31) % 239
-                pal += bytes((bg, bg, bg))  # 17: background
-                pal += b"\x00" * (3 * (32 - 18))
-                # display indices: pixel (r,c) -> 4r+c, except (1,1)
-                # carries the transparent index; stored INTERLACED
-                disp = [[r * 4 + c for c in range(4)] for r in range(4)]
-                disp[1][1] = 16
-                stored = [disp[r] for r in (0, 2, 1, 3)]  # pass order, h=4
-                idx = [p for row in stored for p in row]
-                lzw = lzw_encode(idx, 5)
-                gif = (
-                    b"GIF89a"
-                    + struct.pack("<HHBBB", 4, 4, 0x80 | 0x04, 17, 0)
-                    + bytes(pal)
-                    + b"\x21\xf9\x04\x01\x00\x00\x10\x00"  # GCE: transp=16
-                    + b"\x2c" + struct.pack("<HHHHB", 0, 0, 4, 4, 0x40)
-                    + b"\x05" + bytes([len(lzw)]) + lzw + b"\x00"
-                    + b"\x3b"
-                )
-                out.append((i, bytearray(gif)))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        # palette: 16 pixel grays + transparent slot + bg gray
+        pal = bytearray()
+        for k in range(16):
+            v = (i * 3 + k * 7 + 10) % 239
+            pal += bytes((v, v, v))
+        pal += b"\x00\x00\x00"  # 16: transparent (color unused)
+        bg = (i * 29 + 31) % 239
+        pal += bytes((bg, bg, bg))  # 17: background
+        pal += b"\x00" * (3 * (32 - 18))
+        # display indices: pixel (r,c) -> 4r+c, except (1,1)
+        # carries the transparent index; stored INTERLACED
+        disp = [[r * 4 + c for c in range(4)] for r in range(4)]
+        disp[1][1] = 16
+        stored = [disp[r] for r in (0, 2, 1, 3)]  # pass order, h=4
+        idx = [p for row in stored for p in row]
+        lzw = lzw_encode(idx, 5)
+        return (
+            b"GIF89a"
+            + struct.pack("<HHBBB", 4, 4, 0x80 | 0x04, 17, 0)
+            + bytes(pal)
+            + b"\x21\xf9\x04\x01\x00\x00\x10\x00"  # GCE: transp=16
+            + b"\x2c" + struct.pack("<HHHHB", 0, 0, 4, 4, 0x40)
+            + b"\x05" + bytes([len(lzw)]) + lzw + b"\x00"
+            + b"\x3b"
+        )
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_gif_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 2, 2, strict=True)
 
     def _corners(batches):
@@ -572,30 +512,23 @@ def q_media_frame_sample_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from open_ocr_spark.dataops.multimodal import sample_frames
 
-    def _avi_wrap(batches):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.avi import build_avi
         from open_ocr_spark.dataops.jpeg import encode_jpeg
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 1 + i % 3
-                frames = [
-                    encode_jpeg(
-                        np.full((8, 8, 3), (i * 2 + k * 9 + 5) % 250,
-                                np.uint8),
-                        grayscale=True,
-                    )
-                    for k in range(n)
-                ]
-                out.append((i, bytearray(build_avi(frames, 8, 8, fps=2.0))))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        n = 1 + i % 3
+        frames = [
+            encode_jpeg(
+                np.full((8, 8, 3), (i * 2 + k * 9 + 5) % 250, np.uint8),
+                grayscale=True,
+            )
+            for k in range(n)
+        ]
+        return build_avi(frames, 8, 8, fps=2.0)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_avi_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     # sampling at the source rate: every frame exactly once, ts = k/2
     frames = sample_frames(media, fps=2.0, strict=True)
 
@@ -633,30 +566,19 @@ def q_media_frame_sample_webm(spark: SparkSession, sf_dir: str) -> DataFrame:
     TimestampScale application, a missed Cluster boundary or a
     SimpleBlock-header miscount changes first_byte/frame_len/ts_s and
     breaks the hash."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import sample_frames
 
-    def _webm_wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.dataops.ebml import build_webm
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 1 + i % 3
-                frames = [
-                    bytes([(i * 5 + k * 11 + 3) % 256])
-                    * (1 + (i + 2 * k) % 7)
-                    for k in range(n)
-                ]
-                out.append(
-                    (i, bytearray(build_webm(frames, 64, 48, fps=2.0)))
-                )
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        n = 1 + i % 3
+        frames = [
+            bytes([(i * 5 + k * 11 + 3) % 256]) * (1 + (i + 2 * k) % 7)
+            for k in range(n)
+        ]
+        return build_webm(frames, 64, 48, fps=2.0)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_webm_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     # sampling at the source rate: every block exactly once, ts = k/2
     frames = sample_frames(media, fps=2.0, strict=True)
     return frames.select(
@@ -677,29 +599,21 @@ def q_audio_stats_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     peak and total absolute amplitude from the same formulas with a
     range join + aggregation — a byte-order, channel-shape or chunk-walk
     bug changes the integers."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import audio_stats
 
-    def _wav_wrap(batches):
+    def build(i: int) -> bytes:
         import numpy as np
 
         from open_ocr_spark.dataops.multimodal import encode_wav
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = 4 + i % 5
-                samples = np.array(
-                    [(i * 13 + k * 57) % 201 - 100 for k in range(n)],
-                    dtype=np.int16,
-                )
-                out.append((i, bytearray(encode_wav(samples, 8000))))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        n = 4 + i % 5
+        samples = np.array(
+            [(i * 13 + k * 57) % 201 - 100 for k in range(n)],
+            dtype=np.int16,
+        )
+        return encode_wav(samples, 8000)
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_wav_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     return (
         audio_stats(media, strict=True)
         .withColumnRenamed("media_id", "doc_id")
@@ -871,36 +785,26 @@ def q_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     aborted job).  The oracle recomputes every tag closed-form — a
     byte-order slip, an inline-vs-offset value bug, a wrong IFD walk, or
     a dropped error row all break the hash."""
-    import pandas as pd
-
-    def _jpeg_wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.dataops.exif import build_exif_jpeg
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                if i % 10 == 9:
-                    out.append((i, bytearray(b"not a jpeg %d" % i)))
-                    continue
-                payload = build_exif_jpeg(
-                    byte_order="II" if i % 2 == 0 else "MM",
-                    make=f"Make{i % 3}",
-                    model=f"Cam{i % 7}",
-                    orientation=1 + i % 8,
-                    x_resolution=(72 + i % 4, 1),
-                    datetime=f"2024:01:0{1 + i % 9} 12:00:00",
-                    exposure_time=(1, 60 + i % 200),
-                    iso=100 * (1 + i % 32),
-                    pixel_x=640 + i % 1024,
-                )
-                out.append((i, bytearray(payload)))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        if i % 10 == 9:
+            return b"not a jpeg %d" % i
+        return build_exif_jpeg(
+            byte_order="II" if i % 2 == 0 else "MM",
+            make=f"Make{i % 3}",
+            model=f"Cam{i % 7}",
+            orientation=1 + i % 8,
+            x_resolution=(72 + i % 4, 1),
+            datetime=f"2024:01:0{1 + i % 9} 12:00:00",
+            exposure_time=(1, 60 + i % 200),
+            iso=100 * (1 + i % 32),
+            pixel_x=640 + i % 1024,
+        )
 
     from open_ocr_spark.dataops.exif import exif_metadata
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_jpeg_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     return (
         exif_metadata(media, strict=False)
         .withColumnRenamed("media_id", "doc_id")
@@ -949,40 +853,30 @@ def q_exif_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface checks the found coordinates, the post-scrub GPS absence,
     and that an allowlisted tag (make) survived.  Every 10th payload is
     garbage and must surface as a null row."""
-    import pandas as pd
-
-    def _jpeg_wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.dataops.exif import build_exif_jpeg
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                if i % 10 == 9:
-                    out.append((i, bytearray(b"JFIF? no. %d" % i)))
-                    continue
-                gps = None
-                if i % 3 != 2:
-                    gps = {
-                        "lat_ref": "N" if i % 2 == 0 else "S",
-                        "lat": [(i % 90, 1), (i % 60, 1), (i % 6000, 100)],
-                        "lon_ref": "E" if i % 4 < 2 else "W",
-                        "lon": [(i % 180, 1), ((i * 7) % 60, 1),
-                                ((i * 11) % 6000, 100)],
-                    }
-                payload = build_exif_jpeg(
-                    byte_order="II" if i % 2 == 0 else "MM",
-                    make=f"Make{i % 3}",
-                    iso=100 + i % 700,
-                    gps=gps,
-                )
-                out.append((i, bytearray(payload)))
-            yield pd.DataFrame(out, columns=["media_id", "payload"])
+        if i % 10 == 9:
+            return b"JFIF? no. %d" % i
+        gps = None
+        if i % 3 != 2:
+            gps = {
+                "lat_ref": "N" if i % 2 == 0 else "S",
+                "lat": [(i % 90, 1), (i % 60, 1), (i % 6000, 100)],
+                "lon_ref": "E" if i % 4 < 2 else "W",
+                "lon": [(i % 180, 1), ((i * 7) % 60, 1),
+                        ((i * 11) % 6000, 100)],
+            }
+        return build_exif_jpeg(
+            byte_order="II" if i % 2 == 0 else "MM",
+            make=f"Make{i % 3}",
+            iso=100 + i % 700,
+            gps=gps,
+        )
 
     from open_ocr_spark.dataops.exif import gps_scrub_report
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    media = docs.mapInPandas(_jpeg_wrap, "media_id long, payload binary")
+    media = _twin_media(spark, sf_dir, build)
     return (
         gps_scrub_report(media, strict=False)
         .withColumnRenamed("media_id", "doc_id")

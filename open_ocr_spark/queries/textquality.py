@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from open_ocr_spark.dataops.textstats import with_fingerprint, with_lang_id, with_quality_score, with_token_count
-from open_ocr_spark.queries._shared import _t
+from open_ocr_spark.queries._shared import _t, twin_payloads
 
 ORACLES: dict[str, str] = {}
 
@@ -1536,35 +1536,28 @@ def q_infer_column_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     one empty cell (counted as a null, ignored by inference). The
     closed-form oracle pins the specificity lattice, the header row
     exemption, and the null accounting."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.kernels.csv_text import build_csv
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                rows = [["id", "price", "day", "flag", "name", "mixed"]]
-                for r in range(1, 5):
-                    rows.append([
-                        str(i * 10 + r),
-                        f"{r}.{i % 9}5",
-                        f"2024-01-{r:02d}",
-                        "true" if r % 2 else "FALSE",
-                        f"item {r} of {i % 7}",
-                        "" if r == 2 else (
-                            f"12x{i % 3}" if r == 3 else str(r)
-                        ),
-                    ])
-                out.append((i, bytearray(build_csv(rows))))
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
+        rows = [["id", "price", "day", "flag", "name", "mixed"]]
+        for r in range(1, 5):
+            rows.append([
+                str(i * 10 + r),
+                f"{r}.{i % 9}5",
+                f"2024-01-{r:02d}",
+                "true" if r % 2 else "FALSE",
+                f"item {r} of {i % 7}",
+                "" if r == 2 else (
+                    f"12x{i % 3}" if r == 3 else str(r)
+                ),
+            ])
+        return build_csv(rows)
 
     from open_ocr_spark.dataops.schema_infer import infer_column_types
     from open_ocr_spark.kernels.csv_text import csv_cells
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    raw = docs.mapInPandas(_wrap, "doc_id long, payload binary")
+    raw = twin_payloads(docs, build)
     return (
         infer_column_types(csv_cells(raw, payload_col="payload"))
         .orderBy("doc_id", "col_idx")

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from open_ocr_spark.queries._shared import _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents
+from open_ocr_spark.queries._shared import (
+    _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents, twin_payloads,
+)
 
 ORACLES: dict[str, str] = {}
 
@@ -415,44 +417,36 @@ def q_warc_http(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain Content-Length, chunked, gzip Content-Encoding, chunked gzip
     (coding inside transfer-coding, as real stacks send it), and a
     truncated chunked body that must surface as an error VALUE."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int, text) -> bytes:
         from open_ocr_spark.sources import build_http_response, build_warc
 
-        for pdf in batches:
-            out = []
-            for i, text in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                body = (text or "").encode("utf-8")
-                v = i % 5
-                if v == 4:
-                    # pad so the 8-byte cut always lands in the LAST
-                    # CHUNK'S data (an empty body's chunked payload is
-                    # just the 5-byte terminator and the cut would eat
-                    # the header block -> a different error message);
-                    # body content is irrelevant here, the oracle
-                    # expects a NULL body for the error row
-                    body += b" " * 16
-                raw = build_http_response(
-                    body,
-                    status=200 + (i % 2) * 204,
-                    chunked=v in (1, 3, 4),
-                    gzipped=v in (2, 3),
-                )
-                if v == 4:
-                    raw = raw[:-8]  # cut into the last chunk's data
-                warc = build_warc(
-                    [(f"https://h{i % 20}.example.com/{i}", raw)],
-                    gzip_members=True,
-                )
-                out.append((i, bytearray(warc)))
-            yield pd.DataFrame(out, columns=["doc_id", "warc"])
+        body = (text or "").encode("utf-8")
+        v = i % 5
+        if v == 4:
+            # pad so the 8-byte cut always lands in the LAST
+            # CHUNK'S data (an empty body's chunked payload is
+            # just the 5-byte terminator and the cut would eat
+            # the header block -> a different error message);
+            # body content is irrelevant here, the oracle
+            # expects a NULL body for the error row
+            body += b" " * 16
+        raw = build_http_response(
+            body,
+            status=200 + (i % 2) * 204,
+            chunked=v in (1, 3, 4),
+            gzipped=v in (2, 3),
+        )
+        if v == 4:
+            raw = raw[:-8]  # cut into the last chunk's data
+        return build_warc(
+            [(f"https://h{i % 20}.example.com/{i}", raw)],
+            gzip_members=True,
+        )
 
     from open_ocr_spark.sources import http_responses, records_from_warc
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    files = docs.mapInPandas(_wrap, "doc_id long, warc binary")
+    files = twin_payloads(docs, build).withColumnRenamed("payload", "warc")
     recs = records_from_warc(files).select("doc_id", "payload")
     return (
         http_responses(recs)
@@ -560,28 +554,21 @@ def q_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse whitespace; the oracle regenerates every expected cell in
     SQL.  Nesting/malformed-row behavior is pinned in
     tests/test_tables.py."""
-    import pandas as pd
-
-    def _page_wrap(batches):
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                html = (
-                    "<html><body><nav><a href='/'>home</a></nav>"
-                    "<table><tr><th>name &amp; id</th><th>qty</th>"
-                    "<th>price</th></tr>"
-                    f"<tr><td> item-{i} </td><td>{i % 7}</td>"
-                    f"<td>{(i * 3) % 100}</td></tr></table>"
-                    "<footer>(c) corp</footer></body></html>"
-                )
-                out.append((i, bytearray(html.encode())))
-            yield pd.DataFrame(out, columns=["doc_id", "html"])
+    def build(i: int) -> bytes:
+        html = (
+            "<html><body><nav><a href='/'>home</a></nav>"
+            "<table><tr><th>name &amp; id</th><th>qty</th>"
+            "<th>price</th></tr>"
+            f"<tr><td> item-{i} </td><td>{i % 7}</td>"
+            f"<td>{(i * 3) % 100}</td></tr></table>"
+            "<footer>(c) corp</footer></body></html>"
+        )
+        return html.encode()
 
     from open_ocr_spark.kernels.tables import html_tables
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    pages = docs.mapInPandas(_page_wrap, "doc_id long, html binary")
+    pages = twin_payloads(docs, build).withColumnRenamed("payload", "html")
     return html_tables(pages).orderBy("doc_id", "table_idx", "row_idx",
                                       "col_idx")
 
@@ -2212,38 +2199,30 @@ def q_warc_charset_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Content-Type, so the sniff's utf-8 errors=replace degrades each
     accented byte to U+FFFD.  One chain, four layers (container,
     envelope, charset policy, extraction), one closed-form oracle."""
-    import pandas as pd
-
-    def _wrap(batches):
+    def build(i: int) -> bytes:
         from open_ocr_spark.sources import build_http_response, build_warc
 
-        for pdf in batches:
-            out = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                html = (
-                    f"<html><body><p>Café {i} façade</p></body></html>"
-                ).encode("cp1252")
-                ct = (
-                    "text/html; charset=ISO-8859-1"
-                    if i % 2 == 0
-                    else "text/html"
-                )
-                raw = build_http_response(
-                    html, status=200, content_type=ct, chunked=i % 3 == 0
-                )
-                warc = build_warc(
-                    [(f"https://cs{i % 9}.example.com/{i}", raw)],
-                    gzip_members=True,
-                )
-                out.append((i, bytearray(warc)))
-            yield pd.DataFrame(out, columns=["doc_id", "warc"])
+        html = (
+            f"<html><body><p>Café {i} façade</p></body></html>"
+        ).encode("cp1252")
+        ct = (
+            "text/html; charset=ISO-8859-1"
+            if i % 2 == 0
+            else "text/html"
+        )
+        raw = build_http_response(
+            html, status=200, content_type=ct, chunked=i % 3 == 0
+        )
+        return build_warc(
+            [(f"https://cs{i % 9}.example.com/{i}", raw)],
+            gzip_members=True,
+        )
 
     from open_ocr_spark.queries.extraction import extract_stage
     from open_ocr_spark.sources import http_responses, records_from_warc
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    files = docs.mapInPandas(_wrap, "doc_id long, warc binary")
+    files = twin_payloads(docs, build).withColumnRenamed("payload", "warc")
     recs = records_from_warc(files).select(
         "doc_id", "target_uri", "payload"
     )
@@ -2258,7 +2237,6 @@ def q_warc_charset_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pages = resp.select(
         F.col("target_uri").alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
         F.col("body").alias("html"),
         F.lit("eng").alias("lang"),
         "doc_id",

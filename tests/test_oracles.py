@@ -3,14 +3,28 @@
 One case per registry entry, with the comparison tools/check_contract.py
 runs for the larger scale factors: row count, column names, type
 families and an order-insensitive value hash; a query without an oracle
-must return at least one row."""
+must return at least one row.
 
+sf0.001 has no NULL or empty ``documents.text``, so the extraction and
+media queries run once more over a copy whose texts are NULL or '' on a
+doc_id residue: the writer twins' null branches and the oracles'
+``coalesce(text, '')`` must agree there too."""
+
+import os
+
+import duckdb
 import pytest
 
 from open_ocr_spark.queries import ORACLES, QUERIES
-from tools.check_contract import check_query, oracle_connection
+from tools.check_contract import TABLES, check_query, oracle_connection
 
 SF_DIR = "/root/testdata/sf0.001"
+
+NULL_TEXT_QUERIES = [
+    name for name, fn in QUERIES.items()
+    if fn.__module__ in ("open_ocr_spark.queries.extraction",
+                         "open_ocr_spark.queries.media")
+]
 
 
 @pytest.fixture(scope="module")
@@ -23,3 +37,35 @@ def con():
 @pytest.mark.parametrize("name", list(QUERIES))
 def test_query_matches_oracle(spark, con, name):
     assert check_query(spark, con, QUERIES[name], ORACLES.get(name), SF_DIR) == []
+
+
+@pytest.fixture(scope="module")
+def null_text_sf(tmp_path_factory):
+    """sf0.001 with ``text`` NULL where doc_id % 7 = 3 and '' where
+    doc_id % 7 = 5; every other table is a symlink to the original."""
+    sf = tmp_path_factory.mktemp("sf_null_text")
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_DIR}/{t}.parquet", sf / f"{t}.parquet")
+    duckdb.sql(f"""
+        COPY (
+            SELECT * REPLACE (
+                CASE doc_id % 7 WHEN 3 THEN NULL WHEN 5 THEN '' ELSE text END
+                    AS text)
+            FROM read_parquet('{SF_DIR}/documents.parquet')
+        ) TO '{sf}/documents.parquet' (FORMAT parquet)
+    """)
+    return str(sf)
+
+
+@pytest.fixture(scope="module")
+def null_text_con(null_text_sf):
+    con = oracle_connection(null_text_sf)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", NULL_TEXT_QUERIES)
+def test_query_matches_oracle_null_text(spark, null_text_con, null_text_sf, name):
+    assert check_query(spark, null_text_con, QUERIES[name], ORACLES.get(name),
+                       null_text_sf) == []

@@ -3,6 +3,7 @@ zero recomputation and byte-identical final output vs an uninterrupted
 run."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from open_ocr_spark.fixtures import golden_df, pages_df
 from open_ocr_spark.pipeline.checkpoint import committed_buckets, read_manifests
@@ -213,3 +214,42 @@ def test_snapshot_chain_and_time_travel(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="unknown snapshot"):
         read_extracted(spark, out, as_of="nope")
+
+
+def test_resume_with_other_num_buckets_rejected(spark, tmp_path):
+    """A bucket id is pmod(xxhash64(url), B): resuming under another B
+    would recompute urls the committed buckets already hold and write
+    them twice. Manifests and snapshots record B; a resume with another
+    B raises before any work and leaves the table as it was."""
+    from open_ocr_spark.pipeline.checkpoint import snapshot_chain
+
+    pages = pages_df(spark, N_ROWS)
+    out = str(tmp_path / "run")
+    run_extraction_job(spark, pages, out, num_buckets=4, max_buckets=2)
+    assert [m["num_buckets"] for m in read_manifests(out)] == [4, 4]
+    assert snapshot_chain(out)[-1]["num_buckets"] == 4
+
+    with pytest.raises(ValueError, match="num_buckets"):
+        run_extraction_job(spark, pages, out, num_buckets=8)
+    assert len(committed_buckets(out)) == 2
+    assert len(snapshot_chain(out)) == 1
+
+    run_extraction_job(spark, pages, out, num_buckets=4)
+    got = read_extracted(spark, out)
+    assert got.count() == got.select("url").distinct().count() == \
+        golden_df(spark, N_ROWS).count()
+
+
+@pytest.mark.parametrize("out_dir", ["s3://bucket/out", "hdfs://nn:8020/out",
+                                     "file:///tmp/out"])
+def test_non_local_output_rejected(tmp_path, monkeypatch, out_dir):
+    """Manifests are committed with os calls on the driver: for a URI
+    output they would land in a local directory named after the scheme
+    while Spark wrote the data elsewhere. The job refuses a URI before
+    touching the input (``pages=None`` would fail on first use) or
+    creating any file."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local paths"):
+        run_extraction_job(None, None, out_dir)
+    assert not (tmp_path / "s3:").exists()
+    assert list(tmp_path.iterdir()) == []
