@@ -29,7 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from open_ocr_spark.dataops.redirects import resolve_redirect_chains
-from open_ocr_spark.dataops.resolveurl import resolve_url
 from open_ocr_spark.dataops.urls import canonicalize_url
 
 # <meta http-equiv=refresh content="N; url=target"> — the content attr
@@ -68,24 +67,6 @@ def rel_canonical_raw(html: Column) -> Column:
     return F.nullif(F.regexp_extract(html, _REL_CANONICAL, 1), F.lit(""))
 
 
-def meta_refresh_target(html: Column, url: Column) -> Column:
-    """The meta-refresh redirect target resolved against the page URL;
-    NULL when the page has no refresh or a target-less one.  Column form
-    for composition; whole-table callers should stage the raw extract as
-    a column and use resolveurl.with_resolved (see assign_canonical)."""
-    raw = meta_refresh_raw(html)
-    return F.when(raw.isNotNull(), resolve_url(url, raw))
-
-
-def rel_canonical_target(html: Column, url: Column) -> Column:
-    """The rel=canonical href resolved against the page URL; NULL when
-    absent or empty.  Column form for composition; whole-table callers
-    should stage through resolveurl.with_resolved (see
-    assign_canonical)."""
-    raw = rel_canonical_raw(html)
-    return F.when(raw.isNotNull(), resolve_url(url, raw))
-
-
 def assign_canonical(
     pages: DataFrame,
     captures: DataFrame | None = None,
@@ -104,12 +85,12 @@ def assign_canonical(
         html = F.decode(html, "UTF-8")
     url = F.col(url_col)
     # Stage the raw signal extracts as columns and resolve through
-    # with_resolved: the Column-form targets inline the raw extraction
-    # chain ~8× inside the resolution CASE (this plan measured 124 KB /
-    # 427 regex nodes, large enough that the generated projection blew
-    # Janino's method limit and fell back to interpreted eval).  A NULL
-    # raw resolves to NULL through every branch, which is exactly the
-    # Column form's when(isNotNull) contract.
+    # with_resolved: resolve_url over the raw extract as one Column
+    # inlines the extraction chain ~8× inside the resolution CASE (this
+    # plan measured 124 KB / 427 regex nodes, large enough that the
+    # generated projection blew Janino's method limit and fell back to
+    # interpreted eval).  A NULL raw resolves to NULL through every
+    # branch.
     from open_ocr_spark.dataops.resolveurl import with_resolved
 
     base = pages.select(

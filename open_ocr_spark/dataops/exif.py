@@ -25,11 +25,10 @@ repo's multimodal-pipeline surface, not §2.A.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from open_ocr_spark.pipeline.stages import map_rows
 
 # TIFF field types this surface uses: ASCII, SHORT, LONG, RATIONAL.
 _TYPE_SIZES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}
@@ -412,34 +411,29 @@ _COLS = [
 def exif_metadata(media: DataFrame, strict: bool = False) -> DataFrame:
     """(media_id, byte_order, make, model, orientation, x_res_num/den,
     datetime, exposure_num/den, iso, pixel_x): EXIF capture metadata per
-    JPEG payload over mapInPandas — the provenance/orientation/PII-scan
+    JPEG payload over map_rows — the provenance/orientation/PII-scan
     projection of an image corpus.  Non-JPEG / Exif-less / structurally
     corrupt payloads: strict raises, default emits nulls (rows kept so
     joins see every media_id) — the multimodal error-as-value contract."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = None
-                if payload is not None and len(payload) > 0:
-                    try:
-                        meta = parse_exif(bytes(payload))
-                    except ValueError:
-                        if strict:
-                            raise
-                if meta is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "exif_metadata: payload has no parseable Exif "
-                            "APP1; run with strict=False for null rows"
-                        )
-                    rows.append((media_id,) + (None,) * 11)
-                    continue
-                rows.append((media_id,) + tuple(meta[c] for c in _COLS[1:]))
-            yield pd.DataFrame(rows, columns=_COLS)
+    def exif(media_id, payload):
+        meta = None
+        if payload is not None and len(payload) > 0:
+            try:
+                meta = parse_exif(bytes(payload))
+            except ValueError:
+                if strict:
+                    raise
+        if meta is None:
+            if strict:
+                raise NotImplementedError(
+                    "exif_metadata: payload has no parseable Exif "
+                    "APP1; run with strict=False for null rows"
+                )
+            return [(media_id,) + (None,) * 11]
+        return [(media_id,) + tuple(meta[c] for c in _COLS[1:])]
 
-    return media.select("media_id", "payload").mapInPandas(kernel, _SCHEMA)
+    return map_rows(media.select("media_id", "payload"), _SCHEMA, exif)
 
 
 _GPS_SCHEMA = (
@@ -457,39 +451,23 @@ def gps_scrub_report(media: DataFrame, strict: bool = False) -> DataFrame:
     post-scrub GPS absence, allowlisted-tag survival).  Unparseable
     payloads: strict raises, default emits nulls (row kept)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    before = parse_exif(bytes(payload or b""))
-                    after = parse_exif(scrub_gps(bytes(payload)))
-                except ValueError:
-                    if strict:
-                        raise
-                    rows.append((media_id,) + (None,) * 7)
-                    continue
-                rows.append(
-                    (
-                        media_id,
-                        before["has_gps"],
-                        before["gps_lat_ref"],
-                        before["gps_lat_dms"],
-                        before["gps_lon_ref"],
-                        before["gps_lon_dms"],
-                        after["has_gps"],
-                        after["make"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "had_gps", "gps_lat_ref", "gps_lat_dms",
-                    "gps_lon_ref", "gps_lon_dms", "scrub_has_gps",
-                    "make_after",
-                ],
-            )
+    def report(media_id, payload):
+        try:
+            before = parse_exif(bytes(payload or b""))
+            after = parse_exif(scrub_gps(bytes(payload)))
+        except ValueError:
+            if strict:
+                raise
+            return [(media_id,) + (None,) * 7]
+        return [(
+            media_id,
+            before["has_gps"],
+            before["gps_lat_ref"],
+            before["gps_lat_dms"],
+            before["gps_lon_ref"],
+            before["gps_lon_dms"],
+            after["has_gps"],
+            after["make"],
+        )]
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, _GPS_SCHEMA
-    )
+    return map_rows(media.select("media_id", "payload"), _GPS_SCHEMA, report)

@@ -11,7 +11,7 @@ oracle-checkable with closed-form SQL).  Spec: GIF89a specification
 reference (tleyden/open-ocr, docs/: image transport only) never decodes
 pixels at all.
 
-Scale note: this runs inside mapInPandas kernels (multimodal.py), one
+Scale note: this runs inside map_rows kernels (multimodal.py), one
 Arrow batch per call, so the per-image Python cost is bounded by batch
 shape, not table size; the table-level plan stays a single scan with no
 shuffle.

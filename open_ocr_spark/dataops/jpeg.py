@@ -23,7 +23,7 @@ decodable by any baseline decoder.
 Hot math (DCT/IDCT over all blocks at once via the orthonormal basis
 matrix, dequantisation, zigzag scatter) is vectorized numpy; only the
 entropy coding walks bits in Python, and it runs per Arrow batch inside
-the mapInPandas kernels on the executor — never on the driver.
+the map_rows kernels on the executor — never on the driver.
 
 Parity note: the reference ships image bytes to its OCR engine whole
 (/root/reference/ocr_engine.go, ocr_request.go:9 routes by magic bytes);

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque `binary` columns
-with typed metadata, processed by Arrow-batched kernels over mapInPandas.
+with typed metadata, processed by Arrow-batched kernels over map_rows.
 
 The Spark-side plumbing (schema, batching, partitioning, UDF signature) is
 real and tested. Pixel decode is REAL for the formats stdlib+numpy can
@@ -31,12 +31,11 @@ tesseract_engine.go:130-148 treats ImgBytes as opaque until the engine).
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from open_ocr_spark.pipeline.stages import map_rows
 
 MEDIA_SCHEMA = (
     "media_id long, payload binary, media_type string, meta map<string,string>"
@@ -233,60 +232,46 @@ AUDIO_STATS_SCHEMA = (
 
 
 def audio_stats(media: DataFrame, strict: bool = False) -> DataFrame:
-    """REAL audio analysis over mapInPandas: decode PCM (decode_wav) and
+    """REAL audio analysis over map_rows: decode PCM (decode_wav) and
     reduce to exact integer stats — frame count, first sample, peak
     amplitude, total absolute amplitude — the oracle-checkable slice of
     an audio training pipeline (silence/clipping gates run on exactly
     these reductions). Non-WAV / non-PCM payloads: strict raises, default
     emits nulls (rows are kept so joins see every media_id)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats(media_id, payload):
         import numpy as np
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
+        decoded = None
+        if payload is not None and len(payload) > 0:
+            try:
+                decoded = decode_wav(bytes(payload))
+            except ValueError:
+                # Structurally corrupt WAV (truncated data chunk, bad
+                # sizes): same contract as non-WAV — strict raises,
+                # default emits nulls so one crawl-damaged payload
+                # cannot abort the job.
+                if strict:
+                    raise
                 decoded = None
-                if payload is not None and len(payload) > 0:
-                    try:
-                        decoded = decode_wav(bytes(payload))
-                    except ValueError:
-                        # Structurally corrupt WAV (truncated data chunk,
-                        # bad sizes): same contract as non-WAV — strict
-                        # raises, default emits nulls so one crawl-damaged
-                        # payload cannot abort the job.
-                        if strict:
-                            raise
-                        decoded = None
-                if decoded is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "audio_stats: payload is not integer-PCM WAV; "
-                            "run with strict=False to emit null stats"
-                        )
-                    rows.append((media_id, None, None, None, None, None,
-                                 None))
-                    continue
-                arr, rate = decoded
-                amp = np.abs(arr)
-                rows.append(
-                    (
-                        media_id, rate, arr.shape[1], arr.shape[0],
-                        int(arr[0, 0]) if arr.size else None,
-                        int(amp.max()) if arr.size else None,
-                        int(amp.sum()) if arr.size else None,
-                    )
+        if decoded is None:
+            if strict:
+                raise NotImplementedError(
+                    "audio_stats: payload is not integer-PCM WAV; "
+                    "run with strict=False to emit null stats"
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_channels", "n_samples",
-                    "first_sample", "peak_amp", "sum_abs",
-                ],
-            )
+            return [(media_id, None, None, None, None, None, None)]
+        arr, rate = decoded
+        amp = np.abs(arr)
+        return [(
+            media_id, rate, arr.shape[1], arr.shape[0],
+            int(arr[0, 0]) if arr.size else None,
+            int(amp.max()) if arr.size else None,
+            int(amp.sum()) if arr.size else None,
+        )]
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, AUDIO_STATS_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), AUDIO_STATS_SCHEMA, stats
     )
 
 
@@ -392,48 +377,30 @@ def _decode_stub(payload: bytes, media_type: str, strict: bool):
 def extract_media_features(
     media: DataFrame, batch_size_hint: int = 256, strict: bool = False
 ) -> DataFrame:
-    """Decode/feature-extract over mapInPandas: one pandas batch per Arrow
-    chunk, binary column stays opaque until inside the kernel. The plumbing
+    """Decode/feature-extract over map_rows: one output batch per Arrow
+    batch, binary column stays opaque until inside the kernel. The plumbing
     (schema, batch shape, null handling) is production-real; only the pixel
     decode is stubbed."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload, declared in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                if payload is None or len(payload) == 0:
-                    rows.append(
-                        (media_id, declared or "application/octet-stream",
-                         0, "", None, None, None, None, None, None, None)
-                    )
-                    continue
-                payload = bytes(payload)
-                mtype = declared or sniff_media_type(payload)
-                w, h, nf, rate, chans, dur, feat = _decode_stub(
-                    payload, mtype, strict
-                )
-                rows.append(
-                    (
-                        media_id,
-                        mtype,
-                        len(payload),
-                        hashlib.sha1(payload).hexdigest(),
-                        w, h, nf, rate, chans, dur, feat,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "n_bytes", "sha1",
-                    "width", "height", "n_frames",
-                    "sample_rate", "n_channels", "duration_s", "feature",
-                ],
-            )
+    def features(media_id, payload, declared):
+        if payload is None or len(payload) == 0:
+            return [(media_id, declared or "application/octet-stream",
+                     0, "", None, None, None, None, None, None, None)]
+        payload = bytes(payload)
+        mtype = declared or sniff_media_type(payload)
+        w, h, nf, rate, chans, dur, feat = _decode_stub(
+            payload, mtype, strict
+        )
+        return [(
+            media_id,
+            mtype,
+            len(payload),
+            hashlib.sha1(payload).hexdigest(),
+            w, h, nf, rate, chans, dur, feat,
+        )]
 
     cols = ["media_id", "payload", "media_type"]
-    return media.select(*cols).mapInPandas(kernel, FEATURE_SCHEMA)
+    return map_rows(media.select(*cols), FEATURE_SCHEMA, features)
 
 
 RESIZE_SCHEMA = (
@@ -731,8 +698,8 @@ def resize_nearest(arr, width: int, height: int):
 def resize_images(
     media: DataFrame, width: int = 224, height: int = 224, strict: bool = False
 ) -> DataFrame:
-    """Resize stage over mapInPandas: binary in, binary out, one pandas
-    batch per Arrow chunk — the shape a training-data image pipeline needs
+    """Resize stage over map_rows: binary in, binary out, one output
+    batch per Arrow batch — the shape a training-data image pipeline needs
     (decode → resize → re-encode on the executor, never on the driver).
 
     REAL pixel path for the formats stdlib+numpy can decode (PNG via zlib
@@ -748,61 +715,53 @@ def resize_images(
     PPM) follow the same split: strict raises ValueError, default falls
     to the stub — a single bad crawl payload must never abort the job."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None or len(payload) == 0:
-                    rows.append((media_id, None, None, None, 0))
-                    continue
-                payload = bytes(payload)
-                try:
-                    arr = decode_pixels(payload)
-                except ValueError:
-                    # recognized container, corrupt body (truncated BMP,
-                    # malformed PPM header): strict surfaces it, default
-                    # mode falls through to the stub so one bad crawl
-                    # payload cannot fail the whole job
-                    if strict:
-                        raise
-                    arr = None
-                if arr is not None:
-                    out_arr = resize_nearest(arr, width, height)
-                    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                        out = encode_png(out_arr)
-                    elif payload[:2] == b"\xff\xd8":
-                        from open_ocr_spark.dataops.jpeg import encode_jpeg
+    def resize(media_id, payload):
+        if payload is None or len(payload) == 0:
+            return [(media_id, None, None, None, 0)]
+        payload = bytes(payload)
+        try:
+            arr = decode_pixels(payload)
+        except ValueError:
+            # recognized container, corrupt body (truncated BMP,
+            # malformed PPM header): strict surfaces it, default mode
+            # falls through to the stub so one bad crawl payload
+            # cannot fail the whole job
+            if strict:
+                raise
+            arr = None
+        if arr is not None:
+            out_arr = resize_nearest(arr, width, height)
+            if payload[:8] == b"\x89PNG\r\n\x1a\n":
+                out = encode_png(out_arr)
+            elif payload[:2] == b"\xff\xd8":
+                from open_ocr_spark.dataops.jpeg import encode_jpeg
 
-                        out = encode_jpeg(out_arr)
-                    elif payload[:2] == b"P6":
-                        out = encode_ppm(out_arr)
-                    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                        from open_ocr_spark.dataops.gif import encode_gif
+                out = encode_jpeg(out_arr)
+            elif payload[:2] == b"P6":
+                out = encode_ppm(out_arr)
+            elif payload[:6] in (b"GIF87a", b"GIF89a"):
+                from open_ocr_spark.dataops.gif import encode_gif
 
-                        # nearest-neighbor only samples existing pixels,
-                        # so a decoded GIF always re-palettizes exactly
-                        out = encode_gif(out_arr)
-                    else:
-                        out = encode_bmp24(out_arr)
-                elif strict:
-                    raise NotImplementedError(
-                        "resize of this format requires PIL/ffmpeg (not "
-                        "installed); only PNG, JPEG, GIF, 24-bit BMP "
-                        "and P6 PPM decode natively - run with "
-                        "strict=False for the deterministic stub"
-                    )
-                else:
-                    out = hashlib.sha1(
-                        payload + f"{width}x{height}".encode()
-                    ).digest()
-                rows.append((media_id, out, width, height, len(out)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "payload", "width", "height", "n_bytes"],
+                # nearest-neighbor only samples existing pixels, so a
+                # decoded GIF always re-palettizes exactly
+                out = encode_gif(out_arr)
+            else:
+                out = encode_bmp24(out_arr)
+        elif strict:
+            raise NotImplementedError(
+                "resize of this format requires PIL/ffmpeg (not "
+                "installed); only PNG, JPEG, GIF, 24-bit BMP "
+                "and P6 PPM decode natively - run with "
+                "strict=False for the deterministic stub"
             )
+        else:
+            out = hashlib.sha1(
+                payload + f"{width}x{height}".encode()
+            ).digest()
+        return [(media_id, out, width, height, len(out))]
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, RESIZE_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), RESIZE_SCHEMA, resize
     )
 
 
@@ -812,8 +771,8 @@ FRAME_SCHEMA = "media_id long, frame_idx int, ts_s double, frame binary"
 def sample_frames(
     media: DataFrame, fps: float = 1.0, strict: bool = False
 ) -> DataFrame:
-    """Frame sampling: ONE-TO-MANY mapInPandas — each video row fans out to
-    its sampled frames (mapInPandas output row count is unconstrained, so
+    """Frame sampling: ONE-TO-MANY map_rows — each video row fans out to
+    its sampled frames (a row function may return any number of rows, so
     no explode/UDTF is needed). Partitioning carries over from the input,
     so a video's frames stay on the executor that held its bytes.
 
@@ -840,104 +799,84 @@ def sample_frames(
     runnable.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def frames(media_id, payload):
         from open_ocr_spark.dataops.mp4 import parse_mp4
 
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None or len(payload) == 0:
-                    continue
-                payload = bytes(payload)
-                info = None
-                if payload[4:8] == b"ftyp":
-                    try:
-                        info = parse_mp4(payload)
-                    except ValueError:
-                        if strict:
-                            raise
-                elif payload[:4] == b"\x1a\x45\xdf\xa3":
-                    # webm/mkv: dataops/ebml.py yields the same
-                    # (offset, size, ts) sample shape as the MP4 walk,
-                    # so the covers-the-tick loop below is shared
-                    from open_ocr_spark.dataops.ebml import parse_webm
-
-                    try:
-                        info = parse_webm(payload)
-                    except ValueError:
-                        if strict:
-                            raise
-                if info is not None and not info["samples"]:
-                    # structurally valid video track declaring zero
-                    # samples: nothing to emit (indexing would crash)
-                    continue
-                if info is not None:
-                    import math
-
-                    samples = info["samples"]
-                    dts = [s[2] for s in samples]
-                    n_ticks = max(
-                        1, math.ceil(info["duration_s"] * fps - 1e-9)
-                    )
-                    idx = 0
-                    for k in range(n_ticks):
-                        tick = k / fps
-                        # sample whose decode time covers this tick
-                        while (idx + 1 < len(dts)
-                               and dts[idx + 1] <= tick + 1e-9):
-                            idx += 1
-                        off, sz, _ = samples[idx]
-                        rows.append(
-                            (media_id, k, round(tick, 6),
-                             payload[off : off + sz])
-                        )
-                    continue
-                avi = None
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-                    from open_ocr_spark.dataops.avi import parse_avi
-
-                    try:
-                        avi = parse_avi(payload)
-                    except ValueError:
-                        if strict:
-                            raise
-                if avi is not None:
-                    # MJPEG AVI: frame k' covers [k'/fps_src, (k'+1)/
-                    # fps_src) — same covers-the-tick rule as MP4 dts
-                    import math
-
-                    n_ticks = max(
-                        1, math.ceil(avi["duration_s"] * fps - 1e-9)
-                    )
-                    for k in range(n_ticks):
-                        tick = k / fps
-                        fi = min(
-                            int(tick * avi["fps"] + 1e-9),
-                            avi["n_frames"] - 1,
-                        )
-                        off, sz = avi["frames"][fi]
-                        rows.append(
-                            (media_id, k, round(tick, 6),
-                             payload[off : off + sz])
-                        )
-                    continue
+        if payload is None or len(payload) == 0:
+            return
+        payload = bytes(payload)
+        info = None
+        if payload[4:8] == b"ftyp":
+            try:
+                info = parse_mp4(payload)
+            except ValueError:
                 if strict:
-                    raise NotImplementedError(
-                        "frame sampling outside MP4/webm/AVI requires "
-                        "ffmpeg/pyav (not installed); run with "
-                        "strict=False for the deterministic stub"
-                    )
-                digest = hashlib.sha1(payload).digest()
-                n_frames = 1 + digest[2] % 8
-                for i in range(n_frames):
-                    frame = hashlib.sha1(payload + bytes([i])).digest()
-                    rows.append((media_id, i, round(i / fps, 3), frame))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "ts_s", "frame"]
-            )
+                    raise
+        elif payload[:4] == b"\x1a\x45\xdf\xa3":
+            # webm/mkv: dataops/ebml.py yields the same (offset, size,
+            # ts) sample shape as the MP4 walk, so the covers-the-tick
+            # loop below is shared
+            from open_ocr_spark.dataops.ebml import parse_webm
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, FRAME_SCHEMA
+            try:
+                info = parse_webm(payload)
+            except ValueError:
+                if strict:
+                    raise
+        if info is not None and not info["samples"]:
+            # structurally valid video track declaring zero samples:
+            # nothing to emit (indexing would crash)
+            return
+        if info is not None:
+            import math
+
+            samples = info["samples"]
+            dts = [s[2] for s in samples]
+            n_ticks = max(1, math.ceil(info["duration_s"] * fps - 1e-9))
+            idx = 0
+            for k in range(n_ticks):
+                tick = k / fps
+                # sample whose decode time covers this tick
+                while idx + 1 < len(dts) and dts[idx + 1] <= tick + 1e-9:
+                    idx += 1
+                off, sz, _ = samples[idx]
+                yield media_id, k, round(tick, 6), payload[off : off + sz]
+            return
+        avi = None
+        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+            from open_ocr_spark.dataops.avi import parse_avi
+
+            try:
+                avi = parse_avi(payload)
+            except ValueError:
+                if strict:
+                    raise
+        if avi is not None:
+            # MJPEG AVI: frame k' covers [k'/fps_src, (k'+1)/fps_src) —
+            # same covers-the-tick rule as MP4 dts
+            import math
+
+            n_ticks = max(1, math.ceil(avi["duration_s"] * fps - 1e-9))
+            for k in range(n_ticks):
+                tick = k / fps
+                fi = min(int(tick * avi["fps"] + 1e-9), avi["n_frames"] - 1)
+                off, sz = avi["frames"][fi]
+                yield media_id, k, round(tick, 6), payload[off : off + sz]
+            return
+        if strict:
+            raise NotImplementedError(
+                "frame sampling outside MP4/webm/AVI requires "
+                "ffmpeg/pyav (not installed); run with "
+                "strict=False for the deterministic stub"
+            )
+        digest = hashlib.sha1(payload).digest()
+        n_frames = 1 + digest[2] % 8
+        for i in range(n_frames):
+            frame = hashlib.sha1(payload + bytes([i])).digest()
+            yield media_id, i, round(i / fps, 3), frame
+
+    return map_rows(
+        media.select("media_id", "payload"), FRAME_SCHEMA, frames
     )
 
 

@@ -18,7 +18,7 @@ Semantics implemented (the RFC 9309 core):
   Allow wins; no matching rule means allowed (and a host with no
   robots row means allowed).
 
-Scale shape: parsing runs once per HOST (a mapInPandas kernel over the
+Scale shape: parsing runs once per HOST (a map_rows kernel over the
 tiny robots table — robots files are KBs; the corpus never enters it);
 the gate is one equi-join of the corpus on host followed by a per-rule
 ``rlike`` with the precompiled anchored regex and a max-struct
@@ -30,11 +30,11 @@ any real deployment.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from open_ocr_spark.pipeline.stages import map_rows
 
 RULE_SCHEMA = (
     "host string, pattern string, rule_regex string, is_allow boolean, "
@@ -86,26 +86,14 @@ def parse_robots(robots: DataFrame, agent: str = "*") -> DataFrame:
     whose robots.txt yields no applicable rules emit no rows (their
     URLs default to allowed)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                if txt is None:
-                    continue
-                for pattern, is_allow in parse_robots_rules(str(txt), agent):
-                    out.append(
-                        (host, pattern, _pattern_to_regex(pattern),
-                         is_allow, len(pattern))
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["host", "pattern", "rule_regex", "is_allow",
-                         "rule_len"],
-            )
+    def rules(host, txt):
+        if txt is None:
+            return
+        for pattern, is_allow in parse_robots_rules(str(txt), agent):
+            yield (host, pattern, _pattern_to_regex(pattern), is_allow,
+                   len(pattern))
 
-    return robots.select("host", "robots_txt").mapInPandas(
-        kernel, RULE_SCHEMA
-    )
+    return map_rows(robots.select("host", "robots_txt"), RULE_SCHEMA, rules)
 
 
 def gate_urls(
@@ -200,21 +188,12 @@ def parse_robots_meta(robots: DataFrame, agent: str = "*") -> DataFrame:
     declared pace).  Same kernel shape as parse_robots: runs once per
     HOST over the tiny robots table, never over the corpus."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                if txt is None:
-                    continue
-                delay, sitemaps = parse_robots_meta_txt(str(txt), agent)
-                out.append((host, delay, sitemaps))
-            yield pd.DataFrame(
-                out, columns=["host", "crawl_delay_ms", "sitemaps"]
-            )
+    def meta(host, txt):
+        if txt is not None:
+            delay, sitemaps = parse_robots_meta_txt(str(txt), agent)
+            yield host, delay, sitemaps
 
-    return robots.select("host", "robots_txt").mapInPandas(
-        kernel, META_SCHEMA
-    )
+    return map_rows(robots.select("host", "robots_txt"), META_SCHEMA, meta)
 
 
 # --- page-level indexing directives (r5) ------------------------------------

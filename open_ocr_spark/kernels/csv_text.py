@@ -122,36 +122,23 @@ def csv_cells(
 ) -> DataFrame:
     """(doc_id, row_idx, col_idx, field): exploded cell records —
     Arrow-batched kernel, no shuffle, mirroring html_tables."""
-    import pandas as pd
+    from open_ocr_spark.pipeline.stages import map_rows
 
-    def _extract(batches):
-        for pdf in batches:
-            ids, rs, cs, fs = [], [], [], []
-            for i, raw in zip(pdf[id_col], pdf[payload_col]):
-                if raw is None:
-                    continue
-                try:
-                    cells = parse_csv(bytes(raw))
-                except ValueError:
-                    # cell-cap breach (hostile payload): contribute no
-                    # rows rather than failing the task — the same
-                    # best-effort posture as html_tables
-                    continue
-                for r, c, f in cells:
-                    ids.append(int(i))
-                    rs.append(r)
-                    cs.append(c)
-                    fs.append(f)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "row_idx": pd.Series(rs, dtype="int32"),
-                    "col_idx": pd.Series(cs, dtype="int32"),
-                    "field": pd.Series(fs, dtype="object"),
-                }
-            )
+    def _extract(i, raw):
+        if raw is None:
+            return
+        try:
+            cells = parse_csv(bytes(raw))
+        except ValueError:
+            # cell-cap breach (hostile payload): contribute no rows
+            # rather than failing the task — the same best-effort
+            # posture as html_tables
+            return
+        for r, c, f in cells:
+            yield int(i), r, c, f
 
-    return pages.select(id_col, payload_col).mapInPandas(
-        _extract,
+    return map_rows(
+        pages.select(id_col, payload_col),
         f"{id_col} long, row_idx int, col_idx int, field string",
+        _extract,
     )

@@ -21,8 +21,7 @@ The point is the pixel pipeline — real encode, real decode, real
 segmentation — not typography.
 
 Scale shape: rendering and recognition are both per-document pure
-functions inside the vectorized kernel batch (mapInArrow /
-mapInPandas); no Python touches more than one Arrow batch at a time.
+functions inside the vectorized kernel batch (mapInArrow); no Python touches more than one Arrow batch at a time.
 """
 
 from __future__ import annotations

@@ -129,34 +129,19 @@ def microdata_items(
 ) -> DataFrame:
     """(doc_id, item_ord, item_type, prop, value): exploded microdata
     records — Arrow-batched kernel, one output row per property, no
-    shuffle (pure mapInPandas over the page partition), mirroring
+    shuffle (one map_rows pass over the page partition), mirroring
     kernels/tables.py html_tables."""
-    import pandas as pd
+    from open_ocr_spark.pipeline.stages import map_rows
 
-    def _extract(batches):
-        for pdf in batches:
-            ids, ords, types, props, vals = [], [], [], [], []
-            for i, raw in zip(pdf[id_col], pdf[html_col]):
-                if raw is None:
-                    continue
-                for o, t, p, v in extract_microdata(bytes(raw)):
-                    ids.append(int(i))
-                    ords.append(o)
-                    types.append(t)
-                    props.append(p)
-                    vals.append(v)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "item_ord": pd.Series(ords, dtype="int32"),
-                    "item_type": pd.Series(types, dtype="object"),
-                    "prop": pd.Series(props, dtype="object"),
-                    "value": pd.Series(vals, dtype="object"),
-                }
-            )
+    def _extract(i, raw):
+        if raw is None:
+            return
+        for o, t, p, v in extract_microdata(bytes(raw)):
+            yield int(i), o, t, p, v
 
-    return pages.select(id_col, html_col).mapInPandas(
-        _extract,
+    return map_rows(
+        pages.select(id_col, html_col),
         f"{id_col} long, item_ord int, item_type string, "
         "prop string, value string",
+        _extract,
     )

@@ -60,33 +60,18 @@ def html_tables(
 ) -> DataFrame:
     """(doc_id, table_idx, row_idx, col_idx, cell): exploded structured
     table records — Arrow-batched kernel, one output row per cell, no
-    shuffle (pure mapInPandas over the page partition)."""
-    import pandas as pd
+    shuffle (one map_rows pass over the page partition)."""
+    from open_ocr_spark.pipeline.stages import map_rows
 
-    def _extract(batches):
-        for pdf in batches:
-            ids, tis, ris, cis, cells = [], [], [], [], []
-            for i, raw in zip(pdf[id_col], pdf[html_col]):
-                if raw is None:
-                    continue
-                for ti, ri, ci, cell in extract_tables(bytes(raw)):
-                    ids.append(int(i))
-                    tis.append(ti)
-                    ris.append(ri)
-                    cis.append(ci)
-                    cells.append(cell)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "table_idx": pd.Series(tis, dtype="int64"),
-                    "row_idx": pd.Series(ris, dtype="int64"),
-                    "col_idx": pd.Series(cis, dtype="int64"),
-                    "cell": pd.Series(cells, dtype="object"),
-                }
-            )
+    def _extract(i, raw):
+        if raw is None:
+            return
+        for ti, ri, ci, cell in extract_tables(bytes(raw)):
+            yield int(i), ti, ri, ci, cell
 
-    return pages.mapInPandas(
-        _extract,
+    return map_rows(
+        pages.select(id_col, html_col),
         f"{id_col} long, table_idx long, row_idx long, col_idx long,"
         " cell string",
+        _extract,
     )

@@ -1,4 +1,5 @@
-"""Extraction stages: the single mapInArrow kernel boundary plus
+"""Extraction stages: the single mapInArrow kernel boundary, the
+``map_rows`` boundary every other per-row operator shares, plus
 declarative pre/post stages.
 
 The reference runs one subprocess per document
@@ -15,12 +16,13 @@ pandas/pyarrow loops over those batches. Output schema is fixed and stable.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Output schema of the extraction stage (DDL used by mapInArrow).
 EXTRACT_SCHEMA = (
@@ -139,6 +141,36 @@ def extract_stage(
         f", {c} {pages.schema[c].dataType.simpleString()}" for c in passthrough
     )
     return pages.select(*cols).mapInArrow(_extract_batches, schema)
+
+
+def map_rows(
+    df: DataFrame,
+    schema: str | StructType,
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """The row-map boundary: ``fn(*row)`` receives one input row's values
+    (Arrow ``to_pylist``, so a null arrives as ``None``) and returns an
+    iterable of output tuples laid out as ``schema`` (DDL string or
+    StructType) — zero, one or many per input row. Each input Arrow batch
+    becomes one output batch through one mapInArrow node, so an operator
+    owns only its row function, never the batch loop or a column list."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = zip(*(col.to_pylist() for col in batch.columns))
+            out = [t for row in rows for t in fn(*row)]
+            cols = list(zip(*out)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return df.mapInArrow(kernel, schema)
 
 
 def mock_stage(pages: DataFrame) -> DataFrame:

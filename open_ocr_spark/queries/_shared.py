@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_ocr_spark.pipeline.stages import map_rows
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -16,19 +18,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def twin_payloads(docs: DataFrame, build) -> DataFrame:
     """Writer-twin scaffold: one payload per row of ``docs``, built by
     ``build(doc_id, *values) -> bytes`` where ``values`` are the row's
-    remaining columns, as ``doc_id long, payload binary``. The batch
-    loop is this one function; each query owns only its builder."""
-    import pandas as pd
-
-    def _wrap(batches):
-        for pdf in batches:
-            out = [
-                (int(i), bytearray(build(int(i), *vals)))
-                for i, *vals in zip(*(pdf[c] for c in pdf.columns))
-            ]
-            yield pd.DataFrame(out, columns=["doc_id", "payload"])
-
-    return docs.mapInPandas(_wrap, "doc_id long, payload binary")
+    remaining columns, as ``doc_id long, payload binary``. Each query
+    owns only its builder."""
+    return map_rows(
+        docs,
+        "doc_id long, payload binary",
+        lambda i, *vals: [(i, build(i, *vals))],
+    )
 
 
 _WRAP_PREFIX = (

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from open_ocr_spark.pipeline.stages import map_rows
 from open_ocr_spark.queries._shared import _t, twin_payloads
 
 ORACLES: dict[str, str] = {}
@@ -97,7 +98,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel path, oracle-checked end-to-end (VERDICT r2 item 10):
     each document becomes a 2x2 24-bit BMP whose four pixel values are
-    formulas of doc_id (built in an Arrow-batched pandas kernel), resized
+    formulas of doc_id (built by the writer-twin scaffold), resized
     2x by the numpy nearest-neighbor path (strict=True — no stub can
     leak in), and the four CORNERS of the 4x4 output are read back with
     pure-Catalyst byte arithmetic on the BMP layout (54-byte header +
@@ -149,8 +150,6 @@ def q_media_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulas must match exactly; a bug in EITHER the encoder or the
     decoder (filter handling, chunk layout, palette, CRC offsets) breaks
     the hash."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import resize_images
 
     def build(i: int) -> bytes:
@@ -168,25 +167,19 @@ def q_media_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 4, 4, strict=True)
 
-    def _corners(batches):
+    def _corners(mid, payload):
         from open_ocr_spark.dataops.multimodal import decode_pixels
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_pixels(bytes(payload))
-                out.append(
-                    (
-                        int(mid), int(arr[0, 0, 0]), int(arr[0, 3, 0]),
-                        int(arr[3, 0, 0]), int(arr[3, 3, 0]),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "p00", "p01", "p10", "p11"]
-            )
+        arr = decode_pixels(bytes(payload))
+        return [(
+            int(mid), int(arr[0, 0, 0]), int(arr[0, 3, 0]),
+            int(arr[3, 0, 0]), int(arr[3, 3, 0]),
+        )]
 
-    return resized.mapInPandas(
-        _corners, "doc_id long, p00 int, p01 int, p10 int, p11 int"
+    return map_rows(
+        resized.select("media_id", "payload"),
+        "doc_id long, p00 int, p01 int, p10 int, p11 int",
+        _corners,
     ).orderBy("doc_id")
 
 
@@ -201,8 +194,6 @@ def q_media_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient and it is integer), so the oracle is exact equality —
     any drift in the huffman tables, DCT basis, colorspace constants or
     marker layout breaks the hash."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import resize_images
 
     def build(i: int) -> bytes:
@@ -219,29 +210,19 @@ def q_media_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 8, 8, strict=True)
 
-    def _pixels(batches):
+    def _pixels(mid, payload, w, h):
         from open_ocr_spark.dataops.jpeg import decode_jpeg
 
-        for pdf in batches:
-            out = []
-            for mid, payload, w, h in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                arr = decode_jpeg(bytes(payload))
-                out.append(
-                    (
-                        int(mid), int(w), int(h),
-                        int(arr[0, 0, 0]), int(arr[7, 7, 0]),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "p_left", "p_right"],
-            )
+        arr = decode_jpeg(bytes(payload))
+        return [(
+            int(mid), int(w), int(h),
+            int(arr[0, 0, 0]), int(arr[7, 7, 0]),
+        )]
 
-    return resized.mapInPandas(
-        _pixels,
+    return map_rows(
+        resized.select("media_id", "payload", "width", "height"),
         "doc_id long, width int, height int, p_left int, p_right int",
+        _pixels,
     ).orderBy("doc_id")
 
 
@@ -260,8 +241,6 @@ def q_media_resize_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFra
     baseline path is itself pinned by media_resize_jpeg's oracle), and it
     exercises EOB runs, ZRL-in-refinement and correction bits on real
     coefficient data inside the driver-checked query."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import resize_images
 
     def build(i: int) -> bytes:
@@ -278,7 +257,7 @@ def q_media_resize_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFra
     media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 8, 8, strict=True)
 
-    def _pixels(batches):
+    def _pixels(mid, payload, w, h):
         import numpy as np
 
         from open_ocr_spark.dataops.jpeg import (
@@ -287,39 +266,26 @@ def q_media_resize_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFra
             encode_jpeg_progressive,
         )
 
-        for pdf in batches:
-            out = []
-            for mid, payload, w, h in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                arr = decode_jpeg(bytes(payload))
-                mid = int(mid)
-                # doc-seeded non-flat content: every AC scan type fires
-                rich = (
-                    (np.arange(16)[:, None] * 31 + np.arange(16) * 17
-                     + mid * 13) % 256
-                ).astype(np.uint8)[:, :, None].repeat(3, axis=2)
-                base = decode_jpeg(encode_jpeg(rich, grayscale=True))
-                prog = decode_jpeg(
-                    encode_jpeg_progressive(rich, grayscale=True)
-                )
-                out.append(
-                    (
-                        mid, int(w), int(h),
-                        int(arr[0, 0, 0]), int(arr[7, 7, 0]),
-                        int(np.array_equal(base, prog)),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "p_left", "p_right",
-                         "ac_agree"],
-            )
+        arr = decode_jpeg(bytes(payload))
+        mid = int(mid)
+        # doc-seeded non-flat content: every AC scan type fires
+        rich = (
+            (np.arange(16)[:, None] * 31 + np.arange(16) * 17
+             + mid * 13) % 256
+        ).astype(np.uint8)[:, :, None].repeat(3, axis=2)
+        base = decode_jpeg(encode_jpeg(rich, grayscale=True))
+        prog = decode_jpeg(encode_jpeg_progressive(rich, grayscale=True))
+        return [(
+            mid, int(w), int(h),
+            int(arr[0, 0, 0]), int(arr[7, 7, 0]),
+            int(np.array_equal(base, prog)),
+        )]
 
-    return resized.mapInPandas(
-        _pixels,
+    return map_rows(
+        resized.select("media_id", "payload", "width", "height"),
         "doc_id long, width int, height int, p_left int, p_right int, "
         "ac_agree int",
+        _pixels,
     ).orderBy("doc_id")
 
 
@@ -336,8 +302,6 @@ def q_media_resize_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identically (``arith_agree=1``) — DC conditioning contexts, the
     AC decision tree and the QM state machine all fire inside the
     driver-checked query."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import resize_images
 
     def build(i: int) -> bytes:
@@ -354,42 +318,31 @@ def q_media_resize_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 8, 8, strict=True)
 
-    def _pixels(batches):
+    def _pixels(mid, payload, w, h):
         import numpy as np
 
         from open_ocr_spark.dataops.jpeg import decode_jpeg, encode_jpeg
         from open_ocr_spark.dataops.jpeg_arith import encode_jpeg_arith
 
-        for pdf in batches:
-            out = []
-            for mid, payload, w, h in zip(
-                pdf["media_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                arr = decode_jpeg(bytes(payload))
-                mid = int(mid)
-                rich = (
-                    (np.arange(16)[:, None] * 29 + np.arange(16) * 13
-                     + mid * 7) % 256
-                ).astype(np.uint8)[:, :, None].repeat(3, axis=2)
-                base = decode_jpeg(encode_jpeg(rich, grayscale=True))
-                arith = decode_jpeg(encode_jpeg_arith(rich, grayscale=True))
-                out.append(
-                    (
-                        mid, int(w), int(h),
-                        int(arr[0, 0, 0]), int(arr[7, 7, 0]),
-                        int(np.array_equal(base, arith)),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "p_left", "p_right",
-                         "arith_agree"],
-            )
+        arr = decode_jpeg(bytes(payload))
+        mid = int(mid)
+        rich = (
+            (np.arange(16)[:, None] * 29 + np.arange(16) * 13
+             + mid * 7) % 256
+        ).astype(np.uint8)[:, :, None].repeat(3, axis=2)
+        base = decode_jpeg(encode_jpeg(rich, grayscale=True))
+        arith = decode_jpeg(encode_jpeg_arith(rich, grayscale=True))
+        return [(
+            mid, int(w), int(h),
+            int(arr[0, 0, 0]), int(arr[7, 7, 0]),
+            int(np.array_equal(base, arith)),
+        )]
 
-    return resized.mapInPandas(
-        _pixels,
+    return map_rows(
+        resized.select("media_id", "payload", "width", "height"),
         "doc_id long, width int, height int, p_left int, p_right int, "
         "arith_agree int",
+        _pixels,
     ).orderBy("doc_id")
 
 
@@ -437,8 +390,6 @@ def q_media_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a second kernel decodes THAT to read the four survivors.  A wrong
     LZW width bump, interlace row map, transparency/bg rule or palette
     write breaks the hash."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import resize_images
 
     def build(i: int) -> bytes:
@@ -475,25 +426,19 @@ def q_media_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _twin_media(spark, sf_dir, build)
     resized = resize_images(media, 2, 2, strict=True)
 
-    def _corners(batches):
+    def _corners(mid, payload):
         from open_ocr_spark.dataops.multimodal import decode_pixels
 
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_pixels(bytes(payload))
-                out.append(
-                    (
-                        int(mid), int(arr[0, 0, 0]), int(arr[0, 1, 0]),
-                        int(arr[1, 0, 0]), int(arr[1, 1, 0]),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "p00", "p01", "p10", "p11"]
-            )
+        arr = decode_pixels(bytes(payload))
+        return [(
+            int(mid), int(arr[0, 0, 0]), int(arr[0, 1, 0]),
+            int(arr[1, 0, 0]), int(arr[1, 1, 0]),
+        )]
 
-    return resized.mapInPandas(
-        _corners, "doc_id long, p00 int, p01 int, p10 int, p11 int"
+    return map_rows(
+        resized.select("media_id", "payload"),
+        "doc_id long, p00 int, p01 int, p10 int, p11 int",
+        _corners,
     ).orderBy("doc_id")
 
 
@@ -508,8 +453,6 @@ def q_media_frame_sample_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec exactly, so the oracle is closed-form in doc_id — a RIFF walk
     bug, a dwRate/dwScale mix-up, a tick->frame off-by-one or any JPEG
     regression breaks the hash."""
-    import pandas as pd
-
     from open_ocr_spark.dataops.multimodal import sample_frames
 
     def build(i: int) -> bytes:
@@ -532,26 +475,17 @@ def q_media_frame_sample_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sampling at the source rate: every frame exactly once, ts = k/2
     frames = sample_frames(media, fps=2.0, strict=True)
 
-    def _gray(batches):
+    def _gray(mid, k, ts, frame):
         from open_ocr_spark.dataops.jpeg import decode_jpeg
 
-        for pdf in batches:
-            out = []
-            for mid, k, ts, frame in zip(
-                pdf["media_id"], pdf["frame_idx"], pdf["ts_s"], pdf["frame"]
-            ):
-                arr = decode_jpeg(bytes(frame))
-                out.append(
-                    (int(mid), int(k), float(ts), int(arr[0, 0, 0]),
-                     int(arr[7, 7, 0]))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "ts_s", "gray", "gray2"]
-            )
+        arr = decode_jpeg(bytes(frame))
+        return [(int(mid), int(k), float(ts), int(arr[0, 0, 0]),
+                 int(arr[7, 7, 0]))]
 
-    return frames.mapInPandas(
-        _gray,
+    return map_rows(
+        frames.select("media_id", "frame_idx", "ts_s", "frame"),
         "doc_id long, frame_idx int, ts_s double, gray int, gray2 int",
+        _gray,
     ).orderBy("doc_id", "frame_idx")
 
 

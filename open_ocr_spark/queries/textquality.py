@@ -1370,7 +1370,8 @@ def _extraction_eval_oracle() -> str:
     return token_prf_oracle_sql(
         "SELECT doc_id, text FROM documents",
         "SELECT doc_id,"
-        " array_to_string(str_split(text, ' ')[4:], ' ')"
+        " coalesce(array_to_string(str_split(text, ' ')[4:], ' '),"
+        "          CASE WHEN text IS NOT NULL THEN '' END)"
         " || ' promo offer code ' || (doc_id % 7)::VARCHAR || ' now'"
         " AS text FROM documents",
     )

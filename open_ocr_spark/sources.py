@@ -63,56 +63,52 @@ def fetch_url_payloads(requests: DataFrame, url_col: str = "url") -> DataFrame:
       (ocr_rpc_worker.go:163-190).
 
     Output: every input column (passthrough) + html binary + fetch_error."""
-    from typing import Iterator
+    import base64 as b64
+    import binascii
+    import urllib.parse
 
-    import pandas as pd
+    from pyspark.sql.types import StructType
 
-    cols = [c for c in requests.columns if c not in ("html", "fetch_error")]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in requests.schema.fields
-        if f.name in cols
-    ) + ", html binary, fetch_error string"
+    from open_ocr_spark.pipeline.stages import map_rows
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import base64 as b64
-        import binascii
-        import urllib.parse
+    passthrough = [
+        f for f in requests.schema.fields
+        if f.name not in ("html", "fetch_error")
+    ]
+    schema = StructType(
+        passthrough + list(StructType.fromDDL("html binary, fetch_error string"))
+    )
+    cols = [f.name for f in passthrough]
+    url_at = cols.index(url_col)
 
-        def fetch(url):
-            if url is None:
-                return None, "empty url"
-            if url.startswith("data:"):
-                try:
-                    meta, _, payload = url[5:].partition(",")
-                    if meta.endswith(";base64"):
-                        # RFC 2045 allows line breaks in base64 (Spark's
-                        # base64() emits 76-char MIME chunking)
-                        compact = "".join(payload.split())
-                        return b64.b64decode(compact, validate=True), None
-                    return urllib.parse.unquote_to_bytes(payload), None
-                except (ValueError, binascii.Error) as exc:
-                    return None, f"bad data url: {exc}"
-            if url.startswith("file://"):
-                path = urllib.parse.urlparse(url).path
-                try:
-                    with open(path, "rb") as f:
-                        return f.read(), None
-                except OSError as exc:
-                    return None, f"fetch failed: {exc}"
-            if url.startswith(("http://", "https://")):
-                return None, "network fetch not available in batch stage"
-            return None, f"unsupported url scheme: {url.split(':', 1)[0]}"
+    def fetch(url):
+        if url is None:
+            return None, "empty url"
+        if url.startswith("data:"):
+            try:
+                meta, _, payload = url[5:].partition(",")
+                if meta.endswith(";base64"):
+                    # RFC 2045 allows line breaks in base64 (Spark's
+                    # base64() emits 76-char MIME chunking)
+                    compact = "".join(payload.split())
+                    return b64.b64decode(compact, validate=True), None
+                return urllib.parse.unquote_to_bytes(payload), None
+            except (ValueError, binascii.Error) as exc:
+                return None, f"bad data url: {exc}"
+        if url.startswith("file://"):
+            path = urllib.parse.urlparse(url).path
+            try:
+                with open(path, "rb") as f:
+                    return f.read(), None
+            except OSError as exc:
+                return None, f"fetch failed: {exc}"
+        if url.startswith(("http://", "https://")):
+            return None, "network fetch not available in batch stage"
+        return None, f"unsupported url scheme: {url.split(':', 1)[0]}"
 
-        for pdf in batches:
-            pdf = pdf.reset_index(drop=True)
-            fetched = [fetch(u) for u in pdf[url_col]]
-            yield pdf.assign(
-                html=pd.Series([p for p, _ in fetched], dtype=object),
-                fetch_error=pd.Series([e for _, e in fetched], dtype=object),
-            )
-
-    return requests.select(*cols).mapInPandas(kernel, schema)
+    return map_rows(
+        requests.select(*cols), schema, lambda *row: [row + fetch(row[url_at])]
+    )
 
 
 MULTIPART_SCHEMA = (
@@ -169,46 +165,33 @@ def requests_from_multipart(
     Arrow-batched kernel (ingestion-boundary Python, like the reference's
     handler; the extraction hot path stays JVM-side). Output shape matches
     requests_from_json plus an ``error`` column (error-as-value)."""
-    from typing import Iterator
+    import json as _json
 
-    import pandas as pd
+    from open_ocr_spark.pipeline.stages import map_rows
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
+    def parse(body, ctype):
+        req, err = _parse_multipart_request(
+            bytes(body) if body is not None else b"", ctype or ""
+        )
+        if err is not None:
+            return [(None,) * 10 + (err,)]
+        ea = req.get("engine_args")
+        return [(
+            req.get("img_url"),
+            None,
+            req.get("_img_bytes"),
+            None,
+            (ea or {}).get("lang"),
+            req.get("engine"),
+            req.get("preprocessors"),
+            req.get("preprocessor-args"),
+            _json.dumps(ea, sort_keys=True) if ea is not None else None,
+            req.get("inplace_decode"),
+            None,
+        )]
 
-        cols = [
-            "url", "warc_ts", "html", "text", "lang", "engine",
-            "preprocessors", "preprocessor_args", "engine_args_json",
-            "inplace_decode", "error",
-        ]
-        for pdf in batches:
-            rows = []
-            for body, ctype in zip(pdf[body_col], pdf[content_type_col]):
-                req, err = _parse_multipart_request(
-                    bytes(body) if body is not None else b"", ctype or ""
-                )
-                if err is not None:
-                    rows.append((None, None, None, None, None, None, None,
-                                 None, None, None, err))
-                    continue
-                ea = req.get("engine_args")
-                rows.append((
-                    req.get("img_url"),
-                    None,
-                    req.get("_img_bytes"),
-                    None,
-                    (ea or {}).get("lang"),
-                    req.get("engine"),
-                    req.get("preprocessors"),
-                    req.get("preprocessor-args"),
-                    _json.dumps(ea, sort_keys=True) if ea is not None else None,
-                    req.get("inplace_decode"),
-                    None,
-                ))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return requests.select(body_col, content_type_col).mapInPandas(
-        kernel, MULTIPART_SCHEMA
+    return map_rows(
+        requests.select(body_col, content_type_col), MULTIPART_SCHEMA, parse
     )
 
 
@@ -406,46 +389,35 @@ def records_from_warc(
     (A1/A3 recast: the crawl's own container format instead of one blob
     per row).
 
-    Scale shape: one-to-many mapInPandas, no shuffle — each WARC file is
+    Scale shape: one-to-many map_rows, no shuffle — each WARC file is
     parsed where its bytes already sit, and downstream stages see ordinary
     rows. Arrow batches bound memory to a few files at a time; the
     decompression cap bounds hostile blobs. Parsing is the same
     ingestion-boundary Python as the multipart surface above (the
     extraction hot path stays JVM-side)."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from pyspark.sql.types import StructType
 
+    from open_ocr_spark.pipeline.stages import map_rows
+
+    at = files.columns.index(payload_col)
     passthrough = [f for f in files.schema.fields if f.name != payload_col]
     # Programmatic schema (not a DDL string): passthrough column names are
     # caller-controlled and need no identifier quoting this way.
     schema = StructType(
         list(passthrough) + list(StructType.fromDDL(WARC_RECORD_FIELDS))
     )
-    pass_names = [f.name for f in passthrough]
     rec_names = [
         "rec_index", "warc_type", "target_uri", "warc_date",
         "content_type", "payload", "error", "payload_digest",
         "refers_to_uri",
     ]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # Access columns BY NAME (itertuples positionally renames any
-            # column that is not a valid Python identifier to _1, _2, ...).
-            for blob, *base in zip(
-                pdf[payload_col], *[pdf[c] for c in pass_names]
-            ):
-                for rec in parse_warc_bytes(
-                    bytes(blob) if blob is not None else b""
-                ):
-                    rows.append(list(base) + [rec[c] for c in rec_names])
-            yield pd.DataFrame(rows, columns=pass_names + rec_names)
+    def records(*row):
+        blob, base = row[at], row[:at] + row[at + 1 :]
+        for rec in parse_warc_bytes(bytes(blob) if blob is not None else b""):
+            yield base + tuple(rec[c] for c in rec_names)
 
-    return files.mapInPandas(kernel, schema)
+    return map_rows(files, schema, records)
 
 
 # --- HTTP envelope inside WARC response payloads --------------------------------
@@ -588,33 +560,21 @@ def http_responses(
     """Strip the HTTP envelope from WARC response payloads: every input
     column except ``payload_col`` passes through, plus (http_status,
     http_content_type, body, http_error).  Same scale shape as
-    records_from_warc: mapInPandas where the bytes sit, no shuffle."""
-    from typing import Iterator
-
-    import pandas as pd
-
+    records_from_warc: map_rows where the bytes sit, no shuffle."""
     from pyspark.sql.types import StructType
 
+    from open_ocr_spark.pipeline.stages import map_rows
+
+    at = records.columns.index(payload_col)
     passthrough = [f for f in records.schema.fields if f.name != payload_col]
     schema = StructType(
         list(passthrough) + list(StructType.fromDDL(HTTP_RESPONSE_FIELDS))
     )
-    pass_names = [f.name for f in passthrough]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob, *base in zip(
-                pdf[payload_col], *[pdf[c] for c in pass_names]
-            ):
-                status, ctype, body, error = split_http_response(
-                    bytes(blob) if blob is not None else b""
-                )
-                rows.append(list(base) + [status, ctype, body, error])
-            yield pd.DataFrame(
-                rows,
-                columns=pass_names
-                + ["http_status", "http_content_type", "body", "http_error"],
-            )
+    def response(*row):
+        blob, base = row[at], row[:at] + row[at + 1 :]
+        return [base + split_http_response(
+            bytes(blob) if blob is not None else b""
+        )]
 
-    return records.mapInPandas(kernel, schema)
+    return map_rows(records, schema, response)

@@ -5,10 +5,10 @@ runs for the larger scale factors: row count, column names, type
 families and an order-insensitive value hash; a query without an oracle
 must return at least one row.
 
-sf0.001 has no NULL or empty ``documents.text``, so the extraction and
-media queries run once more over a copy whose texts are NULL or '' on a
-doc_id residue: the writer twins' null branches and the oracles'
-``coalesce(text, '')`` must agree there too."""
+sf0.001 has no NULL or empty ``documents.text``, so every query runs
+once more over a copy whose texts are NULL or '' on a doc_id residue:
+the operators' null branches and the oracles' NULL rules must agree
+there too."""
 
 import os
 
@@ -19,13 +19,6 @@ from open_ocr_spark.queries import ORACLES, QUERIES
 from tools.check_contract import TABLES, check_query, oracle_connection
 
 SF_DIR = "/root/testdata/sf0.001"
-
-NULL_TEXT_QUERIES = [
-    name for name, fn in QUERIES.items()
-    if fn.__module__ in ("open_ocr_spark.queries.extraction",
-                         "open_ocr_spark.queries.media")
-]
-
 
 @pytest.fixture(scope="module")
 def con():
@@ -65,7 +58,7 @@ def null_text_con(null_text_sf):
     con.close()
 
 
-@pytest.mark.parametrize("name", NULL_TEXT_QUERIES)
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_query_matches_oracle_null_text(spark, null_text_con, null_text_sf, name):
     assert check_query(spark, null_text_con, QUERIES[name], ORACLES.get(name),
                        null_text_sf) == []

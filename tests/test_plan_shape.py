@@ -426,7 +426,8 @@ def test_sentence_split_is_projection_plus_explode(spark):
     assert "Exchange" not in body.split("TakeOrderedAndProject")[-1] \
         or "Exchange" not in body.replace("rangepartitioning", "")
     assert "Generate" in plan          # posexplode
-    assert "ArrowEvalPython" not in plan and "mapInPandas" not in plan.lower()
+    for node in ("ArrowEvalPython", "MapInPandas", "MapInArrow"):
+        assert node not in plan
 
 
 def test_confusable_skeleton_is_shuffle_free(spark):
@@ -494,13 +495,14 @@ def test_winnowing_single_doc_partition_window(spark):
 def test_microdata_and_csv_kernels_are_single_pass(spark):
     from open_ocr_spark.kernels.csv_text import csv_cells
     from open_ocr_spark.kernels.microdata import microdata_items
+    from open_ocr_spark.kernels.tables import html_tables
 
     pages = spark.createDataFrame(
         [(1, bytearray(b"<p>x</p>"))], "doc_id long, html binary"
     )
-    for fn in (microdata_items, csv_cells):
+    for fn in (microdata_items, csv_cells, html_tables):
         plan = plan_of(fn(pages))
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         assert "Exchange" not in plan
 
 
