@@ -27,11 +27,10 @@ SURVEY.md §7.3):
   ``<strong>``/``<em>`` moves OUTSIDE the marker pair (``a ** b ** c``
   is not emphasis in CommonMark; ``a **b** c`` is).
 
-Parses with the stdlib tree builder (``parse_html_stdlib``) rather than
-the fast tokenizer: markdown needs attributes (href/src/alt), which the
-fast path deliberately never parses (htmltree.py fast-tokenizer header).
-Same totality guarantee: never raises on malformed bytes (error-as-value
-one level up, dispatch.py).
+Parses with the same tokenizer as the txt path, asking it for attributes
+(``parse_html(raw, attrs=True)``): markdown reads href/src/alt, which the
+txt hot path never parses. Same totality guarantee: never raises on
+malformed bytes (error-as-value one level up, dispatch.py).
 """
 
 from __future__ import annotations
@@ -44,7 +43,7 @@ from open_ocr_spark.kernels.htmltree import (
     BOILERPLATE_TAGS,
     Node,
     collapse_ws,
-    parse_html_stdlib,
+    parse_html,
 )
 
 _ESCAPE_RE = re.compile(r"([\\`*_\[\]])")
@@ -61,11 +60,7 @@ def _esc(text: str) -> str:
 
 
 def _attr(node: Node, name: str) -> str:
-    attrs = node.attrs
-    if isinstance(attrs, dict):
-        val = attrs.get(name)
-        return val if isinstance(val, str) else ""
-    return ""
+    return node.attrs.get(name) or ""  # a valueless attribute is None
 
 
 def _wrap(inner: str, marker: str) -> str:
@@ -251,7 +246,7 @@ def html_to_markdown(raw: bytes | str, aggressive: bool = True) -> str:
     Returns '' for pages with no content. Never raises on malformed
     input (error-as-value handled one level up, dispatch.py).
     """
-    root = parse_html_stdlib(raw)
+    root = parse_html(raw, attrs=True)
     main = select_main_node(root)
     if main is None:
         main = root

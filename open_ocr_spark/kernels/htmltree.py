@@ -1,4 +1,4 @@
-"""Minimal, deterministic HTML node tree built on stdlib html.parser.
+"""Minimal, deterministic HTML node tree built by one regex tokenizer.
 
 This is the graft's recast of the reference's external OCR binaries: where
 open-ocr shells out to ``tesseract`` per document
@@ -13,6 +13,10 @@ an explicit frozen decode policy (WHATWG-style charset sniff: BOM, then a
 errors=replace), no environment-dependent behavior. The same bytes must
 yield the same tree on every executor at any parallelism.
 
+One tokenizer serves every HTML consumer: the txt extractor, tables,
+markdown and microdata. The last two ask for attributes
+(``parse_html(raw, attrs=True)``); the extraction hot path parses none.
+
 Tree representation (hot-path layout): element nodes are ``Node``; text
 runs are plain ``str`` entries in ``children`` — no object allocation per
 text run, which is the bulk of nodes on a text-heavy page. Candidate
@@ -23,8 +27,8 @@ main-content roots are collected in document order at parse time
 from __future__ import annotations
 
 import codecs
+import html
 import re
-from html.parser import HTMLParser
 
 # --- charset sniff ----------------------------------------------------------
 # WHATWG "encoding sniffing algorithm", reduced to its deterministic core:
@@ -153,9 +157,8 @@ class Node:
 
     def __init__(self, tag, attrs=None):
         self.tag = tag
-        # stored as given (None for the fast tokenizer, which never parses
-        # attributes — the extractor reads none); avoids a dict alloc per
-        # node on the hot path
+        # a dict under parse_html(attrs=True), else None: the extractor
+        # reads no attributes, so the hot path allocates no dict per node
         self.attrs = attrs
         self.children = []
         self.tlen = 0
@@ -179,136 +182,75 @@ class Node:
                 yield n
 
 
-class _TreeBuilder(HTMLParser):
-    """Tolerant stack-based tree builder: unmatched end tags are ignored;
-    a matching end tag pops every unclosed element above it (implicit
-    close); elements inside SKIP_TAGS are dropped entirely."""
+# --- tokenizer --------------------------------------------------------------
+# One compiled-regex finditer drives the whole scan (plus per-raw-text close
+# regexes); source positions are never tracked. Tolerant tree semantics:
+# implicit closes, ignored stray end tags, SKIP_TAGS subtrees dropped,
+# entities unescaped.
+#
+# The tag token is linear-time: a quote opens a value only right after
+# `=`, and once a tag name matches the token cannot fail — it ends at the
+# first `>` outside a quoted value, or at end of input (WHATWG "EOF in
+# tag": an unterminated tag swallows the rest of the document). So a
+# page of unterminated `<a ` costs one scan, not one scan per `<`.
 
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.root = Node("#document")
-        self.root.candidates = []
-        self.stack = [self.root]
-        self.skip_depth = 0
-
-    def handle_starttag(self, tag, attrs):
-        if self.skip_depth:
-            # inside a skipped subtree: drop everything, but track nesting
-            # of the skipped tag itself so its end tag unwinds correctly
-            if tag == self._skip_tag and tag not in VOID_TAGS:
-                self.skip_depth += 1
-            return
-        if tag in SKIP_TAGS:
-            self.skip_depth = 1
-            self._skip_tag = tag
-            return
-        node = Node(tag, dict(attrs))
-        self.stack[-1].children.append(node)
-        if tag in CANDIDATE_TAGS:
-            self.root.candidates.append(node)
-        if tag not in VOID_TAGS:
-            self.stack.append(node)
-
-    def handle_startendtag(self, tag, attrs):
-        if self.skip_depth or tag in SKIP_TAGS:
-            return
-        node = Node(tag, dict(attrs))
-        self.stack[-1].children.append(node)
-        if tag in CANDIDATE_TAGS:
-            self.root.candidates.append(node)
-
-    def handle_endtag(self, tag):
-        if self.skip_depth:
-            if tag == self._skip_tag:
-                self.skip_depth -= 1
-            return
-        if tag in VOID_TAGS:
-            return
-        # find the matching open element; ignore stray end tags
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].tag == tag:
-                del self.stack[i:]
-                return
-
-    def handle_data(self, data):
-        if self.skip_depth or not data:
-            return
-        self.stack[-1].children.append(data)
-
-
-def fold_stats(root: Node) -> None:
-    """Post-order fold of subtree text/link totals into tlen/llen for a
-    finished tree (used by the stdlib parse path; the fast tokenizer folds
-    during parsing)."""
-    stack: list[tuple[Node, bool, bool]] = [(root, False, False)]
-    while stack:
-        node, in_link, visited = stack.pop()
-        child_in_link = in_link or node.tag == "a"
-        if not visited:
-            node.tlen = 0
-            node.llen = 0
-            stack.append((node, in_link, True))
-            for child in node.children:
-                if type(child) is str:
-                    n = collapsed_len(child)
-                    node.tlen += n
-                    if child_in_link:
-                        node.llen += n
-                else:
-                    stack.append((child, child_in_link, False))
-        else:
-            for child in node.children:
-                if type(child) is not str:
-                    node.tlen += child.tlen
-                    node.llen += child.llen
-
-
-def parse_html_stdlib(raw: bytes | str) -> Node:
-    """html.parser-backed tree build — the reference implementation the
-    fast tokenizer below is cross-checked against (tests assert identical
-    extraction on the golden fixtures)."""
-    if isinstance(raw, (bytes, bytearray, memoryview)):
-        raw = decode_html_bytes(raw)
-    builder = _TreeBuilder()
-    try:
-        builder.feed(raw)
-        builder.close()
-    except Exception:
-        # html.parser is tolerant, but freeze the guarantee: a parse blowup
-        # yields whatever tree was built so far (error-as-value upstream).
-        pass
-    fold_stats(builder.root)
-    return builder.root
-
-
-# --- fast tokenizer ---------------------------------------------------------
-# ~4× faster than html.parser because it never parses attributes (the
-# extractor reads none), never tracks source positions, and drives the
-# whole scan with one compiled-regex finditer (plus per-raw-text close
-# regexes). Same tolerant tree semantics: implicit closes, ignored
-# stray end tags, SKIP_TAGS subtrees dropped, entities unescaped.
-
-import html as _html
-import re as _re
-
-_TOKEN_RE = _re.compile(
+_TOKEN_RE = re.compile(
     r"<!--.*?(?:-->|$)"              # comment
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"    # cdata
     r"|<[!?][^>]*>?"                 # doctype / PI
-    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:_.-]*)[^>]*?(/?)\s*>",  # tag
-    _re.S,
+    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:_.-]*)"  # tag: slash, name
+    r"(?:[^>\"'=/]+|=\s*\"[^\"]*\"|=\s*'[^']*'|[=\"'/])*?"  # attributes
+    r"(/?)\s*(?:>|\Z)",              # self-closing slash
+    re.S,
 )
 # raw-text elements: content runs to the matching close tag, never nested
+# (an unterminated close tag runs to end of input, which keeps the search
+# linear: `[^>]*>` alone rescans the rest of the page per `</script`)
 _RAWTEXT = {"script", "style", "textarea", "title", "noscript", "template"}
 _RAWTEXT_CLOSE = {
-    t: _re.compile(rf"</\s*{t}[^>]*>", _re.I) for t in _RAWTEXT
+    t: re.compile(rf"</\s*{t}[^>]*(?:>|\Z)", re.I) for t in _RAWTEXT
 }
+# One attribute of a start tag: name, then an optional `=` value (single-
+# or double-quoted, or bare), then separators. A name must follow a quote,
+# whitespace or `/`; `==` counts as one `=`.
+_ATTR_RE = re.compile(
+    r"(?:\s|/(?!>))*((?<=['\"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"
+    r"('[^']*'|\"[^\"]*\"|(?!['\"])[^>\s]*))?(?:\s|/(?!>))*"
+)
 
 
-def parse_html(raw: bytes | str) -> Node:
+def _parse_attrs(raw: str, pos: int, end: int) -> dict:
+    """Attributes of the tag token span ``raw[pos:end]`` (after the tag
+    name, through the self-closing slash): names lowercased, values
+    unquoted then unescaped, a valueless attribute maps to None, and a
+    repeated name keeps its last value. Stops at the first span that is
+    not an attribute."""
+    attrs = {}
+    match = _ATTR_RE.match
+    while pos < end:
+        m = match(raw, pos, end)
+        if not m:
+            break
+        name, rest, value = m.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == value[-1:] and value[:1] in ("'", '"'):
+            value = value[1:-1]
+        if value:
+            value = html.unescape(value)
+        attrs[name.lower()] = value
+        pos = m.end()
+    return attrs
+
+
+def parse_html(raw: bytes | str, attrs: bool = False) -> Node:
     """Parse HTML bytes (frozen sniff-then-replace decode policy, see
     decode_html_bytes) or a str into a Node tree. Never raises on
-    malformed markup."""
+    malformed markup.
+
+    ``attrs=False`` (the extraction hot path) leaves every ``Node.attrs``
+    None; ``attrs=True`` gives each element a dict of its tag's
+    attributes (see _parse_attrs)."""
     if isinstance(raw, (bytes, bytearray, memoryview)):
         raw = decode_html_bytes(raw)
     root = Node("#document")
@@ -318,12 +260,15 @@ def parse_html(raw: bytes | str) -> Node:
     skip_tag = None
     skip_depth = 0
     a_depth = 0
+    # open elements per tag name, so a stray end tag costs O(1) instead of
+    # a scan of the open-element stack (quadratic on `<b>`*n + `</x>`*n)
+    open_n: dict[str, int] = {}
     pos = 0
     n = len(raw)
 
     def add_text(text: str) -> None:
         if "&" in text:
-            text = _html.unescape(text)
+            text = html.unescape(text)
         top = stack[-1]
         clen = collapsed_len(text)
         top.tlen += clen
@@ -337,6 +282,7 @@ def parse_html(raw: bytes | str) -> Node:
         nonlocal a_depth
         while len(stack) > idx:
             child = stack.pop()
+            open_n[child.tag] -= 1
             if child.tag == "a":
                 a_depth -= 1
             parent = stack[-1]
@@ -379,8 +325,8 @@ def parse_html(raw: bytes | str) -> Node:
             continue
 
         if slash:
-            if tag in VOID_TAGS:
-                continue
+            if not open_n.get(tag):
+                continue  # stray end tag (void elements are never open)
             for i in range(len(stack) - 1, 0, -1):
                 if stack[i].tag == tag:
                     pop_to(i)
@@ -403,12 +349,13 @@ def parse_html(raw: bytes | str) -> Node:
             continue
 
         top = stack[-1]
-        node = Node(tag, None)
+        node = Node(tag, _parse_attrs(raw, m.end(2), m.end(3)) if attrs else None)
         top.children.append(node)
         if tag in CANDIDATE_TAGS:
             candidates.append(node)
         if not trail and tag not in VOID_TAGS:
             stack.append(node)
+            open_n[tag] = open_n.get(tag, 0) + 1
             if tag == "a":
                 a_depth += 1
     if pos < n and skip_depth == 0:

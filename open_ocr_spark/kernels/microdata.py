@@ -12,7 +12,7 @@ a script block. Semantics implemented from the public spec:
   img/source/track→src, time→datetime (text fallback),
   data/meter→value, else the whitespace-collapsed text content.
   (object/embed/iframe/audio/video carry no extractable text and are
-  dropped wholesale by the shared tree builder — htmltree.SKIP_TAGS —
+  dropped wholesale by the shared tokenizer — htmltree.SKIP_TAGS —
   so their src/data forms are declared out of scope here.)
 - an element with BOTH itemprop and itemscope is a nested item: its
   properties flatten into the parent under dotted names
@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from open_ocr_spark.kernels.htmltree import collapse_ws, parse_html_stdlib
+from open_ocr_spark.kernels.htmltree import collapse_ws, parse_html
 
 _MAX_NEST = 5
 
@@ -42,7 +42,7 @@ _HREF_TAGS = {"a", "area", "link"}
 
 
 def _prop_value(node) -> str:
-    attrs = node.attrs or {}
+    attrs = node.attrs
     tag = node.tag
     if tag == "meta":
         return (attrs.get("content") or "").strip()
@@ -79,7 +79,7 @@ def _walk_item(root, root_prefix: str, root_depth: int, out: list) -> None:
     _push(stack, root, root_prefix, root_depth)
     while stack:
         node, prefix, depth = stack.pop()
-        attrs = node.attrs or {}
+        attrs = node.attrs
         has_prop = "itemprop" in attrs
         has_scope = "itemscope" in attrs
         if has_scope and not has_prop:
@@ -106,17 +106,17 @@ def extract_microdata(raw) -> list[tuple[int, str, str, str]]:
     """[(item_ord, item_type, prop, value)] for every top-level item in
     document order. item_type is the first itemtype token ('' if
     absent)."""
-    root = parse_html_stdlib(raw)
+    root = parse_html(raw, attrs=True)
     items = []
     for node in root.iter():
-        if type(node) is str:
+        if type(node) is str or node is root:
             continue
-        attrs = node.attrs or {}
+        attrs = node.attrs
         if "itemscope" in attrs and "itemprop" not in attrs:
             items.append(node)
     out = []
     for ord_, item in enumerate(items):
-        itype = ((item.attrs or {}).get("itemtype") or "").split()
+        itype = (item.attrs.get("itemtype") or "").split()
         props: list[tuple[str, str]] = []
         _walk_item(item, "", 0, props)
         for prop, value in props:

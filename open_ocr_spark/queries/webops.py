@@ -760,7 +760,7 @@ def q_wat_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAT export (r5, VERDICT r4 item 6 — dataops/wet.py): pages with
     three link shapes (no outlinks / one double-quoted / two mixed-quote
     links) become WAT `metadata` records whose JSON envelope composes the
-    engine's OWN html parsers (htmlmeta title, links outlinks), packed
+    engine's OWN HTML readers (htmlmeta title, links outlinks), packed
     into WARC segment files and exploded back through the WARC parser;
     the JSON is then re-parsed with from_json.  The oracle states title,
     link count and first sorted link in closed form, so the envelope

@@ -711,10 +711,10 @@ def test_extraction_honours_declared_charset():
     raw = page.encode("cp1252")
     text = extract_main_text(raw)
     assert "für" in text and "großen" in text and "�" not in text
-    # both parsers agree on non-utf8 bytes (cross-check invariant)
-    from open_ocr_spark.kernels.htmltree import parse_html_stdlib
-
-    assert parse_html(raw).candidates and parse_html_stdlib(raw).candidates
+    # the decoded page keeps its candidates and their text totals
+    assert [(n.tag, n.tlen, n.llen) for n in parse_html(raw).candidates] == [
+        ("body", 1229, 0), ("div", 1229, 0),
+    ]
 
 
 # --- ToUnicode CMap (PDF 32000-1:2008 §9.10.3) -------------------------------
