@@ -43,9 +43,10 @@ def parse_args(argv=None):
     p.add_argument("--num-buckets", type=int, default=64,
                    help="resume granularity: url-hash buckets per run")
     p.add_argument("--buckets-per-commit", type=int, default=8,
-                   help="buckets per Spark action (amortizes scheduling)")
+                   help="ignored: every run writes its buckets in one Spark "
+                        "action; bound a run with --max-buckets")
     p.add_argument("--max-buckets", type=int, default=None,
-                   help="stop after this many uncommitted buckets (testing)")
+                   help="stop after this many uncommitted buckets (bounds a run)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
     p.add_argument("--snapshot-id", default=None,
                    help="input snapshot id recorded in manifests (default: "

@@ -81,24 +81,25 @@ def _emit_paragraphs(node: Node, strip_boilerplate: bool) -> list[str]:
         if text:
             paragraphs.append(text)
 
-    def walk(cur: Node):
-        if type(cur) is str:  # text runs are plain strings in children
+    # explicit stack, not recursion: crawl HTML nests thousands deep
+    # (unclosed <font>/<div>); None marks a block element's end
+    stack: list = [node]
+    while stack:
+        cur = stack.pop()
+        if cur is None:
+            flush()
+        elif type(cur) is str:  # text runs are plain strings in children
             buf.append(cur)
-            return
-        if strip_boilerplate and cur.tag in BOILERPLATE_TAGS:
+        elif strip_boilerplate and cur.tag in BOILERPLATE_TAGS:
             flush()
-            return
-        is_block = cur.tag in BLOCK_TAGS
-        if is_block:
-            flush()
-        if cur.tag == "br":
-            buf.append(" ")
-        for child in cur.children:
-            walk(child)
-        if is_block:
-            flush()
+        else:
+            if cur.tag in BLOCK_TAGS:
+                flush()
+                stack.append(None)
+            if cur.tag == "br":
+                buf.append(" ")
+            stack.extend(reversed(cur.children))
 
-    walk(node)
     flush()
     return paragraphs
 

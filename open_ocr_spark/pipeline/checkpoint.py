@@ -10,7 +10,7 @@ Layout (filesystem-transactional, Iceberg-snapshot-shaped without Iceberg in
 the sandbox):
 
     out_dir/
-      data/bucket=<k>/*.parquet      one atomic write per bucket
+      data/bucket=<k>/*.parquet      all of a run's buckets: one write action
       manifests/bucket=<k>.json      committed AFTER the bucket's data
       snapshots/snap-<seq>.json      one per completed run: lineage chain
                                      (parent link, input snapshot id,

@@ -5,20 +5,20 @@ plan, plus resumability.
 Two entry points:
 - ``extraction_plan``      pure DataFrame → DataFrame (what tests/oracle
                            compare; no side effects; single Spark job)
-- ``run_extraction_job``   the resumable spark-submit job: processes
-                           bucket groups, committing a manifest per bucket
-                           (checkpoint.py); a rerun skips committed buckets
-                           via partition pruning before any work happens.
+- ``run_extraction_job``   the resumable spark-submit job: one write action
+                           for its uncommitted buckets, then a manifest per
+                           bucket (checkpoint.py); a rerun skips committed
+                           buckets via partition pruning before any work.
 
 At 100 TB the bucket count is sized so one bucket ≈ a few hundred GB of
-input (e.g. B=1024); locally the tests use B=8. Buckets are processed in
-groups per Spark action to amortize job-scheduling overhead while keeping
-the commit granularity fine enough for cheap resume.
+input (e.g. B=1024); locally the tests use B=8. A run is one scan and one
+write action, so the unit of resume is the run (or its ``max_buckets`` slice).
 """
 
 from __future__ import annotations
 
 import uuid
+import warnings
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,10 +89,12 @@ def run_extraction_job(
     max_buckets: int | None = None,
     use_mock: bool = False,
 ) -> dict:
-    """Resumable extraction over bucket groups.
+    """Resumable extraction: ONE write action for the uncommitted buckets,
+    then a manifest per bucket counted from what that write put on disk.
 
     ``max_buckets`` processes only that many uncommitted buckets then stops
-    — the kill-after-k hook the resume test uses (SURVEY.md §5.2.4).
+    — the kill-after-k hook the resume test uses (SURVEY.md §5.2.4) and the
+    way to bound a run; ``buckets_per_commit`` is accepted and ignored.
     ``input_snapshot_id`` defaults to a fingerprint of the input file
     listing (checkpoint.derive_snapshot_id); on resume, committed manifests
     written against a DIFFERENT snapshot id are surfaced in the summary
@@ -134,8 +136,6 @@ def run_extraction_job(
         and m.get("input_snapshot_id") != input_snapshot_id
     )
     if stale:
-        import warnings
-
         warnings.warn(
             f"resume: {len(stale)} committed bucket(s) {stale} were built "
             f"from a different input snapshot than the current one "
@@ -157,78 +157,53 @@ def run_extraction_job(
             "snapshot_id": chain[-1]["snapshot_id"] if chain else None,
         }
 
-    base = with_bucket(ingest(pages), num_buckets)
-
-    total_docs = 0
-    processed = 0
-    for group_start in range(0, len(all_buckets), buckets_per_commit):
-        group = all_buckets[group_start : group_start + buckets_per_commit]
-        # partition-prune committed buckets BEFORE the dedupe work: the
-        # filter sits directly on the scan projection
-        subset = base.filter(F.col(BUCKET_COL).isin(group))
-        result = with_bucket(
-            extraction_plan(subset.drop(BUCKET_COL), use_mock=use_mock),
-            num_buckets,
-        )
-        # ONE action per group: the dynamic-partition-overwrite write (only
-        # this group's bucket dirs are replaced; committed buckets are
-        # untouched), with per-bucket manifest stats collected as
-        # df.observe() metrics DURING that same pass — no persist/cache of
-        # the extraction output (at 100 TB a cached group would not fit),
-        # no second job. Manifests commit strictly after the write — a
-        # kill between them recomputes the group idempotently.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"bucket-stats-{group_start}")
-        aggs = []
-        for b in group:
-            in_b = F.col(BUCKET_COL) == b
-            aggs += [
-                F.sum(in_b.cast("long")).alias(f"docs_{b}"),
-                F.sum(F.when(in_b, F.col("n_bytes")).otherwise(0)).alias(
-                    f"bytes_{b}"
-                ),
-                F.sum(
-                    F.when(in_b & (F.col("status") != "ok"), 1).otherwise(0)
-                ).alias(f"failures_{b}"),
-            ]
-        (
-            # dir name must not start with '_' (Spark's file index
-            # hides underscore-prefixed paths) -> rename for the write
-            result.observe(obs, *aggs)
-            .withColumnRenamed(BUCKET_COL, "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/data")
-        )
-        stats = obs.get  # blocks until the write action finishes
-        for b in group:
-            docs = stats.get(f"docs_{b}") or 0
-            commit_bucket(
-                out_dir,
-                b,
-                run_id=run_id,
-                input_snapshot_id=input_snapshot_id,
-                docs=docs,
-                bytes_processed=stats.get(f"bytes_{b}") or 0,
-                failures=stats.get(f"failures_{b}") or 0,
-                num_buckets=num_buckets,
-            )
-            total_docs += docs
-            processed += 1
+    # partition-prune committed buckets BEFORE the dedupe work: the
+    # filter sits directly on the scan projection
+    subset = with_bucket(ingest(pages), num_buckets)
+    subset = subset.filter(F.col(BUCKET_COL).isin(all_buckets)).drop(BUCKET_COL)
+    # dir name must not start with '_' (Spark's file index hides
+    # underscore-prefixed paths) -> rename for the write
+    result = with_bucket(
+        extraction_plan(subset, use_mock=use_mock), num_buckets
+    ).withColumnRenamed(BUCKET_COL, "bucket")
+    # ONE write action per run; dynamic overwrite replaces only the bucket
+    # dirs it writes, so committed buckets are untouched
+    data = f"{out_dir}/data"
+    result.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket").parquet(data)
+    # Manifests are counted from what was written: one groupBy over this
+    # run's (pruned) bucket dirs, whose explicit schema keeps a run that
+    # wrote no rows readable. They commit strictly after the write: a kill
+    # between the two recomputes the run idempotently.
+    stats = {
+        r[0]: r[1:]
+        for r in spark.read.schema(result.schema).parquet(data)
+        .filter(F.col("bucket").isin(all_buckets))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("docs"),
+             F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("bytes"),
+             F.count_if(F.col("status") != "ok").alias("failures"))
+        .collect()
+    }
+    for b in all_buckets:
+        docs, nbytes, failures = stats.get(b, (0, 0, 0))
+        commit_bucket(out_dir, b, run_id=run_id,
+                      input_snapshot_id=input_snapshot_id, docs=docs,
+                      bytes_processed=nbytes, failures=failures,
+                      num_buckets=num_buckets)
 
     snapshot = write_snapshot(
         out_dir,
         run_id=run_id,
         input_snapshot_id=input_snapshot_id,
-        buckets_processed=[b for b in all_buckets],
+        buckets_processed=all_buckets,
         num_buckets=num_buckets,
     )
     return {
         "run_id": run_id,
-        "buckets_processed": processed,
-        "docs": total_docs,
+        "buckets_processed": len(all_buckets),
+        "docs": sum(docs for docs, _, _ in stats.values()),
         "snapshot_mismatch_buckets": stale,
         "snapshot_id": snapshot["snapshot_id"],
     }

@@ -37,6 +37,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        # coalesce by shuffle bytes (64 MB advisory), not to one partition
+        # per core: each concurrent kernel task forks a ~125 MB Python worker
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Arrow: the kernels' batch transport
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

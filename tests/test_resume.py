@@ -64,6 +64,73 @@ def test_manifest_lineage_counts(spark, tmp_path):
     assert failures == expected_failures
 
 
+def test_one_parquet_write_action_per_run(spark, tmp_path, monkeypatch):
+    """A run computes and writes all of its buckets in one action, whatever
+    ``buckets_per_commit`` says."""
+    from pyspark.sql import DataFrameWriter
+
+    calls = []
+    real = DataFrameWriter.parquet
+
+    def counting(self, *args, **kwargs):
+        calls.append(args[0] if args else kwargs.get("path"))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    out = str(tmp_path / "run")
+    summary = run_extraction_job(spark, pages_df(spark, N_ROWS), out,
+                                 num_buckets=BUCKETS, buckets_per_commit=2)
+    assert calls == [f"{out}/data"]
+    assert summary["buckets_processed"] == BUCKETS
+    assert len(committed_buckets(out)) == BUCKETS
+
+
+def test_manifests_equal_groupby_over_written_table(spark, tmp_path):
+    """Across a kill and a resume, every manifest's counters equal a
+    per-bucket groupBy over the table as read back, with the bucket taken
+    from each row's bucket directory."""
+    pages = pages_df(spark, N_ROWS)
+    out = str(tmp_path / "run")
+    run_extraction_job(spark, pages, out, num_buckets=BUCKETS, max_buckets=2)
+    run_extraction_job(spark, pages, out, num_buckets=BUCKETS)
+
+    bucket_dir = F.regexp_extract(F.input_file_name(), r"/bucket=(\d+)/", 1)
+    table = {
+        r["b"]: (r["docs"], r["bytes"], r["failures"])
+        for r in read_extracted(spark, out)
+        .groupBy(bucket_dir.cast("int").alias("b"))
+        .agg(F.count(F.lit(1)).alias("docs"),
+             F.sum("n_bytes").alias("bytes"),
+             F.sum((F.col("status") != "ok").cast("int")).alias("failures"))
+        .collect()
+    }
+    manifests = {
+        m["bucket"]: (m["docs_processed"], m["bytes_processed"],
+                      m["failure_count"])
+        for m in read_manifests(out)
+    }
+    assert set(manifests) == set(range(BUCKETS))
+    assert manifests == {b: table.get(b, (0, 0, 0)) for b in range(BUCKETS)}
+    assert sum(d for d, _, _ in manifests.values()) == \
+        golden_df(spark, N_ROWS).count()
+
+
+def test_empty_input_commits_every_bucket(spark, tmp_path):
+    """A run that writes no row still commits every bucket, with zeros."""
+    out = str(tmp_path / "run")
+    empty = pages_df(spark, N_ROWS).limit(0)
+    summary = run_extraction_job(spark, empty, out, num_buckets=4)
+    assert summary["buckets_processed"] == 4 and summary["docs"] == 0
+    manifests = read_manifests(out)
+    assert [m["bucket"] for m in manifests] == [0, 1, 2, 3]
+    for m in manifests:
+        assert (m["docs_processed"], m["bytes_processed"],
+                m["failure_count"]) == (0, 0, 0)
+    # a rerun is a no-op: every bucket is committed
+    assert run_extraction_job(spark, empty, out,
+                              num_buckets=4)["buckets_processed"] == 0
+
+
 def test_snapshot_id_derived_and_mismatch_surfaced(spark, tmp_path):
     """input_snapshot_id defaults to a fingerprint of the input file
     listing; rewriting the input between a kill and a resume changes the

@@ -206,6 +206,27 @@ def test_unterminated_rawtext_close_extracts_fast():
     assert time.perf_counter() - t0 < 2.0
 
 
+# --- deep nesting: the txt path walks without recursion ---------------------
+
+_DEEP = 5_000
+
+
+@pytest.mark.parametrize(
+    "page, text",
+    [
+        (b"<div>x" * _DEEP, "\n\n".join(["x"] * _DEEP)),
+        (b"<font size=2>y " * _DEEP, " ".join(["y"] * _DEEP)),
+        (b"<p>" + b"<b>w " * _DEEP + b"</b>" * _DEEP + b"</p>",
+         " ".join(["w"] * _DEEP)),
+    ],
+    ids=["unclosed-div", "unclosed-font", "nested-b"],
+)
+def test_deep_nesting_extracts(page, text):
+    # crawl HTML leaves <font>/<div> unclosed by the thousand; a recursive
+    # walk ended these in error:internal (RecursionError)
+    assert extract_document(page) == (text, "ok", "")
+
+
 # --- one tokenizer ----------------------------------------------------------
 
 
