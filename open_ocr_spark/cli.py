@@ -17,8 +17,10 @@ Local test mode (the reference's inplace_decode analog,
         --master local[8]
 
 The job is resumable: re-running with the same --output skips committed
-buckets (checkpoint manifests). Per-document failures are status rows,
-never job failures.
+buckets. Each run writes one directory, data/run=<run id>-<write id>/,
+and commits it with one snapshot under snapshots/; a run killed before
+its snapshot is recomputed whole by the next run. Per-document failures
+are status rows, never job failures.
 """
 
 from __future__ import annotations
@@ -36,12 +38,14 @@ def parse_args(argv=None):
     p.add_argument("--input", required=True,
                    help="pages table path (parquet dir or table)")
     p.add_argument("--output", required=True,
-                   help="local output dir (data/ + manifests/ created "
-                        "under it); URIs are rejected")
+                   help="local output dir (data/, manifests/ and "
+                        "snapshots/ created under it; one data directory "
+                        "per run); URIs are rejected")
     p.add_argument("--master", default=None,
                    help="override master (default: spark-submit / local[*])")
     p.add_argument("--num-buckets", type=int, default=64,
-                   help="resume granularity: url-hash buckets per run")
+                   help="url-hash buckets of the table; --max-buckets "
+                        "bounds a run in these units")
     p.add_argument("--buckets-per-commit", type=int, default=8,
                    help="ignored: every run writes its buckets in one Spark "
                         "action; bound a run with --max-buckets")

@@ -83,10 +83,29 @@ def _code_span(node: Node) -> str:
 
 
 def _inline(node: Node) -> str:
-    return "".join(_inline_one(child) for child in node.children)
+    """The inline markdown of ``node``'s children. Walks on an explicit
+    stack, not recursion: crawl HTML nests inline tags thousands deep.
+    A frame is (element, its child iterator, its rendered parts)."""
+    top: list[str] = []
+    stack = [(node, iter(node.children), top)]
+    while stack:
+        _, children, parts = stack[-1]
+        for child in children:
+            leaf = _inline_leaf(child)
+            if leaf is None:
+                stack.append((child, iter(child.children), []))
+                break
+            parts.append(leaf)
+        else:
+            el, _, parts = stack.pop()
+            if stack:
+                stack[-1][2].append(_inline_close(el, "".join(parts)))
+    return "".join(top)
 
 
-def _inline_one(child) -> str:
+def _inline_leaf(child) -> str | None:
+    """The markdown of a text run or of an element whose children need no
+    walk; None for an element that wraps inline content."""
     if type(child) is str:
         return _esc(child)
     tag = child.tag
@@ -99,45 +118,67 @@ def _inline_one(child) -> str:
         return f"![{_esc(collapse_ws(_attr(child, 'alt')))}]({src})"
     if tag == "code":
         return _code_span(child)
-    inner = _inline(child)
-    if tag == "a":
-        href = _attr(child, "href")
+    return None
+
+
+def _inline_close(el: Node, inner: str) -> str:
+    """Wrap an element's rendered children: a link or emphasis markers."""
+    if el.tag == "a":
+        href = _attr(el, "href")
         if href and inner.strip():
             return f"[{inner.strip()}]({href})"
         return inner
-    marker = _EMPHASIS.get(tag)
+    marker = _EMPHASIS.get(el.tag)
     if marker:
         return _wrap(inner, marker)
     return inner
 
 
-def _list_lines(node: Node, depth: int) -> list[str]:
+def _inline_one(child) -> str:
+    leaf = _inline_leaf(child)
+    return _inline_close(child, _inline(child)) if leaf is None else leaf
+
+
+def _list_lines(node: Node) -> list[str]:
     """Render a <ul>/<ol> as markdown lines (one block, '\\n'-joined by
     the caller). Nested lists indent 2 spaces per level; a block child of
     an <li> other than a nested list contributes its inline text to the
-    item line (frozen simplification: items stay single-line)."""
-    ordered = node.tag == "ol"
-    lines: list[str] = []
-    idx = 0
-    for child in node.children:
-        if type(child) is str or child.tag != "li":
-            continue  # inter-item whitespace / malformed children
-        idx += 1
-        marker = f"{idx}. " if ordered else "- "
+    item line (frozen simplification: items stay single-line), and an
+    item with no text of its own is kept only above a kept nested line.
+    Walks in document order on an explicit stack of (element, depth,
+    item marker, or None for a list) entries, not recursion."""
+    items: list[tuple[int, str, bool]] = []  # (depth, line, has text)
+    stack = [(node, 0, None)]
+    while stack:
+        el, depth, marker = stack.pop()
+        if marker is None:  # a list: its items, the first on top
+            lis = [c for c in el.children
+                   if type(c) is not str and c.tag == "li"]
+            stack.extend(
+                (li, depth, f"{i}. " if el.tag == "ol" else "- ")
+                for i, li in reversed(list(enumerate(lis, 1)))
+            )
+            continue
         buf: list[str] = []
-        sub: list[str] = []
-        for grand in child.children:
+        subs: list[Node] = []
+        for grand in el.children:
             if type(grand) is not str and grand.tag in ("ul", "ol"):
-                sub.extend(_list_lines(grand, depth + 1))
+                subs.append(grand)
             elif type(grand) is not str and grand.tag in BLOCK_TAGS:
                 buf.append(" " + _inline(grand) + " ")
             else:
                 buf.append(_inline_one(grand))
         text = collapse_ws("".join(buf))
-        if text or sub:
-            lines.append("  " * depth + marker + text)
-            lines.extend(sub)
-    return lines
+        items.append((depth, "  " * depth + marker + text, bool(text)))
+        stack.extend((sub, depth + 1, None) for sub in reversed(subs))
+    # the next kept line after an item is nested in it iff it is deeper
+    lines: list[str] = []
+    below = -1
+    for depth, line, has_text in reversed(items):
+        if has_text or below > depth:
+            lines.append(line)
+            below = depth
+    return lines[::-1]
 
 
 def _table_rows(table: Node) -> list[Node]:
@@ -178,30 +219,9 @@ def _table_block(table: Node) -> list[str]:
     return ["\n".join(out)]
 
 
-def _container_blocks(node: Node, strip: bool) -> list[str]:
-    """Walk a block container's children: inline content accumulates into
-    a paragraph buffer that flushes at every block-element boundary (the
-    same boundary rule as html_extract._emit_paragraphs)."""
-    out: list[str] = []
-    buf: list[str] = []
-
-    def flush() -> None:
-        text = collapse_ws("".join(buf))
-        buf.clear()
-        if text:
-            out.append(text)
-
-    for child in node.children:
-        if type(child) is str or child.tag not in BLOCK_TAGS:
-            buf.append(_inline_one(child))
-            continue
-        flush()
-        out.extend(_block(child, strip))
-    flush()
-    return out
-
-
-def _block(node: Node, strip: bool) -> list[str]:
+def _leaf_block(node: Node, strip: bool) -> list[str] | None:
+    """The blocks of an element whose markdown needs no walk of nested
+    blocks; None for a blockquote or a generic container."""
     tag = node.tag
     if strip and tag in BOILERPLATE_TAGS:
         return []
@@ -213,16 +233,8 @@ def _block(node: Node, strip: bool) -> list[str]:
         text = collapse_ws(_inline(node))
         return [text] if text else []
     if tag in ("ul", "ol"):
-        lines = _list_lines(node, 0)
+        lines = _list_lines(node)
         return ["\n".join(lines)] if lines else []
-    if tag == "blockquote":
-        inner = _container_blocks(node, strip)
-        if not inner:
-            return []
-        joined = "\n\n".join(inner)
-        return ["\n".join(
-            ("> " + line) if line else ">" for line in joined.split("\n")
-        )]
     if tag == "pre":
         content = "".join(node.iter_text()).strip("\n")
         if not content.strip():
@@ -232,8 +244,65 @@ def _block(node: Node, strip: bool) -> list[str]:
         return ["---"]
     if tag == "table":
         return _table_block(node)
-    # generic block container (article/section/div/li/dd/...)
-    return _container_blocks(node, strip)
+    return None
+
+
+def _markdown(node: Node, strip: bool) -> str:
+    """The markdown of ``node``: its blocks joined with ``"\\n\\n"``.
+
+    A container's (blockquote or generic: article/section/div/li/dd/...)
+    inline content accumulates into a paragraph buffer that flushes at
+    every block-element boundary (the same boundary rule as
+    html_extract._emit_paragraphs). Containers nest thousands deep in
+    crawl HTML, so they are walked on an explicit stack of (container,
+    child iterator, inline buffer, quote depth) frames.
+
+    Every line of a block inside ``d`` blockquotes gets ``d`` ``> ``
+    prefixes (an empty line ``d`` ``>``s), and so does the empty line
+    between two blocks, at the depth of the innermost blockquote holding
+    both. Each block records both depths, so the prefixes are written
+    once, not again at every enclosing quote."""
+    leaf = _leaf_block(node, strip)
+    if leaf is not None:
+        return "\n\n".join(leaf)
+    # (quote depth, quote depth of the empty line before it, text)
+    blocks: list[tuple[int, int, str]] = []
+    low = 0  # the shallowest quote depth walked since the last block
+    stack = [(node, iter(node.children), [], int(node.tag == "blockquote"))]
+    while stack:
+        _, children, buf, depth = stack[-1]
+        for child in children:
+            if type(child) is str or child.tag not in BLOCK_TAGS:
+                buf.append(_inline_one(child))
+                continue
+            text = collapse_ws("".join(buf))
+            buf.clear()
+            leaf = _leaf_block(child, strip)
+            for block in ([text] if text else []) + (leaf or []):
+                blocks.append((depth, low, block))
+                low = depth
+            if leaf is None:
+                stack.append((child, iter(child.children), [],
+                              depth + (child.tag == "blockquote")))
+                break
+        else:
+            text = collapse_ws("".join(buf))
+            if text:
+                blocks.append((depth, low, text))
+                low = depth
+            stack.pop()
+            if stack:
+                low = min(low, stack[-1][3])
+    lines = []
+    for i, (depth, sep, text) in enumerate(blocks):
+        if i:
+            lines.append(_quoted("", sep))
+        lines.extend(_quoted(line, depth) for line in text.split("\n"))
+    return "\n".join(lines)
+
+
+def _quoted(line: str, depth: int) -> str:
+    return "> " * depth + line if line else ("> " * depth)[:-1]
 
 
 def html_to_markdown(raw: bytes | str, aggressive: bool = True) -> str:
@@ -250,4 +319,4 @@ def html_to_markdown(raw: bytes | str, aggressive: bool = True) -> str:
     main = select_main_node(root)
     if main is None:
         main = root
-    return "\n\n".join(_block(main, aggressive))
+    return _markdown(main, aggressive)

@@ -22,16 +22,21 @@ from pyspark.sql import DataFrame
 from open_ocr_spark.kernels.htmltree import Node, collapse_ws, parse_html
 
 
-def _descendants(node: Node, want: set, out: list) -> None:
+def _descendants(node: Node, want: set) -> list:
     """want-tagged descendants reachable without entering a nested
-    table."""
-    for c in node.children:
+    table, in document order. An explicit stack, not recursion: crawl
+    HTML nests wrappers thousands deep."""
+    out = []
+    stack = list(reversed(node.children))
+    while stack:
+        c = stack.pop()
         if type(c) is str:
             continue
         if c.tag in want:
             out.append(c)
         elif c.tag != "table":
-            _descendants(c, want, out)
+            stack.extend(reversed(c.children))
+    return out
 
 
 def _cell_text(cell: Node) -> str:
@@ -45,12 +50,8 @@ def extract_tables(raw) -> list:
     tables = [n for n in root.iter() if type(n) is not str and n.tag == "table"]
     out = []
     for t_idx, table in enumerate(tables):
-        rows: list = []
-        _descendants(table, {"tr"}, rows)
-        for r_idx, row in enumerate(rows):
-            cells: list = []
-            _descendants(row, {"td", "th"}, cells)
-            for c_idx, cell in enumerate(cells):
+        for r_idx, row in enumerate(_descendants(table, {"tr"})):
+            for c_idx, cell in enumerate(_descendants(row, {"td", "th"})):
                 out.append((t_idx, r_idx, c_idx, _cell_text(cell)))
     return out
 

@@ -10,26 +10,38 @@ Layout (filesystem-transactional, Iceberg-snapshot-shaped without Iceberg in
 the sandbox):
 
     out_dir/
-      data/bucket=<k>/*.parquet      all of a run's buckets: one write action
-      manifests/bucket=<k>.json      committed AFTER the bucket's data
-      snapshots/snap-<seq>.json      one per completed run: lineage chain
-                                     (parent link, input snapshot id,
-                                     committed-bucket set) for time-travel
-                                     reads and audits
+      data/run=<run id>-<write id>/*.parquet
+                                     one directory per run: one write
+                                     action, ``bucket`` a plain column,
+                                     rows sorted by bucket in each file
+      manifests/bucket=<k>.json      per-bucket counters, written after
+                                     the data
+      snapshots/snap-<seq>.json      one per completed run, THE COMMIT
+                                     POINT: lineage (parent link, input
+                                     snapshot id), the committed-bucket
+                                     set and the data directories that
+                                     make up the table at that snapshot
 
-A bucket is committed iff its manifest file exists; the manifest is written
-only after the data write returns, so a kill between the two leaves an
-uncommitted bucket that is simply recomputed (output overwrite per bucket is
-idempotent — deterministic kernels make the rewrite byte-identical).
-Resume = skip buckets whose manifest exists (the left_anti of SURVEY §2.B,
-expressed as partition pruning on the bucket column — cheaper than a join:
-committed buckets are never even scanned).
+A bucket is committed iff the head snapshot lists it. A run writes its
+data directory, then its manifests, then its snapshot (atomically); a kill
+anywhere before the snapshot leaves the whole run uncommitted, and the
+next run recomputes all of its buckets (deterministic kernels make the
+rewrite byte-identical). At the start of every run the data directories
+no snapshot records, and the manifests of uncommitted buckets, are
+deleted — the job is the table's only committer. Resume = skip committed
+buckets (the left_anti of SURVEY §2.B, expressed as a filter on the
+bucket id right above the scan). Readers read only the directories a
+snapshot records, so a killed run's rows are never visible.
+
+The partition-directory layout of earlier versions (``data/bucket=<k>/``)
+is rejected with ``ValueError`` before anything is read or deleted.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame
@@ -79,14 +91,46 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
 
 
 def committed_buckets(out_dir: str) -> set[int]:
+    """The buckets the head snapshot lists: a run's buckets are committed
+    when its snapshot is written, not before."""
+    chain = snapshot_chain(out_dir)
+    return set(chain[-1]["committed_buckets"]) if chain else set()
+
+
+def check_layout(out_dir: str) -> None:
+    """Raise ``ValueError`` for an output dir written with the old
+    ``data/bucket=<k>/`` layout: its buckets are not in any snapshot's
+    data directories, so a resume would recompute and write them twice."""
+    ddir = os.path.join(out_dir, "data")
+    legacy = os.path.isdir(ddir) and sorted(
+        n for n in os.listdir(ddir) if n.startswith("bucket=")
+    )
+    if legacy:
+        raise ValueError(
+            f"{out_dir} uses the old data/bucket=<k> layout "
+            f"({legacy[0]}, ...); use a fresh output dir"
+        )
+
+
+def remove_uncommitted(out_dir: str) -> None:
+    """Delete what a killed run left behind: every ``data/`` directory no
+    snapshot records and the manifest of every uncommitted bucket. Never
+    touches a directory that any snapshot (not only the head) records."""
+    chain = snapshot_chain(out_dir)
+    recorded = {d for s in chain for d in s.get("data_dirs", [])}
+    ddir = os.path.join(out_dir, "data")
+    if os.path.isdir(ddir):
+        for name in os.listdir(ddir):
+            path = os.path.join(ddir, name)
+            if os.path.isdir(path) and f"data/{name}" not in recorded:
+                shutil.rmtree(path)
+    done = committed_buckets(out_dir)
     mdir = os.path.join(out_dir, "manifests")
-    if not os.path.isdir(mdir):
-        return set()
-    out = set()
-    for name in os.listdir(mdir):
-        if name.startswith("bucket=") and name.endswith(".json"):
-            out.add(int(name[len("bucket=") : -len(".json")]))
-    return out
+    if os.path.isdir(mdir):
+        for name in os.listdir(mdir):
+            if (name.startswith("bucket=") and name.endswith(".json")
+                    and int(name[len("bucket="):-len(".json")]) not in done):
+                os.unlink(os.path.join(mdir, name))
 
 
 def read_manifests(out_dir: str) -> list[dict]:
@@ -105,16 +149,18 @@ def write_snapshot(
     input_snapshot_id: str,
     buckets_processed: list[int],
     num_buckets: int | None = None,
+    data_dir: str | None = None,
 ) -> dict:
-    """Append an Iceberg-shaped snapshot to the table's snapshot chain:
-    one JSON file per completed run, recording the run's lineage (input
-    snapshot id, buckets it committed, parent snapshot) plus the FULL set
-    of committed buckets at commit time — so `read_extracted` can answer
-    "state as of run N" (time-travel) and audits can walk parent links
-    back to the first run. Written atomically (tmp + rename) after all of
-    the run's bucket manifests; a kill before this file simply leaves the
-    buckets visible to the next run via their manifests, exactly like an
-    uncommitted Iceberg snapshot's data files."""
+    """Commit a run: append an Iceberg-shaped snapshot to the table's
+    snapshot chain. One JSON file per completed run records the run's
+    lineage (input snapshot id, buckets it processed, parent snapshot, its
+    data directory ``data_dir``, relative to ``out_dir``) plus the table
+    at commit time: the FULL committed-bucket set and every data directory
+    (``data_dirs``) — so `read_extracted` can answer "state as of run N"
+    (time-travel) and audits can walk parent links back to the first run.
+    Written atomically (tmp + rename) after all of the run's data and
+    manifests: this file IS the commit, and a kill before it leaves the
+    whole run uncommitted."""
     sdir = os.path.join(out_dir, "snapshots")
     os.makedirs(sdir, exist_ok=True)
     chain = snapshot_chain(out_dir)
@@ -122,6 +168,8 @@ def write_snapshot(
     # (audits/manual cleanup), len() would reuse a live sequence number and
     # silently overwrite that snapshot, corrupting the parent-link chain
     seq = max((s.get("sequence_number", -1) for s in chain), default=-1) + 1
+    head = chain[-1] if chain else {}
+    data_dirs = head.get("data_dirs", []) + ([data_dir] if data_dir else [])
     snapshot = {
         "sequence_number": seq,
         "snapshot_id": f"{run_id}-{seq}",
@@ -130,7 +178,11 @@ def write_snapshot(
         "input_snapshot_id": input_snapshot_id,
         "num_buckets": num_buckets,
         "buckets_processed": sorted(buckets_processed),
-        "committed_buckets": sorted(committed_buckets(out_dir)),
+        "committed_buckets": sorted(
+            set(head.get("committed_buckets", [])) | set(buckets_processed)
+        ),
+        "data_dir": data_dir,
+        "data_dirs": sorted(data_dirs),
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     tmp = os.path.join(sdir, f".snap-{seq:06d}.json.tmp")
@@ -196,10 +248,11 @@ def commit_bucket(
     failures: int,
     num_buckets: int | None = None,
 ) -> None:
-    """Write the manifest row for a bucket — atomically (tmp + rename) and
-    strictly after its data write. ``num_buckets`` is the B of the
-    bucket id pmod(xxhash64(url), B): bucket k under one B holds other
-    urls than bucket k under another, so a resume checks it."""
+    """Write the manifest row for a bucket — atomically (tmp + rename),
+    after its data write and before the run's snapshot commits it.
+    ``num_buckets`` is the B of the bucket id pmod(xxhash64(url), B):
+    bucket k under one B holds other urls than bucket k under another, so
+    a resume checks it."""
     mdir = os.path.join(out_dir, "manifests")
     os.makedirs(mdir, exist_ok=True)
     manifest = {

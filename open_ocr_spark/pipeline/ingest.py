@@ -17,7 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PAGES_COLUMNS = ("url", "warc_ts", "html", "text", "lang")
+# the input_hint schema: column -> the type ingest casts it to
+_PAGES_TYPES = {
+    "url": "string",
+    "warc_ts": "timestamp",
+    "html": "binary",
+    "text": "string",
+    "lang": "string",
+}
 
 
 def normalize_sources(df: DataFrame) -> DataFrame:
@@ -42,19 +49,12 @@ def normalize_sources(df: DataFrame) -> DataFrame:
 def enforce_pages_schema(df: DataFrame) -> DataFrame:
     """Project + cast to the input_hint schema; extra option columns
     (engine/preprocessors/…) pass through untouched. Unknown-typed inputs
-    fail here, at plan time, not inside the kernel."""
-    casts = {
-        "url": "string",
-        "warc_ts": "timestamp",
-        "html": "binary",
-        "text": "string",
-        "lang": "string",
-    }
-    out = df
-    for name, typ in casts.items():
-        if name in df.columns:
-            out = out.withColumn(name, F.col(name).cast(typ))
-    return out
+    fail here, at plan time, not inside the kernel. One projection: each
+    ``withColumn`` would be an analysis pass of its own."""
+    return df.withColumns({
+        name: F.col(name).cast(typ)
+        for name, typ in _PAGES_TYPES.items() if name in df.columns
+    })
 
 
 def ingest(df: DataFrame) -> DataFrame:

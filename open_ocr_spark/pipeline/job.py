@@ -6,17 +6,21 @@ Two entry points:
 - ``extraction_plan``      pure DataFrame → DataFrame (what tests/oracle
                            compare; no side effects; single Spark job)
 - ``run_extraction_job``   the resumable spark-submit job: one write action
-                           for its uncommitted buckets, then a manifest per
-                           bucket (checkpoint.py); a rerun skips committed
-                           buckets via partition pruning before any work.
+                           of its uncommitted buckets into one new data
+                           directory, a manifest per bucket, then the
+                           run's snapshot, which commits it
+                           (checkpoint.py); a rerun filters committed
+                           buckets out right above the scan.
 
 At 100 TB the bucket count is sized so one bucket ≈ a few hundred GB of
 input (e.g. B=1024); locally the tests use B=8. A run is one scan and one
-write action, so the unit of resume is the run (or its ``max_buckets`` slice).
+write action, so the unit of resume is the run (or its ``max_buckets``
+slice), and it writes one file per write task, whatever B is.
 """
 
 from __future__ import annotations
 
+import os
 import uuid
 import warnings
 from urllib.parse import urlparse
@@ -26,10 +30,12 @@ from pyspark.sql import functions as F
 
 from open_ocr_spark.pipeline.checkpoint import (
     BUCKET_COL,
+    check_layout,
     commit_bucket,
     committed_buckets,
     derive_snapshot_id,
     read_manifests,
+    remove_uncommitted,
     snapshot_chain,
     with_bucket,
     write_snapshot,
@@ -65,7 +71,14 @@ def extraction_plan(
     particular — as large as ``html``) would ride the url-hash exchange
     and the window sort buffers. Projecting first roughly halves the
     shuffle volume on an input_hint-shaped table."""
-    df = ingest(pages)
+    return _plan_ingested(ingest(pages), num_partitions=num_partitions,
+                          use_mock=use_mock)
+
+
+def _plan_ingested(
+    df: DataFrame, *, num_partitions: int | None, use_mock: bool
+) -> DataFrame:
+    """``extraction_plan`` after its ingest step."""
     needed = ["url", "warc_ts", "html", "lang"]
     from open_ocr_spark.pipeline.stages import _OPTION_COLS
 
@@ -89,12 +102,16 @@ def run_extraction_job(
     max_buckets: int | None = None,
     use_mock: bool = False,
 ) -> dict:
-    """Resumable extraction: ONE write action for the uncommitted buckets,
-    then a manifest per bucket counted from what that write put on disk.
+    """Resumable extraction: ONE write action of the uncommitted buckets
+    into one new directory ``data/run=<run_id>-<write id>/``, a manifest
+    per bucket counted from what that write put on disk, then the run's
+    snapshot, which commits all of them at once.
 
     ``max_buckets`` processes only that many uncommitted buckets then stops
     — the kill-after-k hook the resume test uses (SURVEY.md §5.2.4) and the
     way to bound a run; ``buckets_per_commit`` is accepted and ignored.
+    A run killed before its snapshot is uncommitted as a whole: the next
+    run deletes its data directory and recomputes all of its buckets.
     ``input_snapshot_id`` defaults to a fingerprint of the input file
     listing (checkpoint.derive_snapshot_id); on resume, committed manifests
     written against a DIFFERENT snapshot id are surfaced in the summary
@@ -102,9 +119,11 @@ def run_extraction_job(
     computed from an input that has since changed.
     ``out_dir`` must be a local path: manifests and snapshots are
     committed with ``os`` calls on the driver, so a URI (``s3://``,
-    ``hdfs://``, ``file://``) raises ``ValueError``. So does a resume
-    with a ``num_buckets`` other than the committed manifests record —
-    the bucket ids would no longer partition the urls the same way.
+    ``hdfs://``, ``file://``) raises ``ValueError``. So does an output
+    dir in the old ``data/bucket=<k>`` layout, and a resume with a
+    ``num_buckets`` other than the committed manifests record — the
+    bucket ids would no longer partition the urls the same way. Both
+    raise before anything is deleted.
     Returns summary counters.
     """
     if urlparse(out_dir).scheme:
@@ -115,6 +134,7 @@ def run_extraction_job(
     run_id = run_id or uuid.uuid4().hex[:12]
     if input_snapshot_id is None:
         input_snapshot_id = derive_snapshot_id(pages)
+    check_layout(out_dir)
     done = committed_buckets(out_dir)
     manifests = read_manifests(out_dir)
     recorded = sorted({m["num_buckets"] for m in manifests
@@ -125,6 +145,7 @@ def run_extraction_job(
             f"{recorded}, not {num_buckets}; resume with the same value or "
             "use a fresh output dir"
         )
+    remove_uncommitted(out_dir)
     # manifests from before snapshot-id derivation carry the old default
     # constant (or nothing): treat those as UNKNOWN, not stale — flagging
     # every legacy bucket would teach operators to ignore the warning
@@ -157,29 +178,27 @@ def run_extraction_job(
             "snapshot_id": chain[-1]["snapshot_id"] if chain else None,
         }
 
-    # partition-prune committed buckets BEFORE the dedupe work: the
-    # filter sits directly on the scan projection
+    # filter out committed buckets BEFORE the dedupe work: the filter
+    # sits directly on the scan projection
     subset = with_bucket(ingest(pages), num_buckets)
     subset = subset.filter(F.col(BUCKET_COL).isin(all_buckets)).drop(BUCKET_COL)
-    # dir name must not start with '_' (Spark's file index hides
-    # underscore-prefixed paths) -> rename for the write
     result = with_bucket(
-        extraction_plan(subset, use_mock=use_mock), num_buckets
+        _plan_ingested(subset, num_partitions=None, use_mock=use_mock),
+        num_buckets,
     ).withColumnRenamed(BUCKET_COL, "bucket")
-    # ONE write action per run; dynamic overwrite replaces only the bucket
-    # dirs it writes, so committed buckets are untouched
-    data = f"{out_dir}/data"
-    result.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(data)
-    # Manifests are counted from what was written: one groupBy over this
-    # run's (pruned) bucket dirs, whose explicit schema keeps a run that
-    # wrote no rows readable. They commit strictly after the write: a kill
-    # between the two recomputes the run idempotently.
+    # ONE write action per run, into a directory of its own: one file per
+    # write task, rows sorted by bucket (row-group stats prune bucket
+    # filters). A directory per bucket would cost a file per (task,
+    # bucket), each a chmod fork on a local Hadoop filesystem
+    data_dir = f"data/run={run_id}-{uuid.uuid4().hex[:8]}"
+    path = os.path.join(out_dir, data_dir)
+    result.sortWithinPartitions("bucket").write.parquet(path)
+    # Manifests are counted from what was written: one groupBy over the
+    # run's directory, whose explicit schema keeps a run that wrote no
+    # rows readable.
     stats = {
         r[0]: r[1:]
-        for r in spark.read.schema(result.schema).parquet(data)
-        .filter(F.col("bucket").isin(all_buckets))
+        for r in spark.read.schema(result.schema).parquet(path)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("docs"),
              F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("bytes"),
@@ -199,6 +218,7 @@ def run_extraction_job(
         input_snapshot_id=input_snapshot_id,
         buckets_processed=all_buckets,
         num_buckets=num_buckets,
+        data_dir=data_dir,
     )
     return {
         "run_id": run_id,
@@ -212,23 +232,24 @@ def run_extraction_job(
 def read_extracted(
     spark: SparkSession, out_dir: str, as_of: str | int | None = None
 ) -> DataFrame:
-    """Read the extracted table; ``as_of`` (snapshot_id or sequence
-    number) time-travels to that snapshot's committed-bucket set — a
-    partition-pruning filter on the bucket column, so unselected bucket
-    directories are never scanned. Committed buckets are immutable (only
-    uncommitted buckets are ever overwritten, and recomputes are
-    byte-identical), so an as-of read reproduces that run's state
-    exactly."""
-    df = spark.read.parquet(f"{out_dir}/data")
-    if as_of is not None:
-        chain = snapshot_chain(out_dir)
+    """Read the extracted table: the data directories the head snapshot
+    records, or with ``as_of`` (snapshot_id or sequence number) those of
+    that snapshot — time travel. Directories no snapshot records (a
+    killed run's) are never read. Committed directories are immutable, so
+    an as-of read reproduces that run's state exactly."""
+    check_layout(out_dir)
+    chain = snapshot_chain(out_dir)
+    if as_of is None:
+        match = chain[-1:]
+    else:
         match = [
             s for s in chain
             if s["snapshot_id"] == as_of or s["sequence_number"] == as_of
         ]
-        if not match:
-            known = [s["snapshot_id"] for s in chain]
-            raise ValueError(f"unknown snapshot {as_of!r}; have {known}")
-        df = df.filter(F.col("bucket").isin(match[0]["committed_buckets"]))
-    # partition discovery surfaces the bucket dir as a column; hide it
-    return df.drop("bucket") if "bucket" in df.columns else df
+    if not match:
+        known = [s["snapshot_id"] for s in chain]
+        what = ("no committed run" if as_of is None
+                else f"unknown snapshot {as_of!r}")
+        raise ValueError(f"{what} in {out_dir}; have {known}")
+    paths = [os.path.join(out_dir, d) for d in match[0]["data_dirs"]]
+    return spark.read.parquet(*paths).drop("bucket")

@@ -111,6 +111,19 @@ def test_extraction_single_exchange(spark):
     assert "Window" in plan
 
 
+def test_ingest_casts_in_one_projection(spark):
+    """The schema casts are one Project, so building the plan analyses
+    the frame once, not once per cast column."""
+    from open_ocr_spark.fixtures import pages_df
+    from open_ocr_spark.pipeline.ingest import ingest
+
+    def projects(df):
+        return df._jdf.queryExecution().analyzed().toString().count("Project [")
+
+    pages = pages_df(spark, 5)
+    assert projects(ingest(pages)) == projects(pages) + 1
+
+
 def test_extraction_query_no_join_single_scan(spark):
     """Passthrough columns through the Arrow kernel mean the oracle-facing
     extraction queries need NO second scan and NO correlation join to

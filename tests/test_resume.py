@@ -80,25 +80,25 @@ def test_one_parquet_write_action_per_run(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "run")
     summary = run_extraction_job(spark, pages_df(spark, N_ROWS), out,
                                  num_buckets=BUCKETS, buckets_per_commit=2)
-    assert calls == [f"{out}/data"]
+    assert len(calls) == 1 and calls[0].startswith(f"{out}/data/")
     assert summary["buckets_processed"] == BUCKETS
     assert len(committed_buckets(out)) == BUCKETS
 
 
 def test_manifests_equal_groupby_over_written_table(spark, tmp_path):
     """Across a kill and a resume, every manifest's counters equal a
-    per-bucket groupBy over the table as read back, with the bucket taken
-    from each row's bucket directory."""
+    per-bucket groupBy over the table as read back, with each row's
+    bucket recomputed from its url."""
     pages = pages_df(spark, N_ROWS)
     out = str(tmp_path / "run")
     run_extraction_job(spark, pages, out, num_buckets=BUCKETS, max_buckets=2)
     run_extraction_job(spark, pages, out, num_buckets=BUCKETS)
 
-    bucket_dir = F.regexp_extract(F.input_file_name(), r"/bucket=(\d+)/", 1)
+    bucket = F.pmod(F.xxhash64("url"), F.lit(BUCKETS))
     table = {
         r["b"]: (r["docs"], r["bytes"], r["failures"])
         for r in read_extracted(spark, out)
-        .groupBy(bucket_dir.cast("int").alias("b"))
+        .groupBy(bucket.cast("int").alias("b"))
         .agg(F.count(F.lit(1)).alias("docs"),
              F.sum("n_bytes").alias("bytes"),
              F.sum((F.col("status") != "ok").cast("int")).alias("failures"))
@@ -320,3 +320,145 @@ def test_non_local_output_rejected(tmp_path, monkeypatch, out_dir):
         run_extraction_job(None, None, out_dir)
     assert not (tmp_path / "s3:").exists()
     assert list(tmp_path.iterdir()) == []
+
+
+class _Killed(Exception):
+    """Stands in for the driver dying at a chosen point of a run."""
+
+
+def _kill_after_write(monkeypatch):
+    from pyspark.sql import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def write_then_die(self, *args, **kwargs):
+        real(self, *args, **kwargs)
+        raise _Killed
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_die)
+
+
+def _kill_mid_manifests(monkeypatch):
+    import open_ocr_spark.pipeline.job as job
+
+    real, done = job.commit_bucket, []
+
+    def commit_twice_then_die(*args, **kwargs):
+        if len(done) == 2:
+            raise _Killed
+        done.append(real(*args, **kwargs))
+
+    monkeypatch.setattr(job, "commit_bucket", commit_twice_then_die)
+
+
+def _kill_before_snapshot(monkeypatch):
+    import open_ocr_spark.pipeline.job as job
+
+    def die(*args, **kwargs):
+        raise _Killed
+
+    monkeypatch.setattr(job, "write_snapshot", die)
+
+
+@pytest.mark.parametrize(
+    "kill", [_kill_after_write, _kill_mid_manifests, _kill_before_snapshot],
+    ids=["after-write", "mid-manifests", "before-snapshot"],
+)
+def test_killed_run_is_uncommitted_and_resume_is_exact(spark, tmp_path,
+                                                       monkeypatch, kill):
+    """The snapshot is the commit point: a run killed anywhere before it
+    commits nothing and its rows stay invisible to ``read_extracted``. The
+    resume recomputes all of that run's buckets, deletes its data
+    directory, and leaves every golden url on disk exactly once."""
+    import os
+
+    import duckdb
+
+    from open_ocr_spark.fixtures import generate_pages
+
+    pages = pages_df(spark, N_ROWS)
+    out = str(tmp_path / "run")
+    run_extraction_job(spark, pages, out, num_buckets=BUCKETS, max_buckets=2)
+    before = sorted(read_extracted(spark, out).collect())
+    with monkeypatch.context() as m:
+        kill(m)
+        with pytest.raises(_Killed):
+            run_extraction_job(spark, pages, out, num_buckets=BUCKETS)
+    assert len(os.listdir(os.path.join(out, "data"))) == 2
+    assert len(committed_buckets(out)) == 2
+    assert sorted(read_extracted(spark, out).collect()) == before
+
+    resumed = run_extraction_job(spark, pages, out, num_buckets=BUCKETS)
+    assert resumed["buckets_processed"] == BUCKETS - 2
+    golden = sorted((g["url"], g["extracted_text"], g["status"])
+                    for g in generate_pages(N_ROWS)[1])
+    got = read_extracted(spark, out).select("url", "extracted_text", "status")
+    assert sorted(tuple(r) for r in got.collect()) == golden
+    on_disk = duckdb.sql(
+        "select url, extracted_text, status from "
+        f"read_parquet('{out}/data/*/*.parquet')").fetchall()
+    assert sorted(on_disk) == golden
+    assert len(os.listdir(os.path.join(out, "data"))) == 2
+    manifests = read_manifests(out)
+    assert len(manifests) == BUCKETS
+    assert sum(m["docs_processed"] for m in manifests) == len(golden)
+
+
+def test_one_data_directory_per_run(spark, tmp_path):
+    """A run writes one directory, whatever the bucket count, and its
+    snapshot records it."""
+    import os
+
+    from open_ocr_spark.pipeline.checkpoint import snapshot_chain
+
+    out = str(tmp_path / "run")
+    run_extraction_job(spark, pages_df(spark, N_ROWS), out, num_buckets=64)
+    (name,) = os.listdir(os.path.join(out, "data"))
+    assert name.startswith("run=")
+    assert snapshot_chain(out)[-1]["data_dirs"] == [f"data/{name}"]
+    assert len(committed_buckets(out)) == 64
+
+
+def test_old_bucket_directory_layout_rejected(spark, tmp_path):
+    """An output dir in the old ``data/bucket=<k>`` layout raises on
+    resume and on read, and is left exactly as it was."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "old"
+    os.makedirs(out / "data" / "bucket=0")
+    os.makedirs(out / "manifests")
+    pq.write_table(pa.table({"url": ["u"], "extracted_text": ["t"],
+                             "status": ["ok"]}),
+                   out / "data" / "bucket=0" / "part-0.parquet")
+    with open(out / "manifests" / "bucket=0.json", "w") as f:
+        json.dump({"bucket": 0, "num_buckets": 4, "docs_processed": 1}, f)
+
+    def tree():
+        return {str(p): p.read_bytes() for p in out.rglob("*") if p.is_file()}
+
+    before = tree()
+    with pytest.raises(ValueError, match="bucket="):
+        run_extraction_job(spark, pages_df(spark, 20), str(out), num_buckets=4)
+    with pytest.raises(ValueError, match="bucket="):
+        read_extracted(spark, str(out))
+    assert tree() == before
+
+
+def test_run_ingests_its_input_once(spark, tmp_path, monkeypatch):
+    import open_ocr_spark.pipeline.job as job
+
+    calls = []
+    real = job.ingest
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(job, "ingest", counting)
+    run_extraction_job(spark, pages_df(spark, 20), str(tmp_path / "run"),
+                       num_buckets=2)
+    assert len(calls) == 1

@@ -227,6 +227,50 @@ def test_deep_nesting_extracts(page, text):
     assert extract_document(page) == (text, "ok", "")
 
 
+_MD = {"config_vars": {"output_format": "md"}}
+
+
+def _quote_ladder(n):
+    """``q`` inside 1..n nested blockquotes, a quoted empty line between."""
+    lines = []
+    for k in range(1, n + 1):
+        lines.append("> " * k + "q")
+        if k < n:
+            lines.append(("> " * k)[:-1])
+    return "\n".join(lines)
+
+
+@pytest.mark.parametrize(
+    "page, markdown",
+    [
+        (b"<div>x" * _DEEP, "\n\n".join(["x"] * _DEEP)),
+        (b"<li>x" * _DEEP, "\n\n".join(["x"] * _DEEP)),
+        (b"<blockquote>q" * _DEEP, _quote_ladder(_DEEP)),
+        (b"<ul><li>x" * _DEEP,
+         "\n".join("  " * k + "- x" for k in range(_DEEP))),
+        (b"<p>" + b"<b>w " * _DEEP + b"</b>" * _DEEP + b"</p>", None),
+    ],
+    ids=["unclosed-div", "unclosed-li", "unclosed-blockquote", "nested-list",
+         "nested-b"],
+)
+def test_deep_nesting_extracts_markdown(page, markdown):
+    # the markdown walkers recursed once per level: RecursionError at
+    # ~300 nested <b> and ~1,000 nested blocks became error:internal
+    text, status, error = extract_document(page, engine_args=_MD)
+    assert (status, error) == ("ok", "")
+    if markdown is None:
+        assert text.count("w") == _DEEP and text.startswith("**w **w")
+    else:
+        assert text == markdown
+
+
+def test_deep_nesting_between_table_and_row():
+    from open_ocr_spark.kernels.tables import extract_tables
+
+    page = b"<table>" + b"<div>" * _DEEP + b"<tr><td>x</td></tr>"
+    assert extract_tables(page) == [(0, 0, 0, "x")]
+
+
 # --- one tokenizer ----------------------------------------------------------
 
 
