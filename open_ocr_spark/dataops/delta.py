@@ -9,11 +9,11 @@ tombstones downstream indexes.  The reference's resume machinery
 batch analogue this engine needs at 100 TB.
 
 Scale shape: ONE full outer join on the URL key — both sides bucketable
-on the same key (pipeline/partitioning.py), so on a bucketed layout the
-join is exchange-free; classification is a pure projection.  Content
-comparison uses a caller-supplied digest column (md5 of the payload,
-computed at ingest) rather than the payload itself, so the join carries
-~50 bytes/row, not page bodies.
+on the same key, so on a bucketed layout the join is exchange-free;
+classification is a pure projection.  Content comparison uses a
+caller-supplied digest column (md5 of the payload, computed at ingest)
+rather than the payload itself, so the join carries ~50 bytes/row, not
+page bodies.
 """
 
 from __future__ import annotations

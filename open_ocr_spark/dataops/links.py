@@ -14,8 +14,8 @@ Scale shape: extraction is a projection (no shuffle); the host-edge
 aggregate is one hash agg on a (src_host, dst_host) key.  Host keys are
 skewed (big sites attract links) — the aggregate itself is safe
 (map-side combine collapses the skew before the exchange) but anyone
-JOINING on dst_host downstream should use the salted partitioning in
-pipeline/partitioning.py.
+JOINING on dst_host downstream should salt it, as the two-phase host
+aggregate in pipeline/metrics.py does.
 """
 
 from __future__ import annotations

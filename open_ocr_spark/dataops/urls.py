@@ -11,8 +11,8 @@ All pure Catalyst: `parse_url` (JVM) decomposes, `filter`/`array_sort`
 higher-order functions normalise the query string, `concat` reassembles.
 No shuffle — canonicalization is a projection; downstream dedup shuffles
 once on the canonical string (uniform key: hostnames are skewed but the
-full canonical url is not; for per-HOST grouping use the salted
-partitioning in pipeline/partitioning.py instead).
+full canonical url is not; for per-HOST grouping salt the key, as the
+two-phase host aggregate in pipeline/metrics.py does).
 """
 
 from __future__ import annotations
@@ -254,7 +254,7 @@ def registrable_domain_stats(
     domains, and domain-diversity stats, where per-host grouping splits
     one owner across subdomains.  One projection + one hash aggregate on
     the registrable key (far fewer distinct values than hosts; skew on
-    big owners is the same salting story as hosts, partitioning.py)."""
+    big owners is the same salting story as hosts, pipeline/metrics.py)."""
     parts = pages.select(public_suffix_parts(F.col(url_col)).alias("p"))
     return (
         parts.select("p.host", "p.suffix", "p.registrable")

@@ -1,5 +1,5 @@
-"""End-to-end extraction job: read → ingest → dedupe → bucket → extract →
-write + manifest. This is the reference's whole §3.1 lifecycle as ONE batch
+"""End-to-end extraction job: read → ingest → dedupe → extract → write +
+manifest. This is the reference's whole §3.1 lifecycle as ONE batch
 plan, plus resumability.
 
 Two entry points:
@@ -42,51 +42,39 @@ from open_ocr_spark.pipeline.checkpoint import (
 )
 from open_ocr_spark.pipeline.dedupe import latest_per_url
 from open_ocr_spark.pipeline.ingest import ingest
-from open_ocr_spark.pipeline.partitioning import bucket_by_url_hash
-from open_ocr_spark.pipeline.stages import extract_stage, mock_stage
+from open_ocr_spark.pipeline.stages import (
+    _OPTION_COLS,
+    extract_stage,
+    mock_stage,
+)
 
 
-def extraction_plan(
-    pages: DataFrame,
-    *,
-    num_partitions: int | None = None,
-    use_mock: bool = False,
-) -> DataFrame:
+def extraction_plan(pages: DataFrame, *, use_mock: bool = False) -> DataFrame:
     """The flagship query as a single declarative plan:
 
         scan → ingest-normalize → latest-per-url dedupe (ONE url-hash
-        shuffle) → mapInArrow extraction kernel
+        shuffle) → map_rows extraction kernel
 
     (SURVEY.md §7.1 minimum slice). Returns (url, extracted_text, status,
     error, n_bytes).
 
     The dedupe's groupBy(url) exchange IS the bucket-by-url-hash shuffle:
     its output is already hash-distributed by url, so no second exchange
-    sits in front of the kernel. ``num_partitions`` forces an explicit
-    extra repartition — used by tests to prove partition-count invariance,
-    never on the hot path.
+    sits in front of the kernel; ``spark.sql.shuffle.partitions`` (with
+    AQE coalescing) sets the kernel's parallelism.
 
     Column pruning happens BEFORE the dedupe, not after: any column left
     in the frame here (the crawl table's ``text`` snapshot column in
     particular — as large as ``html``) would ride the url-hash exchange
     and the window sort buffers. Projecting first roughly halves the
     shuffle volume on an input_hint-shaped table."""
-    return _plan_ingested(ingest(pages), num_partitions=num_partitions,
-                          use_mock=use_mock)
+    return _plan_ingested(ingest(pages), use_mock=use_mock)
 
 
-def _plan_ingested(
-    df: DataFrame, *, num_partitions: int | None, use_mock: bool
-) -> DataFrame:
+def _plan_ingested(df: DataFrame, *, use_mock: bool) -> DataFrame:
     """``extraction_plan`` after its ingest step."""
-    needed = ["url", "warc_ts", "html", "lang"]
-    from open_ocr_spark.pipeline.stages import _OPTION_COLS
-
-    keep = needed + [c for c in _OPTION_COLS if c in df.columns]
-    df = df.select(*[c for c in keep if c in df.columns])
-    df = latest_per_url(df)
-    if num_partitions:
-        df = bucket_by_url_hash(df, num_partitions)
+    keep = ["url", "warc_ts", "html", "lang", *_OPTION_COLS]
+    df = latest_per_url(df.select(*[c for c in keep if c in df.columns]))
     return mock_stage(df) if use_mock else extract_stage(df)
 
 
@@ -137,8 +125,7 @@ def run_extraction_job(
     check_layout(out_dir)
     done = committed_buckets(out_dir)
     manifests = read_manifests(out_dir)
-    recorded = sorted({m["num_buckets"] for m in manifests
-                       if m.get("num_buckets") not in (None, num_buckets)})
+    recorded = sorted({m["num_buckets"] for m in manifests} - {num_buckets})
     if recorded:
         raise ValueError(
             f"resume: {out_dir} has buckets committed with num_buckets="
@@ -146,16 +133,8 @@ def run_extraction_job(
             "use a fresh output dir"
         )
     remove_uncommitted(out_dir)
-    # manifests from before snapshot-id derivation carry the old default
-    # constant (or nothing): treat those as UNKNOWN, not stale — flagging
-    # every legacy bucket would teach operators to ignore the warning
-    _legacy_ids = (None, "snapshot-0")
-    stale = sorted(
-        m["bucket"]
-        for m in manifests
-        if m.get("input_snapshot_id") not in _legacy_ids
-        and m.get("input_snapshot_id") != input_snapshot_id
-    )
+    stale = sorted(m["bucket"] for m in manifests
+                   if m["input_snapshot_id"] != input_snapshot_id)
     if stale:
         warnings.warn(
             f"resume: {len(stale)} committed bucket(s) {stale} were built "
@@ -183,7 +162,7 @@ def run_extraction_job(
     subset = with_bucket(ingest(pages), num_buckets)
     subset = subset.filter(F.col(BUCKET_COL).isin(all_buckets)).drop(BUCKET_COL)
     result = with_bucket(
-        _plan_ingested(subset, num_partitions=None, use_mock=use_mock),
+        _plan_ingested(subset, use_mock=use_mock),
         num_buckets,
     ).withColumnRenamed(BUCKET_COL, "bucket")
     # ONE write action per run, into a directory of its own: one file per

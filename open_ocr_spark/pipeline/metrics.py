@@ -10,15 +10,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from open_ocr_spark.pipeline.partitioning import host_of
-
 
 def run_metrics(extracted: DataFrame) -> DataFrame:
     """Per-host metrics with skew-safe two-phase agg: partial by
     (host, salt-of-url) then final by host. Counts and sums re-aggregate
     losslessly."""
     partial = (
-        extracted.withColumn("host", host_of(F.col("url")))
+        extracted.withColumn("host", F.parse_url("url", F.lit("HOST")))
         .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(16)))
         .groupBy("host", "_salt")
         .agg(

@@ -1,6 +1,6 @@
-"""Extraction stages: the single mapInArrow kernel boundary, the
-``map_rows`` boundary every other per-row operator shares, plus
-declarative pre/post stages.
+"""Extraction stages: the ``map_rows`` boundary every per-row Python
+operator shares (the extraction kernel included), plus declarative
+pre/post stages.
 
 The reference runs one subprocess per document
 (/root/reference/tesseract_engine.go:210-211) behind a queue hop per
@@ -9,13 +9,15 @@ transformations inside one Spark stage: Catalyst pipelines the projections
 and the one MapInArrow node; there is no shuffle between preprocessor steps
 at all (SURVEY.md §3.2 recast).
 
-Design rules (north_rule): no per-row Python on the Spark side — the kernel
-receives whole Arrow batches; per-row work happens inside compiled
-pandas/pyarrow loops over those batches. Output schema is fixed and stable.
+Design rules (north_rule): the Spark side hands Python whole Arrow
+batches through one mapInArrow node per operator, never a UDF call per
+row; the per-row work is a plain Python function over each batch's
+values. Output schema is fixed and stable.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Callable, Iterable, Iterator
 
 import pyarrow as pa
@@ -24,12 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-# Output schema of the extraction stage (DDL used by mapInArrow).
+# Output schema of the extraction stage, ahead of any passthrough columns.
 EXTRACT_SCHEMA = (
     "url string, extracted_text string, status string, error string, "
     "n_bytes long"
 )
 
+# Request-option columns the kernel reads, in its argument order.
 _OPTION_COLS = (
     "engine",
     "preprocessors",
@@ -38,109 +41,59 @@ _OPTION_COLS = (
     "engine_args_json",  # nested reference shape, JSON-encoded (sources.py)
 )
 
-# Every column the kernel itself consumes; anything else in the input batch
-# is an opaque passthrough emitted unchanged (zero-copy Arrow append).
-_KERNEL_COLS = frozenset(("url", "html", "lang") + _OPTION_COLS)
 
-
-def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Arrow-batch kernel: one Python invocation per batch (≈4096 rows),
-    zero per-row Spark overhead. Imports stay inside the function so the
-    closure ships cleanly via --py-files."""
+def _extract_row(url, html, lang, engine, chain, pargs, eargs, eargs_json,
+                 *passthrough):
+    """One page through the extraction kernel. The import stays inside so
+    the driver never loads the kernels and the function ships cleanly via
+    --py-files."""
     from open_ocr_spark.kernels.dispatch import extract_document
 
-    for batch in batches:
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        n = batch.num_rows
-        urls = cols["url"].to_pylist()
-        htmls = cols["html"].to_pylist()
-        langs = cols["lang"].to_pylist() if "lang" in cols else [None] * n
-        engines = cols["engine"].to_pylist() if "engine" in cols else [None] * n
-        chains = (
-            cols["preprocessors"].to_pylist() if "preprocessors" in cols else [None] * n
-        )
-        pargs = (
-            cols["preprocessor_args"].to_pylist()
-            if "preprocessor_args" in cols
-            else [None] * n
-        )
-        eargs = (
-            cols["engine_args"].to_pylist() if "engine_args" in cols else [None] * n
-        )
-        if "engine_args_json" in cols:
-            import json
-
-            eargs = [
-                json.loads(s) if s else e
-                for s, e in zip(cols["engine_args_json"].to_pylist(), eargs)
-            ]
-
-        texts: list[str] = []
-        statuses: list[str] = []
-        errors: list[str] = []
-        nbytes: list[int] = []
-        for i in range(n):
-            html = htmls[i]
-            text, status, error = extract_document(
-                html,
-                lang=langs[i],
-                engine=engines[i],
-                engine_args=dict(eargs[i]) if eargs[i] else None,
-                preprocessors=chains[i],
-                preprocessor_args=dict(pargs[i]) if pargs[i] else None,
-            )
-            texts.append(text)
-            statuses.append(status)
-            errors.append(error)
-            nbytes.append(len(html) if html is not None else 0)
-
-        arrays = [
-            pa.array(urls, pa.string()),
-            pa.array(texts, pa.string()),
-            pa.array(statuses, pa.string()),
-            pa.array(errors, pa.string()),
-            pa.array(nbytes, pa.int64()),
-        ]
-        names = ["url", "extracted_text", "status", "error", "n_bytes"]
-        for name in batch.schema.names:
-            if name not in _KERNEL_COLS:  # passthrough, untouched
-                arrays.append(cols[name])
-                names.append(name)
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+    if eargs_json:
+        eargs = json.loads(eargs_json)
+    text, status, error = extract_document(
+        html,
+        lang=lang,
+        engine=engine,
+        engine_args=dict(eargs) if eargs else None,
+        preprocessors=chain,
+        preprocessor_args=dict(pargs) if pargs else None,
+    )
+    n_bytes = len(html) if html is not None else 0
+    return [(url, text, status, error, n_bytes, *passthrough)]
 
 
 def extract_stage(
     pages: DataFrame, passthrough: list[str] | tuple[str, ...] = ()
 ) -> DataFrame:
-    """The A10 engine + A6-A9 chain as ONE mapInArrow stage.
+    """The A10 engine + A6-A9 chain as ONE ``map_rows`` stage.
 
     Column pruning: only the columns the kernel needs — plus any requested
-    `passthrough` columns, carried through the Arrow boundary untouched —
-    are selected before the Python boundary, so the parquet scan never
+    `passthrough` columns, carried through the boundary unchanged — are
+    selected before the Python boundary, so the parquet scan never
     materializes `text` (or anything else) for this path — check
-    `.explain` ReadSchema. Passthrough avoids a second scan + join just to
-    recover correlation keys (e.g. doc_id) after extraction.
+    `.explain` ReadSchema. An absent option column is a NULL literal of
+    Spark's NullType: a bufferless Arrow column, where a NULL cast to the
+    nested option types costs the JVM's Arrow writers ~35 MB of RSS.
+    Passthrough avoids a second scan + join just to recover correlation
+    keys (e.g. doc_id) after extraction; each keeps its input field.
     """
-    output_names = frozenset(
-        f.split()[0] for f in EXTRACT_SCHEMA.split(", ")
-    )
+    out = StructType.fromDDL(EXTRACT_SCHEMA)
     for c in passthrough:
-        if c in _KERNEL_COLS:
+        if c in ("url", "html", "lang", *_OPTION_COLS):
             raise ValueError(f"passthrough column {c!r} is a kernel column")
-        if c in output_names:
+        if c in out.fieldNames():
             raise ValueError(
                 f"passthrough column {c!r} collides with a kernel OUTPUT "
-                f"column ({sorted(output_names)}); rename it first"
+                f"column ({sorted(out.fieldNames())}); rename it first"
             )
         if c not in pages.columns:
             raise ValueError(f"passthrough column {c!r} not in input")
-    cols = ["url", "html", "lang"] + [
-        c for c in _OPTION_COLS if c in pages.columns
-    ] + list(passthrough)
-    schema = EXTRACT_SCHEMA + "".join(
-        f", {c} {pages.schema[c].dataType.simpleString()}" for c in passthrough
-    )
-    return pages.select(*cols).mapInArrow(_extract_batches, schema)
+    options = [c if c in pages.columns else F.lit(None).alias(c)
+               for c in _OPTION_COLS]
+    schema = StructType(out.fields + [pages.schema[c] for c in passthrough])
+    selected = pages.select("url", "html", "lang", *options, *passthrough)
+    return map_rows(selected, schema, _extract_row)
 
 
 def map_rows(

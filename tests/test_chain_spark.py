@@ -4,6 +4,7 @@ engine dispatch, reverse-order chains, preprocessor args, structured output
 (/root/reference/tesseract_engine_test.go:39-68) recast over DataFrames."""
 
 import json
+from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
@@ -143,3 +144,49 @@ def test_passthrough_rejects_kernel_output_names(spark):
     pages = pages_df(spark, 5).withColumn("status", F.lit("x"))
     with pytest.raises(ValueError, match="OUTPUT"):
         extract_stage(pages, passthrough=["status"])
+
+
+def test_passthrough_names_that_need_quoting(spark):
+    # the output schema is built from the input's fields, not from a DDL
+    # string of column names, so a name with a space survives and keeps
+    # its nullability
+    from open_ocr_spark.fixtures import pages_df
+
+    pages = pages_df(spark, 5).withColumn(
+        "doc id", F.monotonically_increasing_id()
+    )
+    out = extract_stage(pages, passthrough=["doc id"])
+    assert out.schema["doc id"] == pages.schema["doc id"]
+    want = {r["url"]: r["doc id"] for r in pages.collect()}
+    assert {r["url"]: r["doc id"] for r in out.collect()} == want
+
+
+def test_absent_option_columns_read_as_null(spark):
+    """Dropped option columns, the same columns present as NULL, and a
+    passthrough column beside them all extract the same rows."""
+    from open_ocr_spark.fixtures import pages_df
+
+    kernel_out = ["url", "extracted_text", "status", "error", "n_bytes"]
+    bare = pages_df(spark, 60).drop(
+        "engine", "preprocessors", "preprocessor_args"
+    )
+    nulls = bare.select(
+        "*",
+        F.lit(None).cast("string").alias("engine"),
+        F.lit(None).cast("array<string>").alias("preprocessors"),
+        F.lit(None).cast("map<string,string>").alias("preprocessor_args"),
+        F.lit(None).cast("map<string,string>").alias("engine_args"),
+        F.lit(None).cast("string").alias("engine_args_json"),
+    )
+    with_id = bare.withColumn("doc_id", F.xxhash64("url"))
+
+    def rows(df, cols, passthrough=()):
+        out = extract_stage(df, passthrough=passthrough).select(*cols)
+        return Counter(map(tuple, out.collect()))
+
+    want = rows(bare, kernel_out)
+    assert sum(want.values()) == bare.count()
+    assert rows(nulls, kernel_out) == want
+    assert rows(with_id, kernel_out, ["doc_id"]) == want
+    ids = Counter(map(tuple, with_id.select("url", "doc_id").collect()))
+    assert rows(with_id, ["url", "doc_id"], ["doc_id"]) == ids

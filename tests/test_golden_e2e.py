@@ -3,6 +3,8 @@ over the synthetic pages fixture, asserted byte-identical against the
 generator-derived golden table — the reference's README-transcript /
 ocr_http_handler_test pattern made assertive."""
 
+from collections import Counter
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -13,10 +15,35 @@ from open_ocr_spark.pipeline.job import extraction_plan
 N_ROWS = 400
 
 
+def _plan_at(spark, partitions, materialize):
+    """``extraction_plan`` with its dedupe exchange (and so its kernel)
+    at ``partitions`` tasks, materialized while that conf is set."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        return materialize(extraction_plan(pages_df(spark, N_ROWS)))
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="module")
 def extracted(spark):
-    pages = pages_df(spark, N_ROWS)
-    return extraction_plan(pages, num_partitions=8).cache()
+    def cached(df):
+        df = df.cache()
+        df.count()
+        assert df.rdd.getNumPartitions() == 8
+        return df
+
+    return _plan_at(spark, 8, cached)
 
 
 @pytest.fixture(scope="module")
@@ -82,10 +109,14 @@ def test_dedupe_keeps_latest_crawl(extracted, golden, spark):
 
 def test_partition_count_invariance(spark, extracted):
     """SURVEY.md §7.3 Hard #2: output must not depend on parallelism."""
-    pages = pages_df(spark, N_ROWS)
-    other = extraction_plan(pages, num_partitions=3)
-    a = extracted.select("url", "extracted_text", "status")
-    assert other.select("url", "extracted_text", "status").exceptAll(a).count() == 0
+    cols = ["url", "extracted_text", "status"]
+
+    def rows(df):
+        assert df.rdd.getNumPartitions() == 3
+        return Counter(map(tuple, df.select(*cols).collect()))
+
+    want = Counter(map(tuple, extracted.select(*cols).collect()))
+    assert _plan_at(spark, 3, rows) == want
 
 
 def test_dedupe_agg_and_window_forms_agree(spark):
@@ -97,7 +128,7 @@ def test_dedupe_agg_and_window_forms_agree(spark):
     from open_ocr_spark.fixtures import pages_df
     from open_ocr_spark.pipeline.dedupe import (
         latest_per_url,
-        latest_per_url_agg as latest_per_url_window,
+        latest_per_url_agg,
     )
 
     pages = pages_df(spark, 80)
@@ -112,6 +143,6 @@ def test_dedupe_agg_and_window_forms_agree(spark):
     }
     b = {
         (r["url"], bytes(r["html"]))
-        for r in latest_per_url_window(crawl).select("url", "html").collect()
+        for r in latest_per_url_agg(crawl).select("url", "html").collect()
     }
     assert a == b and len(a) == 80

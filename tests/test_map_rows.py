@@ -1,6 +1,7 @@
 """The row-map boundary (pipeline/stages.map_rows) and the guard that keeps
-every per-row Python operator on it: the package has no mapInPandas, and
-``.mapInArrow(`` is called only by extract_stage and map_rows."""
+every per-row Python operator on it, the extraction kernel included: the
+package has no mapInPandas, and ``.mapInArrow(`` is called only by
+map_rows."""
 
 import ast
 from pathlib import Path
@@ -23,7 +24,7 @@ def test_no_map_in_pandas():
     assert [p for p, src in _sources().items() if "mapInPandas" in src] == []
 
 
-def test_map_in_arrow_only_in_the_two_boundaries():
+def test_map_in_arrow_only_in_map_rows():
     callers = []
     for path, src in _sources().items():
         for top in ast.parse(src).body:
@@ -34,12 +35,9 @@ def test_map_in_arrow_only_in_the_two_boundaries():
                     and node.func.attr == "mapInArrow"
                 ):
                     callers.append((path, getattr(top, "name", "<module>")))
-    assert sorted(callers) == [
-        ("pipeline/stages.py", "extract_stage"),
-        ("pipeline/stages.py", "map_rows"),
-    ]
+    assert callers == [("pipeline/stages.py", "map_rows")]
     text_calls = sum(src.count(".mapInArrow(") for src in _sources().values())
-    assert text_calls == len(callers)
+    assert text_calls == 1
 
 
 def test_nulls_fan_out_and_nested_types(spark):

@@ -80,10 +80,9 @@ def test_agg_has_partial_final(spark):
 
 def test_extraction_single_exchange(spark):
     """The flagship plan: exactly ONE shuffle between scan and kernel
-    (the dedupe groupBy IS the bucket-by-url-hash exchange)."""
-    from open_ocr_spark.pipeline.dedupe import latest_per_url
-    from open_ocr_spark.pipeline.ingest import ingest
-    from open_ocr_spark.pipeline.stages import extract_stage
+    (the dedupe groupBy IS the bucket-by-url-hash exchange) and ONE
+    Python map node."""
+    from open_ocr_spark.pipeline.job import extraction_plan
 
     pages = spark.read.parquet(f"{SF}/documents.parquet").selectExpr(
         "cast(doc_id as string) as url",
@@ -92,7 +91,7 @@ def test_extraction_single_exchange(spark):
         "text",
         "lang",
     )
-    plan = plan_of(extract_stage(latest_per_url(ingest(pages))))
+    plan = plan_of(extraction_plan(pages))
     # AQE wraps the plan; count Exchange nodes in the initial physical plan
     body = plan.split("== Physical Plan ==")[1]
     n_exchanges = sum(
@@ -100,7 +99,7 @@ def test_extraction_single_exchange(spark):
         and "Exchange" in line and "Reused" not in line
     )
     assert n_exchanges == 1, plan
-    assert "MapInArrow" in plan
+    assert _nodes(plan, "MapInArrow") == 1, plan
     # dedupe must be the window form: NO SortAggregate (the max_by(struct)
     # fallback costs two full sorts of materialized rows). Spark plans
     # row_number()=1 with WindowGroupLimit: a map-side top-1-per-url prune
@@ -151,42 +150,6 @@ def test_minhash_uses_hash_aggregate(spark):
     assert "HashAggregate" in plan or "ObjectHashAggregate" in plan
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed+sorted on the same key join with ZERO exchanges
-    and ZERO sorts in the join's plan — the shuffle is paid once at write
-    (the 100 TB fact-fact join layout; Iceberg bucket(N, key) transform)."""
-    from pyspark.sql import functions as F
-
-    from open_ocr_spark.pipeline.partitioning import write_bucketed
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = spark.read.parquet(f"{SF}/orders.parquet")
-        lineitem = spark.read.parquet(f"{SF}/lineitem.parquet")
-        write_bucketed(orders, "orders_b", "o_orderkey", 8)
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "lineitem_b", "o_orderkey", 8,
-        )
-        joined = (
-            spark.table("orders_b")
-            .join(spark.table("lineitem_b"), "o_orderkey")
-            .groupBy("o_orderstatus")
-            .agg(F.count("*").alias("n"))
-        )
-        plan = plan_of(joined)
-        join_part = plan.split("HashAggregate")[0]
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        # no shuffle and no sort between the scans and the join
-        assert "Exchange" not in join_part
-        n = joined.count()
-        assert n > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_aqe_skew_join_splits_at_runtime(spark):
     """The 100 TB skew story, both halves:
 
@@ -195,7 +158,7 @@ def test_aqe_skew_join_splits_at_runtime(spark):
     (b) the SAME join feeding a same-key aggregation does NOT get split —
         AQE cannot break a required hash distribution — which is exactly
         the case the engine's explicit salting (salted host metrics,
-        pipeline/partitioning.py) exists for."""
+        pipeline/metrics.py) exists for."""
     from pyspark.sql import functions as F
 
     confs = {
