@@ -1,12 +1,22 @@
-"""POSIX ustar / pax tar archive member extraction.
+"""Containers, and the one budget for everything that decompresses.
 
-Crawled corpora routinely arrive as tarballs (site dumps, dataset
-mirrors, software-docs bundles); the extraction dispatch gains a tar
-branch so "recover the text from the document" holds for archives too:
-every regular-file member routes back through the normal per-format
-dispatch and the archive's text is the member texts in archive order.
+Crawled corpora arrive as tarballs, .gz files and zips (site dumps,
+dataset mirrors, docs bundles); six format rows share the zip ``PK``
+magic (docx, odt, pptx, xlsx, epub, zip). This module decides how those
+payloads are opened and how much of them may be read:
 
-From-scratch parser over the public format (POSIX.1-1988 ustar layout,
+- gzip (the dispatch's .gz, the WARC reader's .warc.gz) and PDF
+  FlateDecode streams go through ``inflate``, the one bounded inflate;
+  a document may inflate to ``MAX_DOC_BYTES``.
+- a zip payload is opened ONCE (``_listing``); the PK sniffs test that
+  listing and every row reads members through ``ZipReader``, which
+  checks each declared size against a ``MAX_GUNZIP_BYTES`` budget per
+  payload before the member inflates.
+- tar members and zip members route back through the dispatch.
+
+Over budget is an error value of the row, never truncated output.
+
+The tar parser follows the public format (POSIX.1-1988 ustar layout,
 POSIX.1-2001 pax extensions):
 
 - 512-byte header blocks: name[100] mode[8] uid[8] gid[8] size[12]
@@ -21,12 +31,18 @@ POSIX.1-2001 pax extensions):
   skipped. Directories (``5``), links (``1``/``2``) and specials
   (``3``/``4``/``6``/``7``) carry no text and are skipped too.
 
-The writer twin is the stdlib ``tarfile`` module — the tests and the
-oracle query parse archives written by an INDEPENDENT implementation,
-so the parser can't be self-consistent with its own bugs.
+The writer twins are the stdlib ``tarfile`` and ``zipfile`` modules —
+the tests and the oracle query parse archives written by an INDEPENDENT
+implementation, so the parser can't be self-consistent with its own bugs.
 """
 
 from __future__ import annotations
+
+import functools
+import io
+import zipfile
+import zlib
+from typing import NamedTuple
 
 _BLOCK = 512
 _MAX_MEMBERS = 4096
@@ -139,7 +155,6 @@ def _pax_path(data: bytes) -> str | None:
 def build_tar(members: list[tuple[str, bytes]]) -> bytes:
     """Writer twin via the stdlib (independent implementation):
     deterministic metadata so fixtures are byte-stable."""
-    import io
     import tarfile
 
     buf = io.BytesIO()
@@ -156,40 +171,61 @@ def build_tar(members: list[tuple[str, bytes]]) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# gzip transparent encoding + generic zip archives. gzip here is the
-# STANDALONE-file form (page.html.gz, corpus.tar.gz) — the WARC layer has
-# its own member-per-record reader (sources.py) and HTTP content-coding
-# decode; this is the "a user handed the engine a .gz file" path.
+# gzip, the six zip-based rows and PDF FlateDecode: bounded decompression
 # ---------------------------------------------------------------------------
 
 GZIP_MAGIC = b"\x1f\x8b"
+ZIP_MAGIC = b"PK\x03\x04"
+
+# Per-document resource bound — the batch analog of the reference's 120 s
+# RPC timeout (ocr_rpc_client.go:13,141-146): a pathological document gets
+# an error value instead of stalling its whole task. 20 MB covers >99.99%
+# of real crawl pages. A .gz and a PDF's inflated streams count against it.
+MAX_DOC_BYTES = 20 * 1024 * 1024
 
 # Same hostile-input posture as the WARC layer: a gzip bomb in one row
-# caps out as an error value instead of eating the executor.
+# caps out as an error value instead of eating the executor. It is also
+# the declared-size budget of all the members read from one zip payload.
 MAX_GUNZIP_BYTES = 64 * 1024 * 1024
+
+
+class TooLarge(ValueError):
+    """Decompressed output over its byte budget."""
+
+
+def inflate(data: bytes, cap: int, wbits: int = zlib.MAX_WBITS
+            ) -> tuple[bytes, bytes]:
+    """Inflate ONE deflate stream (zlib framing; gzip with wbits=31) to at
+    most ``cap`` bytes. Returns (output, input left after the stream).
+    Raises TooLarge past the cap, zlib.error on corrupt data, and
+    EOFError, with zlib.decompress's message, when the stream ends
+    early."""
+    d = zlib.decompressobj(wbits=wbits)
+    out = d.decompress(data, cap + 1)
+    if len(out) > cap:
+        raise TooLarge(f"inflated output over limit: exceeds {cap} bytes")
+    if not d.eof:
+        raise EOFError("Error -5 while decompressing data: "
+                       "incomplete or truncated stream")
+    return out, d.unused_data
 
 
 def gunzip_payload(raw: bytes, cap: int = MAX_GUNZIP_BYTES) -> bytes:
     """Decompress one (possibly multi-member) gzip stream with a size
-    cap. Raises ValueError on corruption, truncation, or cap breach."""
-    import zlib
-
+    cap: Common Crawl compresses WARCs one member PER RECORD, so every
+    member is walked. Raises TooLarge past the cap, ValueError on
+    corruption or truncation."""
     out = []
-    total = 0
     data = raw
     while data[:2] == GZIP_MAGIC:
-        d = zlib.decompressobj(wbits=31)
         try:
-            chunk = d.decompress(data, cap - total + 1)
+            chunk, data = inflate(data, cap, wbits=31)
         except zlib.error as exc:
             raise ValueError(f"bad gzip stream: {exc}") from exc
-        total += len(chunk)
-        if total > cap:
-            raise ValueError(f"gunzip output exceeds {cap} bytes")
-        if not d.eof:
-            raise ValueError("truncated gzip stream")
+        except EOFError:
+            raise ValueError("truncated gzip stream") from None
+        cap -= len(chunk)
         out.append(chunk)
-        data = d.unused_data
     if not out:
         raise ValueError("not a gzip stream")
     if data:
@@ -197,44 +233,107 @@ def gunzip_payload(raw: bytes, cap: int = MAX_GUNZIP_BYTES) -> bytes:
     return b"".join(out)
 
 
+# zipfile's faults: corrupt directory, data or CRC; a missing member
+_BAD_ZIP = (zipfile.BadZipFile, KeyError, OSError)
+
+
+def _member(zf: zipfile.ZipFile, info: zipfile.ZipInfo, left: int) -> bytes:
+    """The one bounded member read: the declared size must fit ``left``
+    BEFORE anything inflates, and zipfile never inflates past a declared
+    size (a member that lies about it fails its CRC check)."""
+    if info.file_size > left:
+        raise TooLarge(f"declared size exceeds {MAX_GUNZIP_BYTES} bytes")
+    return zf.read(info)
+
+
+class _Listing(NamedTuple):
+    zf: zipfile.ZipFile | None
+    error: Exception | None  # why the payload did not open as a zip
+    names: list[str]
+    mimetype: bytes  # the ODF/EPUB mimetype member; b"" if absent/unreadable
+
+
+@functools.lru_cache(maxsize=1)
+def _listing(payload: bytes) -> _Listing:
+    """Open a zip payload ONCE: every PK sniff and then the chosen row get
+    the same bytes object, an identity hit on this one-entry cache."""
+    try:
+        zf = zipfile.ZipFile(io.BytesIO(payload))
+    except Exception as exc:  # the sniffs say no; the rows re-raise it
+        return _Listing(None, exc, [], b"")
+    names = zf.namelist()
+    mimetype = b""
+    if "mimetype" in names:
+        try:
+            mimetype = _member(zf, zf.getinfo("mimetype"), MAX_GUNZIP_BYTES)
+        except Exception:
+            pass
+    return _Listing(zf, None, names, mimetype)
+
+
+def zip_listing(payload: bytes) -> _Listing:
+    """The zip directory the PK sniffs test: names and the mimetype
+    member; empty without the PK magic or when the payload won't open."""
+    if payload[:4] != ZIP_MAGIC:
+        return _Listing(None, None, [], b"")
+    return _listing(bytes(payload))
+
+
+class ZipReader:
+    """Member reads from one zip payload under one budget: the declared
+    sizes of everything read stay within MAX_GUNZIP_BYTES (read at
+    construction). A fault raises ValueError(bad.format(part=, exc=)),
+    part being "container" (the payload did not open) or "member"."""
+
+    def __init__(self, payload: bytes, bad: str):
+        self.zf, error, self.names, _ = _listing(bytes(payload))
+        self._bad, self._left = bad, MAX_GUNZIP_BYTES
+        if isinstance(error, _BAD_ZIP):
+            raise self.fault(error, part="container") from error
+        if error is not None:
+            raise error
+
+    def fault(self, exc: object, part: str = "member") -> ValueError:
+        """The row's error for ``exc``; a part the row finds missing is
+        passed as KeyError(what), worded like zipfile's own."""
+        return ValueError(self._bad.format(part=part, exc=exc))
+
+    def read(self, member: str | zipfile.ZipInfo) -> bytes:
+        try:
+            info = (self.zf.getinfo(member) if isinstance(member, str)
+                    else member)
+            data = _member(self.zf, info, self._left)
+        except (TooLarge, *_BAD_ZIP) as exc:
+            raise self.fault(exc) from exc
+        self._left -= len(data)
+        return data
+
+
 def split_zip(raw: bytes) -> list[tuple[str, bytes]]:
     """Generic zip archive → (member name, bytes) pairs for regular
-    files, central-directory order; directories skipped. Bomb guard:
-    declared total uncompressed size is checked BEFORE any inflate."""
-    import io
-    import zipfile
-
+    files, central-directory order; directories skipped. Bomb guard: at
+    most _MAX_MEMBERS members, read under the ZipReader budget."""
+    zr = ZipReader(raw, "bad zip {part}: {exc}")
+    infos = [i for i in zr.zf.infolist() if not i.is_dir()]
+    if len(infos) > _MAX_MEMBERS:
+        raise ValueError(f"zip member count exceeds {_MAX_MEMBERS}")
     try:
-        zf = zipfile.ZipFile(io.BytesIO(raw))
-    except (zipfile.BadZipFile, OSError) as exc:
-        raise ValueError(f"bad zip container: {exc}") from exc
-    with zf:
-        infos = [i for i in zf.infolist() if not i.is_dir()]
-        if len(infos) > _MAX_MEMBERS:
-            raise ValueError(f"zip member count exceeds {_MAX_MEMBERS}")
-        if sum(i.file_size for i in infos) > MAX_GUNZIP_BYTES:
-            raise ValueError(
-                f"zip declared size exceeds {MAX_GUNZIP_BYTES} bytes"
-            )
-        try:
-            return [(i.filename, zf.read(i)) for i in infos]
-        except (zipfile.BadZipFile, OSError, NotImplementedError,
-                RuntimeError) as exc:
-            # RuntimeError is zipfile's encrypted-member signal — a real
-            # crawl payload class, and it must classify as
-            # error:zip-unsupported, not error:internal
-            raise ValueError(f"bad zip member: {exc}") from exc
+        return [(i.filename, zr.read(i)) for i in infos]
+    except (NotImplementedError, RuntimeError) as exc:
+        # RuntimeError is zipfile's encrypted-member signal — a real
+        # crawl payload class, and it must classify as
+        # error:zip-unsupported, not error:internal
+        raise ValueError(f"bad zip member: {exc}") from exc
 
 
 def build_zip(members: list[tuple[str, bytes]]) -> bytes:
-    """Writer twin: deterministic (fixed timestamps, deflate)."""
-    import io
-    import zipfile
-
+    """Writer twin: deterministic (fixed timestamps, deflate). A member
+    named ``mimetype`` is STORED, as ODF and EPUB require of theirs."""
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as zf:
         for name, data in members:
             info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-            info.compress_type = zipfile.ZIP_DEFLATED
+            info.compress_type = (zipfile.ZIP_STORED if name == "mimetype"
+                                  else zipfile.ZIP_DEFLATED)
             zf.writestr(info, data)
     return buf.getvalue()

@@ -42,6 +42,10 @@ from functools import partial
 from typing import Callable, NamedTuple
 
 from open_ocr_spark.kernels.archive import (
+    GZIP_MAGIC,
+    MAX_DOC_BYTES,
+    ZIP_MAGIC,
+    TooLarge,
     gunzip_payload,
     is_tar,
     split_tar,
@@ -95,13 +99,6 @@ from open_ocr_spark.kernels.subtitle_text import (
 
 STATUS_OK = "ok"
 
-# Per-document resource bound — the batch analog of the reference's 120 s
-# RPC timeout (ocr_rpc_client.go:13,141-146): a pathological document gets
-# an error value instead of stalling its whole task. 20 MB covers >99.99%
-# of real crawl pages.
-MAX_DOC_BYTES = 20 * 1024 * 1024
-
-_GZIP_MAGIC = b"\x1f\x8b"
 _PPM_HEADER = re.compile(rb"P6\s+\d+\s+\d+\s+255\s")
 
 
@@ -226,7 +223,7 @@ FORMATS: tuple[Format, ...] = (
     Format("pptx", is_pptx, _plain(extract_pptx_text), True),
     Format("xlsx", is_xlsx, _plain(extract_xlsx_text), True),
     Format("epub", is_epub, _plain(extract_epub_text), True),
-    Format("zip", lambda p: p[:4] == b"PK\x03\x04",
+    Format("zip", lambda p: p[:4] == ZIP_MAGIC,
            partial(_archive_text, split_zip), True),
     Format("tar", lambda p: len(p) >= 512 and p[257:262] == b"ustar",
            _tar_text, True),
@@ -249,7 +246,7 @@ def routes_by_magic(data: bytes) -> bool:
     """True iff the bytes are gzip or match a magic-byte row of FORMATS —
     the only attachments the mail fallback hands to the dispatch, so
     arbitrary binary never reaches the HTML branch."""
-    return data[:2] == _GZIP_MAGIC or any(
+    return data[:2] == GZIP_MAGIC or any(
         f.sniff(data) for f in FORMATS if f.magic
     )
 
@@ -343,7 +340,7 @@ def extract_document(
         aggressive = swt_aggressive(preprocessor_args)
         payload = bytes(html)
 
-        if payload[:2] == _GZIP_MAGIC:
+        if payload[:2] == GZIP_MAGIC:
             # standalone gzip file (page.html.gz, corpus.tar.gz): a
             # transparent encoding, not a format — decompress and route
             # whatever is inside (r5, kernels/archive.py). The cap is
@@ -351,13 +348,13 @@ def extract_document(
             # get: a .gz must not smuggle a document past the budget.
             try:
                 payload = gunzip_payload(payload, cap=MAX_DOC_BYTES)
+            except TooLarge:
+                return (
+                    "",
+                    "error:too-large",
+                    f"gunzipped payload exceeds {MAX_DOC_BYTES}",
+                )
             except ValueError as exc:
-                if "exceeds" in str(exc):
-                    return (
-                        "",
-                        "error:too-large",
-                        f"gunzipped payload exceeds {MAX_DOC_BYTES}",
-                    )
                 return "", "error:gzip-unsupported", str(exc)
 
         hop = _Hop(_depth, (lang, engine, engine_args, preprocessors,

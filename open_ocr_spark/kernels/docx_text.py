@@ -1,5 +1,6 @@
-"""DOCX text extraction: OOXML WordprocessingML (ECMA-376) through the
-stdlib zip reader.
+"""Text of the zip-packaged document formats: DOCX (OOXML
+WordprocessingML, ECMA-376), and below it the ODT, PPTX, XLSX and EPUB
+siblings.
 
 Extends the document-conversion branch of the extraction kernel the
 same way the PDF branch does (kernels/pdf_text.py; reference parity:
@@ -8,9 +9,16 @@ before OCR, /root/reference/ocr_request.go:21-31) — web crawls meet
 .docx constantly and a corpus engine must read them without shelling
 out to an office suite.
 
-Scope (the text layer of ECMA-376 Part 1 §17):
-- container: ZIP with ``word/document.xml`` (detection checks the
-  member, not just the PK magic — every OOXML/ODF/JAR shares that);
+Containers: this module never opens a zip itself. kernels/archive.py
+opens each payload once; the ``is_*`` sniffs are predicates over that
+one listing (member names, and the ``mimetype`` member ODF and EPUB
+put first — detection checks the members, not just the PK magic every
+OOXML/ODF/JAR shares), and every extractor reads its members through
+``archive.ZipReader``, under the declared-size budget that bounds all
+six zip rows. A fault or an over-budget member is a ValueError,
+``<row>: bad container (<cause>)``.
+
+DOCX scope (the text layer of ECMA-376 Part 1 §17):
 - paragraphs ``<w:p>`` → blank-line-separated blocks, matching the
   HTML branch's paragraph convention;
 - runs ``<w:t>`` (with or without attributes) concatenated in order;
@@ -20,16 +28,16 @@ Scope (the text layer of ECMA-376 Part 1 §17):
 - everything else (tables, headers, drawings, comments) contributes
   nothing — the body text is the training-data payload.
 
-The writer twin builds the minimal valid package (fixed 1980-01-01
+The writer twins build the minimal valid packages (fixed 1980-01-01
 timestamps: byte-reproducible output) so fixtures and property tests
 can roundtrip real containers, mirroring the WARC/AVI/webm twins.
 """
 
 from __future__ import annotations
 
-import io
 import re
-import zipfile
+
+from open_ocr_spark.kernels.archive import ZipReader, build_zip, zip_listing
 
 _PARA = re.compile(rb"<w:p[ >].*?</w:p>|<w:p/>", re.S)
 _TOKEN = re.compile(
@@ -42,13 +50,7 @@ _CHARREF = re.compile(r"&#(x[0-9a-fA-F]+|[0-9]+);")
 def is_docx(payload: bytes) -> bool:
     """True iff the payload is a ZIP container carrying a
     WordprocessingML main document part."""
-    if len(payload) < 4 or payload[:4] != b"PK\x03\x04":
-        return False
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            return "word/document.xml" in zf.namelist()
-    except Exception:
-        return False
+    return "word/document.xml" in zip_listing(payload).names
 
 
 def _unescape(s: str) -> str:
@@ -68,11 +70,8 @@ def extract_docx_text(payload: bytes) -> str:
     """Plain text of the main document part: paragraphs separated by
     blank lines, runs concatenated, tabs/breaks literal.  Raises
     ValueError for a corrupt container or missing document part."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            xml = zf.read("word/document.xml")
-    except (zipfile.BadZipFile, KeyError, OSError) as exc:
-        raise ValueError(f"docx: bad container ({exc})") from exc
+    xml = ZipReader(payload, "docx: bad container ({exc})").read(
+        "word/document.xml")
     paras = []
     for pm in _PARA.finditer(xml):
         parts = []
@@ -125,16 +124,8 @@ def build_docx(paragraphs: list[str]) -> bytes:
         + "".join(body)
         + "</w:body></w:document>"
     ).encode("utf-8")
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        for name, data in (
-            ("[Content_Types].xml", _CONTENT_TYPES),
-            ("word/document.xml", doc),
-        ):
-            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-            info.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(info, data)
-    return buf.getvalue()
+    return build_zip([("[Content_Types].xml", _CONTENT_TYPES),
+                      ("word/document.xml", doc)])
 
 
 # --- OpenDocument Text (ODT) sibling ------------------------------------------
@@ -158,18 +149,11 @@ def is_odt(payload: bytes) -> bool:
     """True iff the payload is a ZIP container whose mimetype member
     declares OpenDocument Text (or carries content.xml with an ODF
     body when the mimetype member is absent)."""
-    if len(payload) < 4 or payload[:4] != b"PK\x03\x04":
-        return False
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            names = set(zf.namelist())
-            if "mimetype" in names:
-                return zf.read("mimetype").startswith(
-                    b"application/vnd.oasis.opendocument.text"
-                )
-            return "content.xml" in names
-    except Exception:
-        return False
+    z = zip_listing(payload)
+    if "mimetype" in z.names:
+        return z.mimetype.startswith(
+            b"application/vnd.oasis.opendocument.text")
+    return "content.xml" in z.names
 
 
 def extract_odt_text(payload: bytes) -> str:
@@ -177,11 +161,7 @@ def extract_odt_text(payload: bytes) -> str:
     blocks, tabs/line-breaks literal, text:s expanded to spaces, every
     other tag transparent (spans contribute their text).  Raises
     ValueError for a corrupt container or missing content part."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            xml = zf.read("content.xml")
-    except (zipfile.BadZipFile, KeyError, OSError) as exc:
-        raise ValueError(f"odt: bad container ({exc})") from exc
+    xml = ZipReader(payload, "odt: bad container ({exc})").read("content.xml")
     paras = []
     for pm in _ODT_PARA.finditer(xml):
         body = pm.group(0)
@@ -225,16 +205,8 @@ def build_odt(paragraphs: list[str]) -> bytes:
         + "".join(body)
         + "</office:text></office:body></office:document-content>"
     ).encode("utf-8")
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        info = zipfile.ZipInfo("mimetype", date_time=(1980, 1, 1, 0, 0, 0))
-        info.compress_type = zipfile.ZIP_STORED
-        zf.writestr(info, b"application/vnd.oasis.opendocument.text")
-        info = zipfile.ZipInfo("content.xml",
-                               date_time=(1980, 1, 1, 0, 0, 0))
-        info.compress_type = zipfile.ZIP_DEFLATED
-        zf.writestr(info, doc)
-    return buf.getvalue()
+    return build_zip([("mimetype", b"application/vnd.oasis.opendocument.text"),
+                      ("content.xml", doc)])
 
 
 # --- PresentationML (PPTX) sibling ---------------------------------------------
@@ -250,13 +222,7 @@ _A_TOKEN = re.compile(rb"<a:t(?:\s[^>]*)?>(.*?)</a:t>|<a:br\s*/>", re.S)
 def is_pptx(payload: bytes) -> bool:
     """True iff the payload is a ZIP container carrying at least one
     PresentationML slide part."""
-    if len(payload) < 4 or payload[:4] != b"PK\x03\x04":
-        return False
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            return any(_SLIDE_NAME.match(n) for n in zf.namelist())
-    except Exception:
-        return False
+    return any(_SLIDE_NAME.match(n) for n in zip_listing(payload).names)
 
 
 def extract_pptx_text(payload: bytes) -> str:
@@ -265,18 +231,13 @@ def extract_pptx_text(payload: bytes) -> str:
     blank-line blocks, a:br as newline, slides themselves blank-line
     separated.  Raises ValueError for a corrupt container or a deck
     with no slide parts."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            slides = sorted(
-                (int(m.group(1)), n)
-                for n in zf.namelist()
-                if (m := _SLIDE_NAME.match(n))
-            )
-            if not slides:
-                raise KeyError("no slide parts")
-            xmls = [zf.read(n) for _, n in slides]
-    except (zipfile.BadZipFile, KeyError, OSError) as exc:
-        raise ValueError(f"pptx: bad container ({exc})") from exc
+    zr = ZipReader(payload, "pptx: bad container ({exc})")
+    slides = sorted(
+        (int(m.group(1)), n) for n in zr.names if (m := _SLIDE_NAME.match(n))
+    )
+    if not slides:
+        raise zr.fault(KeyError("no slide parts"))
+    xmls = [zr.read(n) for _, n in slides]
     blocks = []
     for xml in xmls:
         for pm in _A_PARA.finditer(xml):
@@ -297,43 +258,33 @@ def build_pptx(slides: list[list[str]]) -> bytes:
     slide, fixed 1980-01-01 timestamps) whose extract_pptx_text output
     is exactly '\\n\\n'.join all paragraphs across slides in order
     (newlines inside a paragraph become a:br runs)."""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        info = zipfile.ZipInfo(
-            "[Content_Types].xml", date_time=(1980, 1, 1, 0, 0, 0)
-        )
-        info.compress_type = zipfile.ZIP_DEFLATED
-        zf.writestr(
-            info,
-            b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-            b'<Types xmlns="http://schemas.openxmlformats.org/package/'
-            b'2006/content-types"><Default Extension="xml" ContentType='
-            b'"application/vnd.openxmlformats-officedocument.'
-            b'presentationml.slide+xml"/></Types>',
-        )
-        for n, paras in enumerate(slides, start=1):
-            body = []
-            for p in paras:
-                runs = []
-                for piece in re.split(r"(\n)", p):
-                    if piece == "\n":
-                        runs.append("<a:br/>")
-                    elif piece:
-                        runs.append(f"<a:r><a:t>{_escape(piece)}</a:t></a:r>")
-                body.append("<a:p >" + "".join(runs) + "</a:p>")
-            xml = (
-                '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                '<p:sld xmlns:p="http://schemas.openxmlformats.org/'
-                'presentationml/2006/main" xmlns:a="http://schemas.'
-                'openxmlformats.org/drawingml/2006/main"><p:cSld>'
-                '<p:spTree>' + "".join(body) + "</p:spTree></p:cSld></p:sld>"
-            ).encode("utf-8")
-            info = zipfile.ZipInfo(
-                f"ppt/slides/slide{n}.xml", date_time=(1980, 1, 1, 0, 0, 0)
-            )
-            info.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(info, xml)
-    return buf.getvalue()
+    members = [(
+        "[Content_Types].xml",
+        b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+        b'<Types xmlns="http://schemas.openxmlformats.org/package/'
+        b'2006/content-types"><Default Extension="xml" ContentType='
+        b'"application/vnd.openxmlformats-officedocument.'
+        b'presentationml.slide+xml"/></Types>',
+    )]
+    for n, paras in enumerate(slides, start=1):
+        body = []
+        for p in paras:
+            runs = []
+            for piece in re.split(r"(\n)", p):
+                if piece == "\n":
+                    runs.append("<a:br/>")
+                elif piece:
+                    runs.append(f"<a:r><a:t>{_escape(piece)}</a:t></a:r>")
+            body.append("<a:p >" + "".join(runs) + "</a:p>")
+        xml = (
+            '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+            '<p:sld xmlns:p="http://schemas.openxmlformats.org/'
+            'presentationml/2006/main" xmlns:a="http://schemas.'
+            'openxmlformats.org/drawingml/2006/main"><p:cSld>'
+            '<p:spTree>' + "".join(body) + "</p:spTree></p:cSld></p:sld>"
+        ).encode("utf-8")
+        members.append((f"ppt/slides/slide{n}.xml", xml))
+    return build_zip(members)
 
 
 # --- SpreadsheetML (XLSX) sibling ----------------------------------------------
@@ -361,13 +312,7 @@ _CELL_T = re.compile(rb't="([^"]+)"')
 def is_xlsx(payload: bytes) -> bool:
     """True iff the payload is a ZIP container carrying a SpreadsheetML
     workbook part."""
-    if len(payload) < 4 or payload[:4] != b"PK\x03\x04":
-        return False
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            return "xl/workbook.xml" in zf.namelist()
-    except Exception:
-        return False
+    return "xl/workbook.xml" in zip_listing(payload).names
 
 
 def _txt(raw: bytes) -> str:
@@ -380,26 +325,17 @@ def extract_xlsx_text(payload: bytes) -> str:
     kept as their raw lexical form — no float reformatting), cells
     tab-joined, rows newline-joined, sheets blank-line-joined.  Raises
     ValueError for a corrupt container or a workbook with no sheets."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            names = zf.namelist()
-            sheets = sorted(
-                (int(m.group(1)), n)
-                for n in names
-                if (m := _SHEET_NAME.match(n))
-            )
-            if not sheets:
-                raise KeyError("no worksheet parts")
-            shared = []
-            if "xl/sharedStrings.xml" in names:
-                for sm in _SI.finditer(zf.read("xl/sharedStrings.xml")):
-                    shared.append(
-                        "".join(_txt(t.group(1))
-                                for t in _T.finditer(sm.group(1)))
-                    )
-            xmls = [zf.read(n) for _, n in sheets]
-    except (zipfile.BadZipFile, KeyError, OSError) as exc:
-        raise ValueError(f"xlsx: bad container ({exc})") from exc
+    zr = ZipReader(payload, "xlsx: bad container ({exc})")
+    sheets = sorted(
+        (int(m.group(1)), n) for n in zr.names if (m := _SHEET_NAME.match(n))
+    )
+    if not sheets:
+        raise zr.fault(KeyError("no worksheet parts"))
+    sst = (zr.read("xl/sharedStrings.xml")
+           if "xl/sharedStrings.xml" in zr.names else b"")
+    shared = ["".join(_txt(t.group(1)) for t in _T.finditer(sm.group(1)))
+              for sm in _SI.finditer(sst)]
+    xmls = [zr.read(n) for _, n in sheets]
 
     blocks = []
     for xml in xmls:
@@ -485,28 +421,21 @@ def build_xlsx(sheets: list[list[list[str]]]) -> bytes:
         )
         + "</sheets></workbook>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        members = [
-            (
-                "[Content_Types].xml",
-                b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-                b'<Types xmlns="http://schemas.openxmlformats.org/package'
-                b'/2006/content-types"><Default Extension="xml" '
-                b'ContentType="application/vnd.openxmlformats-'
-                b'officedocument.spreadsheetml.sheet.main+xml"/></Types>',
-            ),
-            ("xl/workbook.xml", workbook.encode("utf-8")),
-            ("xl/sharedStrings.xml", sst.encode("utf-8")),
-        ] + [
-            (f"xl/worksheets/sheet{n}.xml", xml.encode("utf-8"))
-            for n, xml in enumerate(sheet_xmls, start=1)
-        ]
-        for name, data in members:
-            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-            info.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(info, data)
-    return buf.getvalue()
+    return build_zip([
+        (
+            "[Content_Types].xml",
+            b'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+            b'<Types xmlns="http://schemas.openxmlformats.org/package'
+            b'/2006/content-types"><Default Extension="xml" '
+            b'ContentType="application/vnd.openxmlformats-'
+            b'officedocument.spreadsheetml.sheet.main+xml"/></Types>',
+        ),
+        ("xl/workbook.xml", workbook.encode("utf-8")),
+        ("xl/sharedStrings.xml", sst.encode("utf-8")),
+    ] + [
+        (f"xl/worksheets/sheet{n}.xml", xml.encode("utf-8"))
+        for n, xml in enumerate(sheet_xmls, start=1)
+    ])
 
 
 # --- EPUB sibling ----------------------------------------------------------------
@@ -528,16 +457,10 @@ def is_epub(payload: bytes) -> bool:
     """True iff the payload is an OCF container (EPUB): mimetype member
     declaring application/epub+zip, or META-INF/container.xml when the
     (technically mandatory) mimetype member is absent."""
-    if len(payload) < 4 or payload[:4] != b"PK\x03\x04":
-        return False
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            names = set(zf.namelist())
-            if "mimetype" in names:
-                return zf.read("mimetype").startswith(b"application/epub+zip")
-            return "META-INF/container.xml" in names
-    except Exception:
-        return False
+    z = zip_listing(payload)
+    if "mimetype" in z.names:
+        return z.mimetype.startswith(b"application/epub+zip")
+    return "META-INF/container.xml" in z.names
 
 
 def extract_epub_text(payload: bytes) -> str:
@@ -551,39 +474,35 @@ def extract_epub_text(payload: bytes) -> str:
 
     from open_ocr_spark.kernels.html_extract import extract_main_text
 
-    try:
-        with zipfile.ZipFile(io.BytesIO(bytes(payload))) as zf:
-            container = zf.read("META-INF/container.xml")
-            rm = _ROOTFILE.search(container)
-            if not rm:
-                raise KeyError("container.xml has no rootfile")
-            opf_path = rm.group(1).decode("utf-8", "replace")
-            opf = zf.read(opf_path)
-            base = posixpath.dirname(opf_path)
-            manifest = {}
-            for im in _ITEM.finditer(opf):
-                idm = _ATTR_ID.search(im.group(0))
-                hm = _ATTR_HREF.search(im.group(0))
-                if idm and hm:
-                    manifest[idm.group(1)] = _unescape(
-                        hm.group(1).decode("utf-8", "replace")
-                    )
-            chapters = []
-            for rm2 in _ITEMREF.finditer(opf):
-                idm = _ATTR_IDREF.search(rm2.group(0))
-                if not idm:
-                    continue
-                href = manifest.get(idm.group(1))
-                if href is None:
-                    raise KeyError(
-                        f"spine idref {idm.group(1)!r} not in manifest"
-                    )
-                member = posixpath.normpath(posixpath.join(base, href))
-                chapters.append(zf.read(member))
-            if not chapters:
-                raise KeyError("empty spine")
-    except (zipfile.BadZipFile, KeyError, OSError) as exc:
-        raise ValueError(f"epub: bad container ({exc})") from exc
+    zr = ZipReader(payload, "epub: bad container ({exc})")
+    rm = _ROOTFILE.search(zr.read("META-INF/container.xml"))
+    if not rm:
+        raise zr.fault(KeyError("container.xml has no rootfile"))
+    opf_path = rm.group(1).decode("utf-8", "replace")
+    opf = zr.read(opf_path)
+    base = posixpath.dirname(opf_path)
+    manifest = {}
+    for im in _ITEM.finditer(opf):
+        idm = _ATTR_ID.search(im.group(0))
+        hm = _ATTR_HREF.search(im.group(0))
+        if idm and hm:
+            manifest[idm.group(1)] = _unescape(
+                hm.group(1).decode("utf-8", "replace")
+            )
+    chapters = []
+    for rm2 in _ITEMREF.finditer(opf):
+        idm = _ATTR_IDREF.search(rm2.group(0))
+        if not idm:
+            continue
+        href = manifest.get(idm.group(1))
+        if href is None:
+            raise zr.fault(
+                KeyError(f"spine idref {idm.group(1)!r} not in manifest"))
+        chapters.append(
+            zr.read(posixpath.normpath(posixpath.join(base, href)))
+        )
+    if not chapters:
+        raise zr.fault(KeyError("empty spine"))
     return "\n\n".join(extract_main_text(ch) for ch in chapters)
 
 
@@ -615,20 +534,11 @@ def build_epub(chapters: list[bytes]) -> bytes:
         b'media-type="application/oebps-package+xml"/>'
         b"</rootfiles></container>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        info = zipfile.ZipInfo("mimetype", date_time=(1980, 1, 1, 0, 0, 0))
-        info.compress_type = zipfile.ZIP_STORED
-        zf.writestr(info, b"application/epub+zip")
-        members = [
-            ("META-INF/container.xml", container),
-            ("OEBPS/content.opf", opf),
-        ] + [
-            (f"OEBPS/text/ch{i}.xhtml", ch)
-            for i, ch in enumerate(chapters, start=1)
-        ]
-        for name, data in members:
-            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-            info.compress_type = zipfile.ZIP_DEFLATED
-            zf.writestr(info, data)
-    return buf.getvalue()
+    return build_zip([
+        ("mimetype", b"application/epub+zip"),
+        ("META-INF/container.xml", container),
+        ("OEBPS/content.opf", opf),
+    ] + [
+        (f"OEBPS/text/ch{i}.xhtml", ch)
+        for i, ch in enumerate(chapters, start=1)
+    ])

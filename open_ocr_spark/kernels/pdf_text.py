@@ -27,6 +27,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from open_ocr_spark.kernels import archive
+
 PDF_MAGIC = b"%PDF"
 
 # Literal string: body of ( ... ) with backslash escapes; nested unescaped
@@ -101,10 +103,14 @@ def is_pdf(raw: bytes | None) -> bool:
 # surfaces a Ghostscript failure.
 
 
-def _flate(body: bytes) -> bytes:
+def _flate(body: bytes, cap: int) -> bytes:
+    """FlateDecode through the one bounded inflate (kernels/archive.py):
+    at most ``cap`` bytes, what is left of the document's budget."""
     try:
-        return zlib.decompress(body)
-    except zlib.error as exc:
+        return archive.inflate(body, cap)[0]
+    except archive.TooLarge:
+        raise ValueError("pdf-unsupported:flate-too-large") from None
+    except (zlib.error, EOFError) as exc:
         raise ValueError(f"pdf-unsupported:corrupt-flate: ({exc})") from exc
 
 
@@ -478,9 +484,13 @@ def _inflate_streams(raw: bytes) -> bytes:
     (it would otherwise swallow the next REAL stream via the non-greedy
     endstream fallback). A fallback span that itself contains another
     stream start is refused as unsupported for the same reason.
+
+    FlateDecode output across all streams is capped at MAX_DOC_BYTES, the
+    budget a .gz gets: a small PDF must not inflate past the document bound.
     """
     out = []
     pos = 0
+    left = archive.MAX_DOC_BYTES
     for m in _STREAM_START_RE.finditer(raw):
         if m.start() < pos:
             continue  # keyword bytes inside an already-consumed body
@@ -541,7 +551,11 @@ def _inflate_streams(raw: bytes) -> bytes:
                 pretty = b",".join(names).decode("ascii", errors="replace")
                 raise ValueError(f"pdf-unsupported:filter-{pretty}")
             for name in names:  # filter chains apply in declaration order
-                body = _FILTERS[name](body)
+                if _FILTERS[name] is _flate:
+                    body = _flate(body, left)
+                    left -= len(body)
+                else:
+                    body = _FILTERS[name](body)
             body = _unpredict(body, head)
         out.append(raw[pos : m.start()])
         out.append(b"stream\n")
@@ -647,7 +661,7 @@ def extract_pdf_text(raw: bytes) -> str:
 
     Handles ``Tj``/``'``/``\"`` single strings and ``TJ`` arrays (elements
     concatenated, kerning numbers dropped), literal and hex strings.
-    FlateDecode streams are inflated in-process (stdlib zlib); other
+    FlateDecode streams are inflated in-process (stdlib zlib, bounded); other
     declared filters raise ValueError, which the caller maps to an error
     status column (error-as-value, /root/reference/ocr_rpc_worker.go:163-190).
     """

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_ocr_spark.kernels.archive import gunzip_payload
+
 # the OcrRequest JSON schema, keys as in ocr_request.go:6-17
 REQUEST_JSON_SCHEMA = (
     "img_url string, img_base64 string, engine string, "
@@ -242,32 +244,6 @@ WARC_RECORD_FIELDS = (
 )
 
 
-def _gunzip_members(data: bytes, limit: int) -> bytes:
-    """Concatenated decompression of a multi-member gzip stream (Common
-    Crawl compresses WARCs one member PER RECORD so readers can split
-    files without decompressing; a plain reader must walk every member).
-    Raises ValueError on corruption or when output exceeds ``limit``."""
-    import zlib
-
-    out = []
-    total = 0
-    rest = bytes(data)
-    while rest:
-        d = zlib.decompressobj(wbits=31)
-        try:
-            chunk = d.decompress(rest, limit - total + 1)
-        except zlib.error as exc:
-            raise ValueError(f"bad gzip member: {exc}") from exc
-        total += len(chunk)
-        if total > limit:
-            raise ValueError("decompressed size over limit")
-        out.append(chunk)
-        if not d.eof:
-            raise ValueError("truncated gzip member")
-        rest = d.unused_data
-    return b"".join(out)
-
-
 def parse_warc_bytes(
     data: bytes, limit: int = WARC_MAX_DECOMPRESSED
 ) -> list[dict]:
@@ -296,7 +272,7 @@ def parse_warc_bytes(
     raw = bytes(data or b"")
     if raw[:2] == b"\x1f\x8b":
         try:
-            raw = _gunzip_members(raw, limit)
+            raw = gunzip_payload(raw, cap=limit)
         except ValueError as exc:
             return err(f"gzip: {exc}")
     pos = 0

@@ -124,3 +124,112 @@ def test_failing_member_fails_the_archive(build, name):
 def test_unknown_payload_falls_through_to_html():
     assert _row_of(b"<p>plain page</p>") == "html"
     assert extract_document(b"<p>plain page</p>")[:2] == ("plain page", "ok")
+
+
+# ---------------------------------------------------------------------------
+# The zip rows share one container layer (kernels/archive.py): one open per
+# payload, every member read under the declared-size budget.
+# ---------------------------------------------------------------------------
+
+BIG = "y" * 5000  # a text member well past the shrunken budget below
+
+PK_TWINS = {
+    "docx": lambda text: build_docx([text]),
+    "odt": lambda text: build_odt([text]),
+    "pptx": lambda text: build_pptx([[text]]),
+    "xlsx": lambda text: build_xlsx([[[text]]]),
+    "epub": lambda text: build_epub([f"<p>{text}</p>".encode()]),
+    "zip": lambda text: build_zip([("a.txt", text.encode())]),
+}
+
+
+@pytest.mark.parametrize("name", list(PK_TWINS))
+def test_pk_row_refuses_a_member_over_the_budget(name, monkeypatch):
+    from open_ocr_spark.kernels import archive
+
+    monkeypatch.setattr(archive, "MAX_GUNZIP_BYTES", 4096)
+    small = PK_TWINS[name]("Fits.")
+    assert _row_of(small) == name
+    assert extract_document(small)[:2] == ("Fits.", "ok")
+
+    bomb = PK_TWINS[name](BIG)
+    assert len(bomb) < 4096  # small on the wire, past the budget inflated
+    assert _row_of(bomb) == name
+    text, status, err = extract_document(bomb)
+    assert (text, status) == ("", f"error:{name}-unsupported"), err
+    assert "declared size exceeds 4096 bytes" in err
+
+
+@pytest.fixture
+def zip_opens(monkeypatch):
+    """Counts read-mode zipfile.ZipFile constructions."""
+    from open_ocr_spark.kernels import archive
+
+    opens = []
+
+    class Counting(zipfile.ZipFile):
+        def __init__(self, file, mode="r", *args, **kwargs):
+            if mode == "r":
+                opens.append(file)
+            super().__init__(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(zipfile, "ZipFile", Counting)
+    archive._listing.cache_clear()
+    yield opens
+    archive._listing.cache_clear()
+
+
+@pytest.mark.parametrize("name", list(PK_TWINS))
+def test_pk_payload_opens_once_per_document(name, zip_opens):
+    payload = PK_TWINS[name]("Opened once.")
+    zip_opens.clear()
+    assert extract_document(payload) == ("Opened once.", "ok", "")
+    assert len(zip_opens) == 1
+
+
+def test_mail_gate_and_attachment_dispatch_share_the_open(zip_opens):
+    import base64
+
+    b64 = base64.b64encode(build_docx(["Attached body."])).decode()
+    raw = (
+        "From: a@b\r\nSubject: With attachment\r\nMIME-Version: 1.0\r\n"
+        'Content-Type: multipart/mixed; boundary="BB"\r\n\r\n'
+        "--BB\r\nContent-Type: application/octet-stream\r\n"
+        "Content-Transfer-Encoding: base64\r\n\r\n"
+        f"{b64}\r\n--BB--\r\n"
+    ).encode()
+    zip_opens.clear()
+    assert extract_document(raw) == (
+        "With attachment\n\nAttached body.\n", "ok", "")
+    assert len(zip_opens) == 1
+
+
+def test_only_archive_opens_zips_or_inflates():
+    """Every read-mode zipfile.ZipFile, zlib.decompress and
+    zlib.decompressobj call in the kernels is in archive.py, so a new
+    branch cannot add an unbounded path; writer twins (mode "w") are
+    exempt."""
+    import ast
+    from pathlib import Path
+
+    kernels = (Path(__file__).resolve().parent.parent
+               / "open_ocr_spark" / "kernels")
+    calls = set()
+    for path in sorted(kernels.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and isinstance(node.func.value, ast.Name)):
+                continue
+            call = f"{node.func.value.id}.{node.func.attr}"
+            if call == "zipfile.ZipFile":
+                mode = (node.args[1] if len(node.args) > 1 else next(
+                    (k.value for k in node.keywords if k.arg == "mode"),
+                    None))
+                if isinstance(mode, ast.Constant) and mode.value != "r":
+                    continue
+            if call in ("zipfile.ZipFile", "zlib.decompress",
+                        "zlib.decompressobj"):
+                calls.add((path.name, call))
+    assert calls == {("archive.py", "zipfile.ZipFile"),
+                     ("archive.py", "zlib.decompressobj")}

@@ -278,3 +278,20 @@ def test_gnu_long_name_records():
         info.mtime = 0
         tf.addfile(info, io.BytesIO(b"gnu"))
     assert split_tar(buf.getvalue()) == [(long_name, b"gnu")]
+
+
+def test_over_cap_is_one_typed_error():
+    # the dispatch and the WARC reader tell over-cap from corrupt by type
+    import pytest as _pytest
+
+    from open_ocr_spark.kernels.archive import TooLarge
+    from open_ocr_spark.sources import parse_warc_bytes
+
+    big = _gzip.compress(b"\x00" * 4096, mtime=0)
+    with _pytest.raises(TooLarge):
+        gunzip_payload(big, cap=1024)
+    with _pytest.raises(ValueError) as corrupt:
+        gunzip_payload(big[:-5], cap=8192)
+    assert not isinstance(corrupt.value, TooLarge)
+    assert parse_warc_bytes(big, limit=1024)[0]["error"] == (
+        "gzip: inflated output over limit: exceeds 1024 bytes")
