@@ -482,6 +482,8 @@ def _decode_png(data: bytes):
 
     import numpy as np
 
+    from open_ocr_spark.kernels import archive
+
     if len(data) < 8 or data[:8] != b"\x89PNG\r\n\x1a\n":
         return None
     pos, n = 8, len(data)
@@ -509,11 +511,17 @@ def _decode_png(data: bytes):
     if depth != 8 or interlace != 0:
         return None  # valid PNG, out of pure-stdlib scope (16-bit / Adam7)
     c = _PNG_CHANNELS[ct]
+    size = h * (1 + w * c)  # one filter byte per scanline
+    if size > archive.MAX_GUNZIP_BYTES:  # the IHDR is the payload's claim
+        raise ValueError(
+            f"png: IHDR size exceeds {archive.MAX_GUNZIP_BYTES} bytes")
     try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error as exc:
+        raw, _ = archive.inflate(b"".join(idat), size)
+    except archive.TooLarge:
+        raise ValueError("png: IDAT length mismatch") from None
+    except (zlib.error, EOFError) as exc:
         raise ValueError(f"png: bad IDAT stream ({exc})") from exc
-    if len(raw) != h * (1 + w * c):
+    if len(raw) != size:
         raise ValueError("png: IDAT length mismatch")
     px = _png_unfilter(raw, w, h, c).reshape(h, w, c)
     if ct == 2:

@@ -233,8 +233,11 @@ def gunzip_payload(raw: bytes, cap: int = MAX_GUNZIP_BYTES) -> bytes:
     return b"".join(out)
 
 
-# zipfile's faults: corrupt directory, data or CRC; a missing member
-_BAD_ZIP = (zipfile.BadZipFile, KeyError, OSError)
+# zipfile's faults: corrupt directory, CRC or deflate data (zlib.error,
+# or EOFError when a member ends early); a missing member; an unsupported
+# compression method; RuntimeError, its encrypted-member signal
+_BAD_ZIP = (zipfile.BadZipFile, KeyError, OSError, zlib.error, EOFError,
+            NotImplementedError, RuntimeError)
 
 
 def _member(zf: zipfile.ZipFile, info: zipfile.ZipInfo, left: int) -> bytes:
@@ -317,13 +320,7 @@ def split_zip(raw: bytes) -> list[tuple[str, bytes]]:
     infos = [i for i in zr.zf.infolist() if not i.is_dir()]
     if len(infos) > _MAX_MEMBERS:
         raise ValueError(f"zip member count exceeds {_MAX_MEMBERS}")
-    try:
-        return [(i.filename, zr.read(i)) for i in infos]
-    except (NotImplementedError, RuntimeError) as exc:
-        # RuntimeError is zipfile's encrypted-member signal — a real
-        # crawl payload class, and it must classify as
-        # error:zip-unsupported, not error:internal
-        raise ValueError(f"bad zip member: {exc}") from exc
+    return [(i.filename, zr.read(i)) for i in infos]
 
 
 def build_zip(members: list[tuple[str, bytes]]) -> bytes:

@@ -568,6 +568,64 @@ def test_png_out_of_scope_and_corrupt():
         decode_pixels(bad)
 
 
+def test_png_idat_inflates_no_further_than_its_ihdr():
+    """A 1x1 truecolor PNG holds 4 bytes of scanline; an IDAT that
+    inflates to 64 MB is refused before it allocates them, and the OCR
+    row returns it as an error value."""
+    import struct
+    import tracemalloc
+    import zlib
+
+    from open_ocr_spark.dataops.multimodal import decode_pixels
+    from open_ocr_spark.kernels.dispatch import extract_document
+
+    def chunk(ctype, body):
+        return (struct.pack(">I", len(body)) + ctype + body
+                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF))
+
+    z = zlib.compressobj()
+    idat = b"".join(z.compress(b"\x00" * 2**20) for _ in range(64)) + z.flush()
+    bomb = (b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", 1, 1, 8, 2, 0, 0, 0))
+            + chunk(b"IDAT", idat) + chunk(b"IEND", b""))
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="IDAT length mismatch"):
+            decode_pixels(bomb)
+        assert extract_document(bomb)[:2] == ("", "error:ocr-unsupported")
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 8 * 2**20
+
+
+@pytest.mark.parametrize("w, h, ct", [
+    (0xFFFFFFFF, 0xFFFFFFFF, 2),  # past Py_ssize_t as an inflate cap
+    (2**31, 2**31, 6),
+    (30000, 30000, 2),  # 2.7 GB of scanlines
+])
+def test_png_ihdr_past_the_budget_is_refused(w, h, ct):
+    """The IHDR's declared size is checked against MAX_GUNZIP_BYTES before
+    any IDAT inflates: a corrupt PNG (ValueError), and an OCR error value."""
+    import struct
+    import zlib
+
+    from open_ocr_spark.dataops.multimodal import decode_pixels
+    from open_ocr_spark.kernels.dispatch import extract_document
+
+    def chunk(ctype, body):
+        return (struct.pack(">I", len(body)) + ctype + body
+                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF))
+
+    png = (b"\x89PNG\r\n\x1a\n"
+           + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, ct, 0, 0, 0))
+           + chunk(b"IDAT", zlib.compress(b"\x00" * 2**20))
+           + chunk(b"IEND", b""))
+    with pytest.raises(ValueError, match="IHDR size exceeds"):
+        decode_pixels(png)
+    assert extract_document(png)[:2] == ("", "error:ocr-unsupported")
+
+
 def test_resize_images_png_pixel_exact(spark):
     """PNG input stays PNG through resize (container preserved), and the
     pixel path is exact: 2x2 -> 4x4 nearest replicates each source pixel."""

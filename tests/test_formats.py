@@ -4,6 +4,7 @@ malformed comes back as that row's own ``error:<name>-unsupported``."""
 
 import io
 import json
+import struct
 import zipfile
 
 import pytest
@@ -158,6 +159,38 @@ def test_pk_row_refuses_a_member_over_the_budget(name, monkeypatch):
     text, status, err = extract_document(bomb)
     assert (text, status) == ("", f"error:{name}-unsupported"), err
     assert "declared size exceeds 4096 bytes" in err
+
+
+def _unreadable_members(container: bytes, fault: str) -> bytes:
+    """Every deflated member made unreadable, the directory the sniffs
+    read left intact: "deflate" turns the member's data into an invalid
+    block (zlib.error), "method" declares compression method 99 in the
+    central directory (NotImplementedError)."""
+    raw = bytearray(container)
+    eocd = raw.rfind(b"PK\x05\x06")
+    (count,) = struct.unpack_from("<H", raw, eocd + 10)
+    (pos,) = struct.unpack_from("<I", raw, eocd + 16)
+    for _ in range(count):
+        (method,) = struct.unpack_from("<H", raw, pos + 10)
+        n, m, k = struct.unpack_from("<HHH", raw, pos + 28)
+        (local,) = struct.unpack_from("<I", raw, pos + 42)
+        if method == zipfile.ZIP_DEFLATED and fault == "method":
+            struct.pack_into("<H", raw, pos + 10, 99)
+        elif method == zipfile.ZIP_DEFLATED:
+            ln, lm = struct.unpack_from("<HH", raw, local + 26)
+            raw[local + 30 + ln + lm] = 0xFF  # BTYPE 11: invalid block
+        pos += 46 + n + m + k
+    return bytes(raw)
+
+
+@pytest.mark.parametrize("fault", ["deflate", "method"])
+@pytest.mark.parametrize("name", list(PK_TWINS))
+def test_pk_member_fault_is_the_rows_error(name, fault):
+    payload = _unreadable_members(PK_TWINS[name]("Unreadable."), fault)
+    assert _row_of(payload) == name
+    text, status, err = extract_document(payload)
+    assert (text, status) == ("", f"error:{name}-unsupported"), err
+    assert err
 
 
 @pytest.fixture
