@@ -16,7 +16,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from open_ocr_spark.queries import ORACLES, QUERIES, q_extract_main_text
+from open_ocr_spark.queries import ORACLES, QUERIES
+from open_ocr_spark.queries.extraction import q_extract_main_text
 
 SF0001 = "/root/testdata/sf0.001"
 

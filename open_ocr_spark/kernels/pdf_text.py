@@ -33,8 +33,12 @@ PDF_MAGIC = b"%PDF"
 
 # Literal string: body of ( ... ) with backslash escapes; nested unescaped
 # parens are out of scope (documented simplification — balanced-paren
-# literals are rare outside generated test suites).
-_LIT = rb"\((?:[^()\\]|\\.)*\)"
+# literals are rare outside generated test suites). Here and in the TJ
+# array the quantifiers are possessive, so ``re`` keeps no backtrack state
+# per character (a greedy star costs ~170 bytes per input byte). Matches
+# are the same: each alternative starts on a different byte, so giving an
+# element back never leaves the closing byte next.
+_LIT = rb"\((?:[^()\\]++|\\.)*+\)"
 # Hex string: < hex digits, whitespace allowed > (PDF 32000-1:2008 §7.3.4.3).
 _HEX = rb"<[0-9A-Fa-f\s]*>"
 _STR_RE = re.compile(rb"(?:%s|%s)" % (_LIT, _HEX), re.DOTALL)
@@ -44,7 +48,7 @@ _STR_RE = re.compile(rb"(?:%s|%s)" % (_LIT, _HEX), re.DOTALL)
 #   (...) Tj | (...) ' | aw ac (...) "  (single-string forms)
 _SHOW_RE = re.compile(
     rb"(?:"
-    rb"\[(?P<arr>(?:[^\]\\(<]|%s|%s|\\.)*)\]\s*TJ"
+    rb"\[(?P<arr>(?:[^\]\\(<]++|%s|%s|\\.)*+)\]\s*TJ"
     rb"|"
     rb"(?P<one>%s|%s)\s*(?:Tj|'|\")"
     rb")" % (_LIT, _HEX, _LIT, _HEX),

@@ -43,6 +43,7 @@ import json
 import os
 import shutil
 import time
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -65,14 +66,11 @@ def derive_snapshot_id(df: DataFrame) -> str:
         return "snapshot-inmemory"
     parts = []
     for uri in files:
-        p = None
-        if uri.startswith("file://"):
-            p = uri[len("file://"):]
-        elif uri.startswith("file:"):
-            p = uri[len("file:"):]
-        if p is not None:
+        url = urlparse(uri)
+        if url.scheme == "file":
             try:
-                st = os.stat(p)
+                # Spark lists percent-encoded URIs (a space is %20)
+                st = os.stat(unquote(url.path))
                 parts.append(f"{uri}|{st.st_size}|{st.st_mtime_ns}")
                 continue
             except OSError:

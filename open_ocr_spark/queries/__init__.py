@@ -4,323 +4,42 @@ ANSI-SQL oracle in ``ORACLES`` that DuckDB runs on the same parquet
 tables. tests/test_oracles.py checks every entry at sf0.001 on each
 run; tools/check_contract.py runs the same check on any scale factor.
 
+Registering a query: define ``q_<name>(spark, sf_dir)`` at module level
+in its domain module below; it becomes ``QUERIES["<name>"]``. If SQL can
+express it, the same module adds ``ORACLES["<name>"]``. Otherwise its
+docstring starts with ORACLE_NONE (a kernel or hash-seeded op) and it
+gets the weaker rows-only check: at least one row. Only functions a
+module defines count, so a ``q_`` name it imports is not registered
+twice; helpers must not be named ``q_...``.
+
 Contract rules: column names must match between the Spark result and
 the oracle (aliases everywhere); floats are rounded 4dp on BOTH sides
 so value hashes agree across engines; orderings are made deterministic
-with explicit tiebreaks before any LIMIT.
-
-Queries without an ``ORACLES`` entry (marked ORACLE_NONE in their
-docstrings) are genuinely non-SQL-expressible (kernel or hash-seeded
-ops) and get the weaker rows-only check: at least one row."""
+with explicit tiebreaks before any LIMIT."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from inspect import isfunction
 
 from pyspark.sql import DataFrame, SparkSession
-
-# re-exported for the plan tests, which build the pages table
-from open_ocr_spark.queries._shared import _t, pages_from_documents
-from open_ocr_spark.queries.extraction import (
-    q_base64_roundtrip, q_csv_cells, q_charset_transport, q_engine_dispatch,
-    q_extract_doc_text, q_extract_docx_text, q_extract_eml_text,
-    q_extract_gzip_text, q_extract_zip_text,
-    q_extract_mbox_text, q_extract_msg_text, q_extract_tar_text,
-    q_extract_ppt_text, q_extract_ps_text, q_extract_xls_text,
-    q_extract_epub_text, q_extract_glyph_ocr, q_extract_ipynb_text,
-    q_extract_latex_text, q_extract_main_text,
-    q_extract_markdown, q_extract_odt_text, q_extract_pdf_cmap,
-    q_extract_pdf_flate, q_extract_pdf_text, q_extract_pdf_tj,
-    q_extract_pptx_text, q_extract_rtf_text, q_extract_srt_text,
-    q_extract_status_rollup, q_extract_vtt_text,
-    q_extract_structured_spans, q_extract_xlsx_text, q_multipart_roundtrip,
-    q_url_fetch_roundtrip,
-)
-from open_ocr_spark.queries.relational import (
-    q_agg_pricing_summary, q_anti_join_resume, q_approx_distinct_users,
-    q_asof_last_order, q_cube_source_lang, q_daily_event_stats,
-    q_distinct_counts, q_fact_fact_join_revenue, q_full_outer_user_activity,
-    q_grouping_sets_docs, q_host_doc_counts, q_intersect_user_ids,
-    q_join_region_nation_customer, q_join_top_customers,
-    q_ntile_order_quartiles, q_orders_above_avg, q_percentile_order_value,
-    q_pivot_order_status, q_range_join_event_pairs, q_rollup_source_lang,
-    q_salted_host_counts, q_scan_filter_project, q_semi_join_events,
-    q_session_window_stats, q_sessionize_events, q_set_except_sources,
-    q_stats_corr_revenue, q_top_unshipped_orders, q_topk_orders_per_customer,
-    q_union_lang_totals, q_window_event_gaps, q_window_latest_event_per_user,
-    q_window_running_revenue,
-)
-from open_ocr_spark.queries.dedup import (
-    q_dedup_clusters, q_exact_dedup_groups, q_line_dedup_docs,
-    q_minhash_lsh_pairs, q_minhash_lsh_pairs_md5,
-    q_ngram_containment_pairs, q_ngram_jaccard_pairs,
-    q_simhash_fingerprints, q_simhash_fingerprints_md5, q_substring_dedup,
-    q_winnowing_fingerprints,
-)
-from open_ocr_spark.queries.embeddings import (
-    q_embedding_ivf_topk, q_embedding_lsh_topk, q_embedding_near_dup,
-    q_embedding_near_dup_lsh, q_embedding_topk, q_kmeans_clusters,
-    q_semantic_dedup,
-)
-from open_ocr_spark.queries.textquality import (
-    q_bm25_search, q_bpe_encode_docs, q_bpe_token_counts, q_bpe_train,
-    q_c4_line_clean, q_ccnet_buckets, q_char_entropy, q_chunk_documents,
-    q_confusable_skeleton,
-    q_cms_term_counts,
-    q_classifier_train,
-    q_doc_fingerprints, q_extraction_eval, q_infer_column_types, q_gopher_gate, q_lang_id, q_lang_id_fixture,
-    q_mojibake_repair,
-    q_ngram_fluency, q_phrase_gate, q_pii_scrub, q_quality_classifier,
-    q_quality_scores, q_readability_scores, q_reflow_text,
-    q_repetition_stats,
-    q_sentence_split,
-    q_tfidf_top_terms, q_token_counts, q_top_bigrams, q_unicode_nfc,
-)
-from open_ocr_spark.queries.webops import (
-    q_anchor_text_stats, q_base_href_links, q_canonical_assignment,
-    q_canonical_url_dedup, q_crawl_delta_near, q_declared_lang_audit,
-    q_cdx_index, q_crawl_delta,
-    q_feed_discovery, q_frontier_polite, q_frontier_schedule,
-    q_heading_outline,
-    q_host_hits, q_host_link_graph, q_host_pagerank, q_host_template_lines,
-    q_hreflang_clusters, q_html_meta, q_html_tables,
-    q_json_ld, q_microdata_items, q_mime_sniff, q_pagination_chains, q_publish_dates,
-    q_registrable_domain,
-    q_recrawl_schedule, q_redirect_chains, q_resolve_relative_urls,
-    q_resolved_link_graph,
-    q_noindex_gate, q_robots_gate,
-    q_robots_meta,
-    q_sitemap_discovery, q_soft_404_gate, q_url_features,
-    q_warc_charset_extract, q_warc_http,
-    q_warc_revisit, q_warc_roundtrip,
-    q_wat_metadata, q_wet_roundtrip,
-)
-from open_ocr_spark.queries.media import (
-    q_audio_stats_wav, q_binary_payload_stats, q_exif_gps_scrub,
-    q_exif_metadata,
-    q_image_dhash_dedup,
-    q_media_features, q_media_frame_sample, q_media_frame_sample_avi,
-    q_media_frame_sample_mp4, q_media_frame_sample_webm, q_media_resize,
-    q_media_resize_gif, q_media_resize_jpeg, q_media_resize_jpeg_arith,
-    q_media_resize_jpeg_progressive, q_media_resize_png,
-)
-from open_ocr_spark.queries.sampling import (
-    q_bloom_prune_stats, q_clean_web_corpus, q_decontaminate_docs, q_dsir_resample,
-    q_hll_distinct_md5, q_host_quota_sample, q_key_skew_gini,
-    q_pack_multimodal, q_pack_training_sequences, q_prepare_corpus,
-    q_prepare_corpus_full, q_stratified_sample, q_stratified_sample_md5,
-    q_temperature_sample, q_train_test_split,
-)
-# re-exported: tests/test_dataops.py builds the near-dup fixture corpus
-from open_ocr_spark.queries.embeddings import _near_dup_embedding_corpus
 
 from open_ocr_spark.queries import (
     extraction, relational, dedup, embeddings, textquality, webops, media, sampling,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "extract_eml_text": q_extract_eml_text,
-    "extract_mbox_text": q_extract_mbox_text,
-    "extract_tar_text": q_extract_tar_text,
-    "microdata_items": q_microdata_items,
-    "sentence_split": q_sentence_split,
-    "extraction_eval": q_extraction_eval,
-    "hreflang_clusters": q_hreflang_clusters,
-    "extract_gzip_text": q_extract_gzip_text,
-    "extract_zip_text": q_extract_zip_text,
-    "csv_cells": q_csv_cells,
-    "heading_outline": q_heading_outline,
-    "ngram_containment_pairs": q_ngram_containment_pairs,
-    "confusable_skeleton": q_confusable_skeleton,
-    "winnowing_fingerprints": q_winnowing_fingerprints,
-    "extract_markdown": q_extract_markdown,
-    "dsir_resample": q_dsir_resample,
-    "ccnet_buckets": q_ccnet_buckets,
-    "registrable_domain": q_registrable_domain,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "exif_metadata": q_exif_metadata,
-    "exif_gps_scrub": q_exif_gps_scrub,
-    "resolve_relative_urls": q_resolve_relative_urls,
-    "resolved_link_graph": q_resolved_link_graph,
-    "base_href_links": q_base_href_links,
-    "redirect_chains": q_redirect_chains,
-    "canonical_assignment": q_canonical_assignment,
-    "url_features": q_url_features,
-    "soft_404_gate": q_soft_404_gate,
-    "charset_transport": q_charset_transport,
-    "warc_charset_extract": q_warc_charset_extract,
-    "cms_term_counts": q_cms_term_counts,
-    "publish_dates": q_publish_dates,
-    "crawl_delta_near": q_crawl_delta_near,
-    "declared_lang_audit": q_declared_lang_audit,
-    "pagination_chains": q_pagination_chains,
-    "extract_doc_text": q_extract_doc_text,
-    "extract_ppt_text": q_extract_ppt_text,
-    "extract_xls_text": q_extract_xls_text,
-    "extract_msg_text": q_extract_msg_text,
-    "warc_revisit": q_warc_revisit,
-    "extract_pdf_cmap": q_extract_pdf_cmap,
-    "classifier_train": q_classifier_train,
-    "wet_roundtrip": q_wet_roundtrip,
-    "wat_metadata": q_wat_metadata,
-    "frontier_polite": q_frontier_polite,
-    "top_bigrams": q_top_bigrams,
-    "key_skew_gini": q_key_skew_gini,
-    "readability_scores": q_readability_scores,
-    "bloom_prune_stats": q_bloom_prune_stats,
-    "host_template_lines": q_host_template_lines,
-    "binary_payload_stats": q_binary_payload_stats,
-    "media_features": q_media_features,
-    "token_counts": q_token_counts,
-    "quality_scores": q_quality_scores,
-    "lang_id": q_lang_id,
-    "doc_fingerprints": q_doc_fingerprints,
-    "base64_roundtrip": q_base64_roundtrip,
-    "window_running_revenue": q_window_running_revenue,
-    "window_latest_event_per_user": q_window_latest_event_per_user,
-    "window_event_gaps": q_window_event_gaps,
-    "union_lang_totals": q_union_lang_totals,
-    "top_unshipped_orders": q_top_unshipped_orders,
-    "set_except_sources": q_set_except_sources,
-    "semi_join_events": q_semi_join_events,
-    "scan_filter_project": q_scan_filter_project,
-    "pivot_order_status": q_pivot_order_status,
-    "percentile_order_value": q_percentile_order_value,
-    "orders_above_avg": q_orders_above_avg,
-    "join_top_customers": q_join_top_customers,
-    "join_region_nation_customer": q_join_region_nation_customer,
-    "intersect_user_ids": q_intersect_user_ids,
-    "grouping_sets_docs": q_grouping_sets_docs,
-    "full_outer_user_activity": q_full_outer_user_activity,
-    "fact_fact_join_revenue": q_fact_fact_join_revenue,
-    "embedding_topk": q_embedding_topk,
-    "distinct_counts": q_distinct_counts,
-    "daily_event_stats": q_daily_event_stats,
-    "cube_source_lang": q_cube_source_lang,
-    "anti_join_resume": q_anti_join_resume,
-    "agg_pricing_summary": q_agg_pricing_summary,
-    "warc_roundtrip": q_warc_roundtrip,
-    "frontier_schedule": q_frontier_schedule,
-    "extract_pdf_flate": q_extract_pdf_flate,
-    "extract_pdf_tj": q_extract_pdf_tj,
-    "extract_pdf_text": q_extract_pdf_text,
-    "quality_classifier": q_quality_classifier,
-    "url_fetch_roundtrip": q_url_fetch_roundtrip,
-    "repetition_stats": q_repetition_stats,
-    "pii_scrub": q_pii_scrub,
-    "multipart_roundtrip": q_multipart_roundtrip,
-    "canonical_url_dedup": q_canonical_url_dedup,
-    "bpe_token_counts": q_bpe_token_counts,
-    "temperature_sample": q_temperature_sample,
-    "host_pagerank": q_host_pagerank,
-    "host_link_graph": q_host_link_graph,
-    "pack_training_sequences": q_pack_training_sequences,
-    "media_resize_png": q_media_resize_png,
-    "media_resize_jpeg": q_media_resize_jpeg,
-    "media_resize": q_media_resize,
-    "media_frame_sample_mp4": q_media_frame_sample_mp4,
-    "media_frame_sample": q_media_frame_sample,
-    "audio_stats_wav": q_audio_stats_wav,
-    "semantic_dedup": q_semantic_dedup,
-    "kmeans_clusters": q_kmeans_clusters,
-    "json_ld": q_json_ld,
-    "html_meta": q_html_meta,
-    "extract_glyph_ocr": q_extract_glyph_ocr,
-    "minhash_lsh_pairs_md5": q_minhash_lsh_pairs_md5,
-    "simhash_fingerprints_md5": q_simhash_fingerprints_md5,
-    "media_resize_jpeg_progressive": q_media_resize_jpeg_progressive,
-    "media_resize_gif": q_media_resize_gif,
-    "media_frame_sample_avi": q_media_frame_sample_avi,
-    "media_frame_sample_webm": q_media_frame_sample_webm,
-    "substring_dedup": q_substring_dedup,
-    "host_quota_sample": q_host_quota_sample,
-    "crawl_delta": q_crawl_delta,
-    "ngram_fluency": q_ngram_fluency,
-    "robots_gate": q_robots_gate,
-    "chunk_documents": q_chunk_documents,
-    "sitemap_discovery": q_sitemap_discovery,
-    "unicode_nfc": q_unicode_nfc,
-    "reflow_text": q_reflow_text,
-    "mojibake_repair": q_mojibake_repair,
-    "extract_ipynb_text": q_extract_ipynb_text,
-    "extract_latex_text": q_extract_latex_text,
-    "host_hits": q_host_hits,
-    "clean_web_corpus": q_clean_web_corpus,
-    "extract_srt_text": q_extract_srt_text,
-    "extract_vtt_text": q_extract_vtt_text,
-    "noindex_gate": q_noindex_gate,
-    "extract_ps_text": q_extract_ps_text,
-    "infer_column_types": q_infer_column_types,
-    "recrawl_schedule": q_recrawl_schedule,
-    "media_resize_jpeg_arith": q_media_resize_jpeg_arith,
-    "pack_multimodal": q_pack_multimodal,
-    "feed_discovery": q_feed_discovery,
-    "extract_docx_text": q_extract_docx_text,
-    "extract_odt_text": q_extract_odt_text,
-    "extract_rtf_text": q_extract_rtf_text,
-    "gopher_gate": q_gopher_gate,
-    "c4_line_clean": q_c4_line_clean,
-    "anchor_text_stats": q_anchor_text_stats,
-    "stratified_sample_md5": q_stratified_sample_md5,
-    "mime_sniff": q_mime_sniff,
-    "bpe_train": q_bpe_train,
-    "bpe_encode_docs": q_bpe_encode_docs,
-    "bm25_search": q_bm25_search,
-    "image_dhash_dedup": q_image_dhash_dedup,
-    "extract_pptx_text": q_extract_pptx_text,
-    "html_tables": q_html_tables,
-    "hll_distinct_md5": q_hll_distinct_md5,
-    "char_entropy": q_char_entropy,
-    "extract_xlsx_text": q_extract_xlsx_text,
-    "extract_epub_text": q_extract_epub_text,
-    "phrase_gate": q_phrase_gate,
-    "robots_meta": q_robots_meta,
-    "warc_http": q_warc_http,
-    "cdx_index": q_cdx_index,
-    "lang_id_fixture": q_lang_id_fixture,
-    "embedding_lsh_topk": q_embedding_lsh_topk,
-    "embedding_ivf_topk": q_embedding_ivf_topk,
-    "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-    "embedding_near_dup": q_embedding_near_dup,
-    "extract_main_text": q_extract_main_text,
-    "extract_status_rollup": q_extract_status_rollup,
-    "extract_structured_spans": q_extract_structured_spans,
-    "exact_dedup_groups": q_exact_dedup_groups,
-    "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-    "dedup_clusters": q_dedup_clusters,
-    "prepare_corpus_full": q_prepare_corpus_full,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "simhash_fingerprints": q_simhash_fingerprints,
-    "engine_dispatch": q_engine_dispatch,
-    "asof_last_order": q_asof_last_order,
-    "topk_orders_per_customer": q_topk_orders_per_customer,
-    "session_window_stats": q_session_window_stats,
-    "line_dedup_docs": q_line_dedup_docs,
-    "decontaminate_docs": q_decontaminate_docs,
-    "ntile_order_quartiles": q_ntile_order_quartiles,
-    "range_join_event_pairs": q_range_join_event_pairs,
-    "stats_corr_revenue": q_stats_corr_revenue,
-    "train_test_split": q_train_test_split,
-    "stratified_sample": q_stratified_sample,
-    "rollup_source_lang": q_rollup_source_lang,
-    "salted_host_counts": q_salted_host_counts,
-    "approx_distinct_users": q_approx_distinct_users,
-    "sessionize_events": q_sessionize_events,
-    "host_doc_counts": q_host_doc_counts,
-    "prepare_corpus": q_prepare_corpus,
-}
-
-_FRAGMENTS = [getattr(_m, "ORACLES", {}) for _m in (
-    extraction, relational, dedup, embeddings, textquality, webops, media, sampling,
-)]
-
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-for _frag in _FRAGMENTS:
-    _dup = ORACLES.keys() & _frag.keys()
-    if _dup:
-        raise RuntimeError(f"duplicate oracle keys across modules: {_dup}")
-    ORACLES.update(_frag)
+for _m in (extraction, relational, dedup, embeddings, textquality, webops, media, sampling):
+    _defined = {
+        _k[2:]: _f for _k, _f in vars(_m).items()
+        if _k.startswith("q_") and isfunction(_f) and _f.__module__ == _m.__name__
+    }
+    for _kind, _into, _frag in (("query", QUERIES, _defined), ("oracle", ORACLES, _m.ORACLES)):
+        _dup = _into.keys() & _frag.keys()
+        if _dup:
+            raise RuntimeError(f"duplicate {_kind} keys across modules: {_dup}")
+        _into.update(_frag)
 _orphans = ORACLES.keys() - QUERIES.keys()
 if _orphans:
     raise RuntimeError(f"oracles without a registered query: {_orphans}")
-

@@ -1056,7 +1056,7 @@ def test_embedding_near_dup_lsh_subset_and_recall(spark):
         embedding_cosine_pairs,
         embedding_near_dup_pairs,
     )
-    from open_ocr_spark.queries import _near_dup_embedding_corpus
+    from open_ocr_spark.queries.embeddings import _near_dup_embedding_corpus
 
     corpus = _near_dup_embedding_corpus(spark, "/root/testdata/sf0.001")
     exact = {(r["vec_a"], r["vec_b"])

@@ -11,6 +11,7 @@ the operators' null branches and the oracles' NULL rules must agree
 there too."""
 
 import os
+import sys
 
 import duckdb
 import pytest
@@ -19,6 +20,29 @@ from open_ocr_spark.queries import ORACLES, QUERIES
 from tools.check_contract import TABLES, check_query, oracle_connection
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def test_queries_without_oracle_are_marked_oracle_none():
+    # every module-level ``q_`` function is registered, so a helper named
+    # ``q_...`` would slip in on the weak rows-only check
+    marked = {name for name, fn in QUERIES.items()
+              if (fn.__doc__ or "").lstrip().startswith("ORACLE_NONE")}
+    assert QUERIES.keys() - ORACLES.keys() == marked
+
+
+def test_check_contract_rejects_unknown_query_names(monkeypatch):
+    import open_ocr_spark.pipeline.session as session
+    from tools import check_contract
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", ["check_contract.py", SF_DIR, "host_hitz"])
+    with pytest.raises(SystemExit) as exc:
+        check_contract.main()
+    assert exc.value.code not in (0, None)
+
 
 @pytest.fixture(scope="module")
 def con():

@@ -58,3 +58,24 @@ def test_flate_budget_is_shared_by_the_streams(monkeypatch):
     assert extract_document(_flate_pdf(half))[1] == "ok"
     assert extract_document(_flate_pdf(half, half))[1:] == (
         "error:pdf-unsupported", "pdf-unsupported:flate-too-large")
+
+
+def test_long_strings_are_matched_without_per_byte_regex_state():
+    # a greedy star over one byte per iteration keeps backtrack state
+    # per character: ~170 bytes of memory per input byte
+    import tracemalloc
+
+    from open_ocr_spark.kernels.pdf_text import extract_pdf_text
+
+    n = 2 << 20
+    lit = b"%PDF-1.4\nBT (" + b"a" * n + b") Tj ET\n"
+    arr = b"%PDF-1.4\nBT [" + b"(ab) -120 " * (n // 10) + b"] TJ ET\n"
+    for doc, want in ((lit, "a" * n), (arr, "ab" * (n // 10))):
+        tracemalloc.start()
+        try:
+            text = extract_pdf_text(doc)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert text == want
+        assert peak < 32 << 20, peak

@@ -7,8 +7,8 @@ performance bug even when results stay correct."""
 
 import pytest
 
-from open_ocr_spark.queries import (
-    pages_from_documents,
+from open_ocr_spark.queries._shared import pages_from_documents
+from open_ocr_spark.queries.relational import (
     q_agg_pricing_summary,
     q_join_region_nation_customer,
     q_join_top_customers,
@@ -128,7 +128,7 @@ def test_extraction_query_no_join_single_scan(spark):
     extraction queries need NO second scan and NO correlation join to
     recover doc_id — at 100 TB the old re-join was a full extra scan plus
     a shuffle."""
-    from open_ocr_spark.queries import q_extract_main_text
+    from open_ocr_spark.queries.extraction import q_extract_main_text
 
     plan = plan_of(q_extract_main_text(spark, SF))
     assert "Join" not in plan, plan
@@ -299,7 +299,7 @@ def test_cdx_index_single_scan_single_range_exchange(spark):
     # the index build is scan -> project -> ONE range exchange (the
     # storage sort); a second scan or a hash shuffle is a regression
     from open_ocr_spark.dataops.urls import cdx_index
-    from open_ocr_spark.queries import pages_from_documents
+    from open_ocr_spark.queries._shared import pages_from_documents
 
     plan = plan_of(cdx_index(pages_from_documents(spark, SF)))
     n_scans = sum(
@@ -413,7 +413,7 @@ def test_confusable_skeleton_is_shuffle_free(spark):
     # drop the orderBy the driver contract adds: the operator itself
     # must be a pure projection
     from open_ocr_spark.dataops.confusables import confusable_stats
-    from open_ocr_spark.queries import _t
+    from open_ocr_spark.queries._shared import _t
 
     core = confusable_stats(_t(spark, SF, "documents")
                             .select("doc_id", "text"))

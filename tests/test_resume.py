@@ -169,6 +169,24 @@ def test_snapshot_id_derived_and_mismatch_surfaced(spark, tmp_path):
     assert snap_ids == {snap1, snap2}
 
 
+def test_snapshot_id_sees_mtime_under_an_escaped_path(spark, tmp_path):
+    """Spark lists input files as percent-encoded URIs; a directory name
+    with a space must still be stat'ed, so touching one file changes the
+    id instead of falling back to a path-only fingerprint."""
+    import glob
+    import os
+
+    from open_ocr_spark.pipeline.checkpoint import derive_snapshot_id
+
+    src = str(tmp_path / "sp ace" / "pages")
+    pages_df(spark, 20).write.parquet(src)
+    snap1 = derive_snapshot_id(spark.read.parquet(src))
+    part = sorted(glob.glob(os.path.join(src, "part-*.parquet")))[0]
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns - 10**9))
+    assert derive_snapshot_id(spark.read.parquet(src)) != snap1
+
+
 def test_snapshot_seq_survives_deleted_earlier_snapshot(tmp_path):
     """Sequence numbers come from max(existing)+1, not len(chain): deleting
     an early snapshot file must never cause the next run to REUSE a live

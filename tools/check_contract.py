@@ -158,13 +158,17 @@ def main():
     import __spark_entry__ as entry_mod
     from open_ocr_spark.pipeline.session import get_spark
 
+    registry = entry_mod.queries()
+    unknown = only - registry.keys()
+    if unknown:
+        sys.exit(f"unknown queries: {sorted(unknown)}")
     cores = os.cpu_count() or 1
     spark = get_spark(app_name="contract-check", master=f"local[{cores}]",
                       shuffle_partitions=2 * cores)
     con = oracle_connection(sf_dir)
     oracles = entry_mod.oracle_sql()
     failures = []
-    for name, fn in entry_mod.queries().items():
+    for name, fn in registry.items():
         if only and name not in only:
             continue
         t0 = time.time()
