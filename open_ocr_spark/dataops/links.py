@@ -188,9 +188,9 @@ def extract_links_resolved(
     the absolute-only filter drops.  Foreign-scheme targets (mailto:,
     javascript:) resolve to themselves and are filtered to http(s) at
     the end; still one pure projection — no join, no shuffle beyond the
-    explode.  Honors ``<base href>`` (WHATWG §4.2.3) via effective_base:
-    the page's first base tag, itself resolved against the page URL,
-    replaces the page URL as the resolution base.
+    explode.  Honors ``<base href>`` (WHATWG §4.2.3): the page's first
+    base tag, itself resolved against the page URL, replaces the page URL
+    as the resolution base.
 
     Plan shape: resolution runs through the STAGED resolver
     (resolveurl.with_resolved) — the Column-builder form inlines the
@@ -218,8 +218,8 @@ def extract_links_resolved(
     )
     # <base href> resolution, once per PAGE (pre-explode).  A NULL raw
     # base resolves to NULL through every branch of the frozen policy,
-    # so coalesce(…, src_url) is exactly effective_base's "no base tag
-    # -> the page URL" rule; a non-null raw base never resolves to NULL
+    # so coalesce(…, src_url) is exactly the "no base tag -> the page
+    # URL" rule; a non-null raw base never resolves to NULL
     # (concat over non-null regexp extracts), so the coalesce is inert
     # for it.
     staged = with_resolved(staged, "src_url", "__raw_base", "__base0")
@@ -260,32 +260,13 @@ _BASE_HREF = (
 
 def base_href_raw(html: Column) -> Column:
     """The UNRESOLVED first ``<base href>`` value (any quote form), NULL
-    when absent or empty — THE base-tag extraction, shared by the
-    whole-table staged path (extract_links_resolved) and the Column-form
-    effective_base so a quoting-class or regex fix lands in both."""
+    when absent or empty — the base-tag extraction of
+    extract_links_resolved, which resolves it once per page."""
     return F.coalesce(
         *[
             F.nullif(F.regexp_extract(html, _BASE_HREF, g), F.lit(""))
             for g in (1, 2, 3)
         ]
-    )
-
-
-def effective_base(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> Column:
-    """The document base URL: the first ``<base href>`` resolved against
-    the page URL, else the page URL itself.  Pure projection — Column
-    form for composition; the whole-table path in extract_links_resolved
-    stages the same raw extract through resolveurl.with_resolved."""
-    from open_ocr_spark.dataops.resolveurl import resolve_url
-
-    html = F.col(html_col)
-    if dict(pages.dtypes)[html_col] == "binary":
-        html = F.decode(html, "UTF-8")
-    raw = base_href_raw(html)
-    return F.when(raw.isNull(), F.col(url_col)).otherwise(
-        resolve_url(F.col(url_col), raw)
     )
 
 

@@ -132,8 +132,8 @@ def with_resolved(
     Why this exists: ``resolve_url`` is a Column builder, and Column
     builders inline their sub-expressions AT CONSTRUCTION — ``base`` is
     referenced ~6 times inside the policy CASE, so when the base is
-    itself a non-trivial expression (e.g. effective_base's inner
-    resolve_url for ``<base href>`` handling) the tree multiplies out:
+    itself a non-trivial expression (e.g. a ``<base href>`` resolved by
+    an inner resolve_url) the tree multiplies out:
     the resolved_link_graph plan reached 1,710 regexp_replace + 4,226
     regexp_extract nodes (553 KB optimized plan), all planning/codegen
     overhead and 3× per-row re-evaluation once the http(s) filter

@@ -1,24 +1,19 @@
-"""Sessionization over `events`: assign session ids by inactivity gap.
+"""Sessionization over `events`: group each user's events into sessions
+split by an inactivity gap.
 
-Two implementations with identical output:
-- sessionize_events:        pure Catalyst (lag + windowed cumsum) — the
-                            scale path, whole-stage-codegen'd, shuffles
-                            once on user_id.
-- sessionize_events_grouped: applyInPandas grouped-map form — the
-                            "custom per-key imperative logic" escape hatch
-                            (SURVEY §2.B UDF surface); kept for parity
-                            testing and as the template for kernels that
-                            genuinely can't be expressed relationally.
+- sessionize_events:    lag + windowed cumsum, pure Catalyst — shuffles
+                        once on user_id; numbers sessions per user and
+                        reports first/last event epochs.
+- session_window_stats: Spark's native merging ``session_window``
+                        grouping; reports the window start and close
+                        (last event + gap).
 
-The streaming twin (state across micro-batches) lives in
-open_ocr_spark.streaming.running_user_counts_stateful.
+Both split where the gap EXCEEDS ``gap_seconds`` and agree on each
+session's (n_events, sum_value); DuckDB oracles check each of them
+(queries/relational.py).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -58,46 +53,34 @@ def sessionize_events(events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS)
     )
 
 
-def sessionize_events_grouped(
-    events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS
+def session_window_stats(
+    events: DataFrame,
+    gap_seconds: int = 1800,
+    watermark: str = "2 hours",
 ) -> DataFrame:
-    """Same semantics via applyInPandas: one pandas frame per user_id.
-    Arrow-batched; no per-row Python on the Spark side."""
-
-    def assign(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-        # normalize to ns first (Arrow may hand pandas datetime64[us])
-        secs = pdf["ts"].astype("datetime64[ns]").astype("int64") // 10**9
-        gaps = secs.diff()
-        new_sess = (gaps.isna() | (gaps > gap_seconds)).astype("int64")
-        pdf["session_id"] = new_sess.cumsum()
-        grouped = pdf.groupby("session_id", as_index=False).agg(
-            user_id=("user_id", "first"),
-            n_events=("event_id", "count"),
-            sum_value=("value", "sum"),
-            start_epoch=("ts", "min"),
-            end_epoch=("ts", "max"),
-        )
-        grouped["sum_value"] = grouped["sum_value"].round(4)
-        grouped["start_epoch"] = (
-            grouped["start_epoch"].astype("datetime64[ns]").astype("int64")
-            // 10**9
-        )
-        grouped["end_epoch"] = (
-            grouped["end_epoch"].astype("datetime64[ns]").astype("int64")
-            // 10**9
-        )
-        return grouped[
-            ["user_id", "session_id", "n_events", "sum_value",
-             "start_epoch", "end_epoch"]
-        ]
-
-    out_schema = (
-        "user_id long, session_id long, n_events long, sum_value double, "
-        "start_epoch long, end_epoch long"
-    )
+    """Per-user inactivity sessions via the native session_window grouping
+    (merging windows; the watermark only bounds state on a stream, a
+    batch DataFrame ignores it) — the window-grouping twin of
+    sessionize_events. Emits (user_id, session_start, session_end,
+    n_events, sum_value); session_end is last event + gap (Spark's
+    session_window close semantics), whereas sessionize_events reports
+    the last event's timestamp — callers comparing the two subtract the
+    gap."""
     return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandas(assign, out_schema)
+        events.withWatermark("ts", watermark)
+        .groupBy(
+            F.session_window(F.col("ts"), f"{gap_seconds} seconds").alias("win"),
+            F.col("user_id"),
+        )
+        .agg(
+            F.count("*").alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
+        )
+        .select(
+            "user_id",
+            F.col("win.start").alias("session_start"),
+            F.col("win.end").alias("session_end"),
+            "n_events",
+            "sum_value",
+        )
     )

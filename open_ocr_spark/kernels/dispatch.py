@@ -280,7 +280,7 @@ def extract_document(
     html: bytes | None,
     lang: str | None = None,
     engine=None,
-    engine_args: dict | None = None,
+    engine_args: dict | str | None = None,
     preprocessors: list[str] | None = None,
     preprocessor_args: dict | None = None,
     _depth: int = 0,
@@ -288,7 +288,9 @@ def extract_document(
     """Extract one document. Returns (extracted_text, status, error).
 
     status is 'ok' or 'error:<class>'; error holds the message. Never
-    raises: every failure becomes a value (A17).
+    raises: every failure becomes a value (A17). ``engine_args`` may be
+    the map's JSON encoding (sources.py's engine_args_json); JSON that is
+    not an object is an ``error:engine-args`` value like any bad map.
     """
     try:
         if _depth > 4:
@@ -312,8 +314,15 @@ def extract_document(
         assert engine_name == ENGINE_TESSERACT
 
         try:
+            if isinstance(engine_args, str):
+                # JSONDecodeError is a ValueError; nesting past the
+                # interpreter's depth limit raises RecursionError
+                engine_args = json.loads(engine_args)
+                if not isinstance(engine_args, dict):
+                    raise ValueError("engine args must be a JSON object, "
+                                     f"not {type(engine_args).__name__}")
             args = parse_engine_args(engine_args)
-        except ValueError as exc:
+        except (ValueError, RecursionError) as exc:
             return "", "error:engine-args", str(exc)
 
         if args.lang and args.lang not in SUPPORTED_LANGS:

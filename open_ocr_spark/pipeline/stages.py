@@ -17,7 +17,6 @@ values. Output schema is fixed and stable.
 
 from __future__ import annotations
 
-import json
 from array import array
 from itertools import accumulate
 from typing import Callable, Iterable, Iterator
@@ -52,13 +51,11 @@ def _extract_row(url, html, lang, engine, chain, pargs, eargs, eargs_json,
     --py-files."""
     from open_ocr_spark.kernels.dispatch import extract_document
 
-    if eargs_json:
-        eargs = json.loads(eargs_json)
     text, status, error = extract_document(
         html,
         lang=lang,
         engine=engine,
-        engine_args=dict(eargs) if eargs else None,
+        engine_args=eargs_json or (dict(eargs) if eargs else None),
         preprocessors=chain,
         preprocessor_args=dict(pargs) if pargs else None,
     )

@@ -282,22 +282,22 @@ def q_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (30-min inactivity gap): lag + windowed cumsum +
-    agg — the batch twin of the stateful streaming operator."""
+    agg; session_window_stats is its merging-window twin."""
     from open_ocr_spark.dataops.sessions import sessionize_events
 
     return sessionize_events(_t(spark, sf_dir, "events"))
 
 
 def q_session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window sessionization (streaming.session_window_stats
-    run in batch mode — the same merging-window grouping Structured
-    Streaming uses with watermark-evicted state). Epoch projection so the
+    """Native session_window sessionization
+    (dataops.sessions.session_window_stats over the batch events table;
+    the watermark it sets is inert on a batch). Epoch projection so the
     oracle hash is timestamp-render independent. Boundary rule (probed
     live): session_window merges an event landing exactly on the previous
     window's close — a new session starts only when the gap EXCEEDS the
     gap duration, the same > rule as the lag-cumsum sessionizer, and the
     oracle encodes it identically."""
-    from open_ocr_spark.streaming import session_window_stats
+    from open_ocr_spark.dataops.sessions import session_window_stats
 
     s = session_window_stats(_t(spark, sf_dir, "events"), gap_seconds=1800)
     return s.select(

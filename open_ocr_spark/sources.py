@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_ocr_spark.kernels.archive import gunzip_payload
+from open_ocr_spark.kernels.archive import TooLarge, gunzip_payload, inflate
 
 # the OcrRequest JSON schema, keys as in ocr_request.go:6-17
 REQUEST_JSON_SCHEMA = (
@@ -413,8 +413,9 @@ def split_http_response(
     (latin-1, last-wins on duplicates), chunked transfer-coding (hex
     size lines, optional chunk extensions, trailers ignored), then
     gzip/x-gzip/deflate content-coding (zlib, decompression capped at
-    ``limit``).  Every malformation returns an error VALUE — a bad
-    capture never fails the job (same contract as parse_warc_bytes)."""
+    ``limit``; bytes after the encoded stream are ignored).  Every
+    malformation returns an error VALUE — a bad or truncated capture
+    never fails the job (same contract as parse_warc_bytes)."""
     import zlib
 
     def err(msg: str):
@@ -476,10 +477,13 @@ def split_http_response(
     coding = headers.get("content-encoding", "").lower()
     if coding in ("gzip", "x-gzip", "deflate"):
         try:
-            d = zlib.decompressobj(47 if coding != "deflate" else 15)
-            body = d.decompress(body, limit)
-            if d.unconsumed_tail:
-                return err("encoded body exceeds decompression cap")
+            if body:  # an empty body (a redirect, say) encodes nothing
+                body, _ = inflate(body, limit,
+                                  47 if coding != "deflate" else 15)
+        except TooLarge:
+            return err("encoded body exceeds decompression cap")
+        except EOFError:
+            return err(f"truncated {coding} body")
         except zlib.error as exc:
             return err(f"bad {coding} body ({exc})")
     elif coding and coding != "identity":

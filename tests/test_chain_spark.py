@@ -190,3 +190,23 @@ def test_absent_option_columns_read_as_null(spark):
     assert rows(with_id, kernel_out, ["doc_id"]) == want
     ids = Counter(map(tuple, with_id.select("url", "doc_id").collect()))
     assert rows(with_id, ["url", "doc_id"], ["doc_id"]) == ids
+
+
+def test_malformed_engine_args_json_is_an_error_row(spark):
+    """engine_args_json that is not a JSON object is an error:engine-args
+    row, never an exception that fails the task."""
+    from open_ocr_spark.pipeline.stages import _extract_row
+
+    bad = ("not json", "[1,2]", "3", "[" * 100_000)
+    for value in bad:
+        (row,) = _extract_row("u", HTML, "eng", None, None, None, None, value)
+        assert row[:3] == ("u", "", "error:engine-args"), value
+
+    rows = [(f"u{i}", HTML, "eng", v) for i, v in enumerate(bad)]
+    rows.append(("ok", HTML, "eng", '{"lang": "eng"}'))
+    df = spark.createDataFrame(
+        rows, "url string, html binary, lang string, engine_args_json string"
+    )
+    got = {r["url"]: r["status"] for r in extract_stage(df).collect()}
+    assert got == {**{f"u{i}": "error:engine-args" for i in range(len(bad))},
+                   "ok": "ok"}

@@ -400,3 +400,34 @@ class TestHttpEnvelope:
 
         raw = build_http_response(b" " * 16, chunked=True)[:-8]
         assert split_http_response(raw)[3] == "truncated chunk data"
+
+    def test_truncated_content_coding_is_error_value(self):
+        """A gzip or deflate body cut short is an error value, never its
+        inflated prefix returned as the page; bytes after a complete
+        stream stay ignored, and an empty encoded body stays empty."""
+        import random
+        import zlib
+
+        from open_ocr_spark.sources import (
+            build_http_response,
+            split_http_response,
+        )
+
+        rng = random.Random(7)
+        body = " ".join(f"w{rng.randrange(10**6)}" for _ in range(3000))
+        body = body.encode()
+        raw = build_http_response(body, gzipped=True)
+        sep = raw.index(b"\r\n\r\n") + 4
+        cut = raw[:sep + (len(raw) - sep) // 2]
+        assert split_http_response(cut) == (
+            None, None, None, "truncated gzip body")
+
+        head = b"HTTP/1.1 200 OK\r\nContent-Encoding: deflate\r\n\r\n"
+        enc = zlib.compress(b"hello world " * 100)
+        assert split_http_response(head + enc[:len(enc) // 2])[3] == (
+            "truncated deflate body")
+        assert split_http_response(head + enc + b"tail") == (
+            200, None, b"hello world " * 100, None)
+        assert split_http_response(head, limit=10) == (200, None, b"", None)
+        assert split_http_response(head + enc, limit=100)[3] == (
+            "encoded body exceeds decompression cap")
