@@ -5,8 +5,8 @@ whose ``movi`` list carries one chunk per frame.  With the MJPEG codec
 every ``00dc`` chunk is a complete baseline JPEG, so this repo's own
 JPEG decoder (dataops/jpeg.py) turns frame sampling into a REAL pixel
 path with no ffmpeg — the first video format here where container
-demux AND pixel decode are both genuine.  H.264/VP9 tracks still need
-a codec library and stay declared stubs.
+demux AND pixel decode are both genuine.  H.264/VP9 tracks need a
+codec library: their frames stay undecoded sample bytes.
 
 Layout handled (spec: Microsoft AVI RIFF File Reference, public):
 ``RIFF('AVI ' LIST('hdrl' avih LIST('strl' strh strf)) LIST('movi'

@@ -4,8 +4,7 @@ EBML is the binary framing behind webm/mkv (RFC 8794 + the public
 Matroska element registry).  Demux depth here mirrors dataops/mp4.py:
 down to the codec-sample boundary — byte-exact frame payloads with true
 timestamps from the Cluster/SimpleBlock walk — while PIXEL decode of the
-samples (VP8/VP9/AV1) genuinely needs ffmpeg and stays a declared stub
-in dataops/multimodal.py.
+samples (VP8/VP9/AV1) needs ffmpeg and is out of scope.
 
 Coverage (the subset a crawler actually meets, each raising a clear
 ValueError outside it):

@@ -14,8 +14,8 @@ pointer; tag 0x8769 points at the Exif sub-IFD.
 
 Both byte orders are first-class (fixtures alternate them); all offsets
 are bounds-checked against the segment; malformed structures raise
-``ValueError`` inside the kernel where the standard strict/null
-error-as-value contract applies (same shape as multimodal.audio_stats).
+``ValueError``, which the kernels below turn into a null row: the
+error-as-value contract of multimodal.audio_stats.
 
 Reference parity note: the reference engine never reads image metadata
 (its OCR engines consume raw bytes); this operator is part of the
@@ -274,7 +274,7 @@ def parse_exif(payload: bytes) -> dict:
     orientation, x_resolution num/den, datetime, exposure num/den, iso,
     pixel_x, byte_order).  Raises ValueError on any structural problem —
     no JPEG SOI, no Exif APP1 before SOS, bad TIFF header, out-of-range
-    offsets — so the kernel above maps it to the strict/null contract."""
+    offsets — which the kernels below turn into a null row."""
     if len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("exif: not a JPEG (no SOI)")
     pos = 2
@@ -351,8 +351,8 @@ def scrub_gps(payload: bytes) -> bytes:
     notes, serial numbers, embedded thumbnails) are gone by construction
     rather than by enumeration.  Byte order is preserved.  Segments
     outside APP1 (the actual image data) pass through untouched.
-    Raises ValueError on unparseable input (strict/null contract at the
-    kernel layer)."""
+    Raises ValueError on unparseable input (a null row at the kernel
+    layer)."""
     meta = parse_exif(payload)
 
     def keep(key, default):
@@ -408,28 +408,18 @@ _COLS = [
 ]
 
 
-def exif_metadata(media: DataFrame, strict: bool = False) -> DataFrame:
+def exif_metadata(media: DataFrame) -> DataFrame:
     """(media_id, byte_order, make, model, orientation, x_res_num/den,
     datetime, exposure_num/den, iso, pixel_x): EXIF capture metadata per
     JPEG payload over map_rows — the provenance/orientation/PII-scan
     projection of an image corpus.  Non-JPEG / Exif-less / structurally
-    corrupt payloads: strict raises, default emits nulls (rows kept so
-    joins see every media_id) — the multimodal error-as-value contract."""
+    corrupt payloads get nulls (rows kept so joins see every media_id) —
+    the multimodal error-as-value contract."""
 
     def exif(media_id, payload):
-        meta = None
-        if payload is not None and len(payload) > 0:
-            try:
-                meta = parse_exif(bytes(payload))
-            except ValueError:
-                if strict:
-                    raise
-        if meta is None:
-            if strict:
-                raise NotImplementedError(
-                    "exif_metadata: payload has no parseable Exif "
-                    "APP1; run with strict=False for null rows"
-                )
+        try:
+            meta = parse_exif(bytes(payload or b""))
+        except ValueError:
             return [(media_id,) + (None,) * 11]
         return [(media_id,) + tuple(meta[c] for c in _COLS[1:])]
 
@@ -443,21 +433,19 @@ _GPS_SCHEMA = (
 )
 
 
-def gps_scrub_report(media: DataFrame, strict: bool = False) -> DataFrame:
+def gps_scrub_report(media: DataFrame) -> DataFrame:
     """(media_id, had_gps, gps_lat_ref/dms, gps_lon_ref/dms,
     scrub_has_gps, make_after): run the GPS allowlist scrub over every
     JPEG payload and REVERIFY by re-parsing the scrubbed bytes — the
     audit surface a privacy pipeline hash-checks (found coordinates,
     post-scrub GPS absence, allowlisted-tag survival).  Unparseable
-    payloads: strict raises, default emits nulls (row kept)."""
+    payloads get nulls (row kept)."""
 
     def report(media_id, payload):
         try:
             before = parse_exif(bytes(payload or b""))
             after = parse_exif(scrub_gps(bytes(payload)))
         except ValueError:
-            if strict:
-                raise
             return [(media_id,) + (None,) * 7]
         return [(
             media_id,

@@ -6,8 +6,7 @@ offsets, stsz sizes) and byte-exact extraction of individual codec
 samples ("frames" at the container level) with their real timestamps.
 Combined with `multimodal.sample_frames` this makes video frame sampling
 REAL down to the codec-sample boundary — only the pixel decode of those
-samples (H.264 etc.) still genuinely needs ffmpeg and stays behind the
-declared stub contract.
+samples (H.264 etc.) needs ffmpeg and is out of scope.
 
 Also a minimal muxer (`mux_mp4`) used by tests and oracle fixtures so the
 demuxer is pinned against an independently-constructed bitstream rather

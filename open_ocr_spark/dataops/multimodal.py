@@ -1,27 +1,21 @@
 """Multimodal column plumbing: image/audio/video as opaque `binary` columns
 with typed metadata, processed by Arrow-batched kernels over map_rows.
 
-The Spark-side plumbing (schema, batching, partitioning, UDF signature) is
-real and tested. Pixel decode is REAL for the formats stdlib+numpy can
-handle — PNG (zlib IDAT + numpy unfiltering), baseline AND progressive
-JPEG (huffman + spectral-selection/successive-approximation scan
-assembly + vectorized IDCT, dataops/jpeg.py), GIF87a/89a (LZW +
-palettes + interlace, dataops/gif.py), uncompressed 24-bit BMP,
-binary PPM — and for header-level metadata (PNG/BMP/GIF/JPEG dims, WAV
-fmt/data chunks). MP4 video is demuxed for real down to the codec-sample
-boundary (dataops/mp4.py: box tree, sample tables, byte-exact frame
-extraction with true timestamps); webm/mkv is demuxed to the same depth
-(dataops/ebml.py: EBML walk, Cluster/SimpleBlock frame bytes with true
-block timestamps); AVI/MJPEG video (dataops/avi.py) is
-fully real END TO END — RIFF demux, frame timing, and pixel decode of
-every sampled frame through the repo's own JPEG decoder; the JPEG
-entropy layer covers huffman, progressive AND arithmetic (QM-coder,
-dataops/jpeg_arith.py) frames. What genuinely
-needs PIL/ffmpeg (pixel decode of non-MJPEG
-video codec samples — H.264/VP8/VP9/AV1) is STUBBED: each stub
-either raises a clearly-marked NotImplementedError (strict mode) or
-produces a deterministic fake (default) so pipelines remain end-to-end
-runnable.
+Pixel decode is REAL for the formats stdlib+numpy can handle — PNG
+(zlib IDAT + numpy unfiltering), baseline, progressive AND arithmetic
+JPEG (dataops/jpeg.py, dataops/jpeg_arith.py), GIF87a/89a (LZW +
+palettes + interlace, dataops/gif.py), uncompressed 24-bit BMP, binary
+PPM — and so is header-level metadata (PNG/BMP/GIF/JPEG dims, WAV
+fmt/data chunks). Video is demuxed for real down to the codec-sample
+boundary: MP4 (dataops/mp4.py), webm/mkv (dataops/ebml.py) and AVI
+(dataops/avi.py), whose MJPEG frames this repo's JPEG decoder turns into
+pixels. Pixel decode of other video codecs (H.264/VP8/VP9/AV1) needs
+ffmpeg and is out of scope: frame sampling emits their sample bytes.
+
+Error contract (the engine's error-as-value rule, kernels/dispatch.py):
+a payload that no parser recognizes, or whose parser raises ValueError,
+gets the same row its operator gives a NULL payload — null fields, no
+frames — and never fails the job. Nothing is invented in its place.
 
 This mirrors how the reference treats its payloads: opaque bytes plus typed
 metadata, routed by magic bytes (/root/reference/ocr_request.go:9,
@@ -44,8 +38,7 @@ MEDIA_SCHEMA = (
 FEATURE_SCHEMA = (
     "media_id long, media_type string, n_bytes long, sha1 string, "
     "width int, height int, n_frames int, "
-    "sample_rate int, n_channels int, duration_s double, "
-    "feature array<float>"
+    "sample_rate int, n_channels int, duration_s double"
 )
 
 _MAGIC = (
@@ -231,13 +224,13 @@ AUDIO_STATS_SCHEMA = (
 )
 
 
-def audio_stats(media: DataFrame, strict: bool = False) -> DataFrame:
+def audio_stats(media: DataFrame) -> DataFrame:
     """REAL audio analysis over map_rows: decode PCM (decode_wav) and
     reduce to exact integer stats — frame count, first sample, peak
     amplitude, total absolute amplitude — the oracle-checkable slice of
     an audio training pipeline (silence/clipping gates run on exactly
-    these reductions). Non-WAV / non-PCM payloads: strict raises, default
-    emits nulls (rows are kept so joins see every media_id)."""
+    these reductions). Non-WAV, non-PCM and corrupt WAV payloads get
+    null stats (rows are kept so joins see every media_id)."""
 
     def stats(media_id, payload):
         import numpy as np
@@ -247,19 +240,10 @@ def audio_stats(media: DataFrame, strict: bool = False) -> DataFrame:
             try:
                 decoded = decode_wav(bytes(payload))
             except ValueError:
-                # Structurally corrupt WAV (truncated data chunk, bad
-                # sizes): same contract as non-WAV — strict raises,
-                # default emits nulls so one crawl-damaged payload
-                # cannot abort the job.
-                if strict:
-                    raise
+                # structurally corrupt WAV (truncated data chunk, bad
+                # sizes): null stats like any other non-PCM payload
                 decoded = None
         if decoded is None:
-            if strict:
-                raise NotImplementedError(
-                    "audio_stats: payload is not integer-PCM WAV; "
-                    "run with strict=False to emit null stats"
-                )
             return [(media_id, None, None, None, None, None, None)]
         arr, rate = decoded
         amp = np.abs(arr)
@@ -304,99 +288,65 @@ def parse_image_dims(payload: bytes) -> tuple[int, int] | None:
     return None
 
 
-def _decode_stub(payload: bytes, media_type: str, strict: bool):
-    """Metadata comes from real header/container parsing where stdlib
-    allows (parse_image_dims: PNG/BMP/GIF/JPEG; parse_audio_meta: WAV;
-    dataops/mp4.py: MP4 sample tables); everything else is a STUB — real
-    decode needs PIL/ffmpeg, absent in this container.
-
-    Deterministic fake for the stubbed part: dimensions and an 8-dim
-    feature vector derived from the payload's sha1 — stable across
-    runs/executors, so downstream joins and tests behave exactly as they
-    would with a real decoder."""
+def _media_meta(payload: bytes):
+    """(width, height, n_frames, sample_rate, n_channels, duration_s) from
+    real header/container parsing: parse_image_dims (PNG/BMP/GIF/JPEG),
+    parse_audio_meta (WAV) and the MP4/AVI/webm demuxers. A field no
+    parser finds is None; a container whose parser raises ValueError
+    counts as found by none."""
     dims = parse_image_dims(payload)
     audio = parse_audio_meta(payload)
     video = None
-    if bytes(payload[4:8]) == b"ftyp":
-        from open_ocr_spark.dataops.mp4 import parse_mp4
+    try:
+        if bytes(payload[4:8]) == b"ftyp":
+            from open_ocr_spark.dataops.mp4 import parse_mp4
 
-        try:
             video = parse_mp4(payload)
-        except ValueError:
-            if strict:
-                raise
-    elif payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        from open_ocr_spark.dataops.avi import parse_avi
+        elif payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+            from open_ocr_spark.dataops.avi import parse_avi
 
-        try:
             avi = parse_avi(payload)
-        except ValueError:
-            avi = None
-            if strict:
-                raise
-        if avi is not None:
-            video = {
-                "width": avi["width"], "height": avi["height"],
-                "n_samples": avi["n_frames"],
-                "duration_s": avi["duration_s"],
-            }
-    elif payload[:4] == b"\x1a\x45\xdf\xa3":
-        from open_ocr_spark.dataops.ebml import parse_webm
+            if avi is not None:
+                video = {
+                    "width": avi["width"], "height": avi["height"],
+                    "n_samples": avi["n_frames"],
+                    "duration_s": avi["duration_s"],
+                }
+        elif payload[:4] == b"\x1a\x45\xdf\xa3":
+            from open_ocr_spark.dataops.ebml import parse_webm
 
-        try:
             video = parse_webm(payload)
-        except ValueError:
-            if strict:
-                raise
+    except ValueError:
+        video = None
     if video is not None:
-        digest = hashlib.sha1(payload).digest()
         return (
             video["width"] or None, video["height"] or None,
             video["n_samples"], None, None, video["duration_s"],
-            [round(b / 255.0, 6) for b in digest[:8]],
         )
-    if strict and dims is None and audio is None:
-        raise NotImplementedError(
-            "media decode requires PIL/ffmpeg (not installed); "
-            "run with strict=False for the deterministic stub"
-        )
-    digest = hashlib.sha1(payload).digest()
-    if dims is not None:
-        width, height = dims
-    elif audio is not None:
-        width = height = None
-    else:
-        width = 16 + digest[0] % 64
-        height = 16 + digest[1] % 64
+    width, height = dims if dims is not None else (None, None)
     rate, channels, duration = audio if audio is not None else (None,) * 3
-    n_frames = 1 + digest[2] % 8 if media_type.startswith("video") else 1
-    feature = [round(b / 255.0, 6) for b in digest[:8]]
-    return width, height, n_frames, rate, channels, duration, feature
+    n_frames = 1 if dims is not None or audio is not None else None
+    return width, height, n_frames, rate, channels, duration
 
 
-def extract_media_features(
-    media: DataFrame, batch_size_hint: int = 256, strict: bool = False
-) -> DataFrame:
-    """Decode/feature-extract over map_rows: one output batch per Arrow
-    batch, binary column stays opaque until inside the kernel. The plumbing
-    (schema, batch shape, null handling) is production-real; only the pixel
-    decode is stubbed."""
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """Feature extraction over map_rows: one output batch per Arrow
+    batch, the binary column stays opaque until inside the kernel. Every
+    row keeps its media_type, n_bytes and sha1; the dims, frame count and
+    audio/video metadata are what _media_meta's parsers found, NULL
+    where none did."""
 
     def features(media_id, payload, declared):
         if payload is None or len(payload) == 0:
             return [(media_id, declared or "application/octet-stream",
-                     0, "", None, None, None, None, None, None, None)]
+                     0, "", None, None, None, None, None, None)]
         payload = bytes(payload)
-        mtype = declared or sniff_media_type(payload)
-        w, h, nf, rate, chans, dur, feat = _decode_stub(
-            payload, mtype, strict
-        )
         return [(
             media_id,
-            mtype,
+            declared or sniff_media_type(payload),
             len(payload),
             hashlib.sha1(payload).hexdigest(),
-            w, h, nf, rate, chans, dur, feat,
+            *_media_meta(payload),
         )]
 
     cols = ["media_id", "payload", "media_type"]
@@ -704,7 +654,7 @@ def resize_nearest(arr, width: int, height: int):
 
 
 def resize_images(
-    media: DataFrame, width: int = 224, height: int = 224, strict: bool = False
+    media: DataFrame, width: int = 224, height: int = 224
 ) -> DataFrame:
     """Resize stage over map_rows: binary in, binary out, one output
     batch per Arrow batch — the shape a training-data image pipeline needs
@@ -716,56 +666,37 @@ def resize_images(
     binary PPM): decode → numpy nearest-neighbor
     → re-encode in the same container, deterministic (pixel-exact for the
     lossless containers; JPEG re-encodes near-losslessly with all-ones
-    quant tables). Every other format still needs PIL/ffmpeg: strict mode
-    raises per payload; default mode emits the deterministic fake (sha1 of
-    input + target dims) so lineage/schema/batching stay end-to-end
-    runnable. Recognized-but-corrupt payloads (truncated BMP, malformed
-    PPM) follow the same split: strict raises ValueError, default falls
-    to the stub — a single bad crawl payload must never abort the job."""
+    quant tables). Every other format, and a recognized container with a
+    corrupt body (truncated BMP, malformed PPM header), gets the NULL
+    payload's row: (media_id, NULL, NULL, NULL, 0)."""
 
     def resize(media_id, payload):
-        if payload is None or len(payload) == 0:
+        arr = None
+        if payload is not None and len(payload) > 0:
+            payload = bytes(payload)
+            try:
+                arr = decode_pixels(payload)
+            except ValueError:
+                arr = None
+        if arr is None:
             return [(media_id, None, None, None, 0)]
-        payload = bytes(payload)
-        try:
-            arr = decode_pixels(payload)
-        except ValueError:
-            # recognized container, corrupt body (truncated BMP,
-            # malformed PPM header): strict surfaces it, default mode
-            # falls through to the stub so one bad crawl payload
-            # cannot fail the whole job
-            if strict:
-                raise
-            arr = None
-        if arr is not None:
-            out_arr = resize_nearest(arr, width, height)
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                out = encode_png(out_arr)
-            elif payload[:2] == b"\xff\xd8":
-                from open_ocr_spark.dataops.jpeg import encode_jpeg
+        out_arr = resize_nearest(arr, width, height)
+        if payload[:8] == b"\x89PNG\r\n\x1a\n":
+            out = encode_png(out_arr)
+        elif payload[:2] == b"\xff\xd8":
+            from open_ocr_spark.dataops.jpeg import encode_jpeg
 
-                out = encode_jpeg(out_arr)
-            elif payload[:2] == b"P6":
-                out = encode_ppm(out_arr)
-            elif payload[:6] in (b"GIF87a", b"GIF89a"):
-                from open_ocr_spark.dataops.gif import encode_gif
+            out = encode_jpeg(out_arr)
+        elif payload[:2] == b"P6":
+            out = encode_ppm(out_arr)
+        elif payload[:6] in (b"GIF87a", b"GIF89a"):
+            from open_ocr_spark.dataops.gif import encode_gif
 
-                # nearest-neighbor only samples existing pixels, so a
-                # decoded GIF always re-palettizes exactly
-                out = encode_gif(out_arr)
-            else:
-                out = encode_bmp24(out_arr)
-        elif strict:
-            raise NotImplementedError(
-                "resize of this format requires PIL/ffmpeg (not "
-                "installed); only PNG, JPEG, GIF, 24-bit BMP "
-                "and P6 PPM decode natively - run with "
-                "strict=False for the deterministic stub"
-            )
+            # nearest-neighbor only samples existing pixels, so a
+            # decoded GIF always re-palettizes exactly
+            out = encode_gif(out_arr)
         else:
-            out = hashlib.sha1(
-                payload + f"{width}x{height}".encode()
-            ).digest()
+            out = encode_bmp24(out_arr)
         return [(media_id, out, width, height, len(out))]
 
     return map_rows(
@@ -776,9 +707,7 @@ def resize_images(
 FRAME_SCHEMA = "media_id long, frame_idx int, ts_s double, frame binary"
 
 
-def sample_frames(
-    media: DataFrame, fps: float = 1.0, strict: bool = False
-) -> DataFrame:
+def sample_frames(media: DataFrame, fps: float = 1.0) -> DataFrame:
     """Frame sampling: ONE-TO-MANY map_rows — each video row fans out to
     its sampled frames (a row function may return any number of rows, so
     no explode/UDTF is needed). Partitioning carries over from the input,
@@ -787,24 +716,22 @@ def sample_frames(
     REAL path for MP4 (ISO-BMFF) payloads: the container's sample table
     (dataops/mp4.py) gives every codec sample's byte range and decode
     time; each 1/fps tick emits the byte-exact sample whose dts covers
-    the tick, with the tick as ``ts_s``. For MP4 the PIXEL decode of
-    those samples stays stubbed (H.264 etc. needs ffmpeg) — the frame
-    BYTES, timing, and fan-out are real.
+    the tick, with the tick as ``ts_s``. The frames are codec samples, not
+    pixels: decoding H.264 etc. needs ffmpeg.
 
     REAL path for webm/mkv payloads (dataops/ebml.py): the EBML
     Cluster/SimpleBlock walk yields the same byte-exact (offset, size,
     timestamp) sample shape as MP4, fed through the identical
-    covers-the-tick loop; pixel decode of VP8/VP9/AV1 samples stays
-    stubbed, like MP4's codecs.
+    covers-the-tick loop; VP8/VP9/AV1 samples stay undecoded, like
+    MP4's.
 
     REAL path for AVI/MJPEG payloads (dataops/avi.py): every ``00dc``
     chunk is a complete baseline JPEG, so the emitted frame bytes are
     decodable END TO END by this repo's own JPEG decoder — container
-    demux, timing, fan-out AND pixels, no stub anywhere.
+    demux, timing, fan-out AND pixels.
 
-    Other video containers: strict mode raises; default mode keeps the
-    deterministic sha1-derived stub so pipelines stay end-to-end
-    runnable.
+    Any other payload, and a container whose parser raises ValueError,
+    yields no frames, like a NULL payload.
     """
 
     def frames(media_id, payload):
@@ -818,8 +745,7 @@ def sample_frames(
             try:
                 info = parse_mp4(payload)
             except ValueError:
-                if strict:
-                    raise
+                info = None
         elif payload[:4] == b"\x1a\x45\xdf\xa3":
             # webm/mkv: dataops/ebml.py yields the same (offset, size,
             # ts) sample shape as the MP4 walk, so the covers-the-tick
@@ -829,8 +755,7 @@ def sample_frames(
             try:
                 info = parse_webm(payload)
             except ValueError:
-                if strict:
-                    raise
+                info = None
         if info is not None and not info["samples"]:
             # structurally valid video track declaring zero samples:
             # nothing to emit (indexing would crash)
@@ -857,8 +782,7 @@ def sample_frames(
             try:
                 avi = parse_avi(payload)
             except ValueError:
-                if strict:
-                    raise
+                avi = None
         if avi is not None:
             # MJPEG AVI: frame k' covers [k'/fps_src, (k'+1)/fps_src) —
             # same covers-the-tick rule as MP4 dts
@@ -870,18 +794,6 @@ def sample_frames(
                 fi = min(int(tick * avi["fps"] + 1e-9), avi["n_frames"] - 1)
                 off, sz = avi["frames"][fi]
                 yield media_id, k, round(tick, 6), payload[off : off + sz]
-            return
-        if strict:
-            raise NotImplementedError(
-                "frame sampling outside MP4/webm/AVI requires "
-                "ffmpeg/pyav (not installed); run with "
-                "strict=False for the deterministic stub"
-            )
-        digest = hashlib.sha1(payload).digest()
-        n_frames = 1 + digest[2] % 8
-        for i in range(n_frames):
-            frame = hashlib.sha1(payload + bytes([i])).digest()
-            yield media_id, i, round(i / fps, 3), frame
 
     return map_rows(
         media.select("media_id", "payload"), FRAME_SCHEMA, frames

@@ -47,10 +47,9 @@ def dhash_images(
     media: DataFrame,
     img_col: str = "payload",
     out_col: str = "dhash",
-    strict: bool = False,
 ) -> DataFrame:
-    """Adds `out_col`: the 56-bit dHash (null for undecodable payloads,
-    or raise when strict — same error contract as resize_images)."""
+    """Adds `out_col`: the 56-bit dHash, null for a NULL, undecodable or
+    corrupt payload (decode_pixels returns None or raises ValueError)."""
     from pyspark.sql.functions import pandas_udf
 
     def _dhash(payloads):
@@ -60,13 +59,11 @@ def dhash_images(
 
         out = []
         for p in payloads:
-            arr = None if p is None else decode_pixels(bytes(p))
-            if arr is None:
-                if strict:
-                    raise ValueError("undecodable image payload")
-                out.append(None)
-            else:
-                out.append(dhash_value(arr))
+            try:
+                arr = None if p is None else decode_pixels(bytes(p))
+            except ValueError:
+                arr = None
+            out.append(None if arr is None else dhash_value(arr))
         return pd.Series(out, dtype="object")
 
     return media.withColumn(
@@ -78,12 +75,11 @@ def image_near_dup_groups(
     media: DataFrame,
     img_col: str = "payload",
     id_col: str = "doc_id",
-    strict: bool = False,
 ) -> DataFrame:
     """(dhash, n_docs, min_doc, max_doc): perceptual duplicate groups —
     one hash aggregate over the corpus, no pairwise stage."""
     return (
-        dhash_images(media, img_col, "dhash", strict)
+        dhash_images(media, img_col, "dhash")
         .groupBy("dhash")
         .agg(
             F.count("*").cast("long").alias("n_docs"),

@@ -22,7 +22,6 @@ from __future__ import annotations
 from open_ocr_spark.kernels.htmltree import (
     BLOCK_TAGS,
     BOILERPLATE_TAGS,
-    CANDIDATE_TAGS,
     Node,
     collapse_ws,
     parse_html,
@@ -49,18 +48,13 @@ def select_main_node(root: Node) -> Node | None:
     toward the tightest subtree that still holds all the main text — the
     analog of the reference's single text region per document.
 
-    Subtree text/link totals (node.tlen/llen) and the candidate list are
-    built at parse time (root.candidates, document order) — no tree walk
-    here at all, just a scan over the handful of candidate elements."""
+    ``root`` is a parse_html document root: subtree text/link totals
+    (node.tlen/llen) and the candidate list are built at parse time
+    (root.candidates, document order) — no tree walk here at all, just a
+    scan over the handful of candidate elements."""
     best = None
     best_score = 0.0
-    candidates = root.candidates
-    if candidates is None:  # subtree without the parse-time list
-        candidates = (
-            n for n in root.iter()
-            if type(n) is not str and n.tag in CANDIDATE_TAGS
-        )
-    for node in candidates:
+    for node in root.candidates:
         s = _score_from_stats(node.tlen, node.llen)
         if s > best_score:
             best, best_score = node, s

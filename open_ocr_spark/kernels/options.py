@@ -9,9 +9,8 @@ Parity targets in the reference:
   ``config_vars`` (string map, wrong-typed values are errors), ``psm``
   (string), ``lang`` (string); nil engine_args is valid
   (tesseract_engine.go:27-29, tested tesseract_engine_test.go:46-48).
-- CLI export (/root/reference/tesseract_engine.go:79-96):
-  ["-c","k=v",...,"-psm",p,"-l",lang]. Kept for parity tests; the kernel
-  consumes the typed EngineArgs directly.
+- The reference's CLI-flag export (tesseract_engine.go:79-96) has no
+  twin: the kernel consumes the typed EngineArgs directly.
 - Chain order (/root/reference/ocr_request.go:21-31): nextPreprocessor pops
   the LAST element, so a chain executes in REVERSE list order.
 - SWT preprocessor args (/root/reference/stroke_width_transform.go:70-89):
@@ -111,19 +110,6 @@ class EngineArgs:
         of flattened main text. Non-HTML branches (PDF/OOXML/OCR) are
         unaffected: their extractors have no DOM to preserve."""
         return self.config_vars.get("output_format") == "md"
-
-    def export(self) -> list[str]:
-        """CLI-flag export, field order as tesseract_engine.go:79-96:
-        config vars first (sorted for determinism — Go map iteration is
-        random; we freeze a total order), then -psm, then -l."""
-        out: list[str] = []
-        for k in sorted(self.config_vars):
-            out += ["-c", f"{k}={self.config_vars[k]}"]
-        if self.psm:
-            out += ["-psm", self.psm]
-        if self.lang:
-            out += ["-l", self.lang]
-        return out
 
 
 def parse_engine_args(engine_args: dict | None) -> EngineArgs:

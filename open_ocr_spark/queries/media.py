@@ -33,8 +33,9 @@ def q_binary_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE_NONE: Arrow-batched feature-extraction plumbing with the
-    deterministic decode stub. Rows-only check, no sort — a sort above
+    """ORACLE_NONE: Arrow-batched feature-extraction plumbing over the
+    documents' text bytes: real n_bytes and sha1, NULL dims (no header
+    parser recognizes text). Rows-only check, no sort — a sort above
     the Python stage would run it twice (range-sampling pass)."""
     from open_ocr_spark.dataops.multimodal import extract_media_features
 
@@ -56,7 +57,7 @@ def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel base values are a formula of its group (doc_id % 17) plus a
     per-document LOW-BIT noise term that dHash must ignore — base values
     are doubled so a +-1 noise can never flip a neighbor comparison.
-    The kernel decodes the real BMP bytes (strict=True), grayscales,
+    The kernel decodes the real BMP bytes, grayscales,
     and hashes; the oracle recomputes each group's 56 comparison bits
     straight from the generation formula in SQL.  Same-pixel PNG/BMP
     agreement and block-mean downsampling exactness are pinned in
@@ -77,19 +78,25 @@ def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     media = twin_payloads(docs, build)
-    return image_near_dup_groups(media, strict=True).orderBy("dhash")
+    return image_near_dup_groups(media).orderBy("dhash")
 
 
 def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE_NONE: one-to-many frame-sampling plumbing (the kernel fans
-    each payload out to its deterministic stub frames)."""
+    """ORACLE_NONE: one-to-many frame-sampling plumbing: each document's
+    text, cut into the 256-byte frames of a 1 fps webm, fans out to one
+    row per frame. An empty or NULL text stays a raw payload, which no
+    demuxer recognizes, so it yields no frames."""
     from open_ocr_spark.dataops.multimodal import sample_frames
 
-    docs = _t(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-    )
+    def build(i: int, text: str | None) -> bytes:
+        from open_ocr_spark.dataops.ebml import build_webm
+
+        raw = (text or "").encode()
+        chunks = [raw[k : k + 256] for k in range(0, len(raw), 256)]
+        return build_webm(chunks, 64, 48, fps=1.0) if chunks else raw
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    media = twin_payloads(docs, build).withColumnRenamed("doc_id", "media_id")
     return sample_frames(media).select(
         "media_id", "frame_idx", "ts_s", F.octet_length("frame").alias("n_bytes")
     )
@@ -99,12 +106,12 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel path, oracle-checked end-to-end (VERDICT r2 item 10):
     each document becomes a 2x2 24-bit BMP whose four pixel values are
     formulas of doc_id (built by the writer-twin scaffold), resized
-    2x by the numpy nearest-neighbor path (strict=True — no stub can
-    leak in), and the four CORNERS of the 4x4 output are read back with
-    pure-Catalyst byte arithmetic on the BMP layout (54-byte header +
-    bottom-up rows, stride 12). Nearest-neighbor 2x replicates each source
-    pixel into a 2x2 block, so corner k must equal source pixel k — the
-    oracle recomputes the formulas in SQL."""
+    2x by the numpy nearest-neighbor path (an undecoded payload would be
+    a NULL row and break the hash), and the four CORNERS of the 4x4
+    output are read back with pure-Catalyst byte arithmetic on the BMP
+    layout (54-byte header + bottom-up rows, stride 12). Nearest-neighbor
+    2x replicates each source pixel into a 2x2 block, so corner k must
+    equal source pixel k — the oracle recomputes the formulas in SQL."""
     from open_ocr_spark.dataops.multimodal import resize_images
 
     def build(i: int) -> bytes:
@@ -122,7 +129,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         return encode_bmp24(arr)
 
     media = _twin_media(spark, sf_dir, build)
-    resized = resize_images(media, 4, 4, strict=True)
+    resized = resize_images(media, 4, 4)
 
     def px(pos_1based: int):
         # one channel of a pixel as an int (all three are equal by design)
@@ -144,7 +151,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG codec (dataops PNG decode + encode) through the driver gate:
     each document becomes a 2x2 truecolor PNG whose pixels are formulas of
-    doc_id, resized 2x by the real pixel path (strict=True), and the
+    doc_id, resized 2x by the real pixel path, and the
     resized payload — itself a PNG — is decoded back in a second Arrow
     kernel to read the four corners. PNG is lossless, so the oracle's SQL
     formulas must match exactly; a bug in EITHER the encoder or the
@@ -165,7 +172,7 @@ def q_media_resize_png(spark: SparkSession, sf_dir: str) -> DataFrame:
         return encode_png(arr)
 
     media = _twin_media(spark, sf_dir, build)
-    resized = resize_images(media, 4, 4, strict=True)
+    resized = resize_images(media, 4, 4)
 
     def _corners(mid, payload):
         from open_ocr_spark.dataops.multimodal import decode_pixels
@@ -187,7 +194,7 @@ def q_media_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline JPEG codec (dataops/jpeg.py) through the driver gate: each
     document becomes an 8x16 grayscale JPEG of two flat 8x8 blocks whose
     gray levels are formulas of doc_id, resized to 8x8 by the real pixel
-    path (strict=True; decode -> nearest-neighbor -> re-encode as JPEG),
+    path (decode -> nearest-neighbor -> re-encode as JPEG),
     and the resized JPEG is decoded back to read one pixel per source
     block. With all-ones quant tables, flat gray blocks survive BOTH
     encode/decode round trips exactly (DC is the only nonzero
@@ -208,7 +215,7 @@ def q_media_resize_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         return encode_jpeg(arr, grayscale=True)
 
     media = _twin_media(spark, sf_dir, build)
-    resized = resize_images(media, 8, 8, strict=True)
+    resized = resize_images(media, 8, 8)
 
     def _pixels(mid, payload, w, h):
         from open_ocr_spark.dataops.jpeg import decode_jpeg
@@ -255,7 +262,7 @@ def q_media_resize_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFra
         return encode_jpeg_progressive(arr, grayscale=True)
 
     media = _twin_media(spark, sf_dir, build)
-    resized = resize_images(media, 8, 8, strict=True)
+    resized = resize_images(media, 8, 8)
 
     def _pixels(mid, payload, w, h):
         import numpy as np
@@ -316,7 +323,7 @@ def q_media_resize_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         return encode_jpeg_arith(arr, grayscale=True)
 
     media = _twin_media(spark, sf_dir, build)
-    resized = resize_images(media, 8, 8, strict=True)
+    resized = resize_images(media, 8, 8)
 
     def _pixels(mid, payload, w, h):
         import numpy as np
@@ -349,8 +356,8 @@ def q_media_resize_jpeg_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_frame_sample_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ISO-BMFF demux (dataops/mp4.py) through the driver gate: each
     document becomes a real MP4 with 1 + doc_id%4 one-second video
-    samples whose bytes are doc_id-formulas, and sample_frames
-    (strict=True — the REAL container path, no stub) must emit every
+    samples whose bytes are doc_id-formulas, and sample_frames (the
+    REAL container path) must emit every
     sample byte-exactly with its true timestamp. A wrong stsz/stco/stsc
     interpretation, a broken tick->sample mapping or a bad mdat offset
     changes first_byte/frame_len/ts_s and breaks the hash."""
@@ -367,7 +374,7 @@ def q_media_frame_sample_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
         return mux_mp4(samples, 64, 48, timescale=600, sample_delta=600)
 
     media = _twin_media(spark, sf_dir, build)
-    frames = sample_frames(media, fps=1.0, strict=True)
+    frames = sample_frames(media, fps=1.0)
     return frames.select(
         F.col("media_id").alias("doc_id"),
         F.col("frame_idx"),
@@ -385,7 +392,7 @@ def q_media_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-pass order), 32-entry palette, a graphic-control extension marking
     index 16 transparent, and a transparent pixel at display (1,1) that
     must resolve to the background-index color.  The real pixel path
-    (strict=True) decodes it, 2x-downsamples (sampling display pixels
+    decodes it, 2x-downsamples (sampling display pixels
     (1,1),(1,3),(3,1),(3,3)), re-encodes as GIF (exact re-palettization),
     and a second kernel decodes THAT to read the four survivors.  A wrong
     LZW width bump, interlace row map, transparency/bg rule or palette
@@ -424,7 +431,7 @@ def q_media_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     media = _twin_media(spark, sf_dir, build)
-    resized = resize_images(media, 2, 2, strict=True)
+    resized = resize_images(media, 2, 2)
 
     def _corners(mid, payload):
         from open_ocr_spark.dataops.multimodal import decode_pixels
@@ -444,9 +451,9 @@ def q_media_resize_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_media_frame_sample_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first FULLY real video path — container demux AND pixel
-    decode, no stub at any stage: each document becomes an MJPEG AVI
+    decode, real at every stage: each document becomes an MJPEG AVI
     (dataops/avi.py) of 1 + doc_id%3 flat-gray 8x8 baseline-JPEG frames
-    at 2 fps, sample_frames (strict=True) must emit each frame's exact
+    at 2 fps, sample_frames must emit each frame's exact
     JPEG bytes at its true tick, and a second kernel decodes those bytes
     with the repo's own JPEG decoder (dataops/jpeg.py) to read the gray
     level back.  Flat blocks with all-ones quant tables survive the
@@ -473,7 +480,7 @@ def q_media_frame_sample_avi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _twin_media(spark, sf_dir, build)
     # sampling at the source rate: every frame exactly once, ts = k/2
-    frames = sample_frames(media, fps=2.0, strict=True)
+    frames = sample_frames(media, fps=2.0)
 
     def _gray(mid, k, ts, frame):
         from open_ocr_spark.dataops.jpeg import decode_jpeg
@@ -494,8 +501,8 @@ def q_media_frame_sample_webm(spark: SparkSession, sf_dir: str) -> DataFrame:
     each document becomes a real webm — EBML header, Info with a 1 ms
     TimestampScale and float Duration, a VP9-tagged video TrackEntry,
     one Cluster per frame — carrying 1 + doc_id%3 codec samples whose
-    bytes are doc_id-formulas, and sample_frames (strict=True — the
-    REAL container path, no stub) must emit every sample byte-exactly
+    bytes are doc_id-formulas, and sample_frames (the REAL container
+    path) must emit every sample byte-exactly
     with its true cluster timestamp.  A vint-width bug, a wrong
     TimestampScale application, a missed Cluster boundary or a
     SimpleBlock-header miscount changes first_byte/frame_len/ts_s and
@@ -514,7 +521,7 @@ def q_media_frame_sample_webm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _twin_media(spark, sf_dir, build)
     # sampling at the source rate: every block exactly once, ts = k/2
-    frames = sample_frames(media, fps=2.0, strict=True)
+    frames = sample_frames(media, fps=2.0)
     return frames.select(
         F.col("media_id").alias("doc_id"),
         F.col("frame_idx"),
@@ -528,8 +535,8 @@ def q_media_frame_sample_webm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_audio_stats_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real PCM decode (decode_wav) through the driver gate: each document
     becomes a mono 16-bit WAV of 4 + doc_id%5 formula samples and
-    audio_stats (strict=True — real decode only) must reproduce the exact
-    integer reductions. The oracle recomputes frame count, first sample,
+    audio_stats (real decode; a non-PCM payload is a null row) must
+    reproduce the exact integer reductions. The oracle recomputes frame count, first sample,
     peak and total absolute amplitude from the same formulas with a
     range join + aggregation — a byte-order, channel-shape or chunk-walk
     bug changes the integers."""
@@ -549,7 +556,7 @@ def q_audio_stats_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _twin_media(spark, sf_dir, build)
     return (
-        audio_stats(media, strict=True)
+        audio_stats(media)
         .withColumnRenamed("media_id", "doc_id")
         .orderBy("doc_id")
     )
@@ -740,7 +747,7 @@ def q_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _twin_media(spark, sf_dir, build)
     return (
-        exif_metadata(media, strict=False)
+        exif_metadata(media)
         .withColumnRenamed("media_id", "doc_id")
         .orderBy("doc_id")
     )
@@ -812,7 +819,7 @@ def q_exif_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _twin_media(spark, sf_dir, build)
     return (
-        gps_scrub_report(media, strict=False)
+        gps_scrub_report(media)
         .withColumnRenamed("media_id", "doc_id")
         .orderBy("doc_id")
     )

@@ -98,7 +98,8 @@ def fetch_url_payloads(requests: DataFrame, url_col: str = "url") -> DataFrame:
             except (ValueError, binascii.Error) as exc:
                 return None, f"bad data url: {exc}"
         if url.startswith("file://"):
-            path = urllib.parse.urlparse(url).path
+            # RFC 8089 paths are percent-encoded (Path.as_uri() output)
+            path = urllib.parse.unquote(urllib.parse.urlparse(url).path)
             try:
                 with open(path, "rb") as f:
                     return f.read(), None

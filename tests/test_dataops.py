@@ -278,31 +278,26 @@ def test_media_features_plumbing(spark):
     got = {r["media_id"]: r for r in extract_media_features(media).collect()}
     assert got[0]["media_type"] == "image/png"
     assert got[0]["n_bytes"] == 12 and len(got[0]["sha1"]) == 40
-    assert got[0]["width"] >= 16 and got[0]["feature"] is not None
+    assert got[0]["width"] is None  # truncated header: no dims invented
     assert got[2]["n_bytes"] == 0 and got[2]["width"] is None
     # determinism across invocations
     again = {r["media_id"]: r for r in extract_media_features(media).collect()}
-    assert got[0]["feature"] == again[0]["feature"]
-
-
-def test_media_strict_mode_raises(spark):
-    media = spark.createDataFrame(
-        [(0, b"\x89PNGxxxx", None, None)],
-        "media_id long, payload binary, media_type string, meta map<string,string>",
-    )
-    with pytest.raises(Exception):
-        extract_media_features(media, strict=True).collect()
+    assert got == again
 
 
 def test_resize_images_deterministic(spark):
-    from open_ocr_spark.dataops.multimodal import resize_images
+    import numpy as np
 
+    from open_ocr_spark.dataops.multimodal import encode_png, resize_images
+
+    png = encode_png(np.arange(48, dtype=np.uint8).reshape(4, 4, 3))
     media = spark.createDataFrame(
-        [(0, b"\x89PNGxxxxxxxx"), (1, b""), (2, None)],
+        [(0, png), (1, b""), (2, None)],
         "media_id long, payload binary",
     )
     got = {r["media_id"]: r for r in resize_images(media, 32, 32).collect()}
-    assert got[0]["width"] == 32 and got[0]["n_bytes"] == 20
+    assert got[0]["width"] == 32
+    assert got[0]["n_bytes"] == len(got[0]["payload"]) > 0
     assert got[1]["payload"] is None and got[2]["payload"] is None
     again = {r["media_id"]: r for r in resize_images(media, 32, 32).collect()}
     assert bytes(got[0]["payload"]) == bytes(again[0]["payload"])
@@ -333,7 +328,7 @@ def test_resize_images_bmp_pixel_exact(spark):
     media = spark.createDataFrame(
         [(0, bmp)], "media_id long, payload binary"
     )
-    row = resize_images(media, 4, 4, strict=True).collect()[0]
+    row = resize_images(media, 4, 4).collect()[0]
     out = decode_pixels(bytes(row["payload"]))
     assert out.shape == (4, 4, 3)
     want = src.repeat(2, axis=0).repeat(2, axis=1)
@@ -358,20 +353,10 @@ def test_resize_images_ppm_and_downscale(spark):
     media = spark.createDataFrame(
         [(0, ppm)], "media_id long, payload binary"
     )
-    row = resize_images(media, 2, 2, strict=True).collect()[0]
+    row = resize_images(media, 2, 2).collect()[0]
     assert bytes(row["payload"])[:2] == b"P6"
     out = decode_pixels(bytes(row["payload"]))
     assert np.array_equal(out, src[[1, 3]][:, [1, 3]])
-
-
-def test_resize_images_strict_still_raises_for_undecodable(spark):
-    from open_ocr_spark.dataops.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [(0, b"\x89PNGxxxxxxxx")], "media_id long, payload binary"
-    )
-    with pytest.raises(Exception):
-        resize_images(media, 8, 8, strict=True).collect()
 
 
 def test_decode_pixels_edge_cases():
@@ -389,10 +374,10 @@ def test_decode_pixels_edge_cases():
     with _pytest.raises(ValueError, match="truncated"):
         decode_pixels(bmp[:-4])
     # GIF is a recognized format since r4: a truncated header is an
-    # error, not a silent stub fallthrough
+    # error, not a silent None
     with _pytest.raises(ValueError, match="gif"):
         decode_pixels(b"GIF89a\x01\x00\x01\x00")
-    # genuinely foreign bytes: None (stub path decides what to do)
+    # genuinely foreign bytes: None (the operators emit a null row)
     assert decode_pixels(b"\x00\x01no such format") is None
     # CRLF after maxval = text-mode-written file: a naive single-byte
     # skip would decode every pixel one byte off — must refuse
@@ -402,28 +387,6 @@ def test_decode_pixels_edge_cases():
     # missing separator after maxval
     with _pytest.raises(ValueError, match="missing whitespace"):
         decode_pixels(b"P6 5 3 255")
-
-
-def test_resize_images_corrupt_payload_stub_vs_strict(spark):
-    """A recognized-but-corrupt payload (truncated BMP) must NOT abort a
-    default-mode job: it falls to the deterministic stub like an
-    undecodable format. Strict mode surfaces the ValueError."""
-    import hashlib
-
-    import numpy as np
-
-    from open_ocr_spark.dataops.multimodal import encode_bmp24, resize_images
-
-    src = np.full((3, 5, 3), 7, dtype=np.uint8)
-    corrupt = encode_bmp24(src)[:-4]
-    media = spark.createDataFrame(
-        [(0, corrupt)], "media_id long, payload binary"
-    )
-    row = resize_images(media, 8, 8).collect()[0]
-    want = hashlib.sha1(corrupt + b"8x8").digest()
-    assert bytes(row["payload"]) == want
-    with pytest.raises(Exception):
-        resize_images(media, 8, 8, strict=True).collect()
 
 
 def _png_forward_filter(src, filter_types):
@@ -531,8 +494,8 @@ def test_png_color_types():
 
 
 def test_png_out_of_scope_and_corrupt():
-    """16-bit and interlaced PNGs are valid-but-unsupported (None -> stub
-    path); structural corruption raises ValueError."""
+    """16-bit and interlaced PNGs are valid-but-unsupported (None -> null
+    row); structural corruption raises ValueError."""
     import struct
     import zlib
 
@@ -643,7 +606,7 @@ def test_resize_images_png_pixel_exact(spark):
     )
     png = encode_png(src)
     media = spark.createDataFrame([(0, png)], "media_id long, payload binary")
-    row = resize_images(media, 4, 4, strict=True).collect()[0]
+    row = resize_images(media, 4, 4).collect()[0]
     out_bytes = bytes(row["payload"])
     assert out_bytes[:8] == b"\x89PNG\r\n\x1a\n"
     out = decode_pixels(out_bytes)
@@ -651,10 +614,12 @@ def test_resize_images_png_pixel_exact(spark):
 
 
 def test_sample_frames_one_to_many(spark):
+    from open_ocr_spark.dataops.ebml import build_webm
     from open_ocr_spark.dataops.multimodal import sample_frames
 
+    webm = build_webm([b"f0", b"f1"], 16, 16, fps=1.0)
     media = spark.createDataFrame(
-        [(0, b"\x1a\x45\xdf\xa3video-bytes"), (1, None)],
+        [(0, webm), (1, None)],
         "media_id long, payload binary",
     )
     rows = sample_frames(media, fps=2.0).collect()
@@ -669,6 +634,104 @@ def test_sample_frames_one_to_many(spark):
     again = sample_frames(media.repartition(5), fps=2.0).collect()
     assert sorted((r["media_id"], r["frame_idx"], bytes(r["frame"])) for r in rows) == \
         sorted((r["media_id"], r["frame_idx"], bytes(r["frame"])) for r in again)
+
+
+def _corrupt_media() -> dict[str, bytes]:
+    """One undecodable payload per container the media operators read."""
+    import struct
+
+    import numpy as np
+
+    from open_ocr_spark.dataops.avi import build_avi
+    from open_ocr_spark.dataops.gif import encode_gif
+    from open_ocr_spark.dataops.jpeg import encode_jpeg
+    from open_ocr_spark.dataops.mp4 import mux_mp4
+    from open_ocr_spark.dataops.multimodal import (
+        encode_bmp24,
+        encode_png,
+        encode_ppm,
+    )
+
+    arr = np.arange(72, dtype=np.uint8).reshape(4, 6, 3)  # 6x4 image
+    jpeg = encode_jpeg(arr)
+    fmt = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)  # IEEE float
+    body = (b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", 16) + b"\x00" * 16)
+    return {
+        "png": encode_png(arr)[:-20],
+        "bmp": encode_bmp24(arr)[:-4],
+        "ppm": encode_ppm(arr)[:-4],
+        "gif": encode_gif(arr)[:-6],
+        "jpeg": jpeg[:-30],
+        "wav_float": b"RIFF" + struct.pack("<I", len(body)) + body,
+        "mp4": mux_mp4([b"frame"], 16, 16)[:-6],
+        "ebml": b"\x1a\x45\xdf\xa3webm-ish",
+        "avi": build_avi([jpeg], 6, 4, fps=2.0)[:-10],
+        "jpeg_no_exif": jpeg,
+        "foreign": b"\x00\x01no such format",
+    }
+
+
+_IMAGE_KINDS = ("png", "bmp", "ppm", "gif", "jpeg", "foreign")
+_EXIF_KINDS = ("jpeg", "jpeg_no_exif", "foreign")
+_KINDS_READ = {  # operator -> the corrupt payloads of the containers it reads
+    "dhash_images": _IMAGE_KINDS,
+    "image_near_dup_groups": _IMAGE_KINDS,
+    "resize_images": _IMAGE_KINDS,
+    "audio_stats": ("wav_float", "foreign"),
+    "extract_media_features": ("png", "bmp", "gif", "jpeg", "wav_float",
+                               "mp4", "ebml", "avi", "foreign"),
+    "sample_frames": ("mp4", "ebml", "avi", "foreign"),
+    "exif_metadata": _EXIF_KINDS,
+    "gps_scrub_report": _EXIF_KINDS,
+}
+
+
+@pytest.mark.parametrize("op", list(_KINDS_READ))
+def test_undecodable_media_is_a_null_row(spark, op):
+    """A payload no parser decodes gets the row a NULL payload gets:
+    nulls, no frames, no invented pixels or dims, and the job succeeds.
+    extract_media_features keeps only what a header parser found."""
+    import hashlib
+
+    from open_ocr_spark.dataops import exif, multimodal, phash
+
+    payloads = _corrupt_media()
+    kinds = _KINDS_READ[op]
+    n = len(kinds)
+    media = spark.createDataFrame(
+        [(i, payloads[k], None) for i, k in enumerate(kinds)],
+        "media_id long, payload binary, media_type string",
+    )
+
+    def nulls(width):
+        return [(i,) + (None,) * width for i in range(n)]
+
+    image_dims = (6, 4, 1, None, None, None)
+    meta = {"png": image_dims, "bmp": image_dims, "gif": image_dims,
+            "jpeg": image_dims, "wav_float": (None, None, 1, 8000, 1, 0.0005)}
+    run, want = {
+        "dhash_images": (
+            lambda m: phash.dhash_images(m).select("media_id", "dhash"),
+            nulls(1)),
+        "image_near_dup_groups": (
+            lambda m: phash.image_near_dup_groups(m, id_col="media_id"),
+            [(None, n, 0, n - 1)]),
+        "resize_images": (
+            multimodal.resize_images,
+            [(i, None, None, None, 0) for i in range(n)]),
+        "audio_stats": (multimodal.audio_stats, nulls(6)),
+        "extract_media_features": (
+            multimodal.extract_media_features,
+            [(i, multimodal.sniff_media_type(payloads[k]), len(payloads[k]),
+              hashlib.sha1(payloads[k]).hexdigest(),
+              *meta.get(k, (None,) * 6)) for i, k in enumerate(kinds)]),
+        "sample_frames": (multimodal.sample_frames, []),
+        "exif_metadata": (exif.exif_metadata, nulls(11)),
+        "gps_scrub_report": (exif.gps_scrub_report, nulls(7)),
+    }[op]
+    got = sorted((tuple(r) for r in run(media).collect()), key=lambda r: r[0])
+    assert got == want
 
 
 def test_binary_stats_jvm_only(spark):
@@ -952,9 +1015,6 @@ def test_media_features_use_real_png_dims(spark):
     )
     row = extract_media_features(df).collect()[0]
     assert (row["width"], row["height"]) == (800, 600)
-    # strict mode succeeds for parseable headers
-    row2 = extract_media_features(df, strict=True).collect()[0]
-    assert (row2["width"], row2["height"]) == (800, 600)
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -1160,7 +1220,7 @@ def test_media_features_audio_fields(spark):
         [(1, bytearray(wav), None, {})],
         "media_id long, payload binary, media_type string, meta map<string,string>",
     )
-    row = extract_media_features(df, strict=True).collect()[0]
+    row = extract_media_features(df).collect()[0]
     assert row["media_type"] == "audio/wav"
     assert row["sample_rate"] == 8000
     assert row["n_channels"] == 1
@@ -1257,16 +1317,10 @@ def test_audio_stats_real_path_spark(spark):
     assert rows[1]["sum_abs"] == 100
     assert rows[1]["sample_rate"] == 16000
     assert rows[2]["n_samples"] is None  # kept, nulled
-    # strict mode surfaces the undecodable payload
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="PCM"):
-        audio_stats(df, strict=True).collect()
 
 
 def test_audio_stats_truncated_wav_is_null_not_fatal(spark):
     import numpy as np
-    import pytest as _pytest
 
     from open_ocr_spark.dataops.multimodal import audio_stats, encode_wav
 
@@ -1278,8 +1332,6 @@ def test_audio_stats_truncated_wav_is_null_not_fatal(spark):
     rows = {r["media_id"]: r for r in audio_stats(df).collect()}
     assert rows[1]["n_samples"] == 4
     assert rows[2]["n_samples"] is None  # null row, job green
-    with _pytest.raises(Exception, match="overrun"):
-        audio_stats(df, strict=True).collect()
 
 
 def test_stratified_sample_exact_matches_manual(spark):

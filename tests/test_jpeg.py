@@ -131,8 +131,8 @@ def test_decode_pixels_dispatches_jpeg():
 
 def test_resize_kernel_jpeg_real_path(spark):
     """decode -> nearest-neighbor -> re-encode as JPEG inside the
-    mapInPandas kernel, strict=True so no stub can leak in; the output
-    payload must itself decode to the expected resized pixels."""
+    map_rows kernel; the output payload must itself decode to the
+    expected resized pixels."""
     from open_ocr_spark.dataops.multimodal import resize_images
 
     src = np.repeat(
@@ -142,7 +142,7 @@ def test_resize_kernel_jpeg_real_path(spark):
     df = spark.createDataFrame(
         [(1, bytearray(encode_jpeg(src)))], "media_id long, payload binary"
     )
-    row = resize_images(df, 8, 8, strict=True).collect()[0]
+    row = resize_images(df, 8, 8).collect()[0]
     out = decode_jpeg(bytes(row["payload"]))
     assert row["width"] == 8 and row["height"] == 8
     assert out.shape == (8, 8, 3)

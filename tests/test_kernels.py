@@ -58,9 +58,6 @@ def test_engine_args_full():
     assert args.config_vars == {"tessedit_char_whitelist": "0123456789"}
     assert args.psm == "0"
     assert args.lang == "jpn"
-    assert args.export() == [
-        "-c", "tessedit_char_whitelist=0123456789", "-psm", "0", "-l", "jpn",
-    ]
 
 
 def test_engine_args_absent_is_valid():

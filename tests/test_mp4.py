@@ -59,7 +59,7 @@ def test_sniff_and_features_mp4(spark):
         [(1, bytearray(mp4), None)],
         "media_id long, payload binary, media_type string",
     )
-    row = extract_media_features(df, strict=True).collect()[0]
+    row = extract_media_features(df).collect()[0]
     assert row["media_type"] == "video/mp4"
     assert (row["width"], row["height"]) == (128, 96)
     assert row["n_frames"] == 3
@@ -77,7 +77,7 @@ def test_sample_frames_real_mp4(spark):
         [(7, bytearray(payload))], "media_id long, payload binary"
     )
     rows = sorted(
-        sample_frames(df, fps=2.0, strict=True).collect(),
+        sample_frames(df, fps=2.0).collect(),
         key=lambda r: r["frame_idx"],
     )
     assert [bytes(r["frame"]) for r in rows] == [
@@ -85,42 +85,13 @@ def test_sample_frames_real_mp4(spark):
     ]
     assert [r["ts_s"] for r in rows] == [0.0, 0.5, 1.0, 1.5, 2.0, 2.5]
     # fps=1 -> one tick per sample
-    rows = sample_frames(df, fps=1.0, strict=True).collect()
+    rows = sample_frames(df, fps=1.0).collect()
     assert len(rows) == 3
-
-
-def test_sample_frames_strict_still_raises_for_unknown_container(spark):
-    from open_ocr_spark.dataops.multimodal import sample_frames
-
-    # a container this repo has no demuxer for (EBML/webm became a real
-    # path in r4, so the example payload is a made-up format now)
-    df = spark.createDataFrame(
-        [(1, bytearray(b"\x00\x01no-such-container"))],
-        "media_id long, payload binary",
-    )
-    with pytest.raises(Exception, match="ffmpeg"):
-        sample_frames(df, strict=True).collect()
-    # default mode: deterministic stub fan-out still works
-    assert len(sample_frames(df, strict=False).collect()) >= 1
-
-
-def test_sample_frames_corrupt_webm_strict_vs_default(spark):
-    from open_ocr_spark.dataops.multimodal import sample_frames
-
-    # EBML magic but structurally broken: strict surfaces the parse
-    # error; default falls back to the deterministic stub
-    df = spark.createDataFrame(
-        [(1, bytearray(b"\x1a\x45\xdf\xa3webm-ish"))],
-        "media_id long, payload binary",
-    )
-    with pytest.raises(Exception, match="ebml"):
-        sample_frames(df, strict=True).collect()
-    assert len(sample_frames(df, strict=False).collect()) >= 1
 
 
 def test_corrupt_tables_normalize_to_valueerror():
     """struct.error from short sample-table buffers must surface as
-    ValueError — the one exception non-strict kernels route to
+    ValueError — the one exception the kernels route to
     error-as-value (a crawl payload must never kill the job with an
     unexpected type)."""
     mp4 = mux_mp4([b"abc", b"de"], 8, 8)
@@ -183,7 +154,7 @@ def _zero_sample_mp4() -> bytes:
 def test_zero_sample_track_parses_and_samples_no_frames(spark):
     """n_samples=0 with nonzero duration is valid-but-empty: parse_mp4
     returns an empty sample list and sample_frames emits no rows instead
-    of crashing the kernel with an IndexError (even in strict mode)."""
+    of crashing the kernel with an IndexError."""
     from open_ocr_spark.dataops.multimodal import sample_frames
 
     payload = _zero_sample_mp4()
@@ -194,7 +165,7 @@ def test_zero_sample_track_parses_and_samples_no_frames(spark):
     df = spark.createDataFrame(
         [(3, bytearray(payload))], "media_id long, payload binary"
     )
-    assert sample_frames(df, fps=2.0, strict=True).collect() == []
+    assert sample_frames(df, fps=2.0).collect() == []
 
 
 def test_stsc_first_run_not_at_chunk_one_raises():

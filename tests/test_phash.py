@@ -1,8 +1,7 @@
 """dHash perceptual hashing: reference bits, brightness invariance,
-downsampling exactness, null/strict contract."""
+downsampling exactness, null contract."""
 
 import numpy as np
-import pytest
 
 from open_ocr_spark.dataops.multimodal import encode_bmp24, encode_png
 from open_ocr_spark.dataops.phash import (
@@ -52,7 +51,7 @@ def test_dhash_images_decodes_and_groups(spark):
 
     rows = [(i, img(i % 3, i)) for i in range(12)]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = image_near_dup_groups(df, strict=True).collect()
+    out = image_near_dup_groups(df).collect()
     assert len(out) == 3
     assert sorted(r.n_docs for r in out) == [4, 4, 4]
     # png encoding of the same pixels lands in the same group
@@ -62,15 +61,13 @@ def test_dhash_images_decodes_and_groups(spark):
         "doc_id long, payload binary",
     )
     bmp_hash = {r.min_doc % 3: r.dhash for r in out}
-    png_hash = dhash_images(png_df, strict=True).collect()[0].dhash
+    png_hash = dhash_images(png_df).collect()[0].dhash
     assert png_hash == bmp_hash[0]
 
 
-def test_dhash_null_and_strict(spark):
+def test_dhash_null(spark):
     df = spark.createDataFrame(
         [(1, None), (2, b"not an image")], "doc_id long, payload binary"
     )
     got = {r.doc_id: r.dhash for r in dhash_images(df).collect()}
     assert got == {1: None, 2: None}
-    with pytest.raises(Exception):
-        dhash_images(df, strict=True).collect()

@@ -208,3 +208,17 @@ def test_fetch_data_and_file_urls(spark, tmp_path):
     assert got[6]["html"] is None and "bad data url" in got[6]["fetch_error"]
     # passthrough column survives
     assert got[3]["doc_id"] == 3
+
+
+def test_fetch_file_url_percent_encoded_path(spark, tmp_path):
+    # RFC 8089 file URLs percent-encode the path, as Path.as_uri() does:
+    # the space and the non-ASCII name must be decoded before open()
+    from open_ocr_spark.sources import fetch_url_payloads
+
+    f = tmp_path / "a page é.html"
+    f.write_bytes(b"<html>spaced</html>")
+    assert "%20" in f.as_uri()
+    df = spark.createDataFrame([(f.as_uri(), 1)], "url string, doc_id long")
+    row = fetch_url_payloads(df).collect()[0]
+    assert row["fetch_error"] is None
+    assert bytes(row["html"]) == b"<html>spaced</html>"

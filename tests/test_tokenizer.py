@@ -284,3 +284,27 @@ def test_no_second_html_tokenizer():
         if word in path.read_text(encoding="utf-8")
     ]
     assert hits == []
+
+
+def test_no_strict_switch_or_stub_raise():
+    """Undecodable input is a null row, not a per-call mode: no function
+    takes a ``strict`` parameter, and no dataops operator raises
+    NotImplementedError in place of a result."""
+    import ast
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "open_ocr_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg)
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.Lambda)):
+                a = node.args
+                if "strict" in [p.arg for p in a.posonlyargs + a.args
+                                + a.kwonlyargs]:
+                    hits.append(f"{rel}:{node.lineno}: strict parameter")
+            elif isinstance(node, ast.Raise) and rel.parts[0] == "dataops":
+                exc = node.exc.func if isinstance(node.exc, ast.Call) else node.exc
+                if isinstance(exc, ast.Name) and exc.id == "NotImplementedError":
+                    hits.append(f"{rel}:{node.lineno}: NotImplementedError")
+    assert hits == []
