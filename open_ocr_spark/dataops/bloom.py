@@ -59,21 +59,21 @@ def bloom_build(keys: DataFrame, col: str, m_bits: int = 16384, k: int = 5):
 def bloom_members(
     probes: DataFrame,
     col: str,
-    bits: DataFrame,
+    set_bits: DataFrame,
     m_bits: int = 16384,
     k: int = 5,
 ) -> DataFrame:
     """(key,): probe keys the filter claims as members (true members
-    plus deterministic false positives).  The bits side broadcasts;
-    membership = all k positions present (duplicate positions from a
-    hash collision are either all present or all absent, so count==k
-    stays exact)."""
+    plus deterministic false positives).  The ``set_bits`` side (the
+    filter's bit rows) broadcasts; membership = all k positions present
+    (duplicate positions from a hash collision are either all present or
+    all absent, so count==k stays exact)."""
     pos = probes.select(
         F.col(col).alias("key"),
         F.explode(bloom_positions(F.col(col), m_bits, k)).alias("bit"),
     )
     return (
-        pos.join(F.broadcast(bits), "bit")
+        pos.join(F.broadcast(set_bits), "bit")
         .groupBy("key")
         .agg(F.count("*").alias("hits"))
         .where(F.col("hits") == k)

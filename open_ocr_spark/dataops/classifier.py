@@ -58,7 +58,6 @@ def perceptron_train(
     text_col: str = "text",
     id_col: str = "doc_id",
     label_col: str = "y",
-    pin: bool = True,
 ) -> DataFrame:
     """(term, weight) after ``iters`` batch-perceptron epochs — integer-
     exact, so the result is parallelism-invariant and the DuckDB oracle
@@ -79,11 +78,10 @@ def perceptron_train(
     one per-doc hash aggregate, one misclassified semi-set and one
     per-term hash aggregate.  No collect anywhere: the model STAYS a
     DataFrame, exactly how a 10^12-doc corpus would train a gate."""
-    toks = _term_counts(docs, text_col, id_col)
-    labels = docs.select(id_col, F.col(label_col).cast("long").alias("y"))
-    if pin:
-        toks = toks.localCheckpoint(eager=True)
-        labels = labels.localCheckpoint(eager=True)
+    toks = _term_counts(docs, text_col, id_col).localCheckpoint(eager=True)
+    labels = docs.select(
+        id_col, F.col(label_col).cast("long").alias("y")
+    ).localCheckpoint(eager=True)
     spark = docs.sparkSession
     weights = spark.createDataFrame([], "term string, w long")
     for _ in range(iters):
@@ -114,9 +112,8 @@ def perceptron_train(
                 .cast("long")
                 .alias("w"),
             )
+            .localCheckpoint(eager=True)
         )
-        if pin:
-            weights = weights.localCheckpoint(eager=True)
     return weights.filter(F.col("w") != 0).select(
         "term", F.col("w").alias("weight")
     )

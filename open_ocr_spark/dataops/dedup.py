@@ -6,14 +6,14 @@ Four tiers, ordered by cost, all expressed as DataFrame plans:
 2. ngram_jaccard      word-shingle set overlap via explode + self-join
 3. minhash_lsh        MinHash signatures + banded LSH bucketing — the scale
                       path: candidate pairs come from equality joins on band
-                      hashes, NEVER an all-pairs comparison
-4. simhash            64-bit SimHash fingerprints + chunk-match candidates
+                      keys, NEVER an all-pairs comparison
+4. simhash            62-bit SimHash fingerprints (per-bit majority vote)
 
-All hashing is xxhash64 / md5 (deterministic, available on every executor,
-no Python). MinHash/SimHash signature construction is pure Catalyst
-(`transform`/`aggregate` higher-order functions over token arrays) so it
-whole-stage-codegens; at 100 TB the only shuffles are the band-bucket
-groupBys, each on well-distributed hash keys.
+All hashing is md5 (deterministic, available on every executor, no
+Python, and reproducible in DuckDB, so the oracles replay every stage).
+MinHash/SimHash signature construction is an explode into codegen'd hash
+aggregates; at 100 TB the only shuffles are the band-bucket groupBys,
+each on well-distributed hash keys.
 """
 
 from __future__ import annotations
@@ -34,20 +34,18 @@ def _norm_text(text_col=None):
     ))
 
 
-def _rank1_per_content(df: DataFrame, hash_col: str, pin: bool = False) -> DataFrame:
+def _rank1_per_content(df: DataFrame, hash_col: str) -> DataFrame:
     """min-doc_id representative per content hash, as a row_number window
     (ONE full-row exchange with a map-side WindowGroupLimit prune — the
-    measured scale form, see exact_dedup's docstring). ``pin`` eagerly
-    localCheckpoints the result for multi-consumer subtrees."""
+    measured scale form, see exact_dedup's docstring)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(hash_col).orderBy(F.col("doc_id").asc())
-    out = (
+    return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    return out.localCheckpoint(eager=True) if pin else out
 
 
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
@@ -106,13 +104,6 @@ def shingles_of_tokens(toks_col, k: int = 3):
     )
 
 
-def word_shingles(text_col, k: int = 3):
-    """Per-row shingle expression (kept for column-level composition;
-    prefer shingle_rows for whole-table work — see shingles_of_tokens on
-    why inline token expressions are slow)."""
-    return shingles_of_tokens(tokens_col(text_col), k)
-
-
 def shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, shingle) exploded rows — the shared scan for jaccard and
     minhash. Tokenizes ONCE per row via a bound column."""
@@ -150,7 +141,7 @@ def _content_collapsed(docs: DataFrame):
     # At crawl scale, materializing the distinct-content table once before
     # a multi-consumer stage is exactly what a production pipeline does
     # (persist/stage-table); localCheckpoint is the in-plan equivalent.
-    reps = _rank1_per_content(hashed, "_ch", pin=True)
+    reps = _rank1_per_content(hashed, "_ch").localCheckpoint(eager=True)
     return members, reps
 
 
@@ -467,21 +458,10 @@ _PERMS = [
 ]
 
 
-# --- base hashes ------------------------------------------------------------
-# Two interchangeable 31-bit base hashes. xxhash64 is the production
-# default (one JVM intrinsic per value). The md5 form exists so the SAME
-# pipeline is reproducible in engines without xxhash64 (DuckDB has md5 but
-# not xxhash64) — it is the oracle-checkable twin, the exact pattern
-# packing.py/mixing.py use for their md5-derived bucket keys. Both are
-# deterministic and uniform; md5 costs one digest per DISTINCT shingle,
-# amortized by the exact-collapse pre-pass.
-
-
-def _h31_xxhash(col):
-    return F.pmod(F.xxhash64(col), F.lit(_MH_PRIME))
-
-
 def _h31_md5(col):
+    # The 31-bit base hash, md5-derived so DuckDB (which has md5 but not
+    # xxhash64) replays the same pipeline; one digest per DISTINCT
+    # shingle, amortized by the exact-collapse pre-pass.
     # first 8 hex chars -> 32-bit int -> mod 2^31-1; DuckDB mirror:
     # ('0x' || substring(md5(x), 1, 8))::BIGINT % 2147483647
     return F.pmod(
@@ -490,18 +470,12 @@ def _h31_md5(col):
     )
 
 
-_H31 = {"xxhash": _h31_xxhash, "md5": _h31_md5}
-
-
-def minhash_signatures(
-    docs: DataFrame, k: int = 3, hashing: str = "xxhash"
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, sig array<long>) via explode → codegen'd hash aggregate:
     one shuffle on doc_id, 32 min() aggregates over the shingle hashes.
     ~10× faster than the higher-order-function form (HOFs are interpreted,
-    hash aggregates are whole-stage-codegen'd) and identical output.
-    ``hashing`` picks the 31-bit base hash (see _H31)."""
-    sh = shingle_rows(docs, k).withColumn("h31", _H31[hashing](F.col("shingle")))
+    hash aggregates are whole-stage-codegen'd) and identical output."""
+    sh = shingle_rows(docs, k).withColumn("h31", _h31_md5(F.col("shingle")))
     aggs = [
         F.min(F.pmod(F.lit(a) * F.col("h31") + F.lit(b), F.lit(_MH_PRIME))).alias(
             f"_m{i}"
@@ -523,7 +497,6 @@ def minhash_lsh_pairs(
     k: int = 3,
     bands: int = 8,
     threshold: float = 0.8,
-    hashing: str = "xxhash",
 ) -> DataFrame:
     """Scale-path near-dup detection: collapse exact duplicates, MinHash +
     banded LSH over the DISTINCT contents only, verify candidates with
@@ -546,8 +519,7 @@ def minhash_lsh_pairs(
     """
     members, reps = _content_collapsed(docs)
     rep_pairs = _minhash_lsh_pairs_direct(
-        reps.select("doc_id", "text"), k=k, bands=bands, threshold=threshold,
-        hashing=hashing,
+        reps.select("doc_id", "text"), k=k, bands=bands, threshold=threshold
     )
     return _expand_rep_pairs(members, reps, rep_pairs, k)
 
@@ -557,42 +529,29 @@ def _minhash_lsh_pairs_direct(
     k: int = 3,
     bands: int = 8,
     threshold: float = 0.8,
-    hashing: str = "xxhash",
 ) -> DataFrame:
     """Doc-level MinHash+LSH without the exact-collapse pre-pass: correct
     but quadratic in identical-content cluster sizes at every stage. Kept
     as the equivalence reference for minhash_lsh_pairs.
 
-    Band keys: the xxhash default buckets on murmur ``hash(slice, band)``
-    (fixed-width long keys, cheapest shuffle). The md5 form buckets on the
-    EXACT band content ``"band,m_i,..."`` instead — collision-free and
-    engine-independent, so an external oracle can reproduce candidacy by
-    slice equality with no access to Spark's murmur."""
-    rows = bands
-    per_band = len(_PERMS) // rows
-    sigs = minhash_signatures(docs, k, hashing=hashing)
-
-    if hashing == "md5":
-        band_cols = [
-            F.concat_ws(
-                ",",
-                F.lit(str(b)),
-                F.slice(F.col("sig"), b * per_band + 1, per_band).cast(
-                    "array<string>"
-                ),
-            ).alias("band_hash")
-            for b in range(rows)
-        ]
-    else:
-        band_cols = [
-            F.hash(
-                F.slice(F.col("sig"), b * per_band + 1, per_band), F.lit(b)
-            ).alias("band_hash")
-            for b in range(rows)
-        ]
+    Band keys are the EXACT band content ``"band,m_i,..."`` — collision-free
+    and engine-independent, so an external oracle reproduces candidacy by
+    slice equality."""
+    per_band = len(_PERMS) // bands
+    sigs = minhash_signatures(docs, k)
+    band_cols = [
+        F.concat_ws(
+            ",",
+            F.lit(str(b)),
+            F.slice(F.col("sig"), b * per_band + 1, per_band).cast(
+                "array<string>"
+            ),
+        ).alias("band_hash")
+        for b in range(bands)
+    ]
     # banded is self-joined (two consumers of one subtree) and cand feeds
     # three consumers (the doc prune, the verify join, the output); both
-    # are SMALL — (doc_id, band_hash) longs and the output-proportional
+    # are SMALL — (doc_id, band key) rows and the output-proportional
     # pair list — so pinning them costs near-nothing and stops the
     # signature/banding subtree from being recomputed per consumer
     banded = (
@@ -653,26 +612,20 @@ def _minhash_lsh_pairs_direct(
 
 # --- 4. SimHash --------------------------------------------------------------
 
+# Fingerprint width: the per-token hash is 62 bits (_tok_hash62_md5), the
+# widest form both this engine and an md5-only oracle can build without
+# signed-int64 overflow.
+_SIMHASH_BITS = 62
 
-def simhash_fingerprints(
-    docs: DataFrame, bits: int = 64, hashing: str = "xxhash"
-) -> DataFrame:
+
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) with the exact-collapse pre-pass: identical
     normalized text ⇒ identical distinct-token set ⇒ identical SimHash,
-    so the 64-vote aggregate runs once per distinct content and members
+    so the 62-vote aggregate runs once per distinct content and members
     get their fingerprint by a content-hash join (broadcast-eligible when
-    the distinct side is small).
-
-    ``hashing="md5"`` swaps the per-token xxhash64 for a 62-bit value
-    assembled from two md5-derived 31-bit halves (hi*2^31 + lo) and caps
-    the fingerprint at 62 bits — the widest form both this engine and an
-    md5-only oracle can build without signed-int64 overflow."""
-    if hashing == "md5":
-        bits = min(bits, 62)
+    the distinct side is small)."""
     members, reps = _content_collapsed(docs)
-    rep_fp = _simhash_fingerprints_direct(
-        reps.select("doc_id", "text"), bits, hashing=hashing
-    )
+    rep_fp = _simhash_fingerprints_direct(reps.select("doc_id", "text"))
     by_content = (
         reps.select("_ch", "doc_id")
         .join(rep_fp, "doc_id")
@@ -692,82 +645,32 @@ def _tok_hash62_md5(col):
     return hi * two31 + lo
 
 
-def _simhash_fingerprints_direct(
-    docs: DataFrame, bits: int = 64, hashing: str = "xxhash"
-) -> DataFrame:
+def _simhash_fingerprints_direct(docs: DataFrame) -> DataFrame:
     """Doc-level SimHash via explode → codegen'd hash aggregate: per-token
-    xxhash64, per-bit majority vote as 64 sum() aggregates (+1/-1), then
-    bit reassembly in a single projection. One uniform shuffle on doc_id;
-    everything whole-stage-codegen'd. Kept as the equivalence reference."""
-    tok_hash = (
-        _tok_hash62_md5(F.col("tok")) if hashing == "md5"
-        else F.xxhash64("tok")
-    )
+    62-bit md5 hash, per-bit majority vote as 62 sum() aggregates (+1/-1),
+    then bit reassembly in a single projection. One uniform shuffle on
+    doc_id; everything whole-stage-codegen'd. Kept as the equivalence
+    reference."""
     toks = docs.select(
         "doc_id",
         F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("tok"),
-    ).withColumn("h", tok_hash)
+    ).withColumn("h", _tok_hash62_md5(F.col("tok")))
     votes = [
         F.sum(
             F.when(
                 F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
             ).otherwise(-1)
         ).alias(f"_v{i}")
-        for i in range(bits)
+        for i in range(_SIMHASH_BITS)
     ]
     agg = toks.groupBy("doc_id").agg(*votes)
     out = None
-    for i in range(bits):
-        # bit 63 as a Python int overflows java long; use two's-complement
-        mask = (1 << i) if i < 63 else -(1 << 63)
-        e = F.when(F.col(f"_v{i}") > 0, F.lit(mask).cast("long")).otherwise(
+    for i in range(_SIMHASH_BITS):
+        e = F.when(F.col(f"_v{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         out = e if out is None else out.bitwiseOR(e)
     return agg.select("doc_id", out.alias("simhash"))
-
-
-def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Candidate pairs whose 64-bit SimHashes agree on at least one 16-bit
-    chunk (pigeonhole: hamming ≤ 3 guarantees a matching chunk), verified by
-    exact hamming distance. Shuffles only on chunk values."""
-    fp = simhash_fingerprints(docs)
-    chunks = fp.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_id"),
-                        F.shiftrightunsigned(F.col("simhash"), 16 * c)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("chunk"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("ck"),
-    ).select("doc_id", "simhash", "ck.chunk_id", "ck.chunk")
-    cand = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), ["chunk_id", "chunk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
 
 
 # --- 2b. n-gram containment --------------------------------------------------

@@ -61,9 +61,9 @@ def crawl_delta_near(
     class — recrawl schedulers treat a template tweak very differently
     from a rewrite.  Exact equality (content md5) still decides
     'unchanged'; a changed page's OLD and NEW 62-bit md5-SimHash
-    fingerprints (dedup.simhash_fingerprints, hashing='md5' — the
-    oracle-replayable form) are XOR'd and popcounted, and the Hamming
-    distance splits 'minor_edit' (<= minor_max) from 'rewrite'.
+    fingerprints (dedup.simhash_fingerprints, which DuckDB replays) are
+    XOR'd and popcounted, and the Hamming distance splits 'minor_edit'
+    (<= minor_max) from 'rewrite'.
     added/removed rows carry NULL hamming; note SimHash hashes the
     DISTINCT token set, so a pure reordering scores distance 0 — a
     minor_edit, which is exactly what a recrawl scheduler wants.
@@ -78,7 +78,7 @@ def crawl_delta_near(
         base = df.select(
             F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
         )
-        fp = simhash_fingerprints(base, hashing="md5")
+        fp = simhash_fingerprints(base)
         md = base.select(
             "doc_id",
             F.md5(

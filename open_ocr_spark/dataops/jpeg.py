@@ -60,12 +60,12 @@ def _dct_matrix():
     return _DCT_M
 
 
-def _build_huff(bits, vals):
+def _build_huff(counts, vals):
     """Canonical huffman decode table {(length, code): symbol} from a DHT
     segment's 16 length counts + value list (T.81 annex C)."""
     table, code, k = {}, 0, 0
     for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
+        for _ in range(counts[ln - 1]):
             if k >= len(vals):
                 raise ValueError("jpeg: DHT value list shorter than counts")
             table[(ln, code)] = vals[k]

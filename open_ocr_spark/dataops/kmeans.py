@@ -112,7 +112,7 @@ def _assign(q: DataFrame, cents: DataFrame) -> DataFrame:
 
 
 def kmeans_fit(
-    embeddings: DataFrame, iters: int = 2, pin: bool = True
+    embeddings: DataFrame, iters: int = 2
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, assignments) after `iters` Lloyd updates.
 
@@ -123,17 +123,15 @@ def kmeans_fit(
     final centroids. A cell that loses all members simply drops out of
     the mean (identical GROUP BY semantics in the SQL replay).
     """
-    q = quantize(embeddings).select("vec_id", "label", "vq")
-    if pin:
-        q = q.localCheckpoint(eager=True)
+    q = quantize(embeddings).select("vec_id", "label", "vq").localCheckpoint(
+        eager=True
+    )
     cents = _int_means(q.select(F.col("label").alias("cell"), "vq"))
     for _ in range(iters):
-        if pin:
-            cents = cents.localCheckpoint(eager=True)
+        cents = cents.localCheckpoint(eager=True)
         asg = _assign(q, cents)
         cents = _int_means(q.join(asg, "vec_id").select("cell", "vq"))
-    if pin:
-        cents = cents.localCheckpoint(eager=True)
+    cents = cents.localCheckpoint(eager=True)
     return cents, _assign(q, cents)
 
 

@@ -24,7 +24,10 @@ GRID = 8  # 8x8 grid -> 56-bit hash
 
 
 def dhash_value(arr) -> int:
-    """56-bit dHash of an (h, w, 3) uint8 array — pure integer math."""
+    """56-bit dHash of an (h, w, 3) uint8 array — pure integer math.
+    Every grid block spans at least one pixel, so an image under 8 px on
+    a side is sampled nearest-pixel (its blocks are single rows/columns);
+    at 8 px and up the blocks are the exact floor partition."""
     import numpy as np
 
     g = arr.astype(np.int64).sum(axis=2) // 3
@@ -32,9 +35,11 @@ def dhash_value(arr) -> int:
     if (h, w) != (GRID, GRID):
         out = np.empty((GRID, GRID), dtype=np.int64)
         for r in range(GRID):
-            r0, r1 = r * h // GRID, (r + 1) * h // GRID
+            r0 = r * h // GRID
+            r1 = max((r + 1) * h // GRID, r0 + 1)
             for c in range(GRID):
-                c0, c1 = c * w // GRID, (c + 1) * w // GRID
+                c0 = c * w // GRID
+                c1 = max((c + 1) * w // GRID, c0 + 1)
                 blk = g[r0:r1, c0:c1]
                 out[r, c] = int(blk.sum()) // blk.size
         g = out

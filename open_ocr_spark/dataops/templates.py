@@ -39,7 +39,6 @@ def strip_template_lines(
     min_docs: int = 3,
     frac_num: int = 1,
     frac_den: int = 2,
-    pin: bool = False,
 ) -> DataFrame:
     """(id, clean_text, n_kept, n_removed): the document with its
     host-template lines removed (order preserved), plus kept/removed
@@ -47,13 +46,11 @@ def strip_template_lines(
     are always kept; a line repeated within ONE document counts once
     (evidence is distinct documents, not occurrences).
 
-    ``pin`` eagerly localCheckpoints the exploded line table, which
-    feeds BOTH the evidence aggregate and the verdict join (the same
-    multi-consumer tradeoff as dedup._rank1_per_content): unpinned,
-    Catalyst plans two scans of the text column — fine when the scan
-    is cheap relative to materializing every line; pin when the input
-    is itself an expensive subtree (e.g. the extraction kernel's
-    output) rather than a parquet scan."""
+    The exploded line table feeds BOTH the evidence aggregate and the
+    verdict join, so Catalyst plans two scans of the text column — cheap
+    when the input is a parquet scan; a caller whose input is itself an
+    expensive subtree (e.g. the extraction kernel's output) checkpoints
+    it first."""
     host = F.col(host_col)
     key = F.md5(F.encode(F.trim(F.col("line")), "utf-8"))
 
@@ -64,8 +61,6 @@ def strip_template_lines(
             F.split(F.coalesce(F.col(text_col), F.lit("")), "\n", -1)
         ).alias("pos", "line"),
     ).withColumn("_key", key)
-    if pin:
-        lines = lines.localCheckpoint(eager=True)
 
     host_sizes = df.groupBy(host.alias("_host")).agg(
         F.countDistinct(F.col(id_col)).alias("host_docs")

@@ -12,8 +12,8 @@ fingerprint set a sound pre-filter for plagiarism-style overlap and
 partial-duplicate detection.
 
 Determinism across engines: the k-gram hash is the md5 hex string
-(lexicographic order = selection order — the same md5-twin discipline
-as minhash_lsh_pairs_md5), and ties select the RIGHTMOST minimal gram
+(lexicographic order = selection order — the same md5 discipline as
+dedup.minhash_lsh_pairs), and ties select the RIGHTMOST minimal gram
 (robust winnowing) via a composite sort key ``hash || zero-padded
 (10^9-1 - pos)`` so min(key) = (min hash, max pos). Both the key trick
 and the window frame replay verbatim in DuckDB.

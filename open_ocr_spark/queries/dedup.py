@@ -1,13 +1,13 @@
 """Registry: text dedup tiers — exact, n-gram Jaccard, MinHash+LSH,
 SimHash, connected-component cluster resolution, line-level (CCNet) and
-cross-doc substring dedup, each with its DuckDB oracle (md5-seeded twins
-for the hash-kernel tiers)."""
+cross-doc substring dedup, each with its DuckDB oracle (the hash-kernel
+tiers hash with md5, which DuckDB replays)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from open_ocr_spark.dataops.dedup import _MH_PRIME, _PERMS, exact_dedup_groups, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_fingerprints
+from open_ocr_spark.dataops.dedup import _MH_PRIME, _PERMS, _SIMHASH_BITS, exact_dedup_groups, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_fingerprints
 from open_ocr_spark.queries._shared import _t
 
 ORACLES: dict[str, str] = {}
@@ -37,44 +37,23 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE_NONE candidate generation (xxhash64 seeds are Spark-specific);
-    the verification step IS SQL-checkable via q_ngram_jaccard_pairs.
-    No orderBy: rows-only check, and a global sort on a pair table whose
-    size is quadratic in duplicate-cluster size is pure waste."""
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, k=3, threshold=0.8)
-
-
-def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE_NONE (xxhash64-derived bits); rows-only check, no sort."""
-    docs = _t(spark, sf_dir, "documents")
-    return simhash_fingerprints(docs)
-
-
-def q_minhash_lsh_pairs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL MinHash+LSH pipeline — exact-collapse, 32-perm signatures,
     8-band bucketing, candidate generation, exact-Jaccard verification,
     pair expansion — on the md5-derived 31-bit base hash, which DuckDB can
     reproduce.  The oracle rebuilds every stage (shingles, signature
     minima, band-slice equality for candidacy — including LSH's false
     NEGATIVES — and the verify threshold), so a green row hash-checks the
-    whole algorithm end to end, not just the verify step.  The xxhash64
-    production default (q_minhash_lsh_pairs) is plan-identical; only the
-    leaf hash expression differs."""
+    whole algorithm end to end, not just the verify step."""
     docs = _t(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, k=3, threshold=0.8, hashing="md5").orderBy(
-        "doc_a", "doc_b"
-    )
+    return minhash_lsh_pairs(docs, k=3, threshold=0.8).orderBy("doc_a", "doc_b")
 
 
-def q_simhash_fingerprints_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """62-bit SimHash on md5-derived per-token hashes (two 31-bit halves):
     the oracle recomputes every per-bit majority vote and the bit
-    reassembly in DuckDB.  Same plan as the xxhash64 production form
-    (explode → codegen'd 62-sum hash aggregate), one fewer usable bit
-    pair so the fingerprint stays signed-int64-safe in any engine."""
+    reassembly in DuckDB."""
     docs = _t(spark, sf_dir, "documents")
-    return simhash_fingerprints(docs, hashing="md5").orderBy("doc_id")
+    return simhash_fingerprints(docs).orderBy("doc_id")
 
 
 _BOILER_HEAD = "Accept cookies to continue"
@@ -131,7 +110,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _minhash_md5_oracle() -> str:
+def _minhash_oracle() -> str:
     per_band = len(_PERMS) // 8
     mins = ",\n                   ".join(
         f"min(({a} * h31 + {b}) % {_MH_PRIME}) AS m{i}"
@@ -196,14 +175,14 @@ def _minhash_md5_oracle() -> str:
     """
 
 
-def _simhash_md5_oracle(bits: int = 62) -> str:
+def _simhash_oracle() -> str:
     votes = ",\n                   ".join(
         f"sum(CASE WHEN ((h62 >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS v{i}"
-        for i in range(bits)
+        for i in range(_SIMHASH_BITS)
     )
     assemble = "\n             + ".join(
         f"(CASE WHEN v{i} > 0 THEN {1 << i}::BIGINT ELSE 0::BIGINT END)"
-        for i in range(bits)
+        for i in range(_SIMHASH_BITS)
     )
     return f"""
         WITH norm AS (
@@ -418,10 +397,10 @@ ORACLES["line_dedup_docs"] = """
     """
 
 
-ORACLES["minhash_lsh_pairs_md5"] = _minhash_md5_oracle()
+ORACLES["minhash_lsh_pairs"] = _minhash_oracle()
 
 
-ORACLES["simhash_fingerprints_md5"] = _simhash_md5_oracle()
+ORACLES["simhash_fingerprints"] = _simhash_oracle()
 
 
 def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

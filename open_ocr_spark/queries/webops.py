@@ -2390,14 +2390,16 @@ def q_crawl_delta_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return crawl_delta_near(old, base_new.unionAll(added)).orderBy("url")
 
 
-def _crawl_delta_near_oracle(bits: int = 62, minor_max: int = 6) -> str:
+def _crawl_delta_near_oracle(minor_max: int = 6) -> str:
+    from open_ocr_spark.dataops.dedup import _SIMHASH_BITS
+
     votes = ",\n                   ".join(
         f"sum(CASE WHEN ((h62 >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS v{i}"
-        for i in range(bits)
+        for i in range(_SIMHASH_BITS)
     )
     assemble = "\n             + ".join(
         f"(CASE WHEN v{i} > 0 THEN {1 << i}::BIGINT ELSE 0::BIGINT END)"
-        for i in range(bits)
+        for i in range(_SIMHASH_BITS)
     )
     return f"""
         WITH olds AS (

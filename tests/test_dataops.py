@@ -11,9 +11,9 @@ from open_ocr_spark.dataops.dedup import (
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    shingles_of_tokens,
     simhash_fingerprints,
-    simhash_near_dup_pairs,
-    word_shingles,
+    tokens_col,
 )
 from open_ocr_spark.dataops.multimodal import (
     binary_stats,
@@ -88,39 +88,31 @@ def test_minhash_signature_shape_and_determinism(docs):
 def test_simhash_near_dup(docs):
     fps = {r["doc_id"]: r["simhash"] for r in simhash_fingerprints(docs).collect()}
     assert fps[0] == fps[1]
-    pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
-             for r in simhash_near_dup_pairs(docs, max_hamming=16).collect()}
-    assert pairs[(0, 1)] == 0
-    if (0, 2) in pairs:
-        assert pairs[(0, 2)] <= 16
 
 
-def test_minhash_md5_collapsed_equals_direct(docs):
-    """The md5-hashed oracle twin: collapsed pipeline == direct doc-level
-    formulation (the oracle SQL is formulated doc-level, so this is the
-    equivalence its green row rests on)."""
+def test_minhash_collapsed_equals_direct(docs):
+    """Collapsed pipeline == direct doc-level formulation (the oracle SQL
+    is formulated doc-level, so this is the equivalence its green row
+    rests on)."""
     from open_ocr_spark.dataops.dedup import _minhash_lsh_pairs_direct
 
     collapsed = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in
-                 minhash_lsh_pairs(docs, k=3, threshold=0.8,
-                                   hashing="md5").collect()}
+                 minhash_lsh_pairs(docs, k=3, threshold=0.8).collect()}
     direct = {(r["doc_a"], r["doc_b"], r["jaccard"]) for r in
               _minhash_lsh_pairs_direct(docs.select("doc_id", "text"), k=3,
-                                        threshold=0.8,
-                                        hashing="md5").collect()}
+                                        threshold=0.8).collect()}
     assert collapsed == direct
     assert (0, 1, 1.0) in collapsed
 
 
-def test_simhash_md5_collapsed_equals_direct_and_62bit(docs):
+def test_simhash_collapsed_equals_direct_and_62bit(docs):
     from open_ocr_spark.dataops.dedup import _simhash_fingerprints_direct
 
     collapsed = {r["doc_id"]: r["simhash"] for r in
-                 simhash_fingerprints(docs, hashing="md5").collect()}
+                 simhash_fingerprints(docs).collect()}
     direct = {r["doc_id"]: r["simhash"] for r in
               _simhash_fingerprints_direct(
-                  docs.select("doc_id", "text"), 62,
-                  hashing="md5").collect()}
+                  docs.select("doc_id", "text")).collect()}
     assert collapsed == direct
     assert collapsed[0] == collapsed[1]
     # 62-bit cap: signed-int64-safe in any engine
@@ -129,7 +121,9 @@ def test_simhash_md5_collapsed_equals_direct_and_62bit(docs):
 
 def test_word_shingles_edge(spark):
     df = spark.createDataFrame([(1, "a b"), (2, "a b c d")], "doc_id long, text string")
-    got = df.select("doc_id", word_shingles(F.col("text"), 3).alias("s")).collect()
+    got = df.select(
+        "doc_id", shingles_of_tokens(tokens_col(F.col("text")), 3).alias("s")
+    ).collect()
     by_id = {r["doc_id"]: r["s"] for r in got}
     assert by_id[1] == []
     assert by_id[2] == ["a b c", "b c d"]

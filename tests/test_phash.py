@@ -43,6 +43,17 @@ def test_dhash_downsample_is_exact_block_mean():
     assert dhash_value(_gray(big)) == dhash_value(_gray(g))
 
 
+def test_dhash_image_under_8px_samples_nearest(spark):
+    g = np.random.RandomState(5).randint(0, 256, size=(6, 4))
+    # under 8 px a side every grid block is one pixel: nearest sampling
+    ref = _ref_bits(g[np.ix_(np.arange(8) * 6 // 8, np.arange(8) * 4 // 8)])
+    assert dhash_value(_gray(g)) == ref
+    df = spark.createDataFrame(
+        [(1, encode_png(_gray(g)))], "doc_id long, payload binary"
+    )
+    assert dhash_images(df).collect()[0].dhash == ref
+
+
 def test_dhash_images_decodes_and_groups(spark):
     def img(group, flip_noise):
         g = (np.add.outer(np.arange(8) * 13, np.arange(8) * 7) + group * 31) % 120

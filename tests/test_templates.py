@@ -88,10 +88,12 @@ def test_partitioning_invariance(spark):
 
 
 def test_pin_option_identical_results(spark):
+    """A caller whose input is an expensive subtree pins (checkpoints) it
+    before the strip; the result is the same as on the lazy input."""
     rows = [
         ("h%d" % (i % 2), i, f"NAV {i % 2}\nbody {i}") for i in range(12)
     ]
     base = _docs(spark, rows)
-    assert _clean(strip_template_lines(base, pin=True)) == _clean(
+    assert _clean(strip_template_lines(base.localCheckpoint(eager=True))) == _clean(
         strip_template_lines(base)
     )

@@ -286,10 +286,18 @@ def test_no_second_html_tokenizer():
     assert hits == []
 
 
+# Per-call switches that picked between two plans or two outputs of one
+# operator. Each operator now has one: undecodable input is a null row
+# (strict), md5 is the only dedup base hash and SimHash is always 62 bits
+# (hashing, bits), and checkpoints sit where the plan needs them (pin).
+# ``_pin``, a test-only plan hook, stays allowed.
+_REMOVED_SWITCHES = ("strict", "hashing", "bits", "pin")
+
+
 def test_no_strict_switch_or_stub_raise():
-    """Undecodable input is a null row, not a per-call mode: no function
-    takes a ``strict`` parameter, and no dataops operator raises
-    NotImplementedError in place of a result."""
+    """No function takes one of the removed switches as a parameter, and
+    no dataops operator raises NotImplementedError in place of a
+    result."""
     import ast
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "open_ocr_spark"
@@ -300,9 +308,9 @@ def test_no_strict_switch_or_stub_raise():
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                  ast.Lambda)):
                 a = node.args
-                if "strict" in [p.arg for p in a.posonlyargs + a.args
-                                + a.kwonlyargs]:
-                    hits.append(f"{rel}:{node.lineno}: strict parameter")
+                for p in a.posonlyargs + a.args + a.kwonlyargs:
+                    if p.arg in _REMOVED_SWITCHES:
+                        hits.append(f"{rel}:{node.lineno}: {p.arg} parameter")
             elif isinstance(node, ast.Raise) and rel.parts[0] == "dataops":
                 exc = node.exc.func if isinstance(node.exc, ast.Call) else node.exc
                 if isinstance(exc, ast.Name) and exc.id == "NotImplementedError":
