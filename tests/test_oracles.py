@@ -8,7 +8,12 @@ must return at least one row.
 sf0.001 has no NULL or empty ``documents.text``, so every query runs
 once more over a copy whose texts are NULL or '' on a doc_id residue:
 the operators' null branches and the oracles' NULL rules must agree
-there too."""
+there too.
+
+The md5 MinHash and SimHash operators are checked twice against their
+oracles: as registered (exact-collapse pre-pass, then the doc-level
+plan over the distinct contents) and as the bare doc-level plan, under
+the ids ``minhash_lsh_pairs_md5`` and ``simhash_fingerprints_md5``."""
 
 import os
 import sys
@@ -16,10 +21,33 @@ import sys
 import duckdb
 import pytest
 
+from open_ocr_spark.dataops.dedup import (
+    _minhash_lsh_pairs_direct,
+    _simhash_fingerprints_direct,
+)
 from open_ocr_spark.queries import ORACLES, QUERIES
+from open_ocr_spark.queries._shared import _t
 from tools.check_contract import TABLES, check_query, oracle_connection
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _minhash_lsh_pairs_uncollapsed(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return _minhash_lsh_pairs_direct(docs, k=3, threshold=0.8)
+
+
+def _simhash_fingerprints_uncollapsed(spark, sf_dir):
+    return _simhash_fingerprints_direct(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"))
+
+
+# case id -> (query, oracle)
+CASES = {name: (fn, ORACLES.get(name)) for name, fn in QUERIES.items()}
+CASES["minhash_lsh_pairs_md5"] = (_minhash_lsh_pairs_uncollapsed,
+                                  ORACLES["minhash_lsh_pairs"])
+CASES["simhash_fingerprints_md5"] = (_simhash_fingerprints_uncollapsed,
+                                     ORACLES["simhash_fingerprints"])
 
 
 def test_queries_without_oracle_are_marked_oracle_none():
@@ -51,9 +79,9 @@ def con():
     con.close()
 
 
-@pytest.mark.parametrize("name", list(QUERIES))
+@pytest.mark.parametrize("name", list(CASES))
 def test_query_matches_oracle(spark, con, name):
-    assert check_query(spark, con, QUERIES[name], ORACLES.get(name), SF_DIR) == []
+    assert check_query(spark, con, *CASES[name], SF_DIR) == []
 
 
 @pytest.fixture(scope="module")
@@ -82,7 +110,6 @@ def null_text_con(null_text_sf):
     con.close()
 
 
-@pytest.mark.parametrize("name", list(QUERIES))
+@pytest.mark.parametrize("name", list(CASES))
 def test_query_matches_oracle_null_text(spark, null_text_con, null_text_sf, name):
-    assert check_query(spark, null_text_con, QUERIES[name], ORACLES.get(name),
-                       null_text_sf) == []
+    assert check_query(spark, null_text_con, *CASES[name], null_text_sf) == []
