@@ -132,7 +132,9 @@ def fluency_buckets(
     names = {3: ["head", "middle", "tail"]}.get(
         groups, [f"b{i}" for i in range(groups)]
     )
-    scores = fluency_scores(docs, model, text_col, id_col).join(
+    scores = fluency_scores(
+        docs, model, text_col, id_col, broadcast_model=True
+    ).join(
         docs.select(F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")),
         "doc_id",
     )

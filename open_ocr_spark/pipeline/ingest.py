@@ -16,14 +16,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, TimestampType
 
-# the input_hint schema: column -> the type ingest casts it to
+# the input_hint schema: column -> the type ingest casts it to. Types,
+# not type-name strings: a string cast goes through the JVM's SQL parser.
 _PAGES_TYPES = {
-    "url": "string",
-    "warc_ts": "timestamp",
-    "html": "binary",
-    "text": "string",
-    "lang": "string",
+    "url": StringType(),
+    "warc_ts": TimestampType(),
+    "html": BinaryType(),
+    "text": StringType(),
+    "lang": StringType(),
 }
 
 
@@ -39,7 +41,8 @@ def normalize_sources(df: DataFrame) -> DataFrame:
         out = out.withColumn(
             "html",
             F.coalesce(
-                F.col("html") if "html" in df.columns else F.lit(None).cast("binary"),
+                F.col("html") if "html" in df.columns
+                else F.lit(None).cast(BinaryType()),
                 F.unbase64(F.col("payload_b64")),
             ),
         ).drop("payload_b64")

@@ -16,11 +16,20 @@ At 100 TB the bucket count is sized so one bucket ≈ a few hundred GB of
 input (e.g. B=1024); locally the tests use B=8. A run is one scan and one
 write action, so the unit of resume is the run (or its ``max_buckets``
 slice), and it writes one file per write task, whatever B is.
+
+A run with buckets to process also warms the kernel path while the
+driver plans: a background thread sends one tiny page through
+``extract_stage`` (one task, one row, collected and dropped), so the
+Python daemon, a worker with the kernels imported and the JVM's Arrow
+runner are up by the time the kernel stage asks for them, and the stage
+reuses that idle worker. The run joins the thread before it commits; a
+warm-up that fails changes nothing.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 import warnings
 from urllib.parse import urlparse
@@ -78,6 +87,26 @@ def _plan_ingested(df: DataFrame, *, use_mock: bool) -> DataFrame:
     return mock_stage(df) if use_mock else extract_stage(df)
 
 
+def _warm_page(spark: SparkSession) -> DataFrame:
+    """One tiny HTML page in ONE partition: ``spark.range(1)`` alone would
+    plan ``defaultParallelism`` tasks and fork a worker for each."""
+    return spark.range(1, numPartitions=1).select(
+        F.lit("warm").alias("url"),
+        F.lit(b"<p>warm</p>").alias("html"),
+        F.lit("eng").alias("lang"),
+    )
+
+
+def _warm_kernel(spark: SparkSession) -> None:
+    """The warm-up: the page through the real boundary, its row dropped.
+    A failure is swallowed; the run's own kernel stage surfaces a real
+    fault."""
+    try:
+        extract_stage(_warm_page(spark)).collect()
+    except Exception:
+        pass
+
+
 def run_extraction_job(
     spark: SparkSession,
     pages: DataFrame,
@@ -112,6 +141,9 @@ def run_extraction_job(
     ``num_buckets`` other than the committed manifests record — the
     bucket ids would no longer partition the urls the same way. Both
     raise before anything is deleted.
+    A run with buckets to process runs ``_warm_kernel`` on a thread
+    while it plans and writes, and joins it before it commits; a no-op
+    or mock run warms nothing.
     Returns summary counters.
     """
     if urlparse(out_dir).scheme:
@@ -157,33 +189,40 @@ def run_extraction_job(
             "snapshot_id": chain[-1]["snapshot_id"] if chain else None,
         }
 
-    # filter out committed buckets BEFORE the dedupe work: the filter
-    # sits directly on the scan projection
-    subset = with_bucket(ingest(pages), num_buckets)
-    subset = subset.filter(F.col(BUCKET_COL).isin(all_buckets)).drop(BUCKET_COL)
-    result = with_bucket(
-        _plan_ingested(subset, use_mock=use_mock),
-        num_buckets,
-    ).withColumnRenamed(BUCKET_COL, "bucket")
-    # ONE write action per run, into a directory of its own: one file per
-    # write task, rows sorted by bucket (row-group stats prune bucket
-    # filters). A directory per bucket would cost a file per (task,
-    # bucket), each a chmod fork on a local Hadoop filesystem
-    data_dir = f"data/run={run_id}-{uuid.uuid4().hex[:8]}"
-    path = os.path.join(out_dir, data_dir)
-    result.sortWithinPartitions("bucket").write.parquet(path)
-    # Manifests are counted from what was written: one groupBy over the
-    # run's directory, whose explicit schema keeps a run that wrote no
-    # rows readable.
-    stats = {
-        r[0]: r[1:]
-        for r in spark.read.schema(result.schema).parquet(path)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("docs"),
-             F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("bytes"),
-             F.count_if(F.col("status") != "ok").alias("failures"))
-        .collect()
-    }
+    # a mock run has no Python stage to warm
+    warm = threading.Thread(target=None if use_mock else _warm_kernel,
+                            args=(spark,), name="warm-kernel", daemon=True)
+    warm.start()
+    try:
+        # filter out committed buckets BEFORE the dedupe work: the filter
+        # sits directly on the scan projection
+        subset = with_bucket(ingest(pages), num_buckets)
+        subset = subset.filter(F.col(BUCKET_COL).isin(all_buckets)).drop(BUCKET_COL)
+        result = with_bucket(
+            _plan_ingested(subset, use_mock=use_mock),
+            num_buckets,
+        ).withColumnRenamed(BUCKET_COL, "bucket")
+        # ONE write action per run, into a directory of its own: one file per
+        # write task, rows sorted by bucket (row-group stats prune bucket
+        # filters). A directory per bucket would cost a file per (task,
+        # bucket), each a chmod fork on a local Hadoop filesystem
+        data_dir = f"data/run={run_id}-{uuid.uuid4().hex[:8]}"
+        path = os.path.join(out_dir, data_dir)
+        result.sortWithinPartitions("bucket").write.parquet(path)
+        # Manifests are counted from what was written: one groupBy over the
+        # run's directory, whose explicit schema keeps a run that wrote no
+        # rows readable.
+        stats = {
+            r[0]: r[1:]
+            for r in spark.read.schema(result.schema).parquet(path)
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("docs"),
+                 F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("bytes"),
+                 F.count_if(F.col("status") != "ok").alias("failures"))
+            .collect()
+        }
+    finally:
+        warm.join()
     for b in all_buckets:
         docs, nbytes, failures = stats.get(b, (0, 0, 0))
         commit_bucket(out_dir, b, run_id=run_id,

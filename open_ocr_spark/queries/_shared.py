@@ -1,13 +1,15 @@
 """Shared fixtures for the query registry: the parquet table loader, the
-writer-twin payload scaffold, and the boilerplate-wrapped pages table
+writer-twin payload scaffold, the boilerplate-wrapped pages table
 every extraction query derives from `documents` (all Catalyst
-concat/encode, zero Python)."""
+concat/encode, zero Python), and the SimHash SQL the DuckDB oracles
+share."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.dedup import _SIMHASH_BITS
 from open_ocr_spark.pipeline.stages import map_rows
 
 
@@ -25,6 +27,41 @@ def twin_payloads(docs: DataFrame, build) -> DataFrame:
         "doc_id long, payload binary",
         lambda i, *vals: [(i, build(i, *vals))],
     )
+
+
+def simhash_ctes(keys: str) -> str:
+    """DuckDB CTEs ``h``, ``votes`` and ``fp`` replaying
+    ``dataops.dedup``'s 62-bit SimHash: over a ``toks`` CTE of distinct
+    (``keys``, tok) rows, ``fp`` holds (``keys``, simhash). Each token
+    hashes to 62 bits from the two 31-bit halves of its md5; bit i of the
+    fingerprint is set when more tokens have it set than not."""
+    votes = ",\n                   ".join(
+        f"sum(CASE WHEN ((h62 >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS v{i}"
+        for i in range(_SIMHASH_BITS)
+    )
+    assemble = "\n             + ".join(
+        f"(CASE WHEN v{i} > 0 THEN {1 << i}::BIGINT ELSE 0::BIGINT END)"
+        for i in range(_SIMHASH_BITS)
+    )
+    return f"""
+        h AS (
+            SELECT {keys},
+                   (('0x' || substring(md5(tok), 1, 8))::BIGINT % 2147483648)
+                       * 2147483648
+                   + (('0x' || substring(md5(tok), 9, 8))::BIGINT % 2147483648)
+                       AS h62
+            FROM toks
+        ),
+        votes AS (
+            SELECT {keys},
+                   {votes}
+            FROM h GROUP BY {keys}
+        ),
+        fp AS (
+            SELECT {keys},
+                   {assemble} AS simhash
+            FROM votes
+        )"""
 
 
 _WRAP_PREFIX = (

@@ -7,8 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from open_ocr_spark.dataops.dedup import _MH_PRIME, _PERMS, _SIMHASH_BITS, exact_dedup_groups, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_fingerprints
-from open_ocr_spark.queries._shared import _t
+from open_ocr_spark.dataops.dedup import _MH_PRIME, _PERMS, exact_dedup_groups, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_fingerprints
+from open_ocr_spark.queries._shared import _t, simhash_ctes
 
 ORACLES: dict[str, str] = {}
 
@@ -176,14 +176,6 @@ def _minhash_oracle() -> str:
 
 
 def _simhash_oracle() -> str:
-    votes = ",\n                   ".join(
-        f"sum(CASE WHEN ((h62 >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS v{i}"
-        for i in range(_SIMHASH_BITS)
-    )
-    assemble = "\n             + ".join(
-        f"(CASE WHEN v{i} > 0 THEN {1 << i}::BIGINT ELSE 0::BIGINT END)"
-        for i in range(_SIMHASH_BITS)
-    )
     return f"""
         WITH norm AS (
             SELECT doc_id,
@@ -193,23 +185,9 @@ def _simhash_oracle() -> str:
         toks AS (
             SELECT DISTINCT doc_id, unnest(string_split(t, ' ')) AS tok
             FROM norm
-        ),
-        h AS (
-            SELECT doc_id,
-                   (('0x' || substring(md5(tok), 1, 8))::BIGINT % 2147483648)
-                       * 2147483648
-                   + (('0x' || substring(md5(tok), 9, 8))::BIGINT % 2147483648)
-                       AS h62
-            FROM toks
-        ),
-        votes AS (
-            SELECT doc_id,
-                   {votes}
-            FROM h GROUP BY doc_id
-        )
-        SELECT doc_id,
-               {assemble} AS simhash
-        FROM votes
+        ),{simhash_ctes("doc_id")}
+        SELECT doc_id, simhash
+        FROM fp
         ORDER BY doc_id
     """
 

@@ -111,7 +111,7 @@ def q_ngram_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     ref = docs.filter(F.col("doc_id") % 10 == 0)
     model = train_bigram_model(ref)
-    return fluency_scores(docs, model).orderBy("doc_id")
+    return fluency_scores(docs, model, broadcast_model=True).orderBy("doc_id")
 
 
 def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

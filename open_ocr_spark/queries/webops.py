@@ -7,7 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from open_ocr_spark.queries._shared import (
-    _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents, twin_payloads,
+    _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents, simhash_ctes,
+    twin_payloads,
 )
 
 ORACLES: dict[str, str] = {}
@@ -2391,16 +2392,6 @@ def q_crawl_delta_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _crawl_delta_near_oracle(minor_max: int = 6) -> str:
-    from open_ocr_spark.dataops.dedup import _SIMHASH_BITS
-
-    votes = ",\n                   ".join(
-        f"sum(CASE WHEN ((h62 >> {i}) & 1) = 1 THEN 1 ELSE -1 END) AS v{i}"
-        for i in range(_SIMHASH_BITS)
-    )
-    assemble = "\n             + ".join(
-        f"(CASE WHEN v{i} > 0 THEN {1 << i}::BIGINT ELSE 0::BIGINT END)"
-        for i in range(_SIMHASH_BITS)
-    )
     return f"""
         WITH olds AS (
             SELECT 'https://d.example.com/p/' || doc_id::VARCHAR AS url,
@@ -2436,32 +2427,14 @@ def _crawl_delta_near_oracle(minor_max: int = 6) -> str:
         toks AS (
             SELECT DISTINCT url, side, unnest(string_split(t, ' ')) AS tok
             FROM norm
-        ),
-        h AS (
-            SELECT url, side,
-                   (('0x' || substring(md5(tok), 1, 8))::BIGINT % 2147483648)
-                       * 2147483648
-                   + (('0x' || substring(md5(tok), 9, 8))::BIGINT
-                       % 2147483648) AS h62
-            FROM toks
-        ),
-        votes AS (
-            SELECT url, side,
-                   {votes}
-            FROM h GROUP BY url, side
-        ),
-        fp AS (
-            SELECT url, side,
-                   {assemble} AS sh
-            FROM votes
-        ),
+        ),{simhash_ctes("url, side")},
         o AS (
-            SELECT m.url, m.md AS old_md5, f.sh AS old_sh
+            SELECT m.url, m.md AS old_md5, f.simhash AS old_sh
             FROM md m JOIN fp f ON f.url = m.url AND f.side = 0
             WHERE m.side = 0
         ),
         n AS (
-            SELECT m.url, m.md AS new_md5, f.sh AS new_sh
+            SELECT m.url, m.md AS new_md5, f.simhash AS new_sh
             FROM md m JOIN fp f ON f.url = m.url AND f.side = 1
             WHERE m.side = 1
         ),

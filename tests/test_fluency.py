@@ -1,7 +1,10 @@
 """N-gram fluency scoring: hand-computed conditional probabilities,
 unseen-pair and short-doc edges, parallelism invariance."""
 
+import re
+
 import pyspark.sql.functions as F
+import pytest
 
 from open_ocr_spark.dataops.fluency import (
     SCALE,
@@ -86,3 +89,21 @@ def test_broadcast_model_plan(spark):
     plan = plan_of(fluency_scores(df, model, broadcast_model=True))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize("query", ["ngram_fluency", "ccnet_buckets"])
+def test_registered_queries_broadcast_the_model(spark, query):
+    """AQE alone broadcast the model join on only some runs of the same
+    query; with the hint the (w1, w2) model join is a broadcast in every
+    final adaptive plan, and no join sorts. Each repeat is a new
+    DataFrame, so AQE replans it."""
+    from open_ocr_spark.queries import QUERIES
+    from tests.test_plan_shape import SF
+
+    for _ in range(3):
+        df = QUERIES[query](spark, SF)
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().finalPhysicalPlan()
+        plan = final.toString()
+        assert re.search(r"BroadcastHashJoin \[w1#\d+, w2#\d+\]", plan)
+        assert "SortMergeJoin" not in plan

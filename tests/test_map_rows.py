@@ -159,8 +159,8 @@ def test_building_the_extract_schema_imports_no_pandas():
         from open_ocr_spark.pipeline.stages import EXTRACT_SCHEMA, _arrow_column
         types = {"string": pa.string(), "long": pa.int64()}
         sample = {"string": ("a", None, "é"), "long": (1, None, 2**40)}
-        for field in EXTRACT_SCHEMA.split(","):
-            kind = field.split()[1]
+        for field in EXTRACT_SCHEMA.fields:
+            kind = field.dataType.typeName()
             _arrow_column(sample[kind], types[kind])
         assert "pandas" not in sys.modules
         pa.array(["x"], pa.string())
