@@ -36,14 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import words
+
 MERGES_SCHEMA = "merge_rank long, lhs string, rhs string, pair_freq long"
-
-
-def _tokens(text_col):
-    return F.filter(
-        F.split(F.coalesce(text_col, F.lit("")), r"\s+"),
-        lambda w: w != F.lit(""),
-    )
 
 
 def _char_join(col):
@@ -65,7 +60,10 @@ def word_histogram(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(syms, freq): the distinct-word frequency table with symbols
     initialised to characters.  The one corpus-sized stage."""
     return (
-        docs.select(F.explode(_tokens(F.col(text_col))).alias("word"))
+        docs.select(
+            F.explode(words(F.coalesce(F.col(text_col), F.lit(""))))
+            .alias("word")
+        )
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("freq"))
         .select(_char_join(F.col("word")).alias("syms"), "freq")
@@ -140,6 +138,7 @@ def apply_bpe_merges(
         return _syms_list(s)
 
     toks = F.flatten(
-        F.transform(_tokens(F.col(text_col)), lambda w: encode_word(w))
+        F.transform(words(F.coalesce(F.col(text_col), F.lit(""))),
+                    lambda w: encode_word(w))
     )
     return docs.withColumn(out_col, toks)

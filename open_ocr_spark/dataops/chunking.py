@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import split_spaces
+
 
 def chunk_documents(
     docs: DataFrame,
@@ -41,7 +43,7 @@ def chunk_documents(
         raise ValueError("chunk_tokens and stride must be >= 1")
     if stride > chunk_tokens:
         raise ValueError("stride > chunk_tokens would drop tokens")
-    w = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+    w = split_spaces(F.coalesce(F.col(text_col), F.lit("")))
     n = F.size(w)
     # number of windows: 1 + ceil((n - chunk)/stride) for n > chunk,
     # else 1 — as integers: 1 + max(0, (n - chunk + stride - 1) DIV s)

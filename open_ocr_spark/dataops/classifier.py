@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import words
+
 _TWO31 = 2147483647
 
 
@@ -38,13 +40,7 @@ def _term_counts(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
         docs.select(
             F.col(id_col),
             F.explode(
-                F.filter(
-                    F.split(
-                        F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        r"\s+",
-                    ),
-                    lambda w: w != F.lit(""),
-                )
+                words(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
             ).alias("term"),
         )
         .groupBy(id_col, "term")
@@ -143,11 +139,7 @@ def hashed_linear_score(
     toks = docs.select(
         F.col(id_col),
         F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        r"\s+"),
-                lambda w: w != F.lit(""),
-            )
+            words(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         ).alias("term"),
     )
     if weights is not None:

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import tokens
+
 
 def word_ngrams(text: Column | str, n: int) -> Column:
     """array<string> of the word-level n-grams of a text: whitespace runs
@@ -38,18 +40,13 @@ def word_ngrams(text: Column | str, n: int) -> Column:
     text with fewer than n words has no grams (empty array, not null).
     Pure Catalyst (regexp_replace/split/sequence/transform/slice)."""
     col = F.col(text) if isinstance(text, str) else text
-    words = F.split(
-        F.trim(
-            F.regexp_replace(F.coalesce(col, F.lit("")), r"[ \t\n\r]+", " ")
-        ),
-        " ",
-    )
-    n_grams = F.size(words) - F.lit(n - 1)
+    toks = tokens(F.coalesce(col, F.lit("")))
+    n_grams = F.size(toks) - F.lit(n - 1)
     return F.when(
         n_grams > 0,
         F.transform(
             F.sequence(F.lit(0), n_grams - F.lit(1)),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
 

@@ -21,17 +21,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import collapse, tokens
+
 # --- 1. exact -------------------------------------------------------------
 
 
-def _norm_text(text_col=None):
-    """THE whitespace normalization, defined once: every dedup tier's
-    content identity ('equal hash ⇒ equal token/shingle sets') depends on
-    the exact-dedup hash, the collapse pre-pass and the tokenizer all
-    normalizing with this same expression."""
-    return F.trim(F.regexp_replace(
-        text_col if text_col is not None else F.col("text"), r"\s+", " "
-    ))
+def _content_hash():
+    """md5 of the collapsed text: the content identity every dedup tier
+    shares (equal hash => equal token and shingle sets)."""
+    return F.md5(collapse(F.col("text")).cast("binary"))
 
 
 def _rank1_per_content(df: DataFrame, hash_col: str) -> DataFrame:
@@ -53,7 +51,7 @@ def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     distinct content with the canonical (min) doc_id and duplicate count.
     Single hash-shuffle on a uniform key; map-side combine is automatic."""
     return (
-        docs.withColumn("content_hash", F.md5(_norm_text().cast("binary")))
+        docs.withColumn("content_hash", _content_hash())
         .groupBy("content_hash")
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
@@ -73,17 +71,11 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     semi-join form shuffles the full rows AND the hash table and pays a
     join probe. Same choice the extraction pipeline's latest-per-url
     dedupe made after A/B measurement (pipeline/dedupe.py)."""
-    hashed = docs.withColumn(
-        "content_hash", F.md5(_norm_text().cast("binary"))
-    )
+    hashed = docs.withColumn("content_hash", _content_hash())
     return _rank1_per_content(hashed, "content_hash").drop("content_hash")
 
 
 # --- shingles (shared by 2 and 3) ------------------------------------------
-
-
-def tokens_col(text_col):
-    return F.split(_norm_text(text_col), " ")
 
 
 def shingles_of_tokens(toks_col, k: int = 3):
@@ -108,7 +100,7 @@ def shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
     """(doc_id, shingle) exploded rows — the shared scan for jaccard and
     minhash. Tokenizes ONCE per row via a bound column."""
     return (
-        docs.withColumn("_toks", tokens_col(F.col("text")))
+        docs.withColumn("_toks", tokens(F.col("text")))
         .select(
             "doc_id",
             F.explode(shingles_of_tokens(F.col("_toks"), k)).alias("shingle"),
@@ -122,13 +114,11 @@ def shingle_rows(docs: DataFrame, k: int = 3) -> DataFrame:
 def _content_collapsed(docs: DataFrame):
     """(members, reps): ``members`` maps every doc_id to its normalized
     content hash; ``reps`` keeps one representative (min doc_id) text per
-    distinct content. The collapse uses _norm_text — the SAME whitespace
-    normalization as the exact-dedup hash and the shingle/token pipelines
-    — so equal ``_ch`` ⇒ equal shingle and token sets and content-level
-    results transfer to every member."""
-    hashed = docs.select(
-        "doc_id", "text", F.md5(_norm_text().cast("binary")).alias("_ch")
-    )
+    distinct content. ``_ch`` is the exact-dedup hash of the text collapsed
+    as the token pipeline collapses it (dataops/words.py), so equal
+    ``_ch`` ⇒ equal shingle and token sets and content-level results
+    transfer to every member."""
+    hashed = docs.select("doc_id", "text", _content_hash().alias("_ch"))
     members = hashed.select("doc_id", "_ch")
     # rank-1-per-content window, PINNED with an eager localCheckpoint.
     # Pinning is the load-bearing part: reps feeds ~5 downstream consumers
@@ -653,7 +643,7 @@ def _simhash_fingerprints_direct(docs: DataFrame) -> DataFrame:
     reference."""
     toks = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("tok"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"),
     ).withColumn("h", _tok_hash62_md5(F.col("tok")))
     votes = [
         F.sum(

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import collapse
+
 
 def crawl_delta(
     old: DataFrame,
@@ -81,9 +83,7 @@ def crawl_delta_near(
         fp = simhash_fingerprints(base)
         md = base.select(
             "doc_id",
-            F.md5(
-                F.trim(F.regexp_replace("text", r"[ \t\n\r]+", " "))
-            ).alias("md"),
+            F.md5(collapse(F.col("text"))).alias("md"),
         )
         return md.join(fp, "doc_id").select(
             F.col("doc_id").alias("url"),

@@ -35,19 +35,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import words
+
 SCALE = 1_000_000  # 6-decimal fixed point for the per-bucket log-ratio
-
-
-def _tokens(text: str = "text") -> Column:
-    return F.filter(
-        F.split(F.lower(F.coalesce(F.col(text), F.lit(""))), r"\s+"),
-        lambda w: w != F.lit(""),
-    )
 
 
 def _grams(text: str = "text") -> Column:
     """Unigrams + word bigrams, one array (the DSIR feature bag)."""
-    toks = _tokens(text)
+    toks = words(F.lower(F.coalesce(F.col(text), F.lit(""))))
     size = F.size(toks)
     bigrams = F.when(
         size >= 2,

@@ -25,18 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-# explicit whitespace class, NOT \s: Java regex \s includes U+000B
-# (vertical tab) while DuckDB's RE2 \s does not — the same cross-dialect
-# rule dataops/sentences.py follows
-_WS = "[ \t\n\r]+"
+from open_ocr_spark.dataops.words import words, words_sql
 
 
 def _token_counts(df: DataFrame, text_col: str, out: str) -> DataFrame:
     return (
-        df.select("doc_id",
-                  F.explode(F.split(F.col(text_col), _WS)).alias("tok"))
-        .filter(F.length("tok") > 0)
+        df.select("doc_id", F.explode(words(F.col(text_col))).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias(out))
     )
@@ -79,17 +73,13 @@ def token_prf_oracle_sql(golden_expr: str, candidate_expr: str) -> str:
         c0 AS ({candidate_expr}),
         g AS (
             SELECT doc_id, tok, count(*) AS c_gold
-            FROM (SELECT doc_id,
-                         unnest(str_split_regex(text, '[ \t\n\r]+')) AS tok
-                  FROM g0)
-            WHERE length(tok) > 0 GROUP BY doc_id, tok
+            FROM (SELECT doc_id, unnest({words_sql("text")}) AS tok FROM g0)
+            GROUP BY doc_id, tok
         ),
         c AS (
             SELECT doc_id, tok, count(*) AS c_cand
-            FROM (SELECT doc_id,
-                         unnest(str_split_regex(text, '[ \t\n\r]+')) AS tok
-                  FROM c0)
-            WHERE length(tok) > 0 GROUP BY doc_id, tok
+            FROM (SELECT doc_id, unnest({words_sql("text")}) AS tok FROM c0)
+            GROUP BY doc_id, tok
         ),
         j AS (
             SELECT coalesce(g.doc_id, c.doc_id) AS doc_id,

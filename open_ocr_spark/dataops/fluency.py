@@ -34,19 +34,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import split_spaces
+
 SCALE = 1_000_000
 
 
 def _bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc_id, pos, w1, w2): the adjacent-token-pair stream."""
-    words = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+    toks = split_spaces(F.coalesce(F.col(text_col), F.lit("")))
     pairs = F.when(
-        F.size(words) >= 2,
+        F.size(toks) >= 2,
         F.transform(
-            F.sequence(F.lit(0), F.size(words) - 2),
+            F.sequence(F.lit(0), F.size(toks) - 2),
             lambda i: F.struct(
-                F.element_at(words, i + 1).alias("w1"),
-                F.element_at(words, i + 2).alias("w2"),
+                F.element_at(toks, i + 1).alias("w1"),
+                F.element_at(toks, i + 2).alias("w2"),
             ),
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import split_spaces
+
 
 def dedup_lines(
     docs: DataFrame,
@@ -88,11 +90,11 @@ def chunk_words_to_lines(
     spaces, slice into fixed-width chunks.  Pure Catalyst (split /
     sequence / transform / slice / array_join)."""
     col = F.col(text) if isinstance(text, str) else text
-    words = F.split(F.coalesce(col, F.lit("")), " ")
-    n_lines = F.ceil(F.size(words) / F.lit(words_per_line)).cast("int")
+    toks = split_spaces(F.coalesce(col, F.lit("")))
+    n_lines = F.ceil(F.size(toks) / F.lit(words_per_line)).cast("int")
     return F.transform(
         F.sequence(F.lit(0), n_lines - F.lit(1)),
         lambda i: F.array_join(
-            F.slice(words, i * words_per_line + 1, words_per_line), " "
+            F.slice(toks, i * words_per_line + 1, words_per_line), " "
         ),
     )

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import collapse
+
 # The attribute name must start at a whitespace boundary — `(?:[^>]*\s)?`
 # instead of `[^>]*` — or `data-href` / `xlink:href` (attribute names in
 # which "href" is a mere suffix) would match and fabricate outlinks the
@@ -130,9 +132,7 @@ def extract_anchors(
         .select(
             "src_url",
             F.col("p.dst_url").alias("dst_url"),
-            F.trim(
-                F.regexp_replace(F.col("p.raw"), "[ \t\n\r]+", " ")
-            ).alias("anchor_text"),
+            collapse(F.col("p.raw")).alias("anchor_text"),
         )
         .filter(
             (

@@ -17,7 +17,7 @@ the prefix) fall back to text/plain; anything else is octet-stream.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # (mime, hex prefix at offset 0) — longest-prefix-first within a family
@@ -62,7 +62,3 @@ def sniff_mime_col(payload: Column) -> Column:
         (F.octet_length(payload) > 0) & ~has_nul, "text/plain"
     )
     return expr.otherwise(F.lit("application/octet-stream")).alias("mime")
-
-
-def with_mime(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    return df.withColumn("mime", sniff_mime_col(F.col(payload_col)))

@@ -30,16 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import words
+
 # Gopher's stop-word set: a document must contain >= 2 of these
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 _TERMINAL = (".", "!", "?", '"')
-
-
-def _words(t):
-    """Non-empty whitespace-separated tokens (same split contract on
-    Spark's Java regex and DuckDB's RE2 for these corpora)."""
-    return F.filter(F.split(t, r"\s+"), lambda w: w != F.lit(""))
 
 
 def _occurrences(t, needle: str):
@@ -62,15 +58,15 @@ def gopher_gate(
     rule_* booleans, keep.
     """
     t = F.coalesce(F.col(text), F.lit(""))
-    words = _words(t)
-    n_words = F.size(words).cast("long")
+    toks = words(t)
+    n_words = F.size(toks).cast("long")
     n_word_chars = F.aggregate(
-        words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
+        toks, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
     )
     n_alpha_words = F.size(
-        F.filter(words, lambda w: w.rlike("[A-Za-z]"))
+        F.filter(toks, lambda w: w.rlike("[A-Za-z]"))
     ).cast("long")
-    words_lc = F.transform(words, F.lower)
+    words_lc = F.transform(toks, F.lower)
     n_stop_hits = sum(
         (
             F.array_contains(words_lc, sw).cast("long")
@@ -148,7 +144,7 @@ def c4_clean(docs: DataFrame, text: str = "text") -> DataFrame:
     kept = F.filter(
         lines,
         lambda s: F.right(s, F.lit(1)).isin(*_TERMINAL)
-        & (F.size(_words(s)) >= 5)
+        & (F.size(words(s)) >= 5)
         & ~F.lower(s).contains("javascript"),
     )
     text_clean = F.array_join(kept, "\n")

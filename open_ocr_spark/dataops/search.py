@@ -22,20 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text_col):
-    return F.filter(
-        F.split(F.lower(F.coalesce(text_col, F.lit(""))), r"\s+"),
-        lambda w: w != F.lit(""),
-    )
+from open_ocr_spark.dataops.words import words
 
 
 def inverted_index(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(term, doc_id, tf): the posting-list table."""
+    toks = words(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     return (
-        docs.select(
-            "doc_id", F.explode(_tokens(F.col(text_col))).alias("term")
-        )
+        docs.select("doc_id", F.explode(toks).alias("term"))
         .groupBy("term", "doc_id")
         .agg(F.count("*").cast("long").alias("tf"))
     )
@@ -53,17 +47,16 @@ def bm25_rank(
     — callers rank/limit on the returned scores, so the hashed surface
     is cutoff-free."""
     terms = [t.lower() for t in query_terms]
+    toks = words(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     lengths = docs.select(
-        "doc_id", F.size(_tokens(F.col(text_col))).cast("long").alias("dl")
+        "doc_id", F.size(toks).cast("long").alias("dl")
     )
     stats = lengths.agg(
         F.count("*").cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
     tf = (
-        docs.select(
-            "doc_id", F.explode(_tokens(F.col(text_col))).alias("term")
-        )
+        docs.select("doc_id", F.explode(toks).alias("term"))
         .where(F.col("term").isin(terms))
         .groupBy("term", "doc_id")
         .agg(F.count("*").cast("double").alias("tf"))

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import split_spaces
+
 
 def dedup_substrings(
     docs: DataFrame,
@@ -54,7 +56,7 @@ def dedup_substrings(
     w = int(window)
     base = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " ").alias("words"),
+        split_spaces(F.coalesce(F.col(text_col), F.lit(""))).alias("words"),
     )
 
     grams = base.select(

@@ -12,12 +12,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from open_ocr_spark.dataops.words import (
+    WS, WS_CHARS, collapse, split_spaces, tokens, words,
+)
+
 
 def token_count_col(text_col):
     """Whitespace token count, JVM-side. '' counts as 0 tokens."""
-    trimmed = F.trim(F.regexp_replace(text_col, r"\s+", " "))
+    trimmed = collapse(text_col)
     return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, " "))
+        F.size(split_spaces(trimmed))
     )
 
 
@@ -60,10 +64,11 @@ def with_quality_score(df: DataFrame, text: str = "text") -> DataFrame:
 
 
 def with_fingerprint(df: DataFrame, text: str = "text") -> DataFrame:
-    """Document fingerprint: md5 over the whitespace-normalized, lowercased
-    text — deterministic, content-addressed, portable across engines
+    """Document fingerprint: md5 over the whitespace-collapsed, lowercased
+    text — deterministic and content-addressed; DuckDB's
+    ``md5(lower(collapse_sql(text)))`` gives the same hash for any text
     (replaces the reference's UUID tmp-file identities, SURVEY §4.2.4)."""
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text), r"\s+", " ")))
+    norm = F.lower(collapse(F.col(text)))
     return df.withColumn("fingerprint", F.md5(norm.cast("binary")))
 
 
@@ -214,9 +219,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Fractions use the floor-scale rounding (see with_quality_score) so
     values hash-compare across engines."""
-    from open_ocr_spark.dataops.dedup import tokens_col
-
-    base = docs.withColumn("_toks", tokens_col(F.col("text"))).withColumn(
+    base = docs.withColumn("_toks", tokens(F.col("text"))).withColumn(
         "_n", token_count_col(F.col("text"))
     )
     n = F.col("_n")
@@ -278,7 +281,7 @@ def scrub_pii(df: DataFrame, text: str = "text", out: str = "scrubbed") -> DataF
 # BPE-ish pre-tokenizer pattern (GPT-2 split rule simplified to the
 # lookahead-free subset both Java regex and RE2 execute identically):
 # space-prefixed letter runs, digit runs, punctuation runs, whitespace runs.
-BPE_SPLIT_RE = r" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+|[ \t\n\r]+"
+BPE_SPLIT_RE = f" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9{WS_CHARS}]+|{WS}"
 
 
 def with_bpe_token_count(df: DataFrame, text: str = "text") -> DataFrame:
@@ -338,10 +341,7 @@ def top_ngrams(
     pretraining stats).  Two-phase hash aggregate with map-side combine;
     the top-k is a TakeOrdered over the aggregated table, never a
     global sort of the corpus."""
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text), F.lit(""))), r"\s+"),
-        lambda w: w != F.lit(""),
-    )
+    toks = words(F.lower(F.coalesce(F.col(text), F.lit(""))))
     size = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(1), size - F.lit(n - 1)),

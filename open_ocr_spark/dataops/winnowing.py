@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from open_ocr_spark.dataops.words import tokens, tokens_sql
+
 K = 3   # tokens per gram
 W = 4   # grams per winnowing window
 
@@ -39,9 +41,7 @@ def winnowing_fingerprints(
 ) -> DataFrame:
     """(doc_id, pos, fingerprint): the selected (position, md5) pairs,
     one row per distinct selection, for every full window."""
-    toks = F.split(
-        F.trim(F.regexp_replace(F.col(text_col), r"[ \t\n\r]+", " ")), " "
-    )
+    toks = tokens(F.col(text_col))
     grams = F.expr(
         "transform(sequence(0, size(t) - 3),"
         " i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
@@ -86,9 +86,7 @@ def winnowing_oracle_sql(source_expr: str) -> str:
     return f"""
         WITH src AS ({source_expr}),
         toks AS (
-            SELECT doc_id,
-                   string_split(trim(regexp_replace(text,
-                       '[ \t\n\r]+', ' ', 'g')), ' ') AS t
+            SELECT doc_id, {tokens_sql("text")} AS t
             FROM src
         ),
         flat AS (

@@ -9,17 +9,3 @@ explodes one payload into rows: ``csv_text.csv_cells``,
 ``microdata.microdata_items`` and ``tables.html_tables``; they are the
 only pyspark imports here.
 """
-
-from open_ocr_spark.kernels.mock import MOCK_ENGINE_RESPONSE, mock_extract
-from open_ocr_spark.kernels.html_extract import extract_main_text
-from open_ocr_spark.kernels.pdf_text import extract_pdf_text, is_pdf
-from open_ocr_spark.kernels.dispatch import extract_document
-
-__all__ = [
-    "MOCK_ENGINE_RESPONSE",
-    "mock_extract",
-    "extract_main_text",
-    "extract_pdf_text",
-    "is_pdf",
-    "extract_document",
-]

@@ -7,9 +7,3 @@ test (/root/reference/ocr_rpc_client_test.go:57).
 """
 
 MOCK_ENGINE_RESPONSE = "mock engine decoder response"
-
-
-def mock_extract(raw: bytes | str | None) -> str:
-    """Ignore the payload, return the constant — exactly like the reference
-    (mock_engine.go:7-9 ignores the request entirely)."""
-    return MOCK_ENGINE_RESPONSE

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from open_ocr_spark.dataops.dedup import _MH_PRIME, _PERMS, exact_dedup_groups, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_fingerprints
+from open_ocr_spark.dataops.words import collapse_sql, split_spaces, split_spaces_sql, tokens_sql
 from open_ocr_spark.queries._shared import _t, simhash_ctes
 
 ORACLES: dict[str, str] = {}
@@ -128,8 +129,7 @@ def _minhash_oracle() -> str:
     return f"""
         WITH norm AS (
             SELECT doc_id,
-                   string_split(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' ')
-                       AS t
+                   {tokens_sql("text")} AS t
             FROM documents
         ),
         idx AS (
@@ -179,11 +179,11 @@ def _simhash_oracle() -> str:
     return f"""
         WITH norm AS (
             SELECT doc_id,
-                   trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')) AS t
+                   {collapse_sql("text")} AS t
             FROM documents WHERE text IS NOT NULL
         ),
         toks AS (
-            SELECT DISTINCT doc_id, unnest(string_split(t, ' ')) AS tok
+            SELECT DISTINCT doc_id, unnest({split_spaces_sql("t")}) AS tok
             FROM norm
         ),{simhash_ctes("doc_id")}
         SELECT doc_id, simhash
@@ -192,8 +192,8 @@ def _simhash_oracle() -> str:
     """
 
 
-ORACLES["exact_dedup_groups"] = """
-        SELECT md5(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')))
+ORACLES["exact_dedup_groups"] = f"""
+        SELECT md5({collapse_sql("text")})
                    AS content_hash,
                min(doc_id) AS keep_doc_id,
                count(*) AS n_copies
@@ -203,11 +203,10 @@ ORACLES["exact_dedup_groups"] = """
     """
 
 
-ORACLES["ngram_jaccard_pairs"] = """
+ORACLES["ngram_jaccard_pairs"] = f"""
         WITH toks AS (
             SELECT doc_id,
-                   string_split(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' ')
-                       AS t
+                   {tokens_sql("text")} AS t
             FROM documents
         ),
         idx AS (
@@ -236,11 +235,10 @@ ORACLES["ngram_jaccard_pairs"] = """
     """
 
 
-ORACLES["dedup_clusters"] = """
+ORACLES["dedup_clusters"] = f"""
         WITH RECURSIVE toks AS (
             SELECT doc_id,
-                   string_split(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' ')
-                       AS t
+                   {tokens_sql("text")} AS t
             FROM documents
         ),
         idx AS (
@@ -284,10 +282,10 @@ ORACLES["dedup_clusters"] = """
     """
 
 
-ORACLES["substring_dedup"] = """
+ORACLES["substring_dedup"] = f"""
         WITH docs2 AS (
             SELECT doc_id,
-                   string_split(coalesce(text, ''), ' ') AS w
+                   {split_spaces_sql("coalesce(text, '')")} AS w
             FROM documents
         ),
         bound AS (SELECT max(len(w)) AS mx FROM docs2),
@@ -333,7 +331,7 @@ ORACLES["substring_dedup"] = """
     """
 
 
-ORACLES["line_dedup_docs"] = """
+ORACLES["line_dedup_docs"] = f"""
         WITH chunks AS (
             SELECT doc_id, i AS pos,
                    array_to_string(w[i*10+1 : i*10+10], ' ') AS line
@@ -342,7 +340,7 @@ ORACLES["line_dedup_docs"] = """
                        unnest(range(CAST(ceil(len(w)/10.0) AS BIGINT))) AS i
                 FROM (
                     SELECT doc_id,
-                           string_split(coalesce(text, ''), ' ') AS w
+                           {split_spaces_sql("coalesce(text, '')")} AS w
                     FROM documents
                 )
             )
@@ -394,7 +392,7 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     prefixes = docs.select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.array_join(F.slice(F.split("text", " "), 1, 30), " ")
+        F.array_join(F.slice(split_spaces(F.col("text")), 1, 30), " ")
         .alias("text"),
     )
     corpus = docs.unionByName(prefixes)
@@ -404,18 +402,17 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["ngram_containment_pairs"] = """
+ORACLES["ngram_containment_pairs"] = f"""
         WITH src AS (
             SELECT doc_id, text FROM documents
             UNION ALL
             SELECT doc_id + 1000000,
-                   array_to_string(string_split(text, ' ')[1:30], ' ')
+                   array_to_string({split_spaces_sql("text")}[1:30], ' ')
             FROM documents
         ),
         toks AS (
             SELECT doc_id,
-                   string_split(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' ')
-                       AS t
+                   {tokens_sql("text")} AS t
             FROM src
         ),
         idx AS (

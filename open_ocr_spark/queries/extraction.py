@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from open_ocr_spark.dataops.words import collapse_sql
 from open_ocr_spark.pipeline.stages import extract_stage
 from open_ocr_spark.queries._shared import (
     _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents, twin_payloads,
@@ -608,16 +609,19 @@ def q_engine_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["extract_markdown"] = """
+ORACLES["extract_markdown"] = f"""
+        WITH src AS (
+            SELECT *,
+                   coalesce(text, '')
+                   || ' with **bold** and *emphasis* and a [link '
+                   || doc_id::VARCHAR || '](https://example.com/ref/'
+                   || doc_id::VARCHAR || ').' AS body
+            FROM documents
+        )
         SELECT doc_id,
                '# Doc ' || doc_id::VARCHAR
                || chr(10) || chr(10)
-               || trim(regexp_replace(
-                      coalesce(text, '')
-                      || ' with **bold** and *emphasis* and a [link '
-                      || doc_id::VARCHAR || '](https://example.com/ref/'
-                      || doc_id::VARCHAR || ').',
-                      '[ \t\n\r]+', ' ', 'g'))
+               || {collapse_sql("body")}
                || chr(10) || chr(10) || '## Details'
                || chr(10) || chr(10)
                || '- lang ' || lang || chr(10)
@@ -634,26 +638,25 @@ ORACLES["extract_markdown"] = """
                || chr(10) || '| id | ' || doc_id::VARCHAR || ' |'
                    AS markdown,
                'ok' AS status
-        FROM documents
+        FROM src
         ORDER BY doc_id
     """
 
 
-ORACLES["extract_main_text"] = """
+ORACLES["extract_main_text"] = f"""
         SELECT doc_id,
-               trim(regexp_replace(coalesce(text, ''), '[ \t\n\r]+', ' ', 'g'))
-                   AS extracted_text,
+               {collapse_sql("coalesce(text, '')")} AS extracted_text,
                'ok' AS status
         FROM documents
         ORDER BY doc_id
     """
 
 
-ORACLES["extract_status_rollup"] = """
+ORACLES["extract_status_rollup"] = f"""
         SELECT 'ok' AS status,
                count(*) AS docs,
-               CAST(sum(length(trim(regexp_replace(coalesce(text, ''),
-                   '[ \t\n\r]+', ' ', 'g')))) AS BIGINT) AS total_chars
+               CAST(sum(length({collapse_sql("coalesce(text, '')")}))
+                    AS BIGINT) AS total_chars
         FROM documents
     """
 
@@ -698,10 +701,9 @@ ORACLES["extract_glyph_ocr"] = """
     """
 
 
-ORACLES["extract_epub_text"] = """
+ORACLES["extract_epub_text"] = f"""
         SELECT doc_id,
-               trim(regexp_replace(coalesce(text, ''),
-                                   '[ \t\n\r]+', ' ', 'g'))
+               {collapse_sql("coalesce(text, '')")}
                    || chr(10) || chr(10) || 'Chapter ' || doc_id::VARCHAR
                    || ' of the epub & appendix' AS extracted_text,
                'ok' AS status
@@ -780,31 +782,28 @@ ORACLES["extract_pdf_tj"] = """
     """
 
 
-ORACLES["multipart_roundtrip"] = """
+ORACLES["multipart_roundtrip"] = f"""
         SELECT doc_id,
-               trim(regexp_replace(coalesce(text, ''), '[ \t\n\r]+', ' ', 'g'))
-                   AS extracted_text,
+               {collapse_sql("coalesce(text, '')")} AS extracted_text,
                'ok' AS status
         FROM documents
         ORDER BY doc_id
     """
 
 
-ORACLES["url_fetch_roundtrip"] = """
+ORACLES["url_fetch_roundtrip"] = f"""
         SELECT doc_id,
-               trim(regexp_replace(coalesce(text, ''), '[ \t\n\r]+', ' ', 'g'))
-                   AS extracted_text,
+               {collapse_sql("coalesce(text, '')")} AS extracted_text,
                'ok' AS status
         FROM documents
         ORDER BY doc_id
     """
 
 
-ORACLES["extract_structured_spans"] = """
+ORACLES["extract_structured_spans"] = f"""
         WITH norm AS (
             SELECT doc_id,
-                   trim(regexp_replace(coalesce(text, ''),
-                        '[ \t\n\r]+', ' ', 'g')) AS t,
+                   {collapse_sql("coalesce(text, '')")} AS t,
                    'Appendix section for document ' || doc_id
                        || ' - closing remarks.' AS a1,
                    'Second appendix for document ' || doc_id || '.' AS a2,
@@ -837,11 +836,10 @@ ORACLES["extract_structured_spans"] = """
     """
 
 
-ORACLES["engine_dispatch"] = """
+ORACLES["engine_dispatch"] = f"""
         SELECT doc_id,
                CASE WHEN doc_id % 10 = 0 THEN 'mock engine decoder response'
-                    ELSE trim(regexp_replace(coalesce(text, ''),
-                         '[ \t\n\r]+', ' ', 'g'))
+                    ELSE {collapse_sql("coalesce(text, '')")}
                END AS extracted_text,
                'ok' AS status
         FROM documents

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from open_ocr_spark.dataops.textstats import PII_EMAIL_RE, PII_PHONE_RE
+from open_ocr_spark.dataops.words import collapse_sql, split_spaces, split_spaces_sql, tokens_sql, words_sql
 from open_ocr_spark.queries._shared import _t
 from open_ocr_spark.queries.dedup import _BOILER_FOOT, _BOILER_HEAD
 
@@ -54,7 +56,7 @@ def q_pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias(
+        F.size(split_spaces(F.coalesce(F.col("text"), F.lit("")))).alias(
             "n_tokens"
         ),
     )
@@ -77,7 +79,7 @@ def q_pack_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " ")).alias(
+        F.size(split_spaces(F.coalesce(F.col("text"), F.lit("")))).alias(
             "n_text_tokens"
         ),
         (F.col("doc_id") % 3).alias("n_images"),
@@ -283,12 +285,10 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_grams", "score_fp")
 
 
-ORACLES["dsir_resample"] = """
+ORACLES["dsir_resample"] = f"""
         WITH toks AS (
             SELECT doc_id, lang = 'en' AS is_target,
-                   list_filter(regexp_split_to_array(
-                       lower(coalesce(text, '')), '\\s+'),
-                       x -> x <> '') AS tl
+                   {words_sql("lower(coalesce(text, ''))")} AS tl
             FROM documents
         ),
         grams AS (
@@ -336,10 +336,10 @@ ORACLES["dsir_resample"] = """
     """
 
 
-ORACLES["prepare_corpus"] = """
+ORACLES["prepare_corpus"] = f"""
         WITH base AS (
             SELECT doc_id, text,
-                   trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')) AS nt
+                   {collapse_sql("text")} AS nt
             FROM documents
         ),
         dedup AS (
@@ -352,7 +352,7 @@ ORACLES["prepare_corpus"] = """
             SELECT doc_id,
                    length(text) AS n_chars,
                    CASE WHEN length(nt) = 0 THEN 0
-                        ELSE len(string_split(nt, ' ')) END AS n_tokens,
+                        ELSE len({split_spaces_sql("nt")}) END AS n_tokens,
                    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha
             FROM kept
         ),
@@ -507,10 +507,10 @@ ORACLES["train_test_split"] = """
     """
 
 
-ORACLES["pack_training_sequences"] = """
+ORACLES["pack_training_sequences"] = f"""
         WITH toks AS (
             SELECT doc_id,
-                   CAST(len(string_split(coalesce(text, ''), ' '))
+                   CAST(len({split_spaces_sql("coalesce(text, '')")})
                        AS BIGINT) AS n_tokens,
                    CAST(('0x' || substring(md5(doc_id::VARCHAR), 1, 4))::INT
                        % 8 AS BIGINT) AS bucket
@@ -534,10 +534,10 @@ ORACLES["pack_training_sequences"] = """
     """
 
 
-ORACLES["pack_multimodal"] = """
+ORACLES["pack_multimodal"] = f"""
         WITH toks AS (
             SELECT doc_id,
-                   CAST(len(string_split(coalesce(text, ''), ' '))
+                   CAST(len({split_spaces_sql("coalesce(text, '')")})
                        AS BIGINT) AS n_text,
                    CAST(doc_id % 3 AS BIGINT) AS n_imgs,
                    CAST(('0x' || substring(md5(doc_id::VARCHAR), 1, 4))::INT
@@ -592,7 +592,7 @@ ORACLES["temperature_sample"] = """
     """
 
 
-ORACLES["prepare_corpus_full"] = """
+ORACLES["prepare_corpus_full"] = f"""
         WITH src AS (
             SELECT doc_id,
                    coalesce(text, '')
@@ -606,7 +606,7 @@ ORACLES["prepare_corpus_full"] = """
             FROM (
                 SELECT doc_id, w,
                        unnest(range(CAST(ceil(len(w)/10.0) AS BIGINT))) AS i
-                FROM (SELECT doc_id, string_split(t, ' ') AS w FROM src)
+                FROM (SELECT doc_id, {split_spaces_sql("t")} AS w FROM src)
             )
         ),
         doclines AS (
@@ -635,7 +635,7 @@ ORACLES["prepare_corpus_full"] = """
         ),
         base AS (
             SELECT doc_id, text,
-                   trim(regexp_replace(text, '[ \t\n]+', ' ', 'g')) AS nt
+                   {collapse_sql("text")} AS nt
             FROM cleaned
         ),
         dedup AS (
@@ -648,7 +648,7 @@ ORACLES["prepare_corpus_full"] = """
             SELECT doc_id, text,
                    length(text) AS n_chars,
                    CASE WHEN length(nt) = 0 THEN 0
-                        ELSE len(string_split(nt, ' ')) END AS n_tokens,
+                        ELSE len({split_spaces_sql("nt")}) END AS n_tokens,
                    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha
             FROM kept
         ),
@@ -666,10 +666,8 @@ ORACLES["prepare_corpus_full"] = """
         gated AS (
             SELECT doc_id, n_tokens, quality_score,
                    regexp_replace(regexp_replace(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z][A-Za-z]+',
-                       '<EMAIL>', 'g'),
-                       '[+][0-9]{1,2}-[0-9]{3}-[0-9]{3,4}-?[0-9]{0,4}',
-                       '<PHONE>', 'g') AS text
+                       '{PII_EMAIL_RE}', '<EMAIL>', 'g'),
+                       '{PII_PHONE_RE}', '<PHONE>', 'g') AS text
             FROM scored
             WHERE quality_score >= 0.3
         ),
@@ -678,9 +676,7 @@ ORACLES["prepare_corpus_full"] = """
             FROM (
                 SELECT w, unnest(range(greatest(len(w) - 4, 0))) AS i
                 FROM (
-                    SELECT string_split(trim(regexp_replace(
-                        coalesce(text, ''), '[ \t\n\r]+', ' ', 'g')), ' ')
-                        AS w
+                    SELECT {tokens_sql("coalesce(text, '')")} AS w
                     FROM documents WHERE doc_id % 50 = 0
                 )
             )
@@ -689,8 +685,7 @@ ORACLES["prepare_corpus_full"] = """
             SELECT DISTINCT doc_id, array_to_string(w[i+1 : i+5], ' ') AS gram
             FROM (
                 SELECT doc_id, w, unnest(range(greatest(len(w) - 4, 0))) AS i
-                FROM (SELECT doc_id, string_split(trim(regexp_replace(
-                          text, '[ \t\n\r]+', ' ', 'g')), ' ') AS w
+                FROM (SELECT doc_id, {tokens_sql("text")} AS w
                       FROM gated)
             )
         ),
@@ -708,11 +703,10 @@ ORACLES["prepare_corpus_full"] = """
     """
 
 
-ORACLES["decontaminate_docs"] = """
+ORACLES["decontaminate_docs"] = f"""
         WITH words AS (
             SELECT doc_id,
-                   string_split(trim(regexp_replace(coalesce(text, ''),
-                       '[ \t\n\r]+', ' ', 'g')), ' ') AS w
+                   {tokens_sql("coalesce(text, '')")} AS w
             FROM documents
         ),
         grams AS (

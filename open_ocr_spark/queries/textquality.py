@@ -7,7 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from open_ocr_spark.dataops.textstats import with_fingerprint, with_lang_id, with_quality_score, with_token_count
+from open_ocr_spark.dataops.textstats import BPE_SPLIT_RE, with_fingerprint, with_lang_id, with_quality_score, with_token_count
+from open_ocr_spark.dataops.words import collapse_sql, split_spaces, split_spaces_sql, tokens_sql, words, words_sql
 from open_ocr_spark.queries._shared import _t, twin_payloads
 
 ORACLES: dict[str, str] = {}
@@ -442,15 +443,13 @@ def _classifier_train_oracle(iters: int = 2) -> str:
     score>=0 -> +1 tie rule, and merges sum(y*cnt) over misclassified
     docs into w{i}."""
     ctes = [
-        """toks AS (
+        f"""toks AS (
             SELECT doc_id, term, count(*)::BIGINT AS cnt
             FROM (
                 SELECT doc_id,
-                       unnest(string_split_regex(
-                           lower(coalesce(text, '')), '\\s+')) AS term
+                       unnest({words_sql("lower(coalesce(text, ''))")}) AS term
                 FROM documents
             )
-            WHERE term <> ''
             GROUP BY doc_id, term
         )""",
         """labels AS (
@@ -532,10 +531,8 @@ def _bpe_train_stages(k: int = 8) -> list:
     histogram s0, then per-rank pair counts p_i, argmax b_i, merged
     vocab s_i (see q_bpe_train for the storage-form contract)."""
     stages = [
-        """tok AS (
-            SELECT unnest(list_filter(
-                regexp_split_to_array(coalesce(text, ''), '\\s+'),
-                x -> x <> '')) AS word
+        f"""tok AS (
+            SELECT unnest({words_sql("coalesce(text, '')")}) AS word
             FROM documents
         ),
         w AS (SELECT word, count(*)::BIGINT AS freq FROM tok GROUP BY word),
@@ -623,12 +620,10 @@ def _bpe_encode_oracle_sql(k: int = 8) -> str:
     q_bpe_encode_docs)."""
     stages = _bpe_train_stages(k)
     stages.append(
-        """d AS (
+        f"""d AS (
             SELECT doc_id, g.i AS pos, wl[g.i] AS word
             FROM (SELECT doc_id,
-                         list_filter(regexp_split_to_array(
-                             coalesce(text, ''), '\\s+'), x -> x <> '')
-                         AS wl
+                         {words_sql("coalesce(text, '')")} AS wl
                   FROM documents) t,
                  UNNEST(generate_series(1, len(t.wl))) AS g(i)
         ),
@@ -702,28 +697,24 @@ def _lang_id_fixture_oracle() -> str:
     """
 
 
-ORACLES["token_counts"] = """
+ORACLES["token_counts"] = f"""
         SELECT doc_id,
-               CASE WHEN length(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g'))) = 0
+               CASE WHEN length({collapse_sql("text")}) = 0
                     THEN 0
-                    ELSE len(string_split(
-                        trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' '))
+                    ELSE len({tokens_sql("text")})
                END AS n_tokens
         FROM documents
         ORDER BY doc_id
     """
 
 
-ORACLES["bpe_token_counts"] = """
+ORACLES["bpe_token_counts"] = f"""
         SELECT doc_id,
-               CASE WHEN length(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g'))) = 0
+               CASE WHEN length({collapse_sql("text")}) = 0
                     THEN 0
-                    ELSE len(string_split(
-                        trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' '))
+                    ELSE len({tokens_sql("text")})
                END AS n_tokens,
-               len(regexp_extract_all(text,
-                   ' ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+|[ \t\n\r]+'))
-                   AS n_bpe_tokens
+               len(regexp_extract_all(text, '{BPE_SPLIT_RE}')) AS n_bpe_tokens
         FROM documents
         ORDER BY doc_id
     """
@@ -737,13 +728,12 @@ ORACLES["pii_scrub"] = """
     """
 
 
-ORACLES["repetition_stats"] = """
+ORACLES["repetition_stats"] = f"""
         WITH base AS (
             SELECT doc_id,
-                   CASE WHEN length(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g'))) = 0
+                   CASE WHEN length({collapse_sql("text")}) = 0
                         THEN []::VARCHAR[]
-                        ELSE string_split(
-                            trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' ')
+                        ELSE {tokens_sql("text")}
                    END AS t
             FROM documents
         ),
@@ -779,14 +769,13 @@ ORACLES["repetition_stats"] = """
     """
 
 
-ORACLES["quality_scores"] = """
+ORACLES["quality_scores"] = f"""
         WITH base AS (
             SELECT doc_id,
                    length(text) AS n_chars,
-                   CASE WHEN length(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g'))) = 0
+                   CASE WHEN length({collapse_sql("text")}) = 0
                         THEN 0
-                        ELSE len(string_split(
-                            trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')), ' '))
+                        ELSE len({tokens_sql("text")})
                    END AS n_tokens,
                    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha
             FROM documents
@@ -811,9 +800,9 @@ ORACLES["quality_scores"] = """
     """
 
 
-ORACLES["doc_fingerprints"] = """
+ORACLES["doc_fingerprints"] = f"""
         SELECT doc_id,
-               md5(lower(trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g'))))
+               md5(lower({collapse_sql("text")}))
                    AS fingerprint
         FROM documents
         ORDER BY doc_id
@@ -826,8 +815,7 @@ ORACLES["gopher_gate"] = f"""
             FROM documents
         ), w AS (
             SELECT doc_id,
-                   list_filter(regexp_split_to_array(t, '\\s+'),
-                               x -> x <> '') AS words,
+                   {words_sql("t")} AS words,
                    list_transform(regexp_split_to_array(t, '\\n'),
                                   x -> trim(x)) AS lines,
                    t
@@ -893,9 +881,7 @@ ORACLES["c4_line_clean"] = f"""
                        list_transform(regexp_split_to_array(t, '\\n'),
                                       x -> trim(x)),
                        s -> right(s, 1) IN ('.', '!', '?', '"')
-                            AND len(list_filter(
-                                    regexp_split_to_array(s, '\\s+'),
-                                    w -> w <> '')) >= 5
+                            AND len({words_sql("s")}) >= 5
                             AND NOT contains(lower(s), 'javascript')
                    ) AS kept
             FROM p
@@ -925,16 +911,15 @@ ORACLES["bpe_train"] = _bpe_oracle_sql(8)
 ORACLES["bpe_encode_docs"] = _bpe_encode_oracle_sql(8)
 
 
-ORACLES["bm25_search"] = """
+ORACLES["bm25_search"] = f"""
         WITH toks AS (
-            SELECT doc_id, unnest(list_filter(regexp_split_to_array(
-                lower(coalesce(text, '')), '\\s+'), x -> x <> '')) AS term
+            SELECT doc_id,
+                   unnest({words_sql("lower(coalesce(text, ''))")}) AS term
             FROM documents
         ),
         lens AS (
-            SELECT doc_id, len(list_filter(regexp_split_to_array(
-                lower(coalesce(text, '')), '\\s+'), x -> x <> ''))::BIGINT
-                AS dl
+            SELECT doc_id,
+                   len({words_sql("lower(coalesce(text, ''))")})::BIGINT AS dl
             FROM documents
         ),
         stats AS (
@@ -960,10 +945,9 @@ ORACLES["bm25_search"] = """
     """
 
 
-ORACLES["top_bigrams"] = """
+ORACLES["top_bigrams"] = f"""
         WITH toks AS (
-            SELECT list_filter(regexp_split_to_array(
-                lower(coalesce(text, '')), '\\s+'), x -> x <> '') AS tl
+            SELECT {words_sql("lower(coalesce(text, ''))")} AS tl
             FROM documents
         ),
         grams AS (
@@ -977,10 +961,10 @@ ORACLES["top_bigrams"] = """
     """
 
 
-ORACLES["quality_classifier"] = """
+ORACLES["quality_classifier"] = f"""
         WITH toks AS (
-            SELECT doc_id, unnest(list_filter(regexp_split_to_array(
-                lower(coalesce(text, '')), '\\s+'), x -> x <> '')) AS term
+            SELECT doc_id,
+                   unnest({words_sql("lower(coalesce(text, ''))")}) AS term
             FROM documents
         ),
         sums AS (
@@ -1003,15 +987,12 @@ ORACLES["quality_classifier"] = """
     """
 
 
-ORACLES["readability_scores"] = """
+ORACLES["readability_scores"] = f"""
         WITH counts AS (
             SELECT doc_id,
-                   CASE WHEN length(trim(regexp_replace(
-                            coalesce(text, ''), '[ \t\n\r]+', ' ', 'g'))) = 0
+                   CASE WHEN length({collapse_sql("coalesce(text, '')")}) = 0
                         THEN 0
-                        ELSE len(string_split(trim(regexp_replace(
-                            coalesce(text, ''), '[ \t\n\r]+', ' ', 'g')),
-                            ' '))
+                        ELSE len({tokens_sql("coalesce(text, '')")})
                    END::BIGINT AS n_words,
                    greatest(1, len(regexp_extract_all(
                        coalesce(text, ''), '[.!?]+')))::BIGINT
@@ -1050,9 +1031,9 @@ ORACLES["unicode_nfc"] = """
     """
 
 
-ORACLES["chunk_documents"] = """
+ORACLES["chunk_documents"] = f"""
         WITH docs2 AS (
-            SELECT doc_id, string_split(coalesce(text, ''), ' ') AS w
+            SELECT doc_id, {split_spaces_sql("coalesce(text, '')")} AS w
             FROM documents
         ),
         nc AS (
@@ -1071,9 +1052,9 @@ ORACLES["chunk_documents"] = """
     """
 
 
-ORACLES["ngram_fluency"] = """
+ORACLES["ngram_fluency"] = f"""
         WITH docs2 AS (
-            SELECT doc_id, string_split(coalesce(text, ''), ' ') AS w
+            SELECT doc_id, {split_spaces_sql("coalesce(text, '')")} AS w
             FROM documents
         ),
         bound AS (SELECT max(len(w)) AS mx FROM docs2),
@@ -1110,15 +1091,15 @@ ORACLES["ngram_fluency"] = """
     """
 
 
-ORACLES["tfidf_top_terms"] = """
+ORACLES["tfidf_top_terms"] = f"""
         WITH toks AS (
-            SELECT doc_id, unnest(string_split_regex(
-                       lower(coalesce(text, '')), '[ \t\n\r]+')) AS term
+            SELECT doc_id,
+                   unnest({words_sql("lower(coalesce(text, ''))")}) AS term
             FROM documents
         ),
         tf AS (
             SELECT term, doc_id, count(*) AS tf
-            FROM toks WHERE term != '' GROUP BY term, doc_id
+            FROM toks GROUP BY term, doc_id
         ),
         dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
         n AS (SELECT count(*) AS n_docs FROM documents),
@@ -1140,9 +1121,9 @@ ORACLES["tfidf_top_terms"] = """
     """
 
 
-ORACLES["ccnet_buckets"] = """
+ORACLES["ccnet_buckets"] = f"""
         WITH docs2 AS (
-            SELECT doc_id, string_split(coalesce(text, ''), ' ') AS w
+            SELECT doc_id, {split_spaces_sql("coalesce(text, '')")} AS w
             FROM documents
         ),
         bound AS (SELECT max(len(w)) AS mx FROM docs2),
@@ -1247,13 +1228,8 @@ def q_cms_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     tokens = docs.select(
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                        r"\s+"),
-                lambda w: w != F.lit(""),
-            )
-        ).alias("key")
+        F.explode(words(F.lower(F.coalesce(F.col("text"), F.lit("")))))
+        .alias("key")
     )
     truth = tokens.groupBy("key").agg(
         F.count("*").cast("long").alias("true_cnt")
@@ -1269,13 +1245,11 @@ def q_cms_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["cms_term_counts"] = """
-        WITH toks AS (
-            SELECT unnest(string_split_regex(
-                       lower(coalesce(text, '')), '[ \t\n\r]+')) AS key
+ORACLES["cms_term_counts"] = f"""
+        WITH clean AS (
+            SELECT unnest({words_sql("lower(coalesce(text, ''))")}) AS key
             FROM documents
         ),
-        clean AS (SELECT key FROM toks WHERE key != ''),
         truth AS (
             SELECT key, count(*) AS true_cnt FROM clean GROUP BY key
         ),
@@ -1350,7 +1324,7 @@ def q_extraction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from open_ocr_spark.dataops.evaluate import token_prf
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
+    toks = split_spaces(F.col("text"))
     candidate = F.concat(
         F.array_join(
             F.slice(toks, 4, F.greatest(F.size(toks) - 3, F.lit(0))), " "
@@ -1370,7 +1344,7 @@ def _extraction_eval_oracle() -> str:
     return token_prf_oracle_sql(
         "SELECT doc_id, text FROM documents",
         "SELECT doc_id,"
-        " coalesce(array_to_string(str_split(text, ' ')[4:], ' '),"
+        f" coalesce(array_to_string({split_spaces_sql('text')}[4:], ' '),"
         "          CASE WHEN text IS NOT NULL THEN '' END)"
         " || ' promo offer code ' || (doc_id % 7)::VARCHAR || ' now'"
         " AS text FROM documents",

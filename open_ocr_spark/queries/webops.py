@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from open_ocr_spark.dataops.words import collapse_sql, split_spaces_sql
 from open_ocr_spark.queries._shared import (
     _WRAP_PREFIX, _WRAP_SUFFIX, _t, pages_from_documents, simhash_ctes,
     twin_payloads,
@@ -1138,7 +1139,7 @@ ORACLES["mime_sniff"] = """
     """
 
 
-ORACLES["anchor_text_stats"] = """
+ORACLES["anchor_text_stats"] = f"""
         WITH pages AS (
             SELECT 'https://h' || (doc_id % 20)::VARCHAR
                        || '.example.com/p/' || doc_id::VARCHAR AS url,
@@ -1171,8 +1172,7 @@ ORACLES["anchor_text_stats"] = """
         ),
         a AS (
             SELECT dst_url,
-                   trim(regexp_replace(raw_text, '[ \t\n\r]+', ' ', 'g'))
-                       AS anchor_text
+                   {collapse_sql("raw_text")} AS anchor_text
             FROM raw
             WHERE (dst_url LIKE 'http://%' OR dst_url LIKE 'https://%')
         ),
@@ -2420,12 +2420,12 @@ def _crawl_delta_near_oracle(minor_max: int = 6) -> str:
         ),
         norm AS (
             SELECT url, side,
-                   trim(regexp_replace(text, '[ \t\n\r]+', ' ', 'g')) AS t
+                   {collapse_sql("text")} AS t
             FROM sides WHERE text IS NOT NULL
         ),
         md AS (SELECT url, side, md5(t) AS md FROM norm),
         toks AS (
-            SELECT DISTINCT url, side, unnest(string_split(t, ' ')) AS tok
+            SELECT DISTINCT url, side, unnest({split_spaces_sql("t")}) AS tok
             FROM norm
         ),{simhash_ctes("url, side")},
         o AS (

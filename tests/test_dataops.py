@@ -13,7 +13,6 @@ from open_ocr_spark.dataops.dedup import (
     ngram_jaccard_pairs,
     shingles_of_tokens,
     simhash_fingerprints,
-    tokens_col,
 )
 from open_ocr_spark.dataops.multimodal import (
     binary_stats,
@@ -29,6 +28,7 @@ from open_ocr_spark.dataops.textstats import (
     with_quality_score,
     with_token_count,
 )
+from open_ocr_spark.dataops.words import tokens
 
 BASE = "the quick brown fox jumps over the lazy dog again and again today"
 NEAR = "the quick brown fox jumps over the lazy dog again and again tonight"
@@ -122,7 +122,7 @@ def test_simhash_collapsed_equals_direct_and_62bit(docs):
 def test_word_shingles_edge(spark):
     df = spark.createDataFrame([(1, "a b"), (2, "a b c d")], "doc_id long, text string")
     got = df.select(
-        "doc_id", shingles_of_tokens(tokens_col(F.col("text")), 3).alias("s")
+        "doc_id", shingles_of_tokens(tokens(F.col("text")), 3).alias("s")
     ).collect()
     by_id = {r["doc_id"]: r["s"] for r in got}
     assert by_id[1] == []

@@ -7,7 +7,7 @@ import pytest
 from open_ocr_spark.kernels.dispatch import extract_document
 from open_ocr_spark.kernels.html_extract import extract_main_text
 from open_ocr_spark.kernels.htmltree import collapse_ws, parse_html
-from open_ocr_spark.kernels.mock import MOCK_ENGINE_RESPONSE, mock_extract
+from open_ocr_spark.kernels.mock import MOCK_ENGINE_RESPONSE
 from open_ocr_spark.kernels.options import (
     ENGINE_MOCK,
     ENGINE_TESSERACT,
@@ -106,7 +106,6 @@ def test_chain_reverse_order():
 # --- mock engine (mock_engine.go:3-10) --------------------------------------
 
 def test_mock_constant():
-    assert mock_extract(b"anything") == MOCK_ENGINE_RESPONSE
     assert MOCK_ENGINE_RESPONSE == "mock engine decoder response"
 
 

@@ -4,7 +4,7 @@ must sniff to the type the kernel routing expects."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from open_ocr_spark.dataops.mime import with_mime
+from open_ocr_spark.dataops.mime import sniff_mime_col
 
 
 def _sniff(spark, payloads):
@@ -12,7 +12,8 @@ def _sniff(spark, payloads):
         [(i, bytearray(p)) for i, p in enumerate(payloads)],
         "i long, html binary",
     )
-    return [r.mime for r in with_mime(df).orderBy("i").collect()]
+    sniffed = df.select("i", sniff_mime_col(F.col("html"))).orderBy("i")
+    return [r.mime for r in sniffed.collect()]
 
 
 def test_real_containers_sniff_correctly(spark):
@@ -82,5 +83,6 @@ def test_sniff_is_shuffle_free(spark):
     df = spark.range(10).select(
         F.encode(F.concat(F.lit("t"), F.col("id")), "utf-8").alias("html")
     )
-    plan = with_mime(df)._jdf.queryExecution().executedPlan().toString()
+    plan = (df.select(sniff_mime_col(F.col("html")))
+            ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
